@@ -1,0 +1,10 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Waits until the listener bus has delivered every event posted so far,
+  * so listener totals are complete before they are read.
+  */
+object BusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
