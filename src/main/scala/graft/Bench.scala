@@ -72,7 +72,7 @@ object Bench {
     // just the same)
     val benchT0 = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus()
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"
     val iters = math.max(sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt, 1)
     val maxPasses = math.max(
@@ -81,38 +81,14 @@ object Bench {
     // O(n^2) baselines (s01/s03 brute force) are intentionally excluded
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).toSet)
-    // Scale-dependent session settings stay parameterised (optimization
-    // guide §9; production values documented in OPTIMIZATION_r21.md):
-    // SPARK_GRAFT_CONF="k=v;k=v" overrides/extends the local defaults.
-    val confSegs = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
-    // a typo'd override silently swallowed is a measurement hazard in the
-    // tool whose artifact is the round's ground truth — warn loudly
-    confSegs.filterNot(_.contains("=")).foreach { seg =>
-      System.err.println(s"[bench] SPARK_GRAFT_CONF segment dropped " +
-        s"(no '='): '$seg'") }
-    val extraConf = confSegs.filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the integer-unit money sums (Relational.units) rely on ANSI long
-      // sums THROWING on overflow rather than wrapping; pin the invariant
-      // explicitly instead of inheriting the Spark 4 default (it sits
-      // before the SPARK_GRAFT_CONF fold, so experiments can still flip
-      // it deliberately — the shipped default is the declared semantics)
-      .config("spark.sql.ansi.enabled", "true")
-      // bench-only write elision: the f-query round-trip writes run once
-      // per session instead of once per timed iteration, so the timed
-      // pass measures the operator under test, not the sink
-      // (Formats.writeOnce; Verify never sets this, so the correctness
-      // gate always exercises the full write→read path)
-      .config("graft.io.reuse", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) =>
-      b.config(k, v) }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // bench-only write elision: the f-query round-trip writes run once
+    // per session instead of once per timed iteration, so the timed
+    // pass measures the operator under test, not the sink
+    // (Formats.writeOnce; Verify never sets this, so the correctness
+    // gate always exercises the full write→read path). SPARK_GRAFT_CONF
+    // folds in last, so experiments can still flip a pinned setting.
+    val spark = Session.local(cpus,
+      Map("graft.io.reuse" -> "true") ++ Session.envConf())
     val queries = SparkEntry.queries.filter { case (name, _) =>
       only.forall(_.contains(name)) }
     // fail the short-key collision check BEFORE the multi-minute timed
@@ -331,7 +307,7 @@ object Bench {
       // SPARK_GRAFT_TELEMETRY_PATH redirects explicitly, otherwise only
       // /tmp receives non-reference artifacts.
       val repoTarget = sys.env.get("SPARK_GRAFT_TELEMETRY_PATH")
-        .orElse(if (only.isEmpty && cpus == "32") Some("BENCH_TELEMETRY.json")
+        .orElse(if (only.isEmpty && cpus == 32) Some("BENCH_TELEMETRY.json")
           else None)
       for (path <- Seq("/tmp/graft_bench.json") ++ repoTarget) {
         try java.nio.file.Files.write(java.nio.file.Paths.get(path),

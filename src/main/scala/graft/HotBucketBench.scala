@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: measure the LSH hot-bucket cap against a boilerplate-heavy
@@ -19,11 +18,7 @@ object HotBucketBench {
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/tmp/graft_scale")
     val nClones = sys.env.getOrElse("SPARK_GRAFT_CLONES", "2000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus())
 
     val boiler = (1 to 40).map(i => s"boilerplate$i").mkString(" ")
     val docs = spark.read.parquet(s"$src/documents.parquet")

@@ -1,30 +1,67 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
-/** Per-job profiling harness (optimization rounds): runs the named queries
-  * once warm + once timed and prints every Spark job the timed rep ran —
-  * wall duration, stage/task counts, and the callsite — so driver-side
-  * fixed cost (many tiny jobs) is attributable line-by-line. Diagnostic
-  * only; not part of the driver contract.
+/** Diagnostics main: one session set up like the bench's, four views of
+  * the named queries. A development tool, outside the SparkEntry contract.
   *
-  * Usage: sbt "runMain graft.Prof q08_distinct_agg s10_ivfpq_topk"
-  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as in Bench.
+  *   (default)   per-job profile: runs each query once warm + once timed
+  *               and prints every Spark job the timed rep ran — wall
+  *               duration, stage/task counts, and the callsite — so
+  *               fixed cost spread over many tiny jobs is attributable
+  *               line-by-line.
+  *   --plan      the formatted physical plan, without executing.
+  *   --executed  runs the query, then prints the FINAL adaptive plan:
+  *               ReusedExchange / AQEShuffleRead nodes only exist after
+  *               execution, so subtree-reuse claims are audited here.
+  *   --show      collects once, prints the columns, up to 20 rows and the
+  *               elapsed time (printing from the collected rows: a second
+  *               action would re-execute the plan and any writes in it).
+  *
+  * Usage: sbt "runMain graft.Prof [--plan|--executed|--show] q08_distinct_agg s10_ivfpq_topk"
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS and SPARK_GRAFT_CONF as in Bench.
   */
 object Prof {
+  private val Modes = Set("--plan", "--executed", "--show")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("graft.io.reuse", "true")
-      .config("spark.sql.ansi.enabled", "true") // mirror the bench session
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (flags, names) = args.toSeq.partition(_.startsWith("--"))
+    require(flags.forall(Modes) && flags.size <= 1,
+      s"at most one of ${Modes.mkString(", ")}; got ${flags.mkString(" ")}")
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = Session.local(Session.cpus(),
+      Map("graft.io.reuse" -> "true") ++ Session.envConf())
+    flags.headOption match {
+      case Some(mode) => names.foreach { name =>
+        println(s"########## $name")
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        val qe = df.queryExecution
+        mode match {
+          case "--plan" =>
+            println(qe.explainString(org.apache.spark.sql.execution.FormattedMode))
+          case "--executed" =>
+            qe.toRdd.count()
+            println(qe.executedPlan.toString)
+          case "--show" =>
+            val t0 = System.nanoTime()
+            val rows = df.collect()
+            println(f"rows=${rows.length}  (${(System.nanoTime() - t0) / 1e9}%.2f s)")
+            println(df.columns.mkString(" | "))
+            rows.take(20).foreach(r => println(r.toSeq.map {
+              case s: String if s.length > 60 => s.take(57) + "..."
+              case x => String.valueOf(x)
+            }.mkString(" | ")))
+        }
+      }
+      case None => profile(spark, sfDir, names)
+    }
+    spark.stop()
+  }
+
+  private def profile(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+      names: Seq[String]): Unit = {
     case class J(id: Int, var t0: Long = 0L, var t1: Long = 0L,
       var stages: Int = 0, var tasks: Int = 0, var site: String = "")
     val jobs = mutable.LinkedHashMap[Int, J]()
@@ -51,7 +88,6 @@ object Prof {
           stageJob.get(e.stageId).flatMap(jobs.get)
             .foreach(j => j.tasks += 1) }
     })
-    val names = args.filter(SparkEntry.queries.contains).toSeq
     def run(name: String): Unit = {
       SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
     }
@@ -68,7 +104,6 @@ object Prof {
       Thread.sleep(300) // let the async listener bus drain
       println(f"########## $name wall=$wall%.3f s jobs=${jobs.size}")
       jobs.synchronized {
-        var gap0 = 0L
         var prevEnd = 0L
         jobs.values.foreach { j =>
           val dur = (j.t1 - j.t0) / 1e3
@@ -81,6 +116,5 @@ object Prof {
         println(f"  jobs-busy=$busy%.3f s  (wall - busy = driver/plan time)")
       }
     }
-    spark.stop()
   }
 }

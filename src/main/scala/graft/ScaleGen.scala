@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: replicate the sf0.1 fixtures N× with consistent key offsets to
@@ -18,10 +18,7 @@ object ScaleGen {
     val out = args.headOption.getOrElse("/tmp/graft_scale")
     val repl = sys.env.getOrElse("SPARK_GRAFT_REPL", "16").toInt
     val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus())
 
     def reps(df: DataFrame): DataFrame =
       df.crossJoin(spark.range(repl).select(col("id").as("rep")))

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parquet star-schema loaders (driver fixtures, see TESTDATA.md).
@@ -51,8 +53,24 @@ object Tables {
     * real parallelism; `graft.spread.parts` overrides per session.
     */
   private def baseWidth(s: SparkSession): Int =
-    s.conf.getOption("graft.spread.parts").map(_.toInt).getOrElse(
+    positiveIntConf(s, "graft.spread.parts").getOrElse(
       math.max(1, s.sparkContext.defaultParallelism / 4))
+
+  /** A positive-integer session override, if set; a malformed or
+    * non-positive value fails naming its key instead of surfacing as a
+    * bare NumberFormatException (or a repartition(0)) mid-query. */
+  private[graft] def positiveIntConf(s: SparkSession, key: String): Option[Int] =
+    s.conf.getOption(key).map { v =>
+      val n = v.trim.toIntOption
+      require(n.exists(_ > 0), s"$key must be a positive integer, got '$v'")
+      n.get
+    }
+
+  /** Catalyst's size estimate of `df`'s optimized plan, or None when the
+    * estimate cannot be computed. */
+  private[graft] def sizeEstimate(df: DataFrame): Option[BigDecimal] =
+    try Some(BigDecimal(df.queryExecution.optimizedPlan.stats.sizeInBytes))
+    catch { case NonFatal(_) => None }
 
   /** Partition budget for a COMPUTE-DENSE stage derived from `df`: at
     * least [[baseWidth]] slots, more when the stage's input bytes warrant
@@ -65,9 +83,7 @@ object Tables {
     * cannot see.
     */
   def widthFor(df: DataFrame, expand: Double = 1.0): Int = {
-    val bytes =
-      try BigDecimal(df.queryExecution.optimizedPlan.stats.sizeInBytes)
-      catch { case _: Throwable => BigDecimal(0) }
+    val bytes = sizeEstimate(df).getOrElse(BigDecimal(0))
     // Cap the bytes-derived width at the cluster parallelism: Catalyst
     // size estimates MULTIPLY through joins, so a join-derived frame can
     // claim exabytes and would otherwise pin tens of thousands of
@@ -75,11 +91,13 @@ object Tables {
     // 2^15 cap and spent 18 s scheduling empty tasks; a 4x-cores cap
     // still left it 0.5 s over baseline). Inputs whose compute stages
     // genuinely need more than one task wave per core set
-    // graft.spread.parts for the session.
-    val p = baseWidth(df.sparkSession)
-    val byBytes = (bytes * expand / (64L << 20)).toInt
-    math.max(p, math.min(byBytes,
-      df.sparkSession.sparkContext.defaultParallelism))
+    // graft.spread.parts for the session. The cap applies BEFORE .toInt:
+    // BigDecimal.toInt keeps only the low 32 bits, so an exabyte-scale
+    // estimate would otherwise wrap (to -1 for range(Long.MaxValue)) and
+    // collapse the width to baseWidth.
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    val byBytes = (bytes * expand / (64L << 20)).min(BigDecimal(par)).toInt
+    math.max(baseWidth(df.sparkSession), byBytes)
   }
 
   /** Guard against INPUT-SPLIT SHORTFALL ahead of expensive per-row work

@@ -1,22 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // named queries restrict the results, oracle_sql.json and
+    // declared_queries.json to those queries, so scripts/selfcheck.py
+    // can gate a subset without a full-board run
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query…]")
+    val Array(sfDir, outDir) = args.take(2)
+    val only = args.drop(2).toSet
+    val unknown = only.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    def selected[V](m: Map[String, V]): Map[String, V] =
+      if (only.isEmpty) m else m.filter { case (k, _) => only(k) }
+    val spark = Session.local(Session.cpus())
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    selected(SparkEntry.queries).foreach { case (name, fn) =>
       // remove BOTH prior outputs first: a failing query must not leave a
       // stale previous result for the driver's compare to "pass" against
       def rmAll(f: java.io.File): Unit = {
@@ -53,7 +53,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = selected(SparkEntry.oracleSql)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // The full declared-query manifest: selfcheck.py compares it against
@@ -61,7 +61,7 @@ object Verify {
     // writes nothing) is a loud MISSING failure, not a silent absence —
     // round 9 shipped six broken queries because absence looked like pass.
     Files.writeString(Paths.get(s"$outDir/declared_queries.json"),
-      SparkEntry.queries.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      selected(SparkEntry.queries).keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
     spark.stop()
   }
 }

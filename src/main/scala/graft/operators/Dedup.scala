@@ -380,14 +380,11 @@ object Dedup extends QueryPack {
     // to the session default as ceiling (junk estimates degrade to the
     // old behavior, never past it); `graft.cluster.shufflePartitions`
     // overrides for corpora whose label tables outgrow cores × 32 MB.
-    val nParts = s.conf.getOption("graft.cluster.shufflePartitions")
-      .map(_.toInt).getOrElse {
-        val bytes =
-          try BigDecimal(pairs.queryExecution.optimizedPlan.stats.sizeInBytes)
-          catch { case _: Throwable => BigDecimal(-1) }
+    val nParts = T.positiveIntConf(s, "graft.cluster.shufflePartitions")
+      .getOrElse {
         val cap = s.conf.get("spark.sql.shuffle.partitions").toInt
-        if (bytes < 0) cap
-        else math.max(1, math.min((bytes / (32L << 20)).toInt + 1, cap))
+        T.sizeEstimate(pairs).fold(cap) { bytes =>
+          math.max(1, (bytes / (32L << 20) + 1).min(BigDecimal(cap)).toInt) }
       }
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", nParts.toString)

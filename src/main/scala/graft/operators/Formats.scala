@@ -21,13 +21,27 @@ object Formats extends QueryPack {
   private[graft] def ioDir(d: String, q: String): String =
     s"/tmp/graft_io/${d.replaceAll("[^A-Za-z0-9]", "_")}/$q"
 
+  /** Registers a [[graft.sources.GraftCatalog]] over warehouse `wh` and
+    * returns its name, `<tag>_<data dir, sanitised>`. Catalog plugin
+    * instances are CACHED per session after first use, so the name is
+    * keyed on the data dir: a second scale factor in the same session gets
+    * a fresh catalog, not a stale warehouse.
+    */
+  private[graft] def withCatalog(s: SparkSession, d: String, tag: String,
+      wh: String): String = {
+    val cat = s"${tag}_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+    s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
+    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    cat
+  }
+
   /** Benchmark-only write elision. The f-queries certify a write→read round
     * trip, so the write is PART of the query — but re-timing it on every
     * bench iteration measures the sink, not the operator under test
     * (round-5 verdict: the f05/f08 bench numbers were write-dominated).
-    * When the session opts in (`graft.io.reuse=true` — Bench.scala sets it
-    * on its builder; Verify never does, so the correctness gate always
-    * runs the full write path), the write runs once per SparkSession: a
+    * When the session opts in (`graft.io.reuse=true` — Bench and Prof pass
+    * it to `Session.local`; Verify never does, so the correctness gate
+    * always runs the full write path), the write runs once per SparkSession: a
     * marker file holds the writing applicationId, so stale outputs from a
     * PREVIOUS process are always rewritten. The token only guards
     * cross-process staleness — if input data were regenerated WITHIN the
@@ -918,12 +932,7 @@ object Formats extends QueryPack {
     // mutation as pinned booleans.
     "f33_sql_catalog" -> ((s, d) => {
       val wh = ioDir(d, "f33_wh")
-      // catalog plugin instances are CACHED per session after first use,
-      // so the name is keyed on the data dir — a second scale factor in
-      // the same session gets a fresh catalog, not a stale warehouse
-      val cat = "graft_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft", wh)
       val tdir = s"$wh/db/docs"
       val docs = T.documents(s, d)
       val hot = col("source").isin("src0", "src1", "src2")
@@ -977,9 +986,7 @@ object Formats extends QueryPack {
     // (inserted before the DDL, so their source/n_chars are null).
     "f36_schema_evolution" -> ((s, d) => {
       val wh = ioDir(d, "f36_wh")
-      val cat = "graft36_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft36", wh)
       val tdir = s"$wh/db/docs"
       val docs = T.documents(s, d)
       val hot = col("source").isin("src0", "src1", "src2")
@@ -1033,9 +1040,7 @@ object Formats extends QueryPack {
     // row hash-certifies both table states end-to-end from SQL.
     "f37_replace_table" -> ((s, d) => {
       val wh = ioDir(d, "f37_wh")
-      val cat = "graft37_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft37", wh)
       val tdir = s"$wh/db/docs"
       val docs = T.documents(s, d)
       val hot = col("source").isin("src0", "src1", "src2")
@@ -1091,9 +1096,7 @@ object Formats extends QueryPack {
     // final per-lang aggregate over `documents`.
     "f38_named_streaming" -> ((s, d) => {
       val wh = ioDir(d, "f38_wh")
-      val cat = "graft38_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft38", wh)
       val tdir = s"$wh/db/sdocs"
       val docs = T.documents(s, d)
       val hot = col("source").isin("src0", "src1", "src2")
@@ -1132,8 +1135,7 @@ object Formats extends QueryPack {
       // state partitions sized to the per-lang key count (streamSession
       // scaladoc) — the child session needs the catalog re-pinned
       val s2 = streamSession(s)
-      s2.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s2.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      withCatalog(s2, d, "graft38", wh)
       val cp = java.nio.file.Files.createTempDirectory("f38cp").toString
       val feed = s2.readStream.option("readChangeFeed", "true")
         .table(s"$cat.db.sdocs")
@@ -1176,9 +1178,7 @@ object Formats extends QueryPack {
     // DuckDB-replayed batch.
     "f39_conditional_merge" -> ((s, d) => {
       val wh = ioDir(d, "f39_wh")
-      val cat = "graft39_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft39", wh)
       val tdir = s"$wh/db/cdocs"
       val docs = T.documents(s, d)
       writeOnce(s, tdir, alsoRequire =
@@ -1381,9 +1381,7 @@ object Formats extends QueryPack {
     // both correlated mutations relationally.
     "f41_correlated_dml" -> ((s, d) => {
       val wh = ioDir(d, "f41_wh")
-      val cat = "graft41_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft41", wh)
       val tdir = s"$wh/db/docs41"
       writeOnce(s, tdir, alsoRequire =
           graft.sources.Snapshots.latestVersion(s, tdir) == 3) {
@@ -1430,9 +1428,7 @@ object Formats extends QueryPack {
     // no-files-moved invariant.
     "f42_restore" -> ((s, d) => {
       val wh = ioDir(d, "f42_wh")
-      val cat = "graft42_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft42", wh)
       val tdir = s"$wh/db/docs42"
       val docs = T.documents(s, d)
       val hot = col("source").isin("src0", "src1", "src2")
@@ -1492,9 +1488,7 @@ object Formats extends QueryPack {
     // relationally by the DuckDB oracle.
     "f43_compact" -> ((s, d) => {
       val wh = ioDir(d, "f43_wh")
-      val cat = "graft43_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft43", wh)
       val tdir = s"$wh/db/docs43"
       val docs = T.documents(s, d)
       writeOnce(s, tdir, alsoRequire =
@@ -1546,9 +1540,7 @@ object Formats extends QueryPack {
     // batches and deleting one language.
     "f44_partitioned_table" -> ((s, d) => {
       val wh = ioDir(d, "f44_wh")
-      val cat = "graft44_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft44", wh)
       val tdir = s"$wh/db/docs44"
       val docs = T.documents(s, d)
       val hot = col("source").isin("src0", "src1", "src2")
@@ -1587,9 +1579,7 @@ object Formats extends QueryPack {
     // delete and a one-user delete.
     "f46_partition_transforms" -> ((s, d) => {
       val wh = ioDir(d, "f46_wh")
-      val cat = "graft46_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft46", wh)
       val tdir = s"$wh/db/events46"
       val ev = T.events(s, d)
       writeOnce(s, tdir, alsoRequire =
@@ -1639,9 +1629,7 @@ object Formats extends QueryPack {
     // relationally.
     "f47_update_subquery" -> ((s, d) => {
       val wh = ioDir(d, "f47_wh")
-      val cat = "graft47_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft47", wh)
       val tdir = s"$wh/db/docs47"
       writeOnce(s, tdir, alsoRequire =
           graft.sources.Snapshots.latestVersion(s, tdir) == 3) {
@@ -1686,9 +1674,7 @@ object Formats extends QueryPack {
     // delete predicate over documents.
     "f56_sql_change_feed" -> ((s, d) => {
       val wh = ioDir(d, "f56_wh")
-      val cat = "graft56_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft56", wh)
       val tdir = s"$wh/db/docs56"
       writeOnce(s, tdir, alsoRequire =
           graft.sources.Snapshots.latestVersion(s, tdir) == 3) {
@@ -1737,9 +1723,7 @@ object Formats extends QueryPack {
     // replays both states relationally.
     "f55_update_agg_subquery" -> ((s, d) => {
       val wh = ioDir(d, "f55_wh")
-      val cat = "graft55_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft55", wh)
       val tdir = s"$wh/db/docs55"
       writeOnce(s, tdir, alsoRequire =
           graft.sources.Snapshots.latestVersion(s, tdir) == 3) {
@@ -1781,9 +1765,7 @@ object Formats extends QueryPack {
     // relationally.
     "f48_merge_residual" -> ((s, d) => {
       val wh = ioDir(d, "f48_wh")
-      val cat = "graft48_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft48", wh)
       val tdir = s"$wh/db/docs48"
       writeOnce(s, tdir, alsoRequire =
           graft.sources.Snapshots.latestVersion(s, tdir) == 2) {
@@ -1830,9 +1812,7 @@ object Formats extends QueryPack {
     // against the final (published) state.
     "f49_branch_pipeline" -> ((s, d) => {
       val wh = ioDir(d, "f49_wh")
-      val cat = "graft49_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft49", wh)
       val tdir = s"$wh/db/docs49"
       writeOnce(s, tdir, alsoRequire =
           graft.sources.Snapshots.latestVersion(s, tdir) == 5) {
@@ -1887,9 +1867,7 @@ object Formats extends QueryPack {
     // hash-certifies the transformed lifecycle's CONTENT end to end).
     "f50_truncate_transform" -> ((s, d) => {
       val wh = ioDir(d, "f50_wh")
-      val cat = "graft50_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft50", wh)
       val tdir = s"$wh/db/docs50"
       writeOnce(s, tdir, alsoRequire =
           graft.sources.Snapshots.latestVersion(s, tdir) == 4) {
@@ -1938,9 +1916,7 @@ object Formats extends QueryPack {
     // as a NULL-extended union.
     "f51_merge_schema_evolution" -> ((s, d) => {
       val wh = ioDir(d, "f51_wh")
-      val cat = "graft51_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft51", wh)
       val tdir = s"$wh/db/docs51"
       writeOnce(s, tdir, alsoRequire =
           graft.sources.Snapshots.latestVersion(s, tdir) == 3) {
@@ -1992,9 +1968,7 @@ object Formats extends QueryPack {
     // length floor WITH a source are deleted by IS NOT NULL + range.
     "f52_null_dml" -> ((s, d) => {
       val wh = ioDir(d, "f52_wh")
-      val cat = "graft52_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft52", wh)
       val tdir = s"$wh/db/docs52"
       writeOnce(s, tdir, alsoRequire =
           graft.sources.Snapshots.latestVersion(s, tdir) == 4) {
@@ -2033,9 +2007,7 @@ object Formats extends QueryPack {
     // replays the replace relationally.
     "f53_replace_where" -> ((s, d) => {
       val wh = ioDir(d, "f53_wh")
-      val cat = "graft53_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft53", wh)
       val tdir = s"$wh/db/docs53"
       writeOnce(s, tdir, alsoRequire =
           graft.sources.Snapshots.latestVersion(s, tdir) == 3) {
@@ -2075,9 +2047,7 @@ object Formats extends QueryPack {
     // subfield, count of the added one) + shape/time-travel booleans.
     "f54_nested_evolution" -> ((s, d) => {
       val wh = ioDir(d, "f54_wh")
-      val cat = "graft54_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft54", wh)
       val tdir = s"$wh/db/docs54"
       writeOnce(s, tdir, alsoRequire =
           graft.sources.Snapshots.latestVersion(s, tdir) == 5) {
@@ -2137,9 +2107,7 @@ object Formats extends QueryPack {
     // booleans.
     "f45_drop_column" -> ((s, d) => {
       val wh = ioDir(d, "f45_wh")
-      val cat = "graft45_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val cat = withCatalog(s, d, "graft45", wh)
       val tdir = s"$wh/db/docs45"
       val docs = T.documents(s, d)
       val hot = col("source").isin("src0", "src1", "src2")

@@ -650,7 +650,7 @@ object Similarity extends QueryPack {
   }
 
   /** Random-projection top-k end to end (candidates + exact rerank), for
-    * library use and the RpProbe recall measurement.
+    * library use and the `RecallProbe rp` measurement.
     */
   private[graft] def rpTopK(s: SparkSession, d: String): DataFrame = {
     val base = normed(s, d)
@@ -658,7 +658,7 @@ object Similarity extends QueryPack {
   }
 
   /** IVF-PQ top-k end to end (train both quantizers, candidates, exact
-    * rerank), for library use and the IvfPqProbe recall measurement.
+    * rerank), for library use and the `RecallProbe ivfpq` measurement.
     */
   private[graft] def ivfPqTopK(s: SparkSession, d: String): DataFrame = {
     val base = normed(s, d)
@@ -1027,7 +1027,7 @@ object Similarity extends QueryPack {
     // inside the probed cells over 4-byte codes, and the full vectors
     // serve only the bounded exact rerank. Recall vs the exact s01 top-k
     // gated at 0.25: measured 0.42/0.50/0.50 at sf0.001/0.01/0.1
-    // (IvfPqProbe) — the double pruning costs almost nothing over the
+    // (RecallProbe ivfpq) — the double pruning costs almost nothing over the
     // cell-only s02 (0.36–0.46) because the exact rerank recovers the
     // ADC quantization error inside the probed cells.
     "s10_ivfpq_topk" -> ((s, d) => {
@@ -1187,7 +1187,7 @@ object Similarity extends QueryPack {
     // 16-dim JL-projected space, exact rerank of the top tenth-of-corpus.
     // Columns follow the s08 frame: counts recomputed by the oracle,
     // recall vs the exact s01 top-k gated at 0.3 (measured 0.44/0.40/0.60
-    // at sf0.001/0.01/0.1 — RpProbe), rerank volume bounded by
+    // at sf0.001/0.01/0.1 — RecallProbe rp), rerank volume bounded by
     // NQ·pqRerank(n).
     "s09_random_projection_topk" -> ((s, d) => {
       val base = normed(s, d)

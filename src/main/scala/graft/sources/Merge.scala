@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Part-file merge — the reference's `PipeOutAndMerge` second phase.
   *
@@ -10,10 +10,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (mergeFile, libhdfsconnector.cpp:709-831; only node 0 does work, :711;
   * missing part → error, :807-811). Here the same single-writer ordered
   * concat runs driver-side over Hadoop streams.
-  *
-  * `writeMerged` is the one-shot Spark-first alternative: `coalesce(1)` makes
-  * the write itself a single ordered task (no shuffle — CoalesceExec), which
-  * is the same 2-phase shape collapsed to 1.
   */
 object Merge {
 
@@ -74,13 +70,5 @@ object Merge {
 
     if (cleanMerge) fs.delete(d, true) // :798-806,818-828
     total
-  }
-
-  /** Write `df` as a single flat file at `target` (ordered, shuffle-free). */
-  def writeMergedFlat(df: DataFrame, layout: EclLayout, target: String): Unit = {
-    val tmp = target + "-parts"
-    df.coalesce(1).write.format("hpcc-flat")
-      .option("layout", layout.spec).mode("overwrite").save(tmp)
-    mergeParts(df.sparkSession, tmp, target, cleanMerge = true)
   }
 }

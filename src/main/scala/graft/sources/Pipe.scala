@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 /** The reference's three user-facing verbs as a Spark façade — a user of
   * `HDFSConnector.PipeIn/PipeOut/PipeOutAndMerge`
@@ -45,19 +44,6 @@ object Pipe {
       HpccCsv.read(spark, path, layout.schema, sep, term, quote)
     case Xml(rowTag) =>
       spark.read.format("hpcc-xml").schema(layout.schema)
-        .option("rowTag", rowTag).load(path)
-  }
-
-  /** PipeIn with an explicit Spark schema (CSV/XML don't require fixed
-    * widths — the reference only needs `-maxlen` there).
-    */
-  def inWithSchema(spark: SparkSession, path: String, schema: StructType,
-      format: PipeFormat): DataFrame = format match {
-    case Flat => throw new IllegalArgumentException(
-      "FLAT requires an EclLayout (fixed widths) — use Pipe.in")
-    case Csv(sep, term, quote) => HpccCsv.read(spark, path, schema, sep, term, quote)
-    case Xml(rowTag) =>
-      spark.read.format("hpcc-xml").schema(schema)
         .option("rowTag", rowTag).load(path)
   }
 

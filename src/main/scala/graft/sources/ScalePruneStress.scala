@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: sf1-scale stress of the round-19 DML pruning tiers (the
@@ -23,20 +22,13 @@ object ScalePruneStress {
     val repl = sys.env.getOrElse("SPARK_GRAFT_REPL", "10").toInt
     val commits = sys.env.getOrElse("SPARK_GRAFT_COMMITS", "4").toInt
     val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      // at sf1 the whole slice fits one AQE-coalesced partition — keep
-      // the range-partitioned fan-out so the table carries the file
-      // count a real 100 TB ingest would (the stress is METADATA scale:
-      // opens vs files, not bytes)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.catalog.gsp",
-      "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gsp.warehouse", wh)
+    // at sf1 the whole slice fits one AQE-coalesced partition — keep
+    // the range-partitioned fan-out so the table carries the file
+    // count a real 100 TB ingest would (the stress is METADATA scale:
+    // opens vs files, not bytes)
+    val spark = graft.Session.local(graft.Session.cpus(),
+      Map("spark.sql.adaptive.coalescePartitions.enabled" -> "false"))
+    val cat = graft.operators.Formats.withCatalog(spark, src, "gsp", wh)
     val root = new org.apache.hadoop.fs.Path(wh)
     val fsys = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fsys.delete(root, true)
@@ -62,11 +54,11 @@ object ScalePruneStress {
     // src_opt joins the layout declaration so its footer null counts
     // are recorded per file (null pruning rides the stats columns —
     // the f52 cost model) and the null-bearing rows land localized
-    spark.sql("CREATE TABLE gsp.db.docs (doc_id BIGINT, url STRING, " +
+    spark.sql(s"CREATE TABLE $cat.db.docs (doc_id BIGINT, url STRING, " +
       "lang STRING, source STRING, src_opt STRING, n_chars BIGINT) " +
       "PARTITIONED BY (truncate(16, url), lang, src_opt)")
     for (i <- 0 until commits)
-      spark.sql("INSERT INTO gsp.db.docs SELECT * FROM sp_docs " +
+      spark.sql(s"INSERT INTO $cat.db.docs SELECT * FROM sp_docs " +
         s"WHERE pmod(doc_id, $commits) = $i")
     val dir = s"$wh/db/docs"
     val total0 = Snapshots.files(spark, dir,
@@ -85,26 +77,26 @@ object ScalePruneStress {
     // literal prefix (25 chars) covers the width (16), so the derived
     // prefix-equality stat prunes to src3's cluster files
     shape("f50_like_prefix_delete") {
-      spark.sql("DELETE FROM gsp.db.docs " +
+      spark.sql(s"DELETE FROM $cat.db.docs " +
         "WHERE url LIKE 'https://src3.example.com/%'")
     }
     // f52 shape: IS NULL UPDATE through the footer null-count tier —
     // only src5's files carry nulls
     shape("f52_is_null_update") {
-      spark.sql("UPDATE gsp.db.docs SET n_chars = -1 " +
+      spark.sql(s"UPDATE $cat.db.docs SET n_chars = -1 " +
         "WHERE src_opt IS NULL")
     }
     // f53 shape: REPLACE WHERE through the identity (lang) tier — the
     // position scan opens only the 'en' cluster files
     shape("f53_replace_where") {
-      spark.sql("INSERT INTO gsp.db.docs REPLACE WHERE lang = 'en' " +
+      spark.sql(s"INSERT INTO $cat.db.docs REPLACE WHERE lang = 'en' " +
         "SELECT doc_id, url, lang, source, src_opt, n_chars * 2 " +
         "FROM sp_docs WHERE lang = 'en' AND pmod(doc_id, 2) = 0")
     }
     // control: an unprunable predicate opens everything — the (total,
     // total) line that anchors the three pruned ones
     shape("control_unprunable") {
-      spark.sql("DELETE FROM gsp.db.docs WHERE n_chars % 1009 = 17")
+      spark.sql(s"DELETE FROM $cat.db.docs WHERE n_chars % 1009 = 17")
     }
     spark.stop()
   }

@@ -31,17 +31,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the production injection path (functions + GraftSqlRules): the
-      // whole suite runs WITH the extensions installed, so a rule that
-      // breaks unrelated plans fails loudly here, not at a user's site
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    // the production injection path (functions + GraftSqlRules): the
+    // whole suite runs WITH the extensions installed (Session.local pins
+    // them), so a rule that breaks unrelated plans fails loudly here, not
+    // at a user's site
+    val s = Session.local(4)
     // register up front so suites that use graft_* SQL functions don't
     // depend on an operator entry point having run first (test-order
     // independence — SplitInvariancePropSpec alone must pass)

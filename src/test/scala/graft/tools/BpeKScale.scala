@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev measurement for the bpeLearn round-lineage bound (SCALE.md,
   * round-10 verdict #4): total learn time as K grows must be ~linear in
   * K once the fixed dictionary-build cost is paid — the O(K²)
@@ -12,13 +10,10 @@ import org.apache.spark.sql.SparkSession
 object BpeKScale {
   def main(args: Array[String]): Unit = {
     val d = args(0)
-    val cpus = if (args.length > 1) args(1) else "16"
+    val cpus = if (args.length > 1) args(1).toInt else graft.Session.cpus()
     val ks = if (args.length > 2) args(2).split(",").map(_.toInt).toSeq
              else Seq(4, 16, 64)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(cpus)
     // warm JIT/codegen/footers so K-deltas measure the loop, not startup
     graft.operators.TextAnalysis.bpeLearn(spark, d, 2)
     var prev = 0.0

@@ -64,11 +64,7 @@ object BpeTrainMain {
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val n = if (args.length > 1) args(1).toInt else 200
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("bpe-train")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(4)
     val texts = spark.read.parquet(s"$sf/documents.parquet")
       .select("text").collect().map(_.getString(0))
     spark.stop()

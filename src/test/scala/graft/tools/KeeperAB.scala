@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
@@ -15,11 +15,8 @@ import graft.operators.Dedup
 object KeeperAB {
   def main(args: Array[String]): Unit = {
     val d = args(0)
-    val cpus = if (args.length > 1) args(1) else "16"
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = if (args.length > 1) args(1).toInt else graft.Session.cpus()
+    val spark = graft.Session.local(cpus)
 
     def docs = spark.read.parquet(s"$d/documents.parquet")
 
