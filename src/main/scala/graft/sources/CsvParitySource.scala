@@ -3,7 +3,6 @@ package graft.sources
 import java.util
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -19,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Emits one `value: string` row per logical CSV record, where a record may
   * contain the terminator sequence inside a quoted field — the case Spark's
   * built-in csv source only handles with `multiLine=true`, which makes the
-  * file non-splittable (one task per file). This reader keeps even byte-range
+  * file non-splittable (one task per file). This reader keeps byte-range
   * splits AND tracks quote parity, reproducing the reference's realignment
   * protocol exactly (libhdfsconnector.cpp:400-488):
   *
@@ -40,10 +39,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * lands inside a quoted field, both the reference and this reader misalign
   * in the same way — the quoted terminator looks like a record boundary to
   * the realignment scan. Split sizes are chosen per-query via the
-  * `splitbytes` option (default `spark.sql.files.maxPartitionBytes`), so a
-  * caller that writes with a known record-size floor can guarantee sound
-  * boundaries; boundaries inside quoted regions are caller error, exactly as
-  * with the reference.
+  * `splitbytes` option (default: `spark.sql.files.maxPartitionBytes`, not
+  * the core-aware rule of the other range sources, so a file under that
+  * cap is one range and cannot misalign), so a caller that writes with a
+  * known record-size floor can guarantee sound boundaries; boundaries
+  * inside quoted regions are caller error, exactly as with the reference.
   *
   * Every quote byte toggles parity — the reference has no notion of escaped
   * or doubled quotes in its scan (:437-443), and neither does this splitter.
@@ -95,11 +95,6 @@ class CsvParityTable(options: CaseInsensitiveStringMap)
     () => new CsvParityScan(path, terminator, quote, splitBytes)
 }
 
-case class CsvParityPartition(file: String, start: Long, end: Long,
-    locations: Array[String]) extends InputPartition {
-  override def preferredLocations(): Array[String] = locations
-}
-
 class CsvParityScan(path: String, terminator: String, quote: String,
     splitOpt: Long) extends Scan with Batch {
 
@@ -110,31 +105,9 @@ class CsvParityScan(path: String, terminator: String, quote: String,
 
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val files: Seq[FileStatus] =
-      if (fs.getFileStatus(root).isDirectory)
-        fs.listStatus(root).toSeq.filter { f =>
-          val n = f.getPath.getName
-          f.isFile && f.getLen > 0 && !n.startsWith(".") && !n.startsWith("_")
-        }.sortBy(_.getPath.getName)
-      else Seq(fs.getFileStatus(root))
-    val splitBytes = math.max(
-      if (splitOpt > 0) splitOpt
-      else spark.sessionState.conf.filesMaxPartitionBytes, 1L)
-
-    files.flatMap { f =>
-      val size = f.getLen
-      val blocks = fs.getFileBlockLocations(f, 0, size)
-      (0L until size by splitBytes).map { start =>
-        val end = math.min(start + splitBytes, size)
-        val hosts = blocks.filter(b =>
-          b.getOffset < end && start < b.getOffset + b.getLength)
-          .flatMap(_.getHosts).distinct
-        CsvParityPartition(f.getPath.toString, start, end, hosts)
-      }
-    }.toArray
+    val files = ByteRanges.list(spark.sessionState.newHadoopConf(), path)
+    val split = if (splitOpt > 0) splitOpt else ByteRanges.capBytes(spark)
+    ByteRanges.plan(spark, files, fixed = split).flatten.toArray[InputPartition]
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -143,7 +116,7 @@ class CsvParityScan(path: String, terminator: String, quote: String,
     val conf = new SerializableHadoopConf(
       SparkSession.active.sessionState.newHadoopConf())
     (p: InputPartition) =>
-      new CsvParityReader(p.asInstanceOf[CsvParityPartition], term, q, conf)
+      new CsvParityReader(p.asInstanceOf[ByteRanges.Span], term, q, conf)
   }
 }
 
@@ -151,83 +124,49 @@ class CsvParityScan(path: String, terminator: String, quote: String,
   * Ownership: a record belongs to the range containing its FIRST byte; the
   * last owned record is read past the range end to its terminator (or EOF).
   */
-class CsvParityReader(part: CsvParityPartition, term: Array[Byte],
+class CsvParityReader(part: ByteRanges.Span, term: Array[Byte],
     quote: Byte, conf: SerializableHadoopConf)
     extends PartitionReader[InternalRow] {
 
-  private val scanFrom = math.max(part.start - term.length, 0L)
-  private val in = {
-    val p = new Path(part.file)
-    val s = p.getFileSystem(conf.value).open(p)
-    s.seek(scanFrom)
-    new java.io.BufferedInputStream(s, 1 << 16)
-  }
-  private var pos: Long = scanFrom
+  private val cur = new ByteRanges.Cursor(part.file,
+    math.max(part.start - term.length, 0L), conf.value)
   private var withinQuote = false
   private var done = false
-  private val bb = new java.io.ByteArrayOutputStream(256)
   private var current: InternalRow = _
 
-  private def read1(): Int = { val b = in.read(); if (b >= 0) pos += 1; b }
-
-  /** Do the last `term.length` bytes of `bb` equal the terminator? */
-  private def tailIsTerm(): Boolean = {
-    val a = bb.toByteArray
-    if (a.length < term.length) return false
-    var i = 0
-    while (i < term.length) {
-      if (a(a.length - term.length + i) != term(i)) return false
-      i += 1
+  /** Read through the next unquoted terminator into the record buffer;
+    * false if EOF comes first.
+    */
+  private def readThroughTerm(): Boolean = {
+    cur.reset()
+    while (true) {
+      val b = cur.read1()
+      if (b < 0) return false
+      cur.append(b)
+      if (b == (quote & 0xff)) withinQuote = !withinQuote
+      if (!withinQuote && cur.endsWith(term)) return true
     }
-    true
+    false
   }
 
   // Realignment (ranges not starting at 0): consume through the first
-  // unquoted terminator at/after `scanFrom`, quote state assumed OUTSIDE
-  // (the reference's unsound-but-pinned assumption, cpp:409). If EOF is
-  // hit first, the whole range is the interior of an earlier record.
-  if (part.start > 0) {
-    bb.reset()
-    var found = false
-    var eof = false
-    while (!found && !eof) {
-      val b = read1()
-      if (b < 0) eof = true
-      else {
-        bb.write(b)
-        if (b == (quote & 0xff)) withinQuote = !withinQuote
-        if (!withinQuote && tailIsTerm()) found = true
-      }
-    }
-    if (!found) done = true
-  }
+  // unquoted terminator from `len(terminator)` bytes before the range
+  // start, quote state assumed OUTSIDE (the reference's
+  // unsound-but-pinned assumption, cpp:409). If EOF is hit first, the
+  // whole range is the interior of an earlier record.
+  if (part.start > 0 && !readThroughTerm()) done = true
 
   override def next(): Boolean = {
-    if (done) return false
-    val recordStart = pos
     // a record belongs to the range containing its first byte
-    if (recordStart >= part.end) { done = true; return false }
-    bb.reset()
-    var terminated = false
-    var eof = false
-    while (!terminated && !eof) {
-      val b = read1()
-      if (b < 0) eof = true
-      else {
-        bb.write(b)
-        if (b == (quote & 0xff)) withinQuote = !withinQuote
-        if (!withinQuote && tailIsTerm()) terminated = true
-      }
-    }
-    if (eof && bb.size() == 0) { done = true; return false } // clean EOF
-    val a = bb.toByteArray
-    val len = if (terminated) a.length - term.length else a.length
-    current = InternalRow(
-      UTF8String.fromBytes(a, 0, len))
-    if (eof) done = true // emit the unterminated trailing record, then stop
+    if (done || cur.pos >= part.end) { done = true; return false }
+    val terminated = readThroughTerm()
+    if (!terminated && cur.size == 0) { done = true; return false } // clean EOF
+    current = InternalRow(UTF8String.fromBytes(
+      cur.bytes(if (terminated) term.length else 0)))
+    if (!terminated) done = true // emit the unterminated trailing record, then stop
     true
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = in.close()
+  override def close(): Unit = cur.close()
 }

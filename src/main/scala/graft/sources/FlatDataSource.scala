@@ -4,7 +4,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -21,8 +21,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * sequence of `recLen`-byte records; split planning divides it into
   * record-aligned byte ranges (reference computes per-node ranges with
   * remainder spread, libhdfsconnector.cpp:76-96,661-681 — here the driver
-  * plans `ceil(size / splitBytes)` ranges rounded to `recLen`, which at equal
-  * range count degenerates to the same arithmetic). A non-multiple file size
+  * plans `ceil(size / splitBytes)` ranges per file, `splitBytes` being
+  * Spark's core-aware file-scan size rounded down to `recLen`
+  * ([[ByteRanges.splitBytes]]); at equal range count that degenerates to
+  * the same arithmetic, and a file below the open-cost floor stays one
+  * range). A non-multiple file size
   * is an error, matching the reference's strict check
   * (libhdfsconnector.cpp:85-89); `option("strict","false")` relaxes it.
   *
@@ -221,23 +224,12 @@ class FlatCountScan(paths: Seq[String], layout: EclLayout, mode: String)
     val conf = SparkSession.active.sessionState.newHadoopConf()
     val recLen = layout.recLen.toLong
     var rows = 0L
-    paths.foreach { p =>
-      val root = new Path(p)
-      val fs = root.getFileSystem(conf)
-      val files =
-        if (fs.getFileStatus(root).isDirectory)
-          fs.listStatus(root).toSeq.filter { f =>
-            val n = f.getPath.getName
-            f.isFile && f.getLen > 0 && !n.startsWith(".") && !n.startsWith("_")
-          }
-        else Seq(fs.getFileStatus(root))
-      files.foreach { f =>
-        if (mode == "FAILFAST" && f.getLen % recLen != 0)
-          throw new IllegalArgumentException(
-            s"hpcc-flat: ${f.getPath} size ${f.getLen} is not a multiple of recLen $recLen")
-        rows += f.getLen / recLen
-        if (mode == "PERMISSIVE" && f.getLen % recLen != 0) rows += 1
-      }
+    paths.flatMap(ByteRanges.list(conf, _)).foreach { case (p, size) =>
+      if (mode == "FAILFAST" && size % recLen != 0)
+        throw new IllegalArgumentException(
+          s"hpcc-flat: $p size $size is not a multiple of recLen $recLen")
+      rows += size / recLen
+      if (mode == "PERMISSIVE" && size % recLen != 0) rows += 1
     }
     Array(FlatCountPartition(rows))
   }
@@ -269,6 +261,11 @@ case class FlatInputPartition(file: String, start: Long, length: Long,
   override def preferredLocations(): Array[String] = locations
 }
 
+object FlatInputPartition {
+  def of(s: ByteRanges.Span): FlatInputPartition =
+    FlatInputPartition(s.file, s.start, s.end - s.start, s.hosts)
+}
+
 class FlatScan(paths: Seq[String], layout: EclLayout, required: StructType,
     mode: String, corruptCol: Option[String] = None,
     trimStrings: Boolean = true, wholeFile: Boolean = false,
@@ -284,48 +281,26 @@ class FlatScan(paths: Seq[String], layout: EclLayout, required: StructType,
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
     val conf = spark.sessionState.newHadoopConf()
-    val files: Seq[FileStatus] = paths.flatMap { p =>
-      val root = new Path(p)
-      val fs = root.getFileSystem(conf)
-      if (fs.getFileStatus(root).isDirectory)
-        fs.listStatus(root).toSeq.filter { f =>
-          val n = f.getPath.getName
-          f.isFile && f.getLen > 0 && !n.startsWith(".") && !n.startsWith("_")
-        }.sortBy(_.getPath.getName)
-      else Seq(fs.getFileStatus(root))
-    }
-
+    val files = paths.flatMap(ByteRanges.list(conf, _))
     val recLen = layout.recLen.toLong
-    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    // round the target split down to a whole number of records (>= 1 record)
-    val targetSplit = math.max((maxSplit / recLen) * recLen, recLen)
-
-    files.flatMap { f =>
-      val size = f.getLen
-      if (size % recLen != 0) {
-        if (mode == "FAILFAST") throw new IllegalArgumentException(
-          s"hpcc-flat: ${f.getPath} size $size is not a multiple of recLen $recLen")
-      }
-      val usable = (size / recLen) * recLen
-      val tail = if (mode == "PERMISSIVE") size - usable else 0L
-      // wholeFile = the reference's unpartitioned streamInFile mode
-      // (libhdfsconnector.cpp:607-650): one partition spans the file
-      val splitBytes = if (wholeFile) math.max(usable, recLen) else targetSplit
-      val blocks = f.getPath.getFileSystem(conf).getFileBlockLocations(f, 0, size)
-      val parts = (0L until usable by splitBytes).map { start =>
-        val len = math.min(splitBytes, usable - start)
-        val hosts = blocks.filter(b =>
-          b.getOffset < start + len && start < b.getOffset + b.getLength)
-          .flatMap(_.getHosts).distinct
-        FlatInputPartition(f.getPath.toString, start, len, hosts)
-      }
+    if (mode == "FAILFAST") files.find(_._2 % recLen != 0).foreach {
+      case (p, size) => throw new IllegalArgumentException(
+        s"hpcc-flat: $p size $size is not a multiple of recLen $recLen")
+    }
+    // wholeFile = the reference's unpartitioned streamInFile mode
+    // (libhdfsconnector.cpp:607-650): one partition spans the file
+    val spans = ByteRanges.plan(spark, files, recLen,
+      fixed = if (wholeFile) Long.MaxValue else 0L)
+    files.zip(spans).flatMap { case ((p, size), ss) =>
+      val parts = ss.map(FlatInputPartition.of)
+      val tail = if (mode == "PERMISSIVE") size % recLen else 0L
       if (tail > 0) {
         // the LAST partition owns the truncated tail (or a tail-only
         // partition when the file is shorter than one record)
         if (parts.nonEmpty)
           parts.init :+ parts.last.copy(tailLen = tail)
         else
-          Seq(FlatInputPartition(f.getPath.toString, 0L, 0L,
+          Seq(FlatInputPartition(p.toString, 0L, 0L,
             Array.empty, tailLen = tail))
       } else parts
     }.toArray
@@ -348,6 +323,13 @@ class FlatScan(paths: Seq[String], layout: EclLayout, required: StructType,
   */
 case class FlatOffset(files: Map[String, Long])
     extends org.apache.spark.sql.connector.read.streaming.Offset {
+  /** The files this offset holds and `start` does not, sorted by path. */
+  def since(start: org.apache.spark.sql.connector.read.streaming.Offset)
+      : Seq[(Path, Long)] = {
+    val seen = start.asInstanceOf[FlatOffset].files.keySet
+    files.toSeq.filterNot(f => seen(f._1)).sortBy(_._1)
+      .map { case (f, n) => new Path(f) -> n }
+  }
   override def json(): String = {
     val m = new util.TreeMap[String, Long]()
     files.foreach { case (k, v) => m.put(k, v) }
@@ -384,57 +366,18 @@ class FlatMicroBatchStream(paths: Seq[String], layout: EclLayout,
 
   private def conf = SparkSession.active.sessionState.newHadoopConf()
 
-  private def listFiles(): Map[String, Long] = {
-    val c = conf
-    paths.flatMap { p =>
-      val root = new Path(p)
-      val fs = root.getFileSystem(c)
-      if (!fs.exists(root)) Seq.empty
-      else if (fs.getFileStatus(root).isDirectory)
-        fs.listStatus(root).toSeq.filter { f =>
-          val n = f.getPath.getName
-          f.isFile && f.getLen > 0 && !n.startsWith(".") && !n.startsWith("_")
-        }.map(f => f.getPath.toString -> f.getLen)
-      else {
-        val st = fs.getFileStatus(root)
-        Seq(st.getPath.toString -> st.getLen)
-      }
-    }.toMap
-  }
-
   override def initialOffset(): Offset = FlatOffset(Map.empty)
-  override def latestOffset(): Offset = FlatOffset(listFiles())
+  override def latestOffset(): Offset = FlatOffset(ByteRanges.visible(conf, paths))
   override def deserializeOffset(json: String): Offset = FlatOffset.fromJson(json)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val seen = start.asInstanceOf[FlatOffset].files.keySet
-    val newFiles = end.asInstanceOf[FlatOffset].files.filterNot {
-      case (f, _) => seen.contains(f)
-    }
-    val recLen = layout.recLen.toLong
-    val spark = SparkSession.active
-    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    val targetSplit = math.max((maxSplit / recLen) * recLen, recLen)
-    val c = conf
-    newFiles.toSeq.sortBy(_._1).flatMap { case (file, size) =>
-      // non-multiple files: read the whole records, ignore the tail (a
-      // strict failure would poison the query permanently — log-and-go
-      // is the only sane streaming behavior)
-      val usable = (size / recLen) * recLen
-      val path = new Path(file)
-      val fs = path.getFileSystem(c)
-      val blocks = fs.getFileBlockLocations(fs.getFileStatus(path), 0, size)
-      (0L until usable by targetSplit).map { startB =>
-        val len = math.min(targetSplit, usable - startB)
-        val hosts = blocks.filter(b =>
-          b.getOffset < startB + len && startB < b.getOffset + b.getLength)
-          .flatMap(_.getHosts).distinct
-        FlatInputPartition(file, startB, len, hosts)
-      }
-    }.toArray
-  }
+  // non-multiple files: read the whole records, ignore the tail (a strict
+  // failure would poison the query permanently — log-and-go is the only
+  // sane streaming behavior)
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    ByteRanges.plan(SparkSession.active, end.asInstanceOf[FlatOffset].since(start),
+      layout.recLen.toLong).flatten.map(FlatInputPartition.of).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new FlatReaderFactory(layout.spec, required.fieldNames, trimStrings,

@@ -104,7 +104,7 @@ object HpccCsv {
 
   /** Quote-parity splittable read (SURVEY §7 hard-part #2): records may
     * contain the terminator inside quoted fields, and the file is STILL
-    * read with even byte-range splits — the reference's realignment
+    * read with byte-range splits — the reference's realignment
     * protocol (quote-toggling scan, libhdfsconnector.cpp:437-443)
     * reproduced by [[CsvParitySource]], then field-parsed with `from_csv`.
     * Spark's built-in csv can only do this with `multiLine=true`, which
@@ -250,8 +250,10 @@ object HpccCsv {
         if (!fsx.rename(tmp, finalFile))
           throw new java.io.IOException(s"hpcc-csv: rename $tmp -> $finalFile failed")
       } catch {
-        case e: Throwable =>
-          try { out.close(); fsx.delete(tmp, false) } catch { case _: Throwable => }
+        // Exception, not NonFatal: a killed task's interrupt cleans up too
+        case e: Exception =>
+          for (step <- Seq(() => out.close(), () => fsx.delete(tmp, false)))
+            try step() catch { case scala.util.control.NonFatal(c) => e.addSuppressed(c) }
           throw e
       }
     }

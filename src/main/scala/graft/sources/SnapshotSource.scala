@@ -1200,7 +1200,7 @@ private[graft] class SnapshotStreamDataWriter(path: Path,
     GraftStreamCommitMessage(path.toString, rows)
   }
   override def abort(): Unit = {
-    try writer.close() catch { case _: Throwable => }
+    try writer.close() catch { case scala.util.control.NonFatal(_) => }
     path.getFileSystem(conf).delete(path, false)
     ()
   }

@@ -3,8 +3,6 @@ package graft.sources
 import java.util
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -19,8 +17,11 @@ import org.apache.spark.unsafe.types.UTF8String
 /** `hpcc-xml`: splittable row-tag XML reader as a DSv2 table.
   *
   * Reproduces the reference's XML partitioned scan semantics
-  * (libhdfsconnector.cpp:211-383): the file is split into even byte ranges;
-  * a range emits exactly the rows whose opening `<rowTag` starts inside it
+  * (libhdfsconnector.cpp:211-383): each file is split into byte ranges of
+  * Spark's core-aware file-scan size ([[ByteRanges.splitBytes]]), so even a
+  * file under `maxPartitionBytes` fills the cores once it is past the
+  * open-cost floor; a range emits exactly the rows whose opening `<rowTag`
+  * starts inside it
   * (realignment: scan forward from the range start for the first opening
   * tag; read past the range end to finish the last row). The reference
   * synthesizes enclosing xpath wrappers per slice so Thor sees well-formed
@@ -34,7 +35,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * :318-321 — documented divergence). Split realignment is only sound for
   * flat documents, so nesting is opted into via `nestedRowTag=true`, which
   * trades splits for whole-file ranges; the flat default keeps the
-  * even-range fast path.
+  * split fast path. Like the CSV quote-parity splitter, a range that starts
+  * inside a comment or CDATA section cannot know it: a literal `<rowTag`
+  * later in that section reads as a row start (pinned in
+  * SplitInvariancePropSpec); such documents past the open-cost floor need
+  * `nestedRowTag=true` for whole-file ranges.
   *
   * Write side: Spark's built-in `xml` sink — the reference never serializes
   * XML itself either (pipe-out passes the format through to Thor,
@@ -109,11 +114,6 @@ class XmlScanBuilder(path: String, rowTag: String, full: StructType,
     new XmlScan(path, rowTag, required, mode, corruptCol, nested)
 }
 
-case class XmlInputPartition(file: String, start: Long, end: Long,
-    fileEnd: Long, locations: Array[String]) extends InputPartition {
-  override def preferredLocations(): Array[String] = locations
-}
-
 class XmlScan(path: String, rowTag: String, required: StructType,
     mode: String = "FAILFAST", corruptCol: Option[String] = None,
     nested: Boolean = false)
@@ -123,35 +123,13 @@ class XmlScan(path: String, rowTag: String, required: StructType,
   override def toBatch: Batch = this
   override def description(): String = s"hpcc-xml rowTag=$rowTag"
 
+  // nested row tags forfeit splits (whole-file ranges); flat files keep
+  // the core-aware realignment fast path
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val files: Seq[FileStatus] =
-      if (fs.getFileStatus(root).isDirectory)
-        fs.listStatus(root).toSeq.filter { f =>
-          val n = f.getPath.getName
-          f.isFile && f.getLen > 0 && !n.startsWith(".") && !n.startsWith("_")
-        }.sortBy(_.getPath.getName)
-      else Seq(fs.getFileStatus(root))
-    // nested row tags forfeit splits (whole-file ranges); flat files
-    // keep the even-range realignment fast path
-    val splitBytes =
-      if (nested) Long.MaxValue
-      else math.max(spark.sessionState.conf.filesMaxPartitionBytes, 1L)
-
-    files.flatMap { f =>
-      val size = f.getLen
-      val blocks = fs.getFileBlockLocations(f, 0, size)
-      (0L until size by splitBytes).map { start =>
-        val end = math.min(start + splitBytes, size)
-        val hosts = blocks.filter(b =>
-          b.getOffset < end && start < b.getOffset + b.getLength)
-          .flatMap(_.getHosts).distinct
-        XmlInputPartition(f.getPath.toString, start, end, size, hosts)
-      }
-    }.toArray
+    val files = ByteRanges.list(spark.sessionState.newHadoopConf(), path)
+    ByteRanges.plan(spark, files, fixed = if (nested) Long.MaxValue else 0L)
+      .flatten.toArray[InputPartition]
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -180,48 +158,16 @@ class XmlMicroBatchStream(path: String, rowTag: String, required: StructType)
 
   private def conf = SparkSession.active.sessionState.newHadoopConf()
 
-  private def listFiles(): Map[String, Long] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) Map.empty
-    else if (fs.getFileStatus(root).isDirectory)
-      fs.listStatus(root).toSeq.filter { f =>
-        val n = f.getPath.getName
-        f.isFile && f.getLen > 0 && !n.startsWith(".") && !n.startsWith("_")
-      }.map(f => f.getPath.toString -> f.getLen).toMap
-    else {
-      val st = fs.getFileStatus(root)
-      Map(st.getPath.toString -> st.getLen)
-    }
-  }
-
   override def initialOffset(): Offset = FlatOffset(Map.empty)
-  override def latestOffset(): Offset = FlatOffset(listFiles())
+  override def latestOffset(): Offset =
+    FlatOffset(ByteRanges.visible(conf, Seq(path)))
   override def deserializeOffset(json: String): Offset = FlatOffset.fromJson(json)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val seen = start.asInstanceOf[FlatOffset].files.keySet
-    val newFiles = end.asInstanceOf[FlatOffset].files.filterNot {
-      case (f, _) => seen.contains(f)
-    }
-    val spark = SparkSession.active
-    val splitBytes = math.max(spark.sessionState.conf.filesMaxPartitionBytes, 1L)
-    val c = conf
-    newFiles.toSeq.sortBy(_._1).flatMap { case (file, size) =>
-      val p = new Path(file)
-      val fs = p.getFileSystem(c)
-      val blocks = fs.getFileBlockLocations(fs.getFileStatus(p), 0, size)
-      (0L until size by splitBytes).map { s =>
-        val e = math.min(s + splitBytes, size)
-        val hosts = blocks.filter(b =>
-          b.getOffset < e && s < b.getOffset + b.getLength)
-          .flatMap(_.getHosts).distinct
-        XmlInputPartition(file, s, e, size, hosts)
-      }
-    }.toArray
-  }
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    ByteRanges.plan(SparkSession.active, end.asInstanceOf[FlatOffset]
+      .since(start)).flatten.toArray[InputPartition]
 
   override def createReaderFactory(): PartitionReaderFactory =
     new XmlReaderFactory(rowTag, required,
@@ -232,7 +178,7 @@ class XmlReaderFactory(rowTag: String, required: StructType,
     conf: SerializableHadoopConf, mode: String = "FAILFAST",
     corruptCol: Option[String] = None) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new XmlPartitionReader(p.asInstanceOf[XmlInputPartition], rowTag, required,
+    new XmlPartitionReader(p.asInstanceOf[ByteRanges.Span], rowTag, required,
       conf, mode, corruptCol)
 }
 
@@ -241,7 +187,7 @@ class XmlReaderFactory(rowTag: String, required: StructType,
   * even past range end :337-343; tags spanning buffer reads handled by the
   * stream abstraction :285-303).
   */
-class XmlPartitionReader(part: XmlInputPartition, rowTag: String,
+class XmlPartitionReader(part: ByteRanges.Span, rowTag: String,
     required: StructType, conf: SerializableHadoopConf,
     mode: String = "FAILFAST", corruptCol: Option[String] = None)
     extends PartitionReader[InternalRow] {
@@ -249,35 +195,22 @@ class XmlPartitionReader(part: XmlInputPartition, rowTag: String,
   private val open = s"<$rowTag".getBytes("UTF-8")
   private val closeTag = s"</$rowTag>".getBytes("UTF-8")
 
-  private val in = {
-    val p = new Path(part.file)
-    val s = p.getFileSystem(conf.value).open(p)
-    s.seek(part.start)
-    new java.io.BufferedInputStream(s, 1 << 16)
-  }
-  private var pos: Long = part.start
+  private val cur = new ByteRanges.Cursor(part.file, part.start, conf.value)
   private var done = false
-  private val bb = new java.io.ByteArrayOutputStream(256)
   private var current: InternalRow = _
-
-  private def read1(): Int = { val b = in.read(); if (b >= 0) pos += 1; b }
-
-  private def last(k: Int): Int = {
-    val a = bb.toByteArray; if (a.length < k) -1 else a(a.length - k) & 0xff
-  }
 
   /** Consume bytes until the byte sequence `p` has just been read (ring
     * compare of the trailing window — robust to self-overlapping patterns
     * like `-->` against `--->`). Optionally appends the consumed bytes to
-    * `bb`. Returns false at EOF.
+    * the record. Returns false at EOF.
     */
   private def consumeUntil(p: Array[Byte], append: Boolean): Boolean = {
     val ring = new Array[Int](p.length)
     var n = 0
     while (true) {
-      val b = read1()
+      val b = cur.read1()
       if (b < 0) return false
-      if (append) bb.write(b)
+      if (append) cur.append(b)
       ring(n % p.length) = b
       n += 1
       if (n >= p.length) {
@@ -300,14 +233,14 @@ class XmlPartitionReader(part: XmlInputPartition, rowTag: String,
     * :305-310 — a deliberate divergence, not a port.)
     */
   private def skipMarkupDecl(append: Boolean): Boolean = {
-    val b1 = read1()
+    val b1 = cur.read1()
     if (b1 < 0) return false
-    if (append) bb.write(b1)
+    if (append) cur.append(b1)
     b1 match {
       case '-' =>
-        val b2 = read1()
+        val b2 = cur.read1()
         if (b2 < 0) return false
-        if (append) bb.write(b2)
+        if (append) cur.append(b2)
         if (b2 == '-') consumeUntil(CommentEnd, append)
         else consumeUntil(Array('>'.toByte), append)
       case '[' => consumeUntil(CdataEnd, append)
@@ -324,13 +257,13 @@ class XmlPartitionReader(part: XmlInputPartition, rowTag: String,
   private def findOpen(): Long = {
     var matched = 0
     while (true) {
-      val b = read1()
+      val b = cur.read1()
       if (b < 0) return -1L
       if (matched == open.length) {
         // byte after "<rowTag": delimiter decides the match
         if (b == '>' || b == '/' || b == ' ' || b == '\t' || b == '\n' || b == '\r') {
-          bb.write(open, 0, open.length); bb.write(b)
-          return pos - open.length - 1
+          cur.append(open); cur.append(b)
+          return cur.pos - open.length - 1
         }
         matched = if (b == '<') 1 else 0
       } else if (matched == 1 && b == '!') {
@@ -343,7 +276,7 @@ class XmlPartitionReader(part: XmlInputPartition, rowTag: String,
   }
 
   /** Consume through the matching `</rowTag>` (or self-closing `/>`),
-    * appending bytes to `bb` (UTF-8-decoded only once complete). Tracks
+    * appending bytes to the record (UTF-8-decoded only once complete). Tracks
     * TAG DEPTH, so a rowTag that nests itself parses to the OUTER
     * element's end — the reference's single `withinRecord` flag cannot
     * (:318-321, documented divergence); flat documents never leave
@@ -359,29 +292,29 @@ class XmlPartitionReader(part: XmlInputPartition, rowTag: String,
     *    literal `</rowTag>` (or `<rowTag>`) inside them affects nothing.
     */
   private def readElement(): Boolean = {
-    // `bb` holds "<rowTag" + one delimiter byte already
-    if (last(1) == '/') { // "<rowTag/" — need '>'
-      val b = read1(); if (b < 0) return false
-      bb.write(b)
+    // the record holds "<rowTag" + one delimiter byte already
+    if (cur.at(1) == '/') { // "<rowTag/" — need '>'
+      val b = cur.read1(); if (b < 0) return false
+      cur.append(b)
       return b == '>'
     }
     var depth = 1
-    var inTag = last(1) != '>' // scanning a start tag (root or nested)
+    var inTag = cur.at(1) != '>' // scanning a start tag (root or nested)
     var tagIsNested = false
     var quote = 0 // active attribute-value quote char, 0 = none
     var closeM = 0 // closeTag progress
     var openM = 0 // nested "<rowTag" progress
     var prevLt = false // last body byte was '<' (markup-decl detector)
     while (true) {
-      val b = read1()
+      val b = cur.read1()
       if (b < 0) return false
-      bb.write(b)
+      cur.append(b)
       if (inTag) {
         if (quote != 0) {
           if (b == quote) quote = 0
         } else if (b == '"' || b == '\'') quote = b
         else if (b == '>') {
-          val selfClosing = last(2) == '/'
+          val selfClosing = cur.at(2) == '/'
           if (tagIsNested) { if (!selfClosing) depth += 1 }
           else if (selfClosing) return true // root "<rowTag .../>"
           inTag = false; tagIsNested = false
@@ -423,12 +356,12 @@ class XmlPartitionReader(part: XmlInputPartition, rowTag: String,
   override def next(): Boolean = {
     while (true) {
       if (done) return false
-      bb.reset()
+      cur.reset()
       val tagStart = findOpen()
       // a row belongs to the range containing its opening '<'  (:305-310)
       if (tagStart < 0 || tagStart >= part.end) { done = true; return false }
       if (readElement()) {
-        val xml = new String(bb.toByteArray, "UTF-8")
+        val xml = cur.text
         try {
           current = parseRow(xml)
           return true
@@ -441,8 +374,8 @@ class XmlPartitionReader(part: XmlInputPartition, rowTag: String,
         // unterminated element at EOF: PERMISSIVE surfaces the fragment,
         // the other modes keep the historical silent-stop
         done = true
-        if (mode == "PERMISSIVE" && bb.size() > 0) {
-          current = corruptRow(new String(bb.toByteArray, "UTF-8"))
+        if (mode == "PERMISSIVE" && cur.size > 0) {
+          current = corruptRow(cur.text)
           return true
         }
         return false
@@ -527,23 +460,40 @@ class XmlPartitionReader(part: XmlInputPartition, rowTag: String,
       case None => Map.empty
     }
 
-  private def fieldText(xml: String, name: String, attrs: Map[String, String]): Option[String] = {
-    val openIdx = xml.indexOf(s"<$name>")
+  // each required field's "<f>", "</f>" and "<f/>", built once per reader
+  private val fieldTags =
+    required.fieldNames.map(n => (s"<$n>", s"</$n>", s"<$n/>"))
+
+  /** The first `<f>...</f>` (or `<f/>`) of field `i`, else the row-tag
+    * attribute of that name, which `attrs` parses only when asked.
+    */
+  private def fieldText(xml: String, i: Int,
+      attrs: => Map[String, String]): Option[String] = {
+    val (openF, closeF, emptyF) = fieldTags(i)
+    val openIdx = xml.indexOf(openF)
     if (openIdx >= 0) {
-      val from = openIdx + name.length + 2
-      val closeIdx = xml.indexOf(s"</$name>", from)
+      val from = openIdx + openF.length
+      val closeIdx = xml.indexOf(closeF, from)
       if (closeIdx >= 0) Some(decodeText(xml.substring(from, closeIdx))) else None
-    } else if (xml.contains(s"<$name/>")) Some("")
-    else attrs.get(name)
+    } else if (xml.contains(emptyF)) Some("")
+    else attrs.get(required.fields(i).name)
   }
 
   private def parseRow(xml: String): InternalRow = {
     val row = new GenericInternalRow(required.length)
-    val attrs = rowAttributes(xml)
+    // a bare "<rowTag>" or "<rowTag/>" start tag carries no attributes;
+    // any other is parsed once, when a field has no element
+    var attrs: Map[String, String] = xml.charAt(rowTag.length + 1) match {
+      case '>' | '/' => Map.empty
+      case _ => null
+    }
     var i = 0
     while (i < required.length) {
       val f = required.fields(i)
-      val v: Any = fieldText(xml, f.name, attrs) match {
+      val v: Any = fieldText(xml, i, {
+        if (attrs == null) attrs = rowAttributes(xml)
+        attrs
+      }) match {
         case None => null
         case Some(t) => f.dataType match {
           case StringType => UTF8String.fromString(t)
@@ -566,5 +516,5 @@ class XmlPartitionReader(part: XmlInputPartition, rowTag: String,
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = in.close()
+  override def close(): Unit = cur.close()
 }

@@ -88,6 +88,20 @@ class HpccCsvSpec extends SparkSpec {
     assert(!new java.io.File(dir).listFiles().exists(_.getName.endsWith(".tmp")))
   }
 
+  test("outputTerminator=false: a task failing partway leaves no temp file, surfaces its error") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val dir = tmpDir("csv-noterm-fail")
+    val df = (0 until 100).toDF("i").repartition(1).select(
+      when(col("i") === 57, raise_error(lit("boom at row 57")))
+        .otherwise(format_string("%04d", col("i"))).as("k"))
+    val e = intercept[Exception](HpccCsv.write(df, dir, outputTerminator = false))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(t => String.valueOf(t.getMessage).contains("boom at row 57")), e)
+    val left = new java.io.File(dir).listFiles().map(_.getName).toSeq
+    assert(!left.exists(_.contains(".tmp")), s"temp files left behind: $left")
+  }
+
   // ---- quote-parity splittable read (SURVEY §7 hard-part #2) --------------
 
   /** 29-byte fixed-length records, terminator embedded in the quoted field:

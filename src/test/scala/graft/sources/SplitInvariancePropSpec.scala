@@ -98,6 +98,195 @@ class SplitInvariancePropSpec extends SparkSpec {
     check(prop, 8)
   }
 
+  // ---- hpcc-xml: split invariance and the cursor's 64 KB refill ----------
+
+  private val xmlSchema = StructType(Seq(
+    StructField("id", IntegerType), StructField("name", StringType),
+    StructField("score", DoubleType)))
+
+  private def xmlRead(dir: String, mode: String = "FAILFAST") =
+    spark.read.format("hpcc-xml").schema(xmlSchema).option("rowTag", "Row")
+      .option("mode", mode).option("columnNameOfCorruptRecord", "_corrupt")
+      .load(dir)
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  /** Reads of `dir` at the whole-file split, at 64 and 301 bytes, and at
+    * the core-aware default with a 256-byte open cost: each as sorted rows
+    * with the rows [[spurious]] expects it to add to the whole-file read.
+    */
+  private def xmlSplitReads(dir: String): Seq[(String, Seq[String], Seq[String])] =
+    Seq("whole" -> Nil,
+      "64" -> Seq("spark.sql.files.maxPartitionBytes" -> "64"),
+      "301" -> Seq("spark.sql.files.maxPartitionBytes" -> "301"),
+      "core-aware" -> Seq("spark.sql.files.openCostInBytes" -> "256"))
+      .map { case (name, kv) =>
+        kv.foreach { case (k, v) => spark.conf.set(k, v) }
+        try {
+          val parts = new XmlScan(dir, "Row", xmlSchema).planInputPartitions()
+            .map(_.asInstanceOf[ByteRanges.Span]).toSeq
+          (name, rowsOf(xmlRead(dir)), spurious(parts))
+        } finally kv.foreach { case (k, _) => spark.conf.unset(k) }
+      }
+
+  /** The rows a split read adds to the whole-file read. A range that starts
+    * inside a comment or CDATA section cannot know it, so a literal `<Row`
+    * later in that section and inside the range reads as a row start — the
+    * XML form of the quote-parity splitter's documented divergence.
+    */
+  private def spurious(parts: Seq[ByteRanges.Span]): Seq[String] =
+    parts.groupBy(_.file).toSeq.flatMap { case (file, ps) =>
+      val text = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(new java.net.URI(file))), "ISO-8859-1")
+      // (section start, offset of the literal "<Row", the row it reads as)
+      def at(open: String, row: String) =
+        Iterator.iterate(text.indexOf(open))(i => text.indexOf(open, i + 1))
+          .takeWhile(_ >= 0).map(i => (i, i + open.length - 5, row))
+      val sections = (at("<!-- <Row>", "[-1,null,null]") ++
+        at("<![CDATA[<Row>", "[null,null,null]")).toSeq
+      for {
+        p <- ps
+        (cs, t, row) <- sections if cs < p.start && p.start <= t && t < p.end
+      } yield row
+    }
+
+  /** One generated `<Row>` (or a near-miss that is no row) and whether it
+    * counts as a row.
+    */
+  private def xmlRow(i: Int, w: String, style: Int, ind: String): (String, Boolean) = {
+    val in = if (ind.isEmpty) "" else ind + "    "
+    def el(body: String) =
+      s"<Row>$in<id>$i</id>$in$body$in<score>${i * 0.5}</score>$ind</Row>"
+    style match {
+      case 0 => el(s"<name>$w &amp; &#x41;&lt;x&gt;</name>") -> true
+      case 1 => el(s"<name><![CDATA[<Row>$w</Row> ]]]]></name>") -> true
+      case 2 => el(s"<name>$w</name><!-- <Row><id>-1</id></Row> -->") -> true
+      case 3 =>
+        s"""<Row note="a>b" id="$i" name='$w/>'>$in<score>1.5</score>$ind</Row>""" -> true
+      case 4 => "<Row/>" -> true
+      case 5 => s"<Rows><id>-$i</id><name>$w</name></Rows>" -> false
+      case _ => el(s"<name>$w 中文 émoji 😀</name>") -> true
+    }
+  }
+
+  test("XML: ∀ content × split, partitioned == whole (+ the markup-section pin)") {
+    val gen = for {
+      n <- Gen.choose(10, 60)
+      styles <- Gen.listOfN(n, Gen.choose(0, 6))
+      words <- Gen.listOfN(n, word)
+      ind <- Gen.oneOf("", "\n    ")
+    } yield (styles, words, ind)
+    val prop = Prop.forAll(gen) { case (styles, words, ind) =>
+      val rows = styles.zip(words).zipWithIndex.map { case ((st, w), i) =>
+        xmlRow(i, w, st, ind) }
+      val dir = tmpDir("xml-prop")
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "data.xml"),
+        ("<Dataset>" + rows.map(r => ind + r._1).mkString("\n") +
+          "\n</Dataset>\n").getBytes("UTF-8"))
+      val reads = xmlSplitReads(dir)
+      val whole = reads.head._2
+      val bad = reads.collect {
+        case (k, got, extra) if got != (whole ++ extra).sorted =>
+          s"$k: ${got.diff(whole).take(3)} vs ${whole.diff(got).take(3)}, extra $extra"
+      }
+      Prop(whole.size == rows.count(_._2) && bad.isEmpty) :|
+        s"whole ${whole.size} of ${rows.count(_._2)} rows; $bad"
+    }
+    check(prop, 6)
+  }
+
+  test("XML: built-in xml writer output reads the same at every split") {
+    val gen = for {
+      n <- Gen.choose(20, 120)
+      words <- Gen.listOfN(n, word)
+      parts <- Gen.choose(1, 3)
+    } yield (words, parts)
+    val prop = Prop.forAll(gen) { case (words, parts) =>
+      import spark.implicits._
+      val df = words.zipWithIndex.map { case (w, i) =>
+        (i, if (i % 2 == 0) s"$w <&> 中文" else w, i * 0.25) }
+        .toDF("id", "name", "score")
+      val dir = tmpDir("xml-builtin-prop")
+      df.repartition(parts).write.format("xml").option("rowTag", "Row")
+        .mode("overwrite").save(dir)
+      val builtin = rowsOf(spark.read.format("xml").schema(xmlSchema)
+        .option("rowTag", "Row").load(dir))
+      val reads = xmlSplitReads(dir)
+      builtin.size == words.size && reads.forall(r => r._2 == builtin && r._3.isEmpty)
+    }
+    check(prop, 4)
+  }
+
+  /** `<Dataset>`, filler rows, then `row`, placed so that the first `token`
+    * in `row` starts `cut` bytes before the 64 KB mark.
+    */
+  private def straddle(row: String, token: String, cut: Int): String = {
+    val head = new StringBuilder("<Dataset>\n")
+    var i = 1000
+    while (head.length < 65000) {
+      head.append(s"<Row><id>$i</id><name>f</name><score>0.0</score></Row>\n"); i += 1
+    }
+    val at = row.indexOf(token)
+    head.append(" " * (65536 - cut - at - head.length))
+    head.append(row).append("\n</Dataset>\n").toString
+  }
+
+  test("XML and CSV-parity tokens straddling the 64 KB refill read intact") {
+    val row = "<Row><id>7</id><name><![CDATA[a<b]]></name><score>2.5</score></Row>"
+    val cases = Seq("<Row" -> 1, "<Row" -> 2, "</Row>" -> 3, "</Row>" -> 5,
+      "]]>" -> 1, "]]>" -> 2)
+    for ((token, cut) <- cases) {
+      val text = straddle(row, token, cut)
+      assert(text.getBytes("UTF-8").length > 65536)
+      val dir = tmpDir("xml-refill")
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "data.xml"),
+        text.getBytes("UTF-8"))
+      val got = xmlRead(dir).filter("id = 7").collect()
+      assert(got.map(_.toString).toSeq == Seq("[7,a<b,2.5]"), s"$token cut $cut")
+      assert(xmlRead(dir).count() == text.split("<Row>").length - 1)
+    }
+    // one 70 KB field: the record buffer grows past a refill
+    val big = "x" * (70 * 1024)
+    val dir = tmpDir("xml-big")
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "data.xml"),
+      (s"<Dataset><Row><id>1</id><name>$big</name><score>1.0</score></Row>" +
+        "<Row><id>2</id></Row></Dataset>").getBytes("UTF-8"))
+    assert(xmlRead(dir).orderBy("id").collect().map(r =>
+      (r.getInt(0), Option(r.getString(1)).map(_.length))).toSeq ==
+      Seq((1, Some(big.length)), (2, None)))
+    // CSV-parity: a "\r\n" split by the refill, once as the terminator and
+    // once inside a quoted field, then a 70 KB record
+    for (quoted <- Seq(false, true)) {
+      val head = (0 until 4600).map(i => f"$i%05d,'q\r\nq'") // 14 bytes each
+      val used = head.map(_.length + 2).sum
+      // the pad record puts its (quoted or terminating) '\r' at byte 65535
+      val pad =
+        if (quoted) s"p,${"z" * (65530 - used)},'q\r\nq'"
+        else s"p,${"z" * (65535 - used - 2)}"
+      val recs = (head :+ pad :+ ("z" * (70 * 1024))) ++
+        (0 until 50).map(i => f"$i%05d,'q\r\nq'")
+      val bytes = recs.mkString("", "\r\n", "\r\n").getBytes("UTF-8")
+      assert(bytes(65535) == '\r' && bytes(65536) == '\n')
+      val csv = tmpDir("csv-refill")
+      java.nio.file.Files.write(java.nio.file.Paths.get(csv, "data.csv"), bytes)
+      val got = spark.read.format("hpcc-csv-parity")
+        .option("terminator", "\\r\\n").load(csv)
+        .collect().map(_.getString(0)).toSeq
+      assert(got == recs, s"quoted=$quoted")
+    }
+  }
+
+  test("XML PERMISSIVE: an element cut off at EOF surfaces its fragment") {
+    val dir = tmpDir("xml-eof")
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "data.xml"),
+      "<Dataset>\n<Row><id>1</id></Row>\n<Row><id>2</id><name>trunc"
+        .getBytes("UTF-8"))
+    val got = xmlRead(dir, "PERMISSIVE").collect().map(_.toString).toSeq.sorted
+    assert(got == Seq("[1,null,null,null]",
+      "[null,null,null,<Row><id>2</id><name>trunc]"))
+  }
+
   test("expandEscapes: escape-free strings are fixed points; no stray backslashes") {
     val escFree = Gen.listOf(Gen.oneOf(Gen.alphaNumChar, Gen.oneOf(' ', ',',
       '\'', '"', '~', '|'))).map(_.mkString)
