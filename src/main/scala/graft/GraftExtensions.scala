@@ -18,6 +18,15 @@ import graft.sources.{GraftSqlRules, GraftStreamingRules}
   * .SnapshotTableV2]] are rewritten onto the f29 vectorized-parquet
   * relation, and DELETE/UPDATE/MERGE route to the snapshot verbs. It is
   * a post-hoc resolution rule so DML nodes arrive fully resolved.
+  *
+  * [[SmallSortInOneTask]] is an AQE runtime optimizer rule. It fires on a
+  * global sort once every leaf below it is a materialized query stage (or a
+  * local relation) and those stages' runtime bytes fit AQE's target for
+  * one coalesced partition, with partition coalescing on. It then sorts in
+  * the one task that reads those stages, so the sort's range exchange and
+  * its sampling job are not run. To see it, run
+  * `graft.Prof --executed <query>`: the final plan shows `Coalesce 1` under
+  * the `Sort` and no `Exchange rangepartitioning`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -28,6 +37,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "", "", "", "", "", "", "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectRuntimeOptimizerRule(_ => SmallSortInOneTask)
     ext.injectPostHocResolutionRule(GraftSqlRules.apply)
     // main-batch rule: readStream.table("graft.db.t") must re-resolve
     // downstream attributes when readChangeFeed widens the schema

@@ -1,8 +1,14 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.{Collections, WeakHashMap}
+import java.util.concurrent.ConcurrentHashMap
+
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet star-schema loaders (driver fixtures, see TESTDATA.md).
   *
@@ -12,8 +18,65 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * column pruning and predicate pushdown are Catalyst's job.
   */
 object Tables {
+
+  /** What an inferred parquet schema depends on: the path, every file
+    * under it (name, length, modification time) and the session's
+    * schema-inference settings. */
+  private final case class SchemaKey(path: String,
+      files: Seq[(String, Long, Long)], settings: Seq[Boolean])
+
+  /** Inferred schemas per session `sharedState` (a `private[sql]` type,
+    * hence `AnyRef`), so `newSession()` children share their parent's
+    * entries; held weakly, so a stopped context's memo is collected with
+    * it. */
+  private val schemas = Collections.synchronizedMap(
+    new WeakHashMap[AnyRef, ConcurrentHashMap[SchemaKey, StructType]]())
+
+  /** A fixture table: [[parquet]] over `<dir>/<name>.parquet`, so its schema
+    * is inferred once per session and inferred again only when a file under
+    * the path is added, removed or rewritten, or a parquet inference setting
+    * changes (the list is on [[parquet]]). */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(p)` that infers the schema once per session.
+    * Spark infers a parquet schema with a job that opens a footer; at
+    * sf0.01 that job is most of a query's construction. So the first call
+    * infers it and later calls pass the memoized schema to
+    * `spark.read.schema(…)`, which runs no job. The memo is shared by every
+    * session of one `SparkContext`. An entry stops matching, and the schema
+    * is inferred again, when a file under the path is added, removed, or
+    * changes length or modification time, or when one of the settings that
+    * shape inference changes: `spark.sql.legacy.parquet.nanosAsLong`,
+    * `spark.sql.parquet.binaryAsString`, `spark.sql.parquet.int96AsTimestamp`,
+    * `spark.sql.parquet.inferTimestampNTZ.enabled`,
+    * `spark.sql.parquet.mergeSchema` and `spark.sql.caseSensitive`.
+    */
+  def parquet(spark: SparkSession, p: String): DataFrame =
+    schemaKey(spark, p).fold(spark.read.parquet(p)) { key =>
+      val memo = schemas.computeIfAbsent(spark.sharedState, _ => new ConcurrentHashMap)
+      Option(memo.get(key)).fold {
+        val df = spark.read.parquet(p)
+        memo.put(key, df.schema)
+        df
+      }(spark.read.schema(_).parquet(p))
+    }
+
+  /** None when the path does not exist: the plain read then fails with
+    * Spark's own error. */
+  private def schemaKey(spark: SparkSession, p: String): Option[SchemaKey] = {
+    val path = new Path(p)
+    val conf = spark.sessionState.conf
+    try {
+      val it = path.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(path, true)
+      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+      Some(SchemaKey(p, files, Seq(conf.legacyParquetNanosAsLong,
+        conf.isParquetBinaryAsString, conf.isParquetINT96AsTimestamp,
+        conf.parquetInferTimestampNTZEnabled, conf.isParquetSchemaMergingEnabled,
+        conf.caseSensitiveAnalysis)))
+    } catch { case _: FileNotFoundException => None }
+  }
 
   /** Schema-adaptive events loader. The fixture's `ts` column has shipped in
     * two vintages: TIMESTAMP(NANOS) (which Spark's parquet reader only admits

@@ -646,7 +646,7 @@ object Relational extends QueryPack {
         s2.sql(rankedChainSql("g_orders"))
           .write.mode("overwrite").parquet(out)
       }
-      s2.read.parquet(out).createOrReplaceTempView("g_ranked")
+      T.parquet(s2, out).createOrReplaceTempView("g_ranked")
       s2.sql(s"WITH RECURSIVE $chainWalkSql FROM g_ranked WHERE rn = 1" +
         chainWalkTail)
     })

@@ -22,6 +22,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     SparkSession.setDefaultSession(spark)
     SparkSession.setActiveSession(spark)
   }
+  /** Runs `body` with the session settings `kv`, restoring the previous
+    * values after. */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
   def tmpDir(name: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft-$name").toFile
     d.deleteOnExit()

@@ -16,15 +16,6 @@ class ByteRangesSpec extends SparkSpec {
 
   private val layout = EclLayout.parse("id:unsigned4,name:string36")
 
-  private def withConf(kv: (String, String)*)(f: => Unit): Unit = {
-    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** `n` rows of about 40 bytes in each format; returns the (xml, flat,
     * csv) directories.
     */
