@@ -1,21 +1,24 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.execution.datasources.FilePartition
 
 /** Byte-range planning and reading shared by the range-split sources
   * (`hpcc-flat`, `hpcc-xml`, `hpcc-csv-parity`, batch and micro-batch):
-  * one listing rule, one split rule and one buffered cursor.
+  * one listing rule, one split rule, one buffered cursor that all three
+  * readers read through, and one micro-batch stream.
   */
 object ByteRanges {
 
-  /** `[start, end)` of `file`, the input partition of the XML and
-    * CSV-parity readers; `hosts` hold its HDFS blocks.
+  /** `[start, end)` of `file`, the input partition of all three sources;
+    * `hosts` hold its HDFS blocks.
     */
   final case class Span(file: String, start: Long, end: Long,
       hosts: Array[String]) extends InputPartition {
@@ -36,13 +39,32 @@ object ByteRanges {
     }.sortBy(_.getPath.getName).map(f => f.getPath -> f.getLen)
   }
 
-  /** What a micro-batch stream over `paths` sees now, as a [[FlatOffset]]
-    * holds it: path string -> size; a missing path contributes nothing.
+  /** Micro-batch read of `paths` by a range-split scan: tail a landing
+    * directory (the reference is batch-only, ecl/HDFSConnector.ecl:55-56).
+    * An offset is the set of visible files and their sizes; each
+    * micro-batch is the files that appeared since the last offset, split
+    * by the scan's own planner `plan` and read by its own reader factory,
+    * so a stream keeps every option of the batch read. A missing path
+    * contributes no files. Files must be immutable once visible
+    * (write-then-rename drops, as the FLAT sink and the reference's parts
+    * are); a file that grows in place is not supported (SURVEY §2.1 #11).
     */
-  def visible(conf: Configuration, paths: Seq[String]): Map[String, Long] =
-    paths.map(new Path(_)).filter(p => p.getFileSystem(conf).exists(p))
-      .flatMap(p => list(conf, p.toString))
-      .map { case (p, n) => p.toString -> n }.toMap
+  final class Stream(paths: Seq[String],
+      plan: Seq[(Path, Long)] => Array[InputPartition],
+      readers: () => PartitionReaderFactory) extends MicroBatchStream {
+    override def initialOffset(): Offset = FlatOffset(Map.empty)
+    override def latestOffset(): Offset = {
+      val conf = SparkSession.active.sessionState.newHadoopConf()
+      FlatOffset(paths.map(new Path(_)).filter(p => p.getFileSystem(conf).exists(p))
+        .flatMap(p => list(conf, p.toString)).map { case (p, n) => p.toString -> n }.toMap)
+    }
+    override def deserializeOffset(json: String): Offset = FlatOffset.fromJson(json)
+    override def commit(end: Offset): Unit = ()
+    override def stop(): Unit = ()
+    override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+      plan(end.asInstanceOf[FlatOffset].since(start))
+    override def createReaderFactory(): PartitionReaderFactory = readers()
+  }
 
   /** Spark's split size for file scans, the one the built-in csv and
     * parquet scans use: `min(maxPartitionBytes, max(openCostInBytes,
@@ -88,8 +110,9 @@ object ByteRanges {
   /** A forward byte reader over one file from offset `from`, and the
     * record buffer the reader assembles a row in. One task owns it, so
     * nothing is synchronized: `read1` is an array index into a 64 KB block
-    * refilled with bulk reads, and `at`/`endsWith` look back into the
-    * record without copying it.
+    * refilled with bulk reads, `readFully` copies fixed-width records out
+    * of that block, and `at`/`endsWith` look back into the record without
+    * copying it.
     */
   final class Cursor(file: String, from: Long, conf: Configuration)
       extends java.io.Closeable {
@@ -115,6 +138,22 @@ object ByteRanges {
       next += 1
       offset += 1
       b
+    }
+
+    /** Fills `buf` with the next bytes, across block edges; throws
+      * `EOFException` if the file ends first.
+      */
+    def readFully(buf: Array[Byte]): Unit = {
+      var at = 0
+      while (at < buf.length) {
+        if (next == filled && !refill())
+          throw new java.io.EOFException(s"$file: EOF at $offset")
+        val n = math.min(buf.length - at, filled - next)
+        System.arraycopy(block, next, buf, at, n)
+        next += n
+        offset += n
+        at += n
+      }
     }
 
     private def refill(): Boolean = {
@@ -158,5 +197,30 @@ object ByteRanges {
       java.util.Arrays.copyOf(rec, len - drop)
 
     override def close(): Unit = in.close()
+  }
+}
+
+/** Streaming offset of the range-split sources: the set of visible files
+  * and their sizes. Files become visible atomically (the sinks rename temp
+  * files on task commit), so file granularity is exact-once: a file is
+  * either absent from an offset or fully contained in it.
+  */
+case class FlatOffset(files: Map[String, Long]) extends Offset {
+  /** The files this offset holds and `start` does not, sorted by path. */
+  def since(start: Offset): Seq[(Path, Long)] = {
+    val seen = start.asInstanceOf[FlatOffset].files.keySet
+    files.toSeq.filterNot(f => seen(f._1)).sortBy(_._1)
+      .map { case (f, n) => new Path(f) -> n }
+  }
+  override def json(): String =
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(new java.util.TreeMap[String, Long](files.asJava))
+}
+
+object FlatOffset {
+  def fromJson(json: String): FlatOffset = {
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(json, classOf[java.util.Map[String, Number]])
+    FlatOffset(m.asScala.map { case (k, v) => k -> v.longValue }.toMap)
   }
 }

@@ -4,7 +4,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -25,9 +25,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Spark's core-aware file-scan size rounded down to `recLen`
   * ([[ByteRanges.splitBytes]]); at equal range count that degenerates to
   * the same arithmetic, and a file below the open-cost floor stays one
-  * range). A non-multiple file size
+  * range). Ranges are [[ByteRanges.Span]]s, read through the shared
+  * [[ByteRanges.Cursor]]. A non-multiple file size
   * is an error, matching the reference's strict check
   * (libhdfsconnector.cpp:85-89); `option("strict","false")` relaxes it.
+  * In PERMISSIVE mode the file's last span runs to the end of the file, and
+  * the bytes after its last whole record become one tail row; a file
+  * shorter than one record is the single span `[0, size)`.
   *
   * Unlike the reference byte pump, the scan decodes ONLY the columns Catalyst
   * asks for (`SupportsPushDownRequiredColumns`), and reports HDFS block
@@ -221,17 +225,11 @@ class FlatCountScan(paths: Seq[String], layout: EclLayout, mode: String)
     s"hpcc-flat recLen=${layout.recLen} PushedAggregates: [COUNT(*)]"
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
     val recLen = layout.recLen.toLong
-    var rows = 0L
-    paths.flatMap(ByteRanges.list(conf, _)).foreach { case (p, size) =>
-      if (mode == "FAILFAST" && size % recLen != 0)
-        throw new IllegalArgumentException(
-          s"hpcc-flat: $p size $size is not a multiple of recLen $recLen")
-      rows += size / recLen
-      if (mode == "PERMISSIVE" && size % recLen != 0) rows += 1
-    }
-    Array(FlatCountPartition(rows))
+    Array(FlatCountPartition(FlatScan.files(paths, recLen, mode).map {
+      case (_, size) =>
+        size / recLen + (if (mode == "PERMISSIVE" && size % recLen != 0) 1 else 0)
+    }.sum))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -251,21 +249,6 @@ object FlatCountReaderFactory extends PartitionReaderFactory {
     }
 }
 
-/** One record-aligned byte range of one file. `tailLen > 0` marks the
-  * partition that owns the file's truncated trailing record (PERMISSIVE
-  * mode only): after its whole records, the reader emits one all-null row
-  * carrying the hex of those tail bytes in the corrupt-record column.
-  */
-case class FlatInputPartition(file: String, start: Long, length: Long,
-    locations: Array[String], tailLen: Long = 0L) extends InputPartition {
-  override def preferredLocations(): Array[String] = locations
-}
-
-object FlatInputPartition {
-  def of(s: ByteRanges.Span): FlatInputPartition =
-    FlatInputPartition(s.file, s.start, s.end - s.start, s.hosts)
-}
-
 class FlatScan(paths: Seq[String], layout: EclLayout, required: StructType,
     mode: String, corruptCol: Option[String] = None,
     trimStrings: Boolean = true, wholeFile: Boolean = false,
@@ -278,110 +261,56 @@ class FlatScan(paths: Seq[String], layout: EclLayout, required: StructType,
     s"hpcc-flat recLen=${layout.recLen} cols=${required.fieldNames.mkString(",")}" +
       s" PushedFilters: [${filters.mkString(", ")}]"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
-    val conf = spark.sessionState.newHadoopConf()
-    val files = paths.flatMap(ByteRanges.list(conf, _))
-    val recLen = layout.recLen.toLong
-    if (mode == "FAILFAST") files.find(_._2 % recLen != 0).foreach {
-      case (p, size) => throw new IllegalArgumentException(
-        s"hpcc-flat: $p size $size is not a multiple of recLen $recLen")
-    }
+  private val recLen = layout.recLen.toLong
+
+  override def planInputPartitions(): Array[InputPartition] =
+    spans(FlatScan.files(paths, recLen, mode), tails = mode == "PERMISSIVE")
+
+  /** Record-aligned spans of `files`; with `tails`, a file's truncated
+    * trailing record joins its last span, which the reader emits as a row.
+    */
+  private def spans(files: Seq[(Path, Long)], tails: Boolean)
+      : Array[InputPartition] =
     // wholeFile = the reference's unpartitioned streamInFile mode
     // (libhdfsconnector.cpp:607-650): one partition spans the file
-    val spans = ByteRanges.plan(spark, files, recLen,
-      fixed = if (wholeFile) Long.MaxValue else 0L)
-    files.zip(spans).flatMap { case ((p, size), ss) =>
-      val parts = ss.map(FlatInputPartition.of)
-      val tail = if (mode == "PERMISSIVE") size % recLen else 0L
-      if (tail > 0) {
-        // the LAST partition owns the truncated tail (or a tail-only
-        // partition when the file is shorter than one record)
-        if (parts.nonEmpty)
-          parts.init :+ parts.last.copy(tailLen = tail)
-        else
-          Seq(FlatInputPartition(p.toString, 0L, 0L,
-            Array.empty, tailLen = tail))
-      } else parts
+    ByteRanges.plan(SparkSession.active, files, recLen,
+      fixed = if (wholeFile) Long.MaxValue else 0L).zip(files).flatMap {
+      case (ss, (p, size)) =>
+        if (!tails || size % recLen == 0) ss
+        else if (ss.isEmpty) Seq(ByteRanges.Span(p.toString, 0L, size, Array.empty))
+        else ss.init :+ ss.last.copy(end = size)
     }.toArray
-  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new FlatReaderFactory(layout.spec, required.fieldNames, trimStrings,
       new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
       filters, corruptCol)
 
+  /** Micro-batch FLAT source: tail a directory of fixed-width part files
+    * (a landing directory fed by `PipeOut` or the streaming flat sink),
+    * with the batch scan's pruning, filters and modes. A non-multiple file
+    * is read for its whole records and its tail dropped: a strict failure
+    * would poison the query for good.
+    */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new FlatMicroBatchStream(paths, layout, required, trimStrings, filters)
+    new ByteRanges.Stream(paths, spans(_, tails = false),
+      () => createReaderFactory())
 }
 
-/** Streaming offset for the FLAT source: the set of visible part files and
-  * their sizes. Files become visible atomically (the sink renames temp
-  * files on task commit), so file granularity is exact-once: a file is
-  * either absent from an offset or fully contained in it.
-  */
-case class FlatOffset(files: Map[String, Long])
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  /** The files this offset holds and `start` does not, sorted by path. */
-  def since(start: org.apache.spark.sql.connector.read.streaming.Offset)
-      : Seq[(Path, Long)] = {
-    val seen = start.asInstanceOf[FlatOffset].files.keySet
-    files.toSeq.filterNot(f => seen(f._1)).sortBy(_._1)
-      .map { case (f, n) => new Path(f) -> n }
+object FlatScan {
+  /** The data files at `paths`; FAILFAST rejects a size that is not whole
+    * records, the reference's strict check (libhdfsconnector.cpp:85-89).
+    */
+  def files(paths: Seq[String], recLen: Long, mode: String): Seq[(Path, Long)] = {
+    val files = paths.flatMap(
+      ByteRanges.list(SparkSession.active.sessionState.newHadoopConf(), _))
+    if (mode == "FAILFAST") files.find(_._2 % recLen != 0).foreach {
+      case (p, size) => throw new IllegalArgumentException(
+        s"hpcc-flat: $p size $size is not a multiple of recLen $recLen")
+    }
+    files
   }
-  override def json(): String = {
-    val m = new util.TreeMap[String, Long]()
-    files.foreach { case (k, v) => m.put(k, v) }
-    new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(m)
-  }
-}
-
-object FlatOffset {
-  def fromJson(json: String): FlatOffset = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readValue(json, classOf[util.Map[String, Number]])
-    FlatOffset(m.asScala.map { case (k, v) => k -> v.longValue }.toMap)
-  }
-}
-
-/** Micro-batch FLAT source: tail a directory of fixed-width part files.
-  * The reference is batch-only (its connector runs once per Thor job);
-  * this closes the gap so a landing directory fed by `PipeOut` (or the
-  * streaming flat sink) can be consumed incrementally.
-  *
-  * Each micro-batch = the part files that appeared since the last offset,
-  * split record-aligned exactly like the batch scan (same reader, same
-  * column pruning and filter pushdown). Files are assumed immutable once
-  * visible — guaranteed for our own sink (temp-file rename) and the
-  * reference's parts (written then closed). A file that GROWS in place is
-  * not supported, matching the no-append conclusion of SURVEY §2.1 #11.
-  */
-class FlatMicroBatchStream(paths: Seq[String], layout: EclLayout,
-    required: StructType, trimStrings: Boolean,
-    filters: Array[org.apache.spark.sql.sources.Filter])
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  private def conf = SparkSession.active.sessionState.newHadoopConf()
-
-  override def initialOffset(): Offset = FlatOffset(Map.empty)
-  override def latestOffset(): Offset = FlatOffset(ByteRanges.visible(conf, paths))
-  override def deserializeOffset(json: String): Offset = FlatOffset.fromJson(json)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-
-  // non-multiple files: read the whole records, ignore the tail (a strict
-  // failure would poison the query permanently — log-and-go is the only
-  // sane streaming behavior)
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    ByteRanges.plan(SparkSession.active, end.asInstanceOf[FlatOffset].since(start),
-      layout.recLen.toLong).flatten.map(FlatInputPartition.of).toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new FlatReaderFactory(layout.spec, required.fieldNames, trimStrings,
-      new SerializableHadoopConf(conf), filters)
 }
 
 class FlatReaderFactory(layoutSpec: String, requiredNames: Array[String],
@@ -390,12 +319,12 @@ class FlatReaderFactory(layoutSpec: String, requiredNames: Array[String],
     corruptCol: Option[String] = None)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new FlatPartitionReader(p.asInstanceOf[FlatInputPartition],
+    new FlatPartitionReader(p.asInstanceOf[ByteRanges.Span],
       EclLayout.parse(layoutSpec), requiredNames, trimStrings, conf, filters,
       corruptCol)
 }
 
-class FlatPartitionReader(part: FlatInputPartition, layout: EclLayout,
+class FlatPartitionReader(part: ByteRanges.Span, layout: EclLayout,
     requiredNames: Array[String], trimStrings: Boolean,
     conf: SerializableHadoopConf,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
@@ -422,13 +351,10 @@ class FlatPartitionReader(part: FlatInputPartition, layout: EclLayout,
       n -> (layout.fields(i).typ, layout.offsets(i))
     }.toMap
 
-  private val in = {
-    val p = new Path(part.file)
-    val s = p.getFileSystem(conf.value).open(p)
-    s.seek(part.start)
-    s
-  }
-  private var remaining = part.length / recLen
+  private val cur = new ByteRanges.Cursor(part.file, part.start, conf.value)
+  private var remaining = (part.end - part.start) / recLen
+  // a PERMISSIVE file's truncated tail, at the end of its last span
+  private val tailLen = ((part.end - part.start) % recLen).toInt
   private val record = new Array[Byte](recLen)
   private val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(cols.length)
   private var nRead = 0L
@@ -447,7 +373,7 @@ class FlatPartitionReader(part: FlatInputPartition, layout: EclLayout,
 
   override def next(): Boolean = {
     while (remaining > 0) {
-      in.readFully(record, 0, recLen)
+      cur.readFully(record)
       remaining -= 1
       nRead += 1
       if (filters.isEmpty ||
@@ -465,10 +391,10 @@ class FlatPartitionReader(part: FlatInputPartition, layout: EclLayout,
     }
     // PERMISSIVE truncated tail: one all-null row, raw bytes hex-dumped
     // into the corrupt-record column if the projection kept it
-    if (part.tailLen > 0 && !tailEmitted) {
+    if (tailLen > 0 && !tailEmitted) {
       tailEmitted = true
-      val tail = new Array[Byte](part.tailLen.toInt)
-      in.readFully(tail, 0, tail.length)
+      val tail = new Array[Byte](tailLen)
+      cur.readFully(tail)
       var i = 0
       while (i < cols.length) {
         row.update(i,
@@ -487,7 +413,7 @@ class FlatPartitionReader(part: FlatInputPartition, layout: EclLayout,
   override def close(): Unit = {
     FlatScanMetrics.recordsRead.add(nRead)
     FlatScanMetrics.rowsDecoded.add(nDecoded)
-    in.close()
+    cur.close()
   }
 }
 
@@ -558,8 +484,8 @@ class FlatWrite(path: String, layout: EclLayout, truncate: Boolean,
   // from the failed attempt — the duplicate-row hazard of eager renames.
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    new FlatStreamingWriterFactory(path, layout.spec, info.numPartitions,
-      prepare(), replication)
+    new FlatWriterFactory(path, layout.spec, info.numPartitions, prepare(),
+      replication)
 
   private def cleanEpoch(epochId: Long, keep: Set[String]): Unit = {
     val dir = new Path(path)
@@ -584,17 +510,13 @@ class FlatWrite(path: String, layout: EclLayout, truncate: Boolean,
     cleanEpoch(epochId, Set.empty)
 }
 
+/** Batch tasks write `part_<i>_<n>`, streaming tasks `part_<epoch>_<i>_<n>`. */
 class FlatWriterFactory(path: String, layoutSpec: String, numPartitions: Int,
-    conf: SerializableHadoopConf, replication: Short = 0)
-    extends DataWriterFactory {
+    conf: SerializableHadoopConf, replication: Short = 0) extends DataWriterFactory
+    with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new FlatDataWriter(path, EclLayout.parse(layoutSpec), partitionId,
       numPartitions, taskId, conf, replication = replication)
-}
-
-class FlatStreamingWriterFactory(path: String, layoutSpec: String,
-    numPartitions: Int, conf: SerializableHadoopConf, replication: Short = 0)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     new FlatDataWriter(path, EclLayout.parse(layoutSpec), partitionId,
@@ -602,34 +524,21 @@ class FlatStreamingWriterFactory(path: String, layoutSpec: String,
       replication = replication)
 }
 
-case object FlatCommit extends WriterCommitMessage
 /** Commit message carrying the written file name, so the per-epoch
   * streaming commit can reconcile the directory against the committed set.
   */
 case class FlatCommitMsg(fileName: String) extends WriterCommitMessage
 
-/** Writes one reference-convention part file: `part_<i>_<n>`
-  * (hdfsconnector.hpp:65-72), via a per-attempt temp file renamed into
-  * place on task commit — so failed/duplicate attempts (retries,
-  * speculation) never leave a partial or interleaved final part, and a
-  * half-written output is never mistakable for a complete one.
+/** Writes one reference-convention part file, `part_<i>_<n>`
+  * (hdfsconnector.hpp:65-72), through a [[PartFile]] commit.
   */
 class FlatDataWriter(path: String, layout: EclLayout, partitionId: Int,
     numPartitions: Int, taskId: Long, conf: SerializableHadoopConf,
     namePrefix: String = "part_", replication: Short = 0)
     extends DataWriter[InternalRow] {
 
-  private val finalFile = new Path(path, f"$namePrefix${partitionId}_$numPartitions")
-  private val tmpFile =
-    new Path(path, f".$namePrefix${partitionId}_$numPartitions.$taskId.tmp")
-  private val fs = finalFile.getFileSystem(conf.value)
-  // replication 0 = filesystem default (vs the reference's webhdfs twin,
-  // which hardcodes 1 — webhdfsconnector.cpp:675-677)
-  private val out = new java.io.BufferedOutputStream(
-    if (replication > 0)
-      fs.create(tmpFile, true, 1 << 16, replication,
-        fs.getDefaultBlockSize(tmpFile))
-    else fs.create(tmpFile, true), 1 << 16)
+  private val part = new PartFile(path,
+    s"$namePrefix${partitionId}_$numPartitions", taskId, conf.value, replication)
   private val buf = new Array[Byte](layout.recLen)
 
   override def write(r: InternalRow): Unit = {
@@ -638,19 +547,10 @@ class FlatDataWriter(path: String, layout: EclLayout, partitionId: Int,
       FlatCodec.encode(layout.fields(i).typ, r, i, buf, layout.offsets(i))
       i += 1
     }
-    out.write(buf)
+    part.out.write(buf)
   }
 
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    if (fs.exists(finalFile)) fs.delete(finalFile, false) // lost earlier attempt
-    if (!fs.rename(tmpFile, finalFile))
-      throw new java.io.IOException(s"hpcc-flat: rename $tmpFile -> $finalFile failed")
-    FlatCommitMsg(finalFile.getName)
-  }
-  override def abort(): Unit = {
-    out.close()
-    fs.delete(tmpFile, false)
-  }
+  override def commit(): WriterCommitMessage = FlatCommitMsg(part.commit())
+  override def abort(): Unit = part.abort()
   override def close(): Unit = ()
 }

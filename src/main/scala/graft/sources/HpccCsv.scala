@@ -70,6 +70,18 @@ object HpccCsv {
     out.toString
   }
 
+  /** The options escape-expanded, separator and quote checked to be one
+    * character each.
+    */
+  private def options(separator: String, terminator: String,
+      quote: String): (String, String, String) = {
+    val sep = expandEscapes(separator)
+    val qt = expandEscapes(quote)
+    require(sep.length == 1, s"separator must be 1 char: '$separator'")
+    require(qt.length == 1, s"quote must be 1 char: '$quote'")
+    (sep, expandEscapes(terminator), qt)
+  }
+
   /** `quoteParity = true` routes to [[readQuoteParity]] — the sound,
     * still-splittable path for data whose quoted fields may CONTAIN the
     * terminator. The default path splits on raw terminator bytes (the
@@ -84,22 +96,22 @@ object HpccCsv {
     if (quoteParity)
       return readQuoteParity(spark, path, schema, separator, terminator,
         quote)
-    val sep = expandEscapes(separator)
-    val term = expandEscapes(terminator)
-    val qt = expandEscapes(quote)
-    require(sep.length == 1, s"separator must be 1 char: '$separator'")
-    require(qt.length == 1, s"quote must be 1 char: '$quote'")
-    if (term.length <= 1) {
-      spark.read.schema(schema)
-        .option("sep", sep).option("quote", qt)
-        .option("lineSep", term)
-        .csv(path)
-    } else {
-      val opts = Map("sep" -> sep, "quote" -> qt)
-      spark.read.option("lineSep", term).text(path)
-        .select(from_csv(col("value"), schema, opts).as("r"))
-        .select(col("r.*"))
-    }
+    load(schema, separator, terminator, quote)(
+      opts => spark.read.schema(schema).options(opts).csv(path),
+      term => spark.read.option("lineSep", term).text(path))
+  }
+
+  /** The built-in `csv` reader for a 1-char terminator, else `text` lines
+    * split on the terminator and parsed with `from_csv`.
+    */
+  private def load(schema: StructType, separator: String, terminator: String,
+      quote: String)(csv: Map[String, String] => DataFrame,
+      text: String => DataFrame): DataFrame = {
+    val (sep, term, qt) = options(separator, terminator, quote)
+    val opts = Map("sep" -> sep, "quote" -> qt)
+    if (term.length <= 1) csv(opts + ("lineSep" -> term))
+    else text(term).select(from_csv(col("value"), schema, opts).as("r"))
+      .select(col("r.*"))
   }
 
   /** Quote-parity splittable read (SURVEY §7 hard-part #2): records may
@@ -120,10 +132,7 @@ object HpccCsv {
       terminator: String = DefaultTerminator,
       quote: String = DefaultQuote,
       splitBytes: Long = 0L): DataFrame = {
-    val sep = expandEscapes(separator)
-    val qt = expandEscapes(quote)
-    require(sep.length == 1, s"separator must be 1 char: '$separator'")
-    require(qt.length == 1, s"quote must be 1 char: '$quote'")
+    val (sep, _, qt) = options(separator, terminator, quote)
     val opts = Map("sep" -> sep, "quote" -> qt, "multiLine" -> "true",
       // uniVocity's default escape is '\': a backslash before the quote
       // char would merge fields. The parity scan has no escape notion
@@ -151,22 +160,9 @@ object HpccCsv {
       separator: String = DefaultSeparator,
       terminator: String = DefaultTerminator,
       quote: String = DefaultQuote): DataFrame = {
-    val sep = expandEscapes(separator)
-    val term = expandEscapes(terminator)
-    val qt = expandEscapes(quote)
-    require(sep.length == 1, s"separator must be 1 char: '$separator'")
-    require(qt.length == 1, s"quote must be 1 char: '$quote'")
-    if (term.length <= 1) {
-      spark.readStream.schema(schema)
-        .option("sep", sep).option("quote", qt)
-        .option("lineSep", term)
-        .csv(path)
-    } else {
-      val opts = Map("sep" -> sep, "quote" -> qt)
-      spark.readStream.option("lineSep", term).text(path)
-        .select(from_csv(col("value"), schema, opts).as("r"))
-        .select(col("r.*"))
-    }
+    load(schema, separator, terminator, quote)(
+      opts => spark.readStream.schema(schema).options(opts).csv(path),
+      term => spark.readStream.option("lineSep", term).text(path))
   }
 
   /** Write with reference semantics. Multi-char terminator → `to_csv` rows
@@ -193,23 +189,17 @@ object HpccCsv {
       terminator: String = DefaultTerminator,
       quote: String = DefaultQuote,
       outputTerminator: Boolean = true): Unit = {
-    val sep = expandEscapes(separator)
-    val term = expandEscapes(terminator)
-    val qt = expandEscapes(quote)
-    require(sep.length == 1 && qt.length == 1)
+    val (sep, term, qt) = options(separator, terminator, quote)
+    import scala.jdk.CollectionConverters._
+    val row = to_csv(struct(df.columns.map(col).toSeq: _*),
+      Map("sep" -> sep, "quote" -> qt).asJava)
     if (!outputTerminator) {
-      import scala.jdk.CollectionConverters._
-      val row = to_csv(struct(df.columns.map(col).toSeq: _*),
-        Map("sep" -> sep, "quote" -> qt).asJava)
       writeUnterminated(df.select(row.as("value")), path)
     } else if (term.length <= 1) {
       df.write.option("sep", sep).option("quote", qt)
         .option("lineSep", term)
         .mode("overwrite").csv(path)
     } else {
-      import scala.jdk.CollectionConverters._
-      val row = to_csv(struct(df.columns.map(col).toSeq: _*),
-        Map("sep" -> sep, "quote" -> qt).asJava)
       val guarded = when(row.contains(lit(term)),
         raise_error(concat(lit("hpcc-csv: row contains the terminator "),
           lit(term.replace("\n", "\\n").replace("\r", "\\r")), lit(": "), row)))
@@ -221,11 +211,10 @@ object HpccCsv {
   }
 
   /** Terminator-free partitioned write: each task concatenates its rows'
-    * UTF-8 bytes into one `part_<i>_<n>` file via a per-attempt temp file
-    * renamed on success (idempotent under retries/speculation, like
-    * FlatDataWriter). No built-in sink can do this — the text sink always
-    * terminates lines — so this is a small foreachPartition sink over the
-    * single `value` column.
+    * UTF-8 bytes into one `part_<i>_<n>` file through a [[PartFile]]
+    * commit, like the flat sink. No built-in sink can do this — the text
+    * sink always terminates lines — so this is a small foreachPartition
+    * sink over the single `value` column.
     */
   private def writeUnterminated(rows: DataFrame, path: String): Unit = {
     val spark = rows.sparkSession
@@ -237,23 +226,17 @@ object HpccCsv {
     val rdd = rows.queryExecution.toRdd
     val n = rdd.getNumPartitions
     rdd.foreachPartition { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val attempt = org.apache.spark.TaskContext.get().taskAttemptId()
-      val fsx = new Path(path).getFileSystem(conf.value)
-      val finalFile = new Path(path, s"part_${pid}_$n")
-      val tmp = new Path(path, s".part_${pid}_$n.$attempt.tmp")
-      val out = new java.io.BufferedOutputStream(fsx.create(tmp, true), 1 << 16)
+      val task = org.apache.spark.TaskContext.get()
+      val part = new PartFile(path, s"part_${task.partitionId()}_$n",
+        task.taskAttemptId(), conf.value)
       try {
-        it.foreach(r => out.write(r.getUTF8String(0).getBytes))
-        out.close()
-        if (fsx.exists(finalFile)) fsx.delete(finalFile, false)
-        if (!fsx.rename(tmp, finalFile))
-          throw new java.io.IOException(s"hpcc-csv: rename $tmp -> $finalFile failed")
+        it.foreach(r => part.out.write(r.getUTF8String(0).getBytes))
+        part.commit()
       } catch {
         // Exception, not NonFatal: a killed task's interrupt cleans up too
         case e: Exception =>
-          for (step <- Seq(() => out.close(), () => fsx.delete(tmp, false)))
-            try step() catch { case scala.util.control.NonFatal(c) => e.addSuppressed(c) }
+          try part.abort()
+          catch { case scala.util.control.NonFatal(c) => e.addSuppressed(c) }
           throw e
       }
     }

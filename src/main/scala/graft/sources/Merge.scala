@@ -1,5 +1,9 @@
 package graft.sources
 
+import java.io.{BufferedOutputStream, IOException, OutputStream}
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -22,9 +26,16 @@ object Merge {
     * (ordered by task number, zero-padded into the name). Mixed batch +
     * streaming dirs merge batch parts first, then epochs in order — no
     * naming family is silently dropped.
+    *
+    * `head` and `tail` are a document wrapper every non-empty part carries
+    * (XML's declaration and root element, the reference's header and
+    * footer, hdfsconnector.hpp:229-230): the target gets `head` once, each
+    * non-empty part's bytes between them, then `tail`. A non-empty part
+    * without them fails; if every part is empty, so is the target.
     */
   def mergeParts(spark: SparkSession, dir: String, target: String,
-      cleanMerge: Boolean = false): Long = {
+      cleanMerge: Boolean = false, head: Array[Byte] = Array.emptyByteArray,
+      tail: Array[Byte] = Array.emptyByteArray): Long = {
     val d = new Path(dir)
     val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
     val PartName = "part_(\\d+)_(\\d+)".r
@@ -32,20 +43,20 @@ object Merge {
     val listing = fs.listStatus(d).toSeq.filter(_.isFile)
     val refParts = listing.flatMap { f =>
       f.getPath.getName match {
-        case PartName(i, n) => Some((i.toInt, n.toInt, f.getPath))
+        case PartName(i, n) => Some((i.toInt, n.toInt, f))
         case _ => None
       }
     }.sortBy(_._1)
     val epochParts = listing.flatMap { f =>
       f.getPath.getName match {
-        case EpochPart(e, i, _) => Some((e.toLong, i.toInt, f.getPath))
+        case EpochPart(e, i, _) => Some((e.toLong, i.toInt, f))
         case _ => None
       }
     }.sortBy(p => (p._1, p._2))
     val sparkParts = listing
       .filter(_.getPath.getName.startsWith("part-"))
-      .sortBy(_.getPath.getName).map(_.getPath)
-    val parts: Seq[Path] =
+      .sortBy(_.getPath.getName)
+    val parts =
       refParts.map(_._3) ++ epochParts.map(_._3) ++ sparkParts
     require(parts.nonEmpty, s"no part files under $dir")
     if (refParts.nonEmpty) {
@@ -57,18 +68,74 @@ object Merge {
     val out = fs.create(new Path(target), true)
     val buf = new Array[Byte](CopyBuf)
     var total = 0L
-    try parts.foreach { p =>
-      val in = fs.open(p)
+    def emit(bytes: Array[Byte], n: Int): Unit = { out.write(bytes, 0, n); total += n }
+    val nonEmpty = parts.filter(_.getLen > 0)
+    try nonEmpty.zipWithIndex.foreach { case (f, i) =>
+      val lacks = s"${f.getPath} lacks the parts' head or tail"
+      require(f.getLen >= head.length + tail.length, lacks)
+      val in = fs.open(f.getPath)
+      def expect(bytes: Array[Byte]): Unit = {
+        val got = new Array[Byte](bytes.length)
+        in.readFully(got)
+        require(java.util.Arrays.equals(got, bytes), lacks)
+      }
       try {
-        var read = in.read(buf)
-        while (read >= 0) {
-          if (read > 0) { out.write(buf, 0, read); total += read }
-          read = in.read(buf)
+        expect(head)
+        if (i == 0) emit(head, head.length)
+        var left = f.getLen - head.length - tail.length
+        while (left > 0) {
+          val read = in.read(buf, 0, math.min(left, buf.length.toLong).toInt)
+          if (read < 0) throw new java.io.EOFException(s"${f.getPath} ended early")
+          emit(buf, read)
+          left -= read
         }
+        expect(tail)
+        if (i == nonEmpty.size - 1) emit(tail, tail.length)
       } finally in.close()
     } finally out.close()
 
     if (cleanMerge) fs.delete(d, true) // :798-806,818-828
     total
+  }
+}
+
+/** One task's part file `name` under `dir`, written to a per-attempt temp
+  * file and renamed into place on [[commit]], so a failed or duplicate
+  * attempt (retry, speculation) never leaves a partial or interleaved final
+  * part, and a half-written output is never mistakable for a complete one.
+  * `replication` 0 is the filesystem default (the reference's webhdfs twin
+  * hardcodes 1, webhdfsconnector.cpp:675-677).
+  */
+final class PartFile(dir: String, name: String, attempt: Long,
+    conf: Configuration, replication: Short = 0) {
+  private val finalFile = new Path(dir, name)
+  private val tmpFile = new Path(dir, s".$name.$attempt.tmp")
+  private val fs = finalFile.getFileSystem(conf)
+
+  val out: OutputStream = new BufferedOutputStream(
+    if (replication > 0)
+      fs.create(tmpFile, true, 1 << 16, replication,
+        fs.getDefaultBlockSize(tmpFile))
+    else fs.create(tmpFile, true), 1 << 16)
+
+  /** Closes the stream and renames the temp file to `name`, replacing a
+    * lost earlier attempt's file; returns `name`.
+    */
+  def commit(): String = {
+    out.close()
+    if (fs.exists(finalFile)) fs.delete(finalFile, false)
+    if (!fs.rename(tmpFile, finalFile))
+      throw new IOException(s"rename $tmpFile -> $finalFile failed")
+    name
+  }
+
+  /** Closes the stream and deletes the temp file as separate steps, so a
+    * failed close still deletes; the first failure is thrown with any
+    * later one suppressed into it.
+    */
+  def abort(): Unit = {
+    val failures = Seq(() => out.close(), () => fs.delete(tmpFile, false))
+      .flatMap(step => try { step(); None } catch { case NonFatal(e) => Some(e) })
+    failures.headOption.foreach { e => failures.tail.foreach(e.addSuppressed); throw e }
   }
 }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The reference's three user-facing verbs as a Spark façade — a user of
@@ -20,7 +22,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * conf — the `hdfsconnector.conf` layer (reference hdfsconnector.conf.in)
   * collapses into `spark.hadoop.*` settings.
   */
-sealed trait PipeFormat
+sealed trait PipeFormat {
+  /** The head and tail around each part [[Pipe.out]] writes. */
+  private[sources] def wrapper: (Array[Byte], Array[Byte]) =
+    (Array.emptyByteArray, Array.emptyByteArray)
+}
 object PipeFormat {
   case object Flat extends PipeFormat
   /** Reference CSV defaults: separator ',', terminator '\n', quote '\''
@@ -29,7 +35,20 @@ object PipeFormat {
       terminator: String = HpccCsv.DefaultTerminator,
       quote: String = HpccCsv.DefaultQuote) extends PipeFormat
   /** Reference XML default rowtag "Row" (hdfsconnector.hpp:224). */
-  final case class Xml(rowTag: String = "Row") extends PipeFormat
+  final case class Xml(rowTag: String = "Row") extends PipeFormat {
+    override private[sources] def wrapper = (Xml.Head, Xml.Tail)
+  }
+  /** What [[Pipe.out]] pins for the built-in xml writer, which writes a
+    * non-empty part as `<?xml Declaration?>\n<RootTag>\n`, its rows, then
+    * `</RootTag>`, and an empty one as 0 bytes.
+    */
+  object Xml {
+    private[sources] val RootTag = "ROWS"
+    private[sources] val Declaration =
+      "version=\"1.0\" encoding=\"UTF-8\" standalone=\"yes\""
+    private val Head = s"<?xml $Declaration?>\n<$RootTag>\n".getBytes(UTF_8)
+    private val Tail = s"</$RootTag>".getBytes(UTF_8)
+  }
 }
 
 object Pipe {
@@ -56,34 +75,19 @@ object Pipe {
     case Csv(sep, term, quote) => HpccCsv.write(df, path, sep, term, quote)
     case Xml(rowTag) =>
       df.write.format("xml").option("rowTag", rowTag)
+        .option("rootTag", Xml.RootTag).option("declaration", Xml.Declaration)
         .mode("overwrite").save(path)
   }
 
-  /** PipeOutAndMerge: parts + ordered single-file concat (FLAT/CSV; XML
-    * merges via coalesce(1) so the single part is well-formed, matching
-    * the reference where merge is likewise format-constrained — webhdfs
-    * refuses it entirely, webhdfsconnector.cpp:649-653).
+  /** PipeOutAndMerge: [[out]]'s parts, then their ordered single-file
+    * concat with [[Merge.mergeParts]] (XML's per-part document wrapper
+    * written once around the rows).
     */
   def outAndMerge(df: DataFrame, target: String, layout: EclLayout,
       format: PipeFormat = Flat, cleanMerge: Boolean = true): Unit = {
     val parts = target + "-parts"
-    format match {
-      case Xml(rowTag) =>
-        df.coalesce(1).write.format("xml").option("rowTag", rowTag)
-          .mode("overwrite").save(parts)
-        val spark = df.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(parts)
-          .getFileSystem(spark.sessionState.newHadoopConf())
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(parts))
-          .filter(f => f.isFile && f.getLen > 0 && !f.getPath.getName.startsWith("_"))
-          .head.getPath
-        org.apache.hadoop.fs.FileUtil.copy(fs, part, fs,
-          new org.apache.hadoop.fs.Path(target), false, true,
-          spark.sessionState.newHadoopConf())
-        if (cleanMerge) fs.delete(new org.apache.hadoop.fs.Path(parts), true)
-      case f =>
-        out(df, parts, layout, f)
-        Merge.mergeParts(df.sparkSession, parts, target, cleanMerge)
-    }
+    out(df, parts, layout, format)
+    val (head, tail) = format.wrapper
+    Merge.mergeParts(df.sparkSession, parts, target, cleanMerge, head, tail)
   }
 }

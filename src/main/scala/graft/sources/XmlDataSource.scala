@@ -123,55 +123,27 @@ class XmlScan(path: String, rowTag: String, required: StructType,
   override def toBatch: Batch = this
   override def description(): String = s"hpcc-xml rowTag=$rowTag"
 
+  override def planInputPartitions(): Array[InputPartition] = spans(
+    ByteRanges.list(SparkSession.active.sessionState.newHadoopConf(), path))
+
   // nested row tags forfeit splits (whole-file ranges); flat files keep
   // the core-aware realignment fast path
-  override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
-    val files = ByteRanges.list(spark.sessionState.newHadoopConf(), path)
-    ByteRanges.plan(spark, files, fixed = if (nested) Long.MaxValue else 0L)
-      .flatten.toArray[InputPartition]
-  }
+  private def spans(files: Seq[(org.apache.hadoop.fs.Path, Long)])
+      : Array[InputPartition] =
+    ByteRanges.plan(SparkSession.active, files,
+      fixed = if (nested) Long.MaxValue else 0L).flatten.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new XmlReaderFactory(rowTag, required,
       new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
       mode, corruptCol)
 
+  /** Micro-batch XML source: tail a directory of row-tag XML files, each
+    * micro-batch planned and read exactly as the batch scan is.
+    */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new XmlMicroBatchStream(path, rowTag, required)
-}
-
-/** Micro-batch XML source: tail a directory of row-tag XML files — parity
-  * with the FLAT streaming source (the reference is batch-only,
-  * ecl/HDFSConnector.ecl:55-56; this closes the landing-directory gap for
-  * XML drops too). Same offset model as FlatMicroBatchStream: an offset is
-  * the set of visible files (+sizes), each micro-batch is the files that
-  * appeared since the last offset, split into tag-realigned byte ranges by
-  * the SAME partition math and read by the SAME reader as the batch scan.
-  * Files must be immutable once visible (write-then-rename drops).
-  */
-class XmlMicroBatchStream(path: String, rowTag: String, required: StructType)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  private def conf = SparkSession.active.sessionState.newHadoopConf()
-
-  override def initialOffset(): Offset = FlatOffset(Map.empty)
-  override def latestOffset(): Offset =
-    FlatOffset(ByteRanges.visible(conf, Seq(path)))
-  override def deserializeOffset(json: String): Offset = FlatOffset.fromJson(json)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    ByteRanges.plan(SparkSession.active, end.asInstanceOf[FlatOffset]
-      .since(start)).flatten.toArray[InputPartition]
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new XmlReaderFactory(rowTag, required,
-      new SerializableHadoopConf(conf))
+    new ByteRanges.Stream(Seq(path), spans, () => createReaderFactory())
 }
 
 class XmlReaderFactory(rowTag: String, required: StructType,

@@ -125,7 +125,7 @@ class ByteRangesSpec extends SparkSpec {
     assert(Files.isDirectory(dir),
       s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
     val needles = Seq("filesMaxPartitionBytes",
-      "new java.io." + "BufferedInputStream", ".toByte" + "Array")
+      "new java.io." + "BufferedInputStream", ".toByte" + "Array", "." + "open(")
     val readers = Files.list(dir).iterator().asScala.filter { (p: Path) =>
       p.getFileName.toString != "ByteRanges.scala" &&
         Files.readString(p).contains("PartitionReader[")

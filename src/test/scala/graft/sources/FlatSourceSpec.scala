@@ -223,4 +223,39 @@ class FlatSourceSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("missing parts"))
   }
+
+  test("a FLAT file over 3 x 64 KB reads the same whole and split (recLen 58)") {
+    // 58 does not divide the cursor's 65536-byte block: records straddle
+    // block edges in both reads
+    val l = EclLayout.parse("id:unsigned8,name:string50")
+    assert(l.recLen == 58)
+    val dir = tmpDir("flat-cursor")
+    spark.range(4000).select(col("id"), concat(lit("n"), col("id")).as("name"))
+      .coalesce(1).write.format("hpcc-flat").option("layout", l.spec)
+      .mode("overwrite").save(dir)
+    val part = new java.io.File(dir, "part_0_1")
+    assert(part.length == 4000L * 58 && part.length >= 3 * 65536)
+    def read(mode: String, whole: Boolean): Seq[Row] =
+      withConf("spark.sql.files.maxPartitionBytes" -> "10000",
+          "spark.sql.files.openCostInBytes" -> "1") {
+        val df = spark.read.format("hpcc-flat").option("layout", l.spec)
+          .option("mode", mode).option("wholefile", whole)
+          .option("columnNameOfCorruptRecord", "_corrupt").load(dir)
+        assert(df.rdd.getNumPartitions == (if (whole) 1 else 24))
+        df.collect().toSeq.sortBy(r => if (r.isNullAt(0)) -1L else r.getDecimal(0).longValue)
+      }
+    val failfast = read("FAILFAST", whole = true)
+    assert(failfast.map(r => (r.getDecimal(0).longValue, r.getString(1))) ==
+      (0L until 4000L).map(i => (i, s"n$i")))
+    assert(read("FAILFAST", whole = false) == failfast)
+    java.nio.file.Files.write(part.toPath, "XTAIL".getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.APPEND)
+    new java.io.File(dir, ".part_0_1.crc").delete()
+    val permissive = read("PERMISSIVE", whole = true)
+    assert(permissive.size == 4001)
+    assert(permissive.head.isNullAt(0) && permissive.head.getString(2) == "585441494C")
+    assert(permissive.tail.map(r => (r.getDecimal(0).longValue, r.getString(1))) ==
+      (0L until 4000L).map(i => (i, s"n$i")))
+    assert(read("PERMISSIVE", whole = false) == permissive)
+  }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * seconds. The claim under test: opens scale with MATCHING files
   * (cluster groups × commits), never with table size.
   *
-  * Run: SPARK_GRAFT_REPL=10 sbt "runMain graft.sources.ScalePruneStress /tmp/gsp"
+  * Run: SPARK_GRAFT_REPL=10 sbt "Test/runMain graft.sources.ScalePruneStress /tmp/gsp"
   */
 object ScalePruneStress {
 

@@ -182,4 +182,13 @@ class SourceErrorSpec extends SparkSpec {
         StructType(Seq(StructField("a", StringType))), quote = "''")
     }
   }
+
+  test("csv write rejects a two-character separator, naming it") {
+    import spark.implicits._
+    val ex = intercept[IllegalArgumentException] {
+      HpccCsv.write(Seq(1).toDF("a"), tmpDir("csv-sep"), separator = "||")
+    }
+    assert(ex.getMessage.contains("separator") && ex.getMessage.contains("'||'"),
+      ex.getMessage)
+  }
 }

@@ -8,7 +8,8 @@ import graft.sources.HpccCsv
 /** Streaming reads FROM the CSV and XML formats — landing-directory parity
   * with the FLAT streaming source (reference is batch-only). CSV rides the
   * built-in file-stream machinery (both terminator branches); XML tails via
-  * XmlMicroBatchStream with the same file-set offset model as FLAT.
+  * `ByteRanges.Stream` with the same file-set offset model as FLAT, so a
+  * stream keeps the batch read's options.
   */
 class CsvXmlStreamSourceSpec extends SparkSpec {
 
@@ -112,5 +113,45 @@ class CsvXmlStreamSourceSpec extends SparkSpec {
         assert(all.select(col("id")).distinct().count() == 200)
       } finally q.stop()
     } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+  }
+
+  /** Every row `name` streams out of `dir` with `options`, drained once. */
+  private def streamed(dir: String, name: String,
+      options: Map[String, String]): Seq[org.apache.spark.sql.Row] = {
+    val q = spark.readStream.format("hpcc-xml").schema(schema)
+      .options(options).load(dir)
+      .writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", tmpDir(s"$name-ckpt")).start()
+    try q.processAllAvailable() finally q.stop()
+    spark.table(name).collect().toSeq
+  }
+
+  test("XML tail: PERMISSIVE emits a malformed row instead of failing") {
+    val dir = tmpDir("xml-src-permissive")
+    java.nio.file.Files.write(new java.io.File(dir, "d.xml").toPath,
+      ("<Dataset><Row><id>1</id><txt>a</txt></Row>" +
+        "<Row><id>abc</id><txt>b</txt></Row>" +
+        "<Row><id>3</id><txt>c</txt></Row></Dataset>").getBytes("UTF-8"))
+    val got = streamed(dir, "xml_tail_permissive", Map("rowTag" -> "Row",
+      "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "bad"))
+    assert(got.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted == Seq(1L, 3L))
+    assert(got.filter(_.isNullAt(0)).map(_.getString(2)) ==
+      Seq("<Row><id>abc</id><txt>b</txt></Row>"))
+  }
+
+  test("XML tail: nestedRowTag streams the batch read's rows") {
+    val dir = tmpDir("xml-src-nested")
+    java.nio.file.Files.write(new java.io.File(dir, "d.xml").toPath,
+      (1 to 20).map(i => s"<Row><id>$i</id><txt>outer$i</txt>" +
+        s"<Row><id>${100 + i}</id><txt>inner</txt></Row></Row>")
+        .mkString("<Dataset>", "\n", "</Dataset>").getBytes("UTF-8"))
+    val options = Map("rowTag" -> "Row", "nestedRowTag" -> "true")
+    withConf("spark.sql.files.maxPartitionBytes" -> "64",
+        "spark.sql.files.openCostInBytes" -> "1") {
+      val batch = spark.read.format("hpcc-xml").schema(schema).options(options)
+        .load(dir).collect().toSeq.sortBy(_.getLong(0))
+      assert(batch.map(_.getLong(0)) == (1L to 20L))
+      assert(streamed(dir, "xml_tail_nested", options).sortBy(_.getLong(0)) == batch)
+    }
   }
 }

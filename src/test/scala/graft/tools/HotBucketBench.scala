@@ -1,6 +1,8 @@
-package graft
+package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.Session
+import graft.operators.Dedup
 
 /** Dev tool: measure the LSH hot-bucket cap against a boilerplate-heavy
   * corpus at stress scale (SCALE.md's named failure mode). Appends a
@@ -12,7 +14,7 @@ import org.apache.spark.sql.functions._
   * for the cost of one broadcast anti-join.
   *
   * Run (after `runMain graft.ScaleGen /tmp/graft_scale`):
-  *   SPARK_GRAFT_CLONES=2000 sbt "runMain graft.HotBucketBench"
+  *   SPARK_GRAFT_CLONES=2000 sbt "Test/runMain graft.tools.HotBucketBench"
   */
 object HotBucketBench {
   def main(args: Array[String]): Unit = {
@@ -38,19 +40,19 @@ object HotBucketBench {
 
     val inCluster = nClones.toLong * (nClones - 1) / 2
     val mhUncapped = time("minhash uncapped") {
-      operators.Dedup.minhashLshPairs(corpus, maxBucket = Int.MaxValue).count()
+      Dedup.minhashLshPairs(corpus, maxBucket = Int.MaxValue).count()
     }
     val mhCapped = time("minhash capped(1000)") {
-      operators.Dedup.minhashLshPairs(corpus, maxBucket = 1000).count()
+      Dedup.minhashLshPairs(corpus, maxBucket = 1000).count()
     }
     println(s"minhash: cluster pairs suppressed = ${mhUncapped - mhCapped} " +
       s"(expected $inCluster); non-cluster pairs preserved = " +
       (mhUncapped - mhCapped == inCluster))
     val shUncapped = time("simhash uncapped") {
-      operators.Dedup.simhashPairsOf(corpus, maxBucket = Int.MaxValue).count()
+      Dedup.simhashPairsOf(corpus, maxBucket = Int.MaxValue).count()
     }
     val shCapped = time("simhash capped(1000)") {
-      operators.Dedup.simhashPairsOf(corpus, maxBucket = 1000).count()
+      Dedup.simhashPairsOf(corpus, maxBucket = 1000).count()
     }
     println(s"simhash: cluster pairs suppressed = ${shUncapped - shCapped} " +
       s"(expected $inCluster); non-cluster pairs preserved = " +
