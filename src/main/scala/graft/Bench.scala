@@ -24,7 +24,8 @@ import org.apache.spark.sql.SparkSession
   * lowest-total pass is emitted with `"quiet":false`, so a loaded-machine
   * artifact is SELF-LABELED instead of needing forensics. In-run probes
   * (single samples, 20-30% noisier than the median sentinels) ride in
-  * the artifact for mid-run attribution but do not gate.
+  * the artifact for mid-run attribution and gate only on contamination:
+  * one probe above 3× the norm makes the pass not quiet ([[quiet]]).
   *
   * TIMEOUT-PROOF ARTIFACT (round-19 verdict #1): round 19's driver run
   * was killed (rc=124) during a retry pass and — because the artifact
@@ -66,6 +67,19 @@ import org.apache.spark.sql.SparkSession
   * count-prunable — aggregates, joins-into-aggregates, sinks.)
   */
 object Bench {
+  /** Whether a pass is QUIET against `norm` (the fastest median-of-3
+    * sentinel seen so far): both sentinels within 1.1× of it, and no
+    * in-run probe above 3× of it. Single-sample probes run 20-30% above
+    * a median norm even on a quiet board (GC/JIT hiccups the median
+    * filters out), so they get a wide bar — but a probe many times the
+    * norm is a contaminated stretch mid-pass that the two sentinels,
+    * sampled only at the ends, cannot see. Probes < 0 (not run) are
+    * ignored. */
+  def quiet(start: Double, end: Double, probes: Iterable[Double],
+      norm: Double): Boolean =
+    start <= 1.1 * norm && end <= 1.1 * norm &&
+      probes.forall(p => p < 0 || p <= 3 * norm)
+
   def main(args: Array[String]): Unit = {
     // budget clock starts HERE — warmup counts (it is half the wall
     // time of a healthy full run, and a kill during pass 2 wastes it
@@ -348,13 +362,8 @@ object Bench {
         System.err.println("[bench] sentinel unavailable — load not " +
           "assessable; emitting this pass with quiet=false")
         sentinelOk = false
-      } else quiet =
-        // the gate is the median-of-3 sentinels only: single-sample
-        // probes run 20-30% above a median norm even on a measurably
-        // quiet board (GC/JIT hiccups the median filters out), so they
-        // stay in the artifact for mid-run ATTRIBUTION, not as a gate —
-        // a whole pass must not burn on probe jitter
-        p.sentinelStart <= 1.1 * norm && p.sentinelEnd <= 1.1 * norm
+      } else quiet = Bench.quiet(p.sentinelStart, p.sentinelEnd,
+        p.telemetry.values.map(_.probe), norm)
       // budget check BEFORE deciding to loop: is there room for another
       // pass of the size we just measured?
       val remaining = timeBudgetS - elapsedS
@@ -363,7 +372,8 @@ object Bench {
       if (!quiet && sentinelOk)
         System.err.println(
           f"[bench] pass $nPasses NOT quiet (norm=$norm%.2f start=" +
-            f"${p.sentinelStart}%.2f end=${p.sentinelEnd}%.2f)" +
+            f"${p.sentinelStart}%.2f end=${p.sentinelEnd}%.2f max probe=" +
+            f"${p.telemetry.values.map(_.probe).maxOption.getOrElse(-1.0)}%.2f)" +
             (if (more) "; re-running"
              else if (nPasses >= maxPasses)
                "; pass budget exhausted — emitting the fastest pass"

@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.sources.InsertableRelation
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** The `graft` SQL CATALOG: snapshot tables as first-class SQL objects —
@@ -1076,21 +1076,8 @@ private[graft] class SnapshotTableV2(val dir: String,
       branchRef.map(Snapshots.refVersion(s, dir, _)))
       .getOrElse(Snapshots.mainVersion(s, dir))
 
-  override def schema(): StructType = {
-    val v = resolveVersion(spark)
-    if (v >= 1) Snapshots.evolutionInfo(spark, dir, v)._1
-    else {
-      val p = new Path(dir, "_SCHEMA")
-      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(f.exists(p),
-        s"graft catalog: table at $dir has no commits and no declared " +
-          "schema")
-      val in = f.open(p)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      DataType.fromJson(json).asInstanceOf[StructType]
-    }
-  }
+  override def schema(): StructType =
+    SnapshotSource.schemaAt(spark, dir, resolveVersion(spark))
 
   override def capabilities(): util.Set[TableCapability] =
     // AUTOMATIC_SCHEMA_EVOLUTION opts into Spark's `MERGE WITH SCHEMA
@@ -1144,16 +1131,10 @@ private[graft] class SnapshotTableV2(val dir: String,
         "graft.GraftExtensions")
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    // `keyCols` (same option as the V1 sink): streaming epochs MERGE by
-    // key instead of appending — the Update-output-mode shape
-    val keyCols = Option(info.options.get("keycols")).toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-    class Builder extends WriteBuilder with SupportsTruncate
+    class Builder extends SnapshotWriteBuilder(dir, info, None)
         with org.apache.spark.sql.connector.write.SupportsOverwrite {
-      private var overwrite = false
       private var replaceCond
           : Option[org.apache.spark.sql.sources.Filter] = None
-      override def truncate(): WriteBuilder = { overwrite = true; this }
       /** `INSERT INTO t REPLACE WHERE cond` / `writeTo(t).overwrite(c)`:
         * a non-trivial filter routes to [[Snapshots.replaceWhere]] —
         * one atomic commit whose DV covers the matched rows and whose
@@ -1201,29 +1182,20 @@ private[graft] class SnapshotTableV2(val dir: String,
               ()
             }
           }
-        /** `writeStream.toTable("graft.db.t")`: executors write each
-          * micro-batch partition straight to staged parquet, the epoch
-          * commit publishes ONE version with the V1 sink's per-query
-          * exactly-once stamp (see [[SnapshotStreamingWrite]]). */
+        /** `writeStream.toTable("graft.db.t")`: the same
+          * [[SnapshotStreamingWrite]] as `writeStream.format(
+          * "graft-snapshots")` on the table path. */
         override def toStreaming: org.apache.spark.sql.connector.write
             .streaming.StreamingWrite = {
           require(branchRef.isEmpty,
             "graft catalog: writeStream.toTable on a t@branch handle " +
               "is not supported — use writeStream.format(\"graft-" +
               "snapshots\").option(\"branch\", …) on the table path")
-          new SnapshotStreamingWrite(dir, info.schema(), info.queryId(),
-            truncate = overwrite, keyCols = keyCols,
-            new GraftSerConf(
-              org.apache.spark.sql.execution.datasources.parquet
-                .GraftParquetIO.pinWriteConf(
-                  spark.sessionState.newHadoopConf())))
+          streaming()
         }
       }
     }
-    // Update output mode is only accepted when the writer declared its
-    // merge keys — advertising update-as-append unconditionally would
-    // let Spark silently APPEND update rows (stale rows accumulating)
-    if (keyCols.nonEmpty)
+    if (SnapshotStreamingWrite.keyColsOf(info.options).nonEmpty)
       new Builder with org.apache.spark.sql.internal.connector
         .SupportsStreamingUpdateAsAppend
     else new Builder

@@ -3,6 +3,10 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.streaming.StreamingWrite
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.catalyst.expressions.{And => CatAnd, Attribute, EqualTo => CatEqualTo, Expression, GreaterThan => CatGT, GreaterThanOrEqual => CatGTE, In => CatIn, LessThan => CatLT, LessThanOrEqual => CatLTE, Literal}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -60,11 +64,19 @@ import org.apache.spark.sql.types.{DataType, DateType, StructType, TimestampType
   * commit protocol: Append = carry the file set forward, Overwrite = a
   * rewrite commit (history stays readable), with `statsCols` /
   * `renames` options riding onto [[Snapshots.commit]].
+  *
+  * Streaming: `readStream` is the V1 [[SnapshotStreamSource]] /
+  * [[SnapshotChangeFeedSource]] ([[createSource]]); `writeStream`
+  * resolves through the [[TableProvider]] half ([[getTable]]) to a
+  * [[SnapshotPathTable]] whose only capability is STREAMING_WRITE, i.e.
+  * to the same [[SnapshotStreamingWrite]] the catalog's `toTable` uses —
+  * one commit per micro-batch, executor-staged parts, a per-query
+  * exactly-once stamp, options `keyCols` / `statsCols` / `branch`.
   */
 class SnapshotSource extends RelationProvider
     with CreatableRelationProvider
-    with org.apache.spark.sql.sources.StreamSinkProvider
     with org.apache.spark.sql.sources.StreamSourceProvider
+    with TableProvider
     with DataSourceRegister {
 
   override def shortName(): String = "graft-snapshots"
@@ -80,19 +92,7 @@ class SnapshotSource extends RelationProvider
     val latest = branch
       .map(Snapshots.refVersion(ctx.sparkSession, dir, _))
       .getOrElse(Snapshots.mainVersion(ctx.sparkSession, dir))
-    if (latest >= 1)
-      (Snapshots.evolutionInfo(ctx.sparkSession, dir, latest)._1, latest)
-    else {
-      val declared = new Path(dir, "_SCHEMA")
-      val f = declared.getFileSystem(
-        ctx.sparkSession.sparkContext.hadoopConfiguration)
-      require(f.exists(declared),
-        s"graft-snapshots source: no committed versions at $dir")
-      val in = f.open(declared)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString finally in.close()
-      (DataType.fromJson(json).asInstanceOf[StructType], 0)
-    }
+    (SnapshotSource.schemaAt(ctx.sparkSession, dir, latest), latest)
   }
 
   override def sourceSchema(ctx: SQLContext,
@@ -121,8 +121,8 @@ class SnapshotSource extends RelationProvider
     * exactly Delta's ignoreChanges contract). `maxVersionsPerTrigger=N`
     * bounds each micro-batch to N versions ([[VersionOfferCursor]]) so
     * a stream starting on a long-history table catches up in bounded
-    * batches instead of one giant replay. Composes with the sink for
-    * end-to-end table → stream → table pipelines. */
+    * batches instead of one giant replay. Composes with the streaming
+    * write for end-to-end table → stream → table pipelines. */
   override def createSource(ctx: SQLContext,
       metadataPath: String, schema: Option[StructType],
       providerName: String, parameters: Map[String, String])
@@ -214,52 +214,36 @@ class SnapshotSource extends RelationProvider
         maxBytesPerTrigger = maxBytesPerTrigger)
   }
 
-  /** Streaming sink: every micro-batch lands as ONE snapshot commit, so
-    * readers always resolve a consistent version and every mid-ingest
-    * state stays time-travelable. Exactly-once across restarts: the
-    * engine's (queryId, batchId) pair is stamped into the committed
-    * version's metadata (before the manifest, so `published => stamped`
-    * holds), and a replayed batch id is skipped instead of
-    * double-committed — scoped PER QUERY (Delta's SetTransaction shape),
-    * so a new query with a fresh checkpoint writing to an already
-    * stream-written table starts cleanly at batch 0 instead of being
-    * silently dropped; a same-query id REGRESSION fails loudly. Output
-    * modes: Append = append commits; Complete = rewrite commits (each
-    * batch replaces the table); Update = MERGE by the required `keyCols`
-    * option (comma-separated). `statsCols` rides onto each commit. */
-  override def createSink(ctx: SQLContext,
-      parameters: Map[String, String],
-      partitionColumns: Seq[String],
-      outputMode: org.apache.spark.sql.streaming.OutputMode)
-      : org.apache.spark.sql.execution.streaming.Sink = {
-    val dir = parameters.getOrElse("path", throw new IllegalArgumentException(
-      "graft-snapshots sink requires a path"))
-    val statsCols = parameters.get("statscols").toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-    val keyCols = parameters.get("keycols").toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-    import org.apache.spark.sql.streaming.OutputMode
-    if (outputMode == OutputMode.Update())
-      require(keyCols.nonEmpty,
-        "graft-snapshots sink in Update mode requires keyCols")
-    // branch=name: each epoch commits on the NAMED branch (the
-    // write-audit-publish pipeline — stream into a branch, validate,
-    // fast_forward main). The ref must exist before the query starts;
-    // Update mode stays main-anchored (upsert bases on main's head) and
-    // refuses the option rather than silently retargeting.
-    val branch = parameters.get("branch")
+  /** The [[TableProvider]] half: `writeStream.format("graft-snapshots")`
+    * resolves to a [[SnapshotPathTable]], which advertises only
+    * STREAMING_WRITE, so batch `load()`/`save()` and `readStream` (which
+    * call this too) fall back to the V1 relation and source above. No
+    * I/O but the check of an explicit `branch`, which runs on the caller
+    * thread of `start()` and so refuses there, not in the first epoch. */
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    new StructType()
+
+  override def supportsExternalMetadata(): Boolean = true
+
+  override def getTable(schema: StructType,
+      partitioning: Array[org.apache.spark.sql.connector.expressions
+        .Transform],
+      properties: java.util.Map[String, String]): Table = {
+    val opts = new CaseInsensitiveStringMap(properties)
+    val dir = Option(opts.get("path")).getOrElse(
+      throw new IllegalArgumentException("graft-snapshots requires a path"))
+    val branch = Option(opts.get("branch"))
+    // branch=name: each epoch commits on the NAMED branch (stream into a
+    // branch, validate, fast_forward main); keyed merges stay on main
     branch.foreach { n =>
-      require(outputMode != OutputMode.Update(),
-        "graft-snapshots sink: Update mode cannot target a branch — " +
-          "use Append/Complete, or upsert on main")
-      val spark = ctx.sparkSession
-      val (_, isTag) = Snapshots.refs(spark, dir).getOrElse(n,
-        throw new IllegalArgumentException(
-          s"graft-snapshots sink: no branch '$n' at $dir (create it " +
-            "with createRef / CALL system.create_ref before streaming)"))
-      require(!isTag, s"cannot stream onto tag '$n' — tags are immutable")
+      require(SnapshotStreamingWrite.keyColsOf(opts).isEmpty,
+        "graft-snapshots: keyCols (merge by key) cannot target a branch " +
+          "— stream appends/rewrites onto it, or upsert on main")
+      require(Snapshots.refs(SparkSession.active, dir).contains(n),
+        s"graft-snapshots: no branch '$n' at $dir (create it with " +
+          "createRef / CALL system.create_ref)")
     }
-    new SnapshotSink(dir, outputMode, keyCols, statsCols, branch)
+    new SnapshotPathTable(dir, schema, branch)
   }
 
   override def createRelation(ctx: SQLContext,
@@ -353,14 +337,9 @@ class SnapshotSource extends RelationProvider
     // branch head and advances only its ref (previously the option was
     // silently dropped here and the write landed on main — a silent
     // wrong-target hazard; the read side honored it all along)
-    val branch = parameters.get("branch")
     def commitTo(append: Boolean): Unit = {
-      branch match {
-        case Some(n) => Snapshots.commitOnBranch(spark, dir, n, data,
-          append, renames = renames, statsCols = statsCols)
-        case None => Snapshots.commit(spark, dir, data, append,
-          renames = renames, statsCols = statsCols)
-      }
+      Snapshots.commitTo(spark, dir, parameters.get("branch"),
+        Snapshots.FrameParts(data), _ => append, renames, statsCols)
       ()
     }
     mode match {
@@ -954,84 +933,6 @@ private[sources] class ChangeFeedBatchRelation(spark: SparkSession,
   }
 }
 
-/** The `graft-snapshots` streaming sink (see
-  * [[SnapshotSource.createSink]]). One micro-batch = one snapshot
-  * commit; the batch id rides in the version's metadata for
-  * exactly-once replay detection. */
-private[graft] class SnapshotSink(dir: String,
-    outputMode: org.apache.spark.sql.streaming.OutputMode,
-    keyCols: Seq[String], statsCols: Seq[String],
-    branch: Option[String] = None)
-    extends org.apache.spark.sql.execution.streaming.Sink {
-
-  import org.apache.spark.sql.streaming.OutputMode
-
-  override def toString: String =
-    s"SnapshotSink[$dir${branch.map("@" + _).getOrElse("")}]"
-
-  override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    val spark = data.sparkSession
-    // statscols absent: record the free footer-read defaults — a
-    // streaming-fed table should stat-prune out of the box
-    val effStats =
-      if (statsCols.nonEmpty) statsCols
-      else Snapshots.defaultStatsCols(data.schema)
-    // the engine stamps the owning query's id as a local property on the
-    // micro-batch thread (StreamExecution.QUERY_ID_KEY) — stable across
-    // checkpointed restarts, distinct per fresh checkpoint, which is
-    // exactly the idempotence scope: batch ids restart at 0 for every
-    // new query, so cursors must not cross queries
-    val queryId = Option(spark.sparkContext
-      .getLocalProperty("sql.streaming.queryId")).getOrElse("")
-    // replay detection, scoped per query: the engine re-delivers exactly
-    // the LAST batch after a restart (same id) — skip it; an id BELOW
-    // the stamped cursor can only mean a rolled-back or hand-edited
-    // checkpoint, and silently skipping would lose data — fail loudly.
-    // A LEGACY bare stamp (pre-per-query tables) cannot be attributed
-    // to any query: treat equal ids as replays, but let LOWER ids from
-    // a fresh query proceed (its batch ids legitimately restart at 0)
-    // a branch-targeted stream's cursor walks the BRANCH's ancestry
-    Snapshots.lastStreamBatchStamp(spark, dir, queryId, branch) match {
-      case Some((last, _)) if last == batchId => return
-      case Some((last, legacy)) if last > batchId && !legacy =>
-        throw new IllegalStateException(
-          s"graft-snapshots sink: query $queryId delivered batch " +
-            s"$batchId but the table at $dir already holds its batch " +
-            s"$last — the stream's checkpoint regressed; refusing to " +
-            "guess which commits to drop. Restore the checkpoint or " +
-            "start the query against a fresh table")
-      case _ =>
-    }
-    // the engine's frame carries streaming-flagged leaves; commit needs
-    // a batch view of the same physical rows
-    val batch = org.apache.spark.sql.GraftBatchView.asBatch(data)
-    val latest = Snapshots.latestVersion(spark, dir)
-    val txn = Some((queryId, batchId))
-    (outputMode, branch) match {
-      case (m, Some(n)) if m == OutputMode.Complete() =>
-        Snapshots.commitOnBranch(spark, dir, n, batch, append = false,
-          statsCols = effStats, streamTxn = txn)
-        ()
-      case (_, Some(n)) => // Append on the branch (its ref exists => base)
-        Snapshots.commitOnBranch(spark, dir, n, batch, append = true,
-          statsCols = effStats, streamTxn = txn)
-        ()
-      case (m, None) if m == OutputMode.Complete() =>
-        Snapshots.commit(spark, dir, batch, append = false,
-          statsCols = effStats, streamTxn = txn)
-        ()
-      case (m, None) if m == OutputMode.Update() && latest >= 1 =>
-        Snapshots.upsert(spark, dir, batch, keyCols,
-          statsCols = effStats, streamTxn = txn)
-        ()
-      case _ => // Append, or the first batch of an Update stream
-        Snapshots.commit(spark, dir, batch, append = latest >= 1,
-          statsCols = effStats, streamTxn = txn)
-        ()
-    }
-  }
-}
-
 /** Serializable Hadoop Configuration (Configuration is Writable, not
   * Serializable) — ships the driver's pinned parquet-write settings to
   * the streaming writers. */
@@ -1053,26 +954,36 @@ private[graft] case class GraftStreamCommitMessage(path: String,
     rows: Long)
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
-/** The V2 STREAMING write behind `writeStream.toTable("graft.db.t")` —
-  * the naming twin of the V1 `graft-snapshots` sink, with a better
-  * 100 TB shape: each micro-batch partition writes its rows STRAIGHT to
-  * a staged parquet part on the executor ([[org.apache.spark.sql
-  * .execution.datasources.parquet.GraftParquetIO]] — Spark's own
-  * Catalyst-to-parquet converter), and the epoch commit is the driver
-  * publishing those files as one version ([[Snapshots
-  * .commitStagedFiles]]: claim, carried file set + deletion vector,
-  * manifest) — one pass over the data, no second `addBatch` job.
-  * Exactly-once via the same per-query `vN.meta` stamp as the V1 sink:
-  * a replayed epoch is skipped, a regressed checkpoint refuses loudly.
-  * Append mode appends (first commit decided in-claim); Complete mode
-  * (`truncate`) publishes each epoch as a rewrite. Task retries are
+/** The one STREAMING write of a snapshot table, behind both
+  * `writeStream.format("graft-snapshots")` ([[SnapshotPathTable]]) and
+  * `writeStream.toTable("graft.db.t")` (the catalog's table). Each
+  * micro-batch partition writes its rows STRAIGHT to a staged parquet
+  * part on the executor ([[org.apache.spark.sql.execution.datasources
+  * .parquet.GraftParquetIO]] — Spark's own Catalyst-to-parquet
+  * converter), and the epoch commit publishes those files as one
+  * version through the one claimed-commit body
+  * ([[Snapshots.commitTo]]) — one pass over the data, and the version
+  * claim covers only renames and metadata. Options: `keyCols` makes
+  * each epoch MERGE by key (the Update-output-mode shape); `statsCols`
+  * names the stat columns (default: [[Snapshots.defaultStatsCols]]);
+  * `branch` commits every epoch on that branch. Complete mode
+  * (`truncate`) publishes each epoch as a rewrite; an all-empty Append
+  * epoch publishes nothing.
+  *
+  * Exactly-once across restarts: the engine's (queryId, epochId) pair is
+  * stamped into the committed version's `vN.meta` (before the manifest,
+  * so `published => stamped`), and a re-delivered epoch is skipped —
+  * scoped PER QUERY (Delta's SetTransaction shape), so a fresh query
+  * starts cleanly at epoch 0; a same-query id REGRESSION fails loudly.
+  * On a branch the cursor walks the branch's ancestry. Task retries are
   * safe: writers name files by (epoch, partition, task) and only files
   * named in COMMIT MESSAGES publish — an orphaned attempt dies with the
   * epoch's staging dir. */
 private[graft] class SnapshotStreamingWrite(dir: String,
     schema: StructType, queryId: String, truncate: Boolean,
-    keyCols: Seq[String], conf: GraftSerConf)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
+    keyCols: Seq[String], conf: GraftSerConf,
+    statsCols: Seq[String] = Nil, branch: Option[String] = None)
+    extends StreamingWrite {
 
   private def spark = SparkSession.active
   private val stageRoot = new Path(dir,
@@ -1104,15 +1015,20 @@ private[graft] class SnapshotStreamingWrite(dir: String,
   }
 
   override def commit(epochId: Long,
-      messages: Array[org.apache.spark.sql.connector.write
-        .WriterCommitMessage]): Unit = {
+      messages: Array[WriterCommitMessage]): Unit = {
     touchLive()
     val f = stageRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val epochDir = new Path(stageRoot, s"epoch-$epochId")
     def cleanup(): Unit = { f.delete(epochDir, true); () }
-    Snapshots.lastStreamBatchStamp(spark, dir, queryId) match {
+    // replay detection, scoped per query: the engine re-delivers exactly
+    // the LAST epoch after a restart (same id) — skip it; an id BELOW
+    // the stamped cursor can only mean a rolled-back or hand-edited
+    // checkpoint, and silently skipping would lose data — fail loudly.
+    // A LEGACY bare stamp (pre-per-query tables) cannot be attributed
+    // to any query: treat equal ids as replays, but let LOWER ids from
+    // a fresh query proceed (its epoch ids legitimately restart at 0)
+    Snapshots.lastStreamBatchStamp(spark, dir, queryId, branch) match {
       case Some((last, _)) if last == epochId =>
-        // engine re-delivery of the stamped epoch after a restart
         cleanup(); return
       case Some((last, legacy)) if last > epochId && !legacy =>
         cleanup()
@@ -1126,50 +1042,102 @@ private[graft] class SnapshotStreamingWrite(dir: String,
     val staged = messages.collect {
       case m: GraftStreamCommitMessage if m.rows > 0 => new Path(m.path)
     }.toSeq
-    // an all-empty APPEND epoch publishes nothing (appending zero rows
-    // is a no-op, and idempotence needs no stamp for one) — but an
-    // all-empty COMPLETE epoch means "the result set is now empty" and
-    // must publish an empty rewrite (with the exactly-once stamp), or
-    // the table would silently keep the previous epoch's rows
-    if (staged.isEmpty && truncate) {
-      val empty = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          Seq.empty[org.apache.spark.sql.Row], 1), schema)
-      Snapshots.commit(spark, dir, empty, append = false,
-        streamTxn = Some((queryId, epochId)))
-      ()
-    } else if (staged.nonEmpty) {
-      val txn = Some((queryId, epochId))
-      if (keyCols.nonEmpty && !truncate) {
-        // `keyCols` epochs MERGE: the staged rows replace-or-insert by
-        // key (the Update-output-mode contract, same as the V1 sink) —
-        // one extra read of the epoch's own staged files, never of the
-        // table. The first epoch of a fresh table is the first commit.
-        val df = spark.read.parquet(staged.map(_.toString): _*)
-        val stats = Snapshots.defaultStatsCols(df.schema)
-        if (Snapshots.mainVersion(spark, dir) >= 1)
-          Snapshots.upsert(spark, dir, df, keyCols,
-            statsCols = stats, streamTxn = txn)
-        else Snapshots.commit(spark, dir, df, append = false,
-          statsCols = stats, streamTxn = txn)
-        ()
-      } else
-        Snapshots.commitStagedFiles(spark, dir, staged,
-          append = !truncate, streamTxn = txn,
-          schema = Some(schema))
+    val txn = Some((queryId, epochId))
+    val stats =
+      if (statsCols.nonEmpty) statsCols else Snapshots.defaultStatsCols(schema)
+    if (keyCols.nonEmpty && !truncate && staged.nonEmpty &&
+        Snapshots.mainVersion(spark, dir) >= 1)
+      // keyed epochs MERGE: the staged rows replace-or-insert by key —
+      // one extra read of the epoch's own staged files, never of the
+      // table. The first epoch of a fresh table is the first commit.
+      Snapshots.upsert(spark, dir,
+        spark.read.parquet(staged.map(_.toString): _*), keyCols,
+        statsCols = stats, streamTxn = txn)
+    else if (staged.nonEmpty || truncate) {
+      // an all-empty APPEND epoch publishes nothing (appending zero rows
+      // is a no-op, and idempotence needs no stamp for one) — but an
+      // all-empty COMPLETE epoch means "the result set is now empty" and
+      // must publish an empty rewrite (with the exactly-once stamp), or
+      // the table would silently keep the previous epoch's rows
+      val parts =
+        if (staged.nonEmpty) Snapshots.StagedParts(staged, schema)
+        else Snapshots.FrameParts(spark.createDataFrame(
+          java.util.List.of[org.apache.spark.sql.Row](), schema))
+      Snapshots.commitTo(spark, dir, branch, parts,
+        append = base => !truncate && base >= 1, statsCols = stats,
+        streamTxn = txn)
     }
     cleanup()
   }
 
   override def abort(epochId: Long,
-      messages: Array[org.apache.spark.sql.connector.write
-        .WriterCommitMessage]): Unit = {
+      messages: Array[WriterCommitMessage]): Unit = {
     val f = stageRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     f.delete(new Path(stageRoot, s"epoch-$epochId"), true)
     ()
   }
 
-  override def toString: String = s"SnapshotStreamingWrite[$dir]"
+  override def toString: String =
+    s"SnapshotStreamingWrite[$dir${branch.map("@" + _).getOrElse("")}]"
+}
+
+private[graft] object SnapshotStreamingWrite {
+  private def listOpt(opts: CaseInsensitiveStringMap, key: String)
+      : Seq[String] = Option(opts.get(key)).toSeq
+    .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+
+  def keyColsOf(opts: CaseInsensitiveStringMap): Seq[String] =
+    listOpt(opts, "keyCols")
+
+  /** The one place a streaming write is built, for both doors. */
+  def apply(dir: String, info: LogicalWriteInfo, truncate: Boolean,
+      branch: Option[String]): SnapshotStreamingWrite = {
+    val spark = SparkSession.active
+    new SnapshotStreamingWrite(dir, info.schema(), info.queryId(),
+      truncate, keyColsOf(info.options), new GraftSerConf(
+        org.apache.spark.sql.execution.datasources.parquet.GraftParquetIO
+          .pinWriteConf(spark.sessionState.newHadoopConf())),
+      statsCols = listOpt(info.options, "statsCols"), branch = branch)
+  }
+}
+
+/** The streaming half of the write builder both doors share: Complete
+  * mode truncates (`truncate()`), and Update mode is accepted only when
+  * the writer declared its merge keys — advertising update-as-append
+  * unconditionally would let Spark silently APPEND update rows (stale
+  * rows accumulating). */
+private[graft] class SnapshotWriteBuilder(dir: String,
+    info: LogicalWriteInfo, branch: Option[String])
+    extends WriteBuilder with SupportsTruncate {
+  protected var overwrite = false
+  override def truncate(): WriteBuilder = { overwrite = true; this }
+  protected def streaming(): StreamingWrite =
+    SnapshotStreamingWrite(dir, info, overwrite, branch)
+  override def build(): Write = new Write {
+    override def toStreaming: StreamingWrite = streaming()
+  }
+}
+
+/** What `writeStream.format("graft-snapshots").option("path", dir)`
+  * resolves to ([[SnapshotSource.getTable]]): a table that can only be
+  * stream-written, through the same [[SnapshotStreamingWrite]] as the
+  * catalog's `toTable`. */
+private[graft] class SnapshotPathTable(dir: String, writeSchema: StructType,
+    branch: Option[String]) extends Table with SupportsWrite {
+  override def name(): String = s"graft-snapshots:$dir"
+  override def schema(): StructType = writeSchema
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.STREAMING_WRITE)
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    if (SnapshotStreamingWrite.keyColsOf(info.options).nonEmpty)
+      new SnapshotWriteBuilder(dir, info, branch)
+        with org.apache.spark.sql.internal.connector
+          .SupportsStreamingUpdateAsAppend
+    else new SnapshotWriteBuilder(dir, info, branch)
+  // Spark reports the sink TABLE's toString as the query's
+  // `sink.description`: name the write this table exists for
+  override def toString: String =
+    s"SnapshotStreamingWrite[$dir${branch.map("@" + _).getOrElse("")}]"
 }
 
 private[graft] class SnapshotStreamWriterFactory(stageRoot: String,
@@ -1208,6 +1176,21 @@ private[graft] class SnapshotStreamDataWriter(path: Path,
 }
 
 object SnapshotSource {
+
+  /** The table schema at version `v`, or — at v = 0, a created-but-
+    * never-committed catalog table — its declared `_SCHEMA` side-file. */
+  private[sources] def schemaAt(spark: SparkSession, dir: String,
+      v: Int): StructType =
+    if (v >= 1) Snapshots.evolutionInfo(spark, dir, v)._1
+    else {
+      val p = new Path(dir, "_SCHEMA")
+      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      require(f.exists(p), s"graft-snapshots: table at $dir has no " +
+        "committed versions and no declared schema")
+      val in = f.open(p)
+      try DataType.fromJson(scala.io.Source.fromInputStream(in, "UTF-8")
+        .mkString).asInstanceOf[StructType] finally in.close()
+    }
 
   /** Epoch millis of a `timestampAsOf` option value: a raw epoch-millis
     * long, else a `yyyy-MM-dd[ HH:mm:ss[.f…]]` literal ('T' accepted). */

@@ -141,23 +141,9 @@ object Snapshots {
   def commit(s: SparkSession, dir: String, df: DataFrame,
       append: Boolean, renames: Map[String, String] = Map.empty,
       statsCols: Seq[String] = Seq.empty,
-      streamTxn: Option[(String, Long)] = None,
-      statsExprs: Seq[(String, String, String)] = Seq.empty): Int = {
-    val f = fs(s, dir)
-    f.mkdirs(new Path(dir))
-    val c = claimVersion(f, dir)
-    try {
-      // on a ref-tracked table, a plain commit is a commit on MAIN:
-      // base = the main ref's head (which may not be the global latest
-      // once branches exist), and the ref advances with the publish
-      val base = mainHead(f, dir, c.v - 1)
-      val v = commitClaimed(s, f, dir, df, append, renames, statsCols,
-        c.v, baseVersion = base, streamTxn = streamTxn,
-        statsExprs = statsExprs)
-      advanceMain(s, f, dir, v)
-      v
-    } finally c.release()
-  }
+      statsExprs: Seq[(String, String, String)] = Seq.empty): Int =
+    commitTo(s, dir, None, FrameParts(df), _ => append, renames, statsCols,
+      statsExprs = statsExprs)
 
   /** INSERT INTO semantics: append when any main version already exists,
     * first-commit (rewrite) otherwise — with the decision taken INSIDE
@@ -168,36 +154,47 @@ object Snapshots {
   def commitAuto(s: SparkSession, dir: String, df: DataFrame,
       overwrite: Boolean,
       statsCols: Seq[String] = Seq.empty,
-      statsExprs: Seq[(String, String, String)] = Seq.empty): Int = {
-    val f = fs(s, dir)
-    f.mkdirs(new Path(dir))
-    val c = claimVersion(f, dir)
-    try {
-      val base = mainHead(f, dir, c.v - 1)
-      val v = commitClaimed(s, f, dir, df,
-        append = base >= 1 && !overwrite, Map.empty, statsCols,
-        c.v, baseVersion = base, statsExprs = statsExprs)
-      advanceMain(s, f, dir, v)
-      v
-    } finally c.release()
-  }
+      statsExprs: Seq[(String, String, String)] = Seq.empty): Int =
+    commitTo(s, dir, None, FrameParts(df), base => base >= 1 && !overwrite,
+      statsCols = statsCols, statsExprs = statsExprs)
 
   /** [[commit]] with a custom claim timeout (spec support for the
     * stale-claim path; production uses the default). */
   private[sources] def commitWithTimeout(s: SparkSession, dir: String,
-      df: DataFrame, append: Boolean, timeoutMs: Long): Int = {
+      df: DataFrame, append: Boolean, timeoutMs: Long): Int =
+    commitTo(s, dir, None, FrameParts(df), _ => append,
+      timeoutMs = timeoutMs)
+
+  /** The rows a claimed commit publishes: a frame the commit writes
+    * itself, or parquet parts executors already staged (a streaming
+    * epoch of [[SnapshotStreamingWrite]]). Both reach [[moveStaged]], so
+    * both get the same stats, DV carry, meta stamp, manifest, checkpoint
+    * and ref advance. */
+  private[sources] sealed trait Parts
+  private[sources] final case class FrameParts(df: DataFrame) extends Parts
+  private[sources] final case class StagedParts(files: Seq[Path],
+      schema: org.apache.spark.sql.types.StructType) extends Parts
+
+  /** The one claimed-commit body behind [[commit]], [[commitAuto]],
+    * [[commitOnBranch]] and the streaming write: claim the next version,
+    * base it on `ref`'s head (None = main: the `main` ref on a
+    * ref-tracked table — the global latest may be a branch head — else
+    * the linear predecessor), publish through [[commitClaimed]], advance
+    * the ref, release. `append(base)` decides append-vs-rewrite INSIDE
+    * the claim. */
+  private[sources] def commitTo(s: SparkSession, dir: String,
+      ref: Option[String], parts: Parts, append: Int => Boolean,
+      renames: Map[String, String] = Map.empty,
+      statsCols: Seq[String] = Seq.empty,
+      streamTxn: Option[(String, Long)] = None,
+      statsExprs: Seq[(String, String, String)] = Seq.empty,
+      timeoutMs: Long = 120000L): Int = {
     val f = fs(s, dir)
     f.mkdirs(new Path(dir))
-    val c = claimVersion(f, dir, timeoutMs)
-    try {
-      // same main-ref protocol as commit(): base on main's head and
-      // advance it — a branch head as the global latest must not leak
-      val base = mainHead(f, dir, c.v - 1)
-      val v = commitClaimed(s, f, dir, df, append, Map.empty, Seq.empty,
-        c.v, baseVersion = base)
-      advanceMain(s, f, dir, v)
-      v
-    } finally c.release()
+    claimed(s, f, dir, ref, "commit", timeoutMs) { (v, base) =>
+      commitClaimed(s, f, dir, parts, append(base), renames, statsCols, v,
+        base, streamTxn, statsExprs)
+    }
   }
 
   /** Row count of one parquet file from its FOOTER — a driver metadata
@@ -327,72 +324,6 @@ object Snapshots {
           render(lo = false)))
       }
     } finally rd.close()
-  }
-
-  /** Publish ALREADY-WRITTEN parquet part files as the next version —
-    * the driver half of the V2 STREAMING sink ([[SnapshotSource]]'s
-    * `SnapshotStreamingWrite`), whose executors wrote each micro-batch
-    * partition straight to a staging file. Same protocol as
-    * [[commit]] minus the DataFrame write: version claim, base = main's
-    * head, checked renames into `data/vN-i-` names (partial moves
-    * cleaned up on failure), append carries the base's file set AND its
-    * deletion vector, the streaming txn stamps `vN.meta`, manifest
-    * publishes, main advances. Returns the new version. */
-  private[sources] def commitStagedFiles(s: SparkSession, dir: String,
-      staged: Seq[Path], append: Boolean,
-      streamTxn: Option[(String, Long)],
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Int = {
-    val f = fs(s, dir)
-    f.mkdirs(new Path(dir))
-    val c = claimVersion(f, dir)
-    try {
-      val v = c.v
-      val base = mainHead(f, dir, v - 1)
-      val app = append && base >= 1
-      val dataDir = new Path(dir, "data")
-      f.mkdirs(dataDir)
-      val moved = scala.collection.mutable.ArrayBuffer.empty[String]
-      try {
-        staged.zipWithIndex.foreach { case (p, i) =>
-          val name = s"v$v-$i-${p.getName}"
-          if (!f.rename(p, new Path(dataDir, name)))
-            throw new java.io.IOException(
-              s"streaming commit aborted: rename $p -> $dataDir/$name " +
-                "returned false")
-          moved += s"data/$name"
-        }
-      } catch {
-        case e: Throwable =>
-          moved.foreach(p => f.delete(new Path(dir, p), false))
-          throw e
-      }
-      // default footer stats for the executor-written epoch files —
-      // zero jobs, and a streaming-fed table (the prime compact/prune
-      // customer) is stat-prunable out of the box
-      val statLines = schema.toSeq.flatMap { sch =>
-        val cols = defaultStatsCols(sch).map(c => c -> sch(c).dataType)
-        moved.flatMap(rel =>
-          footerStats(new Path(dir, rel), s, cols).collect {
-            case (c, tn, mn, mx) if statRecordable(tn, mn, mx) =>
-              Seq(rel, c, tn, mn, mx).mkString("\u0001")
-          })
-      }
-      val carried = if (app) files(s, dir, base) else Seq.empty
-      if (app && hasDv(s, dir, base))
-        dvFrame(s, dir, base).foreach(
-          _.write.mode("overwrite").parquet(dvDir(dir, v).toString))
-      else {
-        // same orphan-vector guard as commitClaimed
-        f.delete(dvDir(dir, v), true); ()
-      }
-      writeCommitMeta(f, dir, v, if (base > 0) base else 0, streamTxn)
-      writeStatLines(f, dir, v, statLines)
-      writeManifest(f, dir, v, carried ++ moved)
-      maybeCheckpoint(f, dir, v)
-      advanceMain(s, f, dir, v)
-      v
-    } finally c.release()
   }
 
   /** COUNT(*) of version `v` from METADATA alone: the parquet footers
@@ -597,17 +528,35 @@ object Snapshots {
     null // unreachable
   }
 
-  /** Stage `df` as parquet, move the part files into data/ under
-    * `vN-i-` names (every rename checked; partial moves cleaned up on
-    * failure), and compute per-file stats lines for `statsCols`.
-    * Shared by [[commit]] and [[upsert]]. Returns (movedPaths, statLines). */
+  /** Stage `df` as parquet under `_stage_vN` and hand its part files to
+    * [[moveStaged]]; the stage dir goes either way. Shared by the frame
+    * commits, [[upsert]] and the DML verbs. Returns (movedPaths,
+    * statLines). */
   private def stageAndMove(s: SparkSession, f: FileSystem, dir: String,
       df: DataFrame, statsCols: Seq[String], v: Int,
       statsExprs: Seq[(String, String, String)] = Seq.empty)
       : (Seq[String], Seq[String]) = {
     val stage = new Path(dir, s"_stage_v$v")
     f.delete(stage, true)
-    df.write.parquet(stage.toString)
+    try {
+      df.write.parquet(stage.toString)
+      val parts = f.listStatus(stage).toSeq
+        .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
+        .map(_.getPath)
+      moveStaged(s, f, dir, parts, df.schema, statsCols, v, statsExprs)
+    } finally { f.delete(stage, true); () }
+  }
+
+  /** Move already-staged parquet parts into data/ under `vN-i-` names
+    * (every rename checked; partial moves cleaned up on failure) and
+    * compute their per-file stats lines for `statsCols`: min/max plus
+    * the `null:`/`nnull:` footer counts. Executor-staged streaming
+    * epochs enter here directly. Returns (movedPaths, statLines). */
+  private def moveStaged(s: SparkSession, f: FileSystem, dir: String,
+      staged: Seq[Path], schema: org.apache.spark.sql.types.StructType,
+      statsCols: Seq[String], v: Int,
+      statsExprs: Seq[(String, String, String)])
+      : (Seq[String], Seq[String]) = {
     val dataDir = new Path(dir, "data")
     f.mkdirs(dataDir)
     // every rename is checked (HDFS rename returns false on failure rather
@@ -615,8 +564,6 @@ object Snapshots {
     // file set does not exist. On any failure the caller's commit aborts
     // BEFORE the manifest is written, so the previous version stays latest
     // and the partially-moved files are cleaned back out of data/.
-    val staged = f.listStatus(stage).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
     // per-staged-file min/max BEFORE the moves. Fixed-width primitives
     // read their bounds from the FOOTERS the staged files already carry
     // (zero extra jobs, driver-side — footerStats); every other
@@ -624,7 +571,7 @@ object Snapshots {
     // metadata-size aggregate job with Spark's own cast-to-string
     // rendering (the group key is the file name, the shuffle carries
     // |files| × |aggCols| rows)
-    val sparkTypes = df.schema.fields.map(fd => fd.name -> fd.dataType)
+    val sparkTypes = schema.fields.map(fd => fd.name -> fd.dataType)
       .toMap
     val (footCols, aggCols) = statsCols.filter(sparkTypes.contains)
       .partition { c =>
@@ -654,7 +601,7 @@ object Snapshots {
         // explicit FILE paths: the stage dir's own name starts with "_",
         // which the DataSource hidden-path filter warns about when the
         // directory itself is the input
-        s.read.parquet(staged.map(_.getPath.toString): _*)
+        s.read.parquet(staged.map(_.toString): _*)
           .groupBy(input_file_name().as("_f"))
           .agg(aggs.head, aggs.tail: _*)
           .collect().map { r =>
@@ -666,9 +613,8 @@ object Snapshots {
       }
     val footStats: Map[String, Seq[(String, String, String, String)]] =
       if (footCols.isEmpty) Map.empty
-      else staged.map(st => st.getPath.getName ->
-        footerStats(st.getPath, s, footCols.map(c => c -> sparkTypes(c))))
-        .toMap
+      else staged.map(p => p.getName ->
+        footerStats(p, s, footCols.map(c => c -> sparkTypes(c)))).toMap
     // per-file NULL counts for every stats column, straight from the
     // parquet footers (all physical types carry num_nulls — zero extra
     // jobs): two virtual rows per (file, col) — `null:<c>` = null count,
@@ -677,8 +623,8 @@ object Snapshots {
     val nullCols = statsCols.filter(sparkTypes.contains)
     val nullStats: Map[String, Seq[(String, String, String, String)]] =
       if (nullCols.isEmpty) Map.empty
-      else staged.map(st => st.getPath.getName ->
-        footerNullCounts(st.getPath, s, nullCols)).toMap
+      else staged.map(p => p.getName ->
+        footerNullCounts(p, s, nullCols)).toMap
     val stagedStats: Map[String, Seq[(String, String, String, String)]] =
       (aggStats.keySet ++ footStats.keySet ++ nullStats.keySet)
         .iterator.map(k =>
@@ -688,14 +634,14 @@ object Snapshots {
     val statLines = scala.collection.mutable.ArrayBuffer.empty[String]
     val moved = scala.collection.mutable.ArrayBuffer.empty[String]
     try {
-      staged.zipWithIndex.foreach { case (st, i) =>
-        val name = s"v$v-$i-${st.getPath.getName}"
-        if (!f.rename(st.getPath, new Path(dataDir, name)))
+      staged.zipWithIndex.foreach { case (p, i) =>
+        val name = s"v$v-$i-${p.getName}"
+        if (!f.rename(p, new Path(dataDir, name)))
           throw new java.io.IOException(
-            s"snapshot commit aborted: rename ${st.getPath} -> " +
-              s"$dataDir/$name returned false")
+            s"snapshot commit aborted: rename $p -> $dataDir/$name " +
+              "returned false")
         moved += s"data/$name"
-        stagedStats.get(st.getPath.getName).foreach(_.foreach {
+        stagedStats.get(p.getName).foreach(_.foreach {
           // an all-null column gets NO stats line, and neither does a
           // bound whose stringified value contains the line/field
           // separators (statSafe): absent = unknown = never pruned,
@@ -710,10 +656,8 @@ object Snapshots {
     } catch {
       case e: Throwable =>
         moved.foreach(p => f.delete(new Path(dir, p), false))
-        f.delete(stage, true)
         throw e
     }
-    f.delete(stage, true)
     (moved.toSeq, statLines.toSeq)
   }
 
@@ -750,13 +694,16 @@ object Snapshots {
     }
 
   private def commitClaimed(s: SparkSession, f: FileSystem, dir: String,
-      df: DataFrame, append: Boolean, renames: Map[String, String],
-      statsCols: Seq[String], v: Int, baseVersion: Int = -1,
+      parts: Parts, append: Boolean, renames: Map[String, String],
+      statsCols: Seq[String], v: Int, prev: Int,
       streamTxn: Option[(String, Long)] = None,
       statsExprs: Seq[(String, String, String)] = Seq.empty): Int = {
-    val prev = if (baseVersion >= 0) baseVersion else v - 1
-    val (moved, statLines) = stageAndMove(s, f, dir, df, statsCols, v,
-      statsExprs)
+    val (moved, statLines) = parts match {
+      case FrameParts(df) =>
+        stageAndMove(s, f, dir, df, statsCols, v, statsExprs)
+      case StagedParts(files, schema) =>
+        moveStaged(s, f, dir, files, schema, statsCols, v, statsExprs)
+    }
     val carried = if (append && prev > 0) files(s, dir, prev) else Seq.empty
     // an append CARRIES the base's deletion vector too: the positions
     // stay valid (every carried file is untouched), and without the
@@ -772,14 +719,10 @@ object Snapshots {
       // silently delete this version's rows
       f.delete(dvDir(dir, v), true); ()
     }
-    // same reasoning for an orphaned vN.op: an aborted upsert's stale
-    // "upsert" verb on a reused version number would make the change
-    // feed mis-type this plain commit's delta
-    f.delete(new Path(dir, s"v$v.op"), false)
     // meta precedes the manifest: a version without meta never becomes
     // visible (versions resolve through manifests), so `manifest => meta`
     // holds and a stream batch id stamped in meta is crash-consistent
-    // with the publish — the exactly-once anchor of the streaming sink
+    // with the publish — the exactly-once anchor of the streaming write
     writeCommitMeta(f, dir, v, if (prev > 0) prev else 0, streamTxn)
     if (renames.nonEmpty) {
       val body = renames.toSeq.sorted
@@ -808,7 +751,7 @@ object Snapshots {
       parent: Int, streamTxn: Option[(String, Long)] = None,
       parent2: Option[Int] = None): Unit = {
     val o = f.create(new Path(dir, s"v$v.meta"), true)
-    // line 3 (streaming-sink commits only): `queryId:batchId` — the
+    // line 3 (streaming-write commits only): `queryId:batchId` — the
     // idempotence cursor is scoped PER QUERY, because Structured
     // Streaming batch ids restart at 0 with every fresh checkpoint; a
     // bare table-wide id would silently drop a new query's early batches.
@@ -895,9 +838,9 @@ object Snapshots {
   def parentsOf(s: SparkSession, dir: String, v: Int): Seq[Int] =
     commitParents(fs(s, dir), dir, v).filter(_ >= 1)
 
-  /** The highest STREAMING SINK batch id that QUERY `queryId` has stamped
+  /** The highest STREAMING epoch id that QUERY `queryId` has stamped
     * into any committed version (meta line 3, `queryId:batchId`) — the
-    * exactly-once cursor of the `graft-snapshots` streaming sink, scoped
+    * exactly-once cursor of [[SnapshotStreamingWrite]], scoped
     * per query (Delta's SetTransaction shape): batch ids restart at 0
     * with every fresh checkpoint, so a table-wide cursor would silently
     * drop a NEW query's early batches. Because meta is written BEFORE
@@ -914,7 +857,7 @@ object Snapshots {
 
   /** [[lastStreamBatch]] plus whether the stamp found was a LEGACY bare
     * batch id (pre-per-query tables): a legacy stamp cannot be attributed
-    * to a query, so the sink treats it as replay-detection-only (equal id
+    * to a query, so the write treats it as replay-detection-only (equal id
     * = skip) rather than a monotone cursor — a fresh query restarting at
     * batch 0 against such a table must proceed, not fail as a regressed
     * checkpoint. */
@@ -1107,7 +1050,7 @@ object Snapshots {
   private def ckptPath(dir: String, v: Int) = new Path(dir, s"v$v.ckpt")
 
   /** One commit's graph record: (instant millis — 0 = unknown, parent
-    * versions main-side first, streaming-sink txn stamp `queryId:batch`). */
+    * versions main-side first, streaming-write txn stamp `queryId:batch`). */
   private[sources] type MetaRec = (Long, Seq[Int], Option[String])
 
   /** Parsed cumulative metadata of commits 1..v. `metas`/`ops` (the
@@ -1322,8 +1265,8 @@ object Snapshots {
     * walk + additive session memo — the ancestry twin of
     * [[statLinesUpTo]]. Every deep-history walk (branch merge, time
     * travel, `system.history`, the streaming source's line ancestry,
-    * the sink's replay cursor) fetches this ONCE at its head and then
-    * walks in memory, so a 260k-version streaming table costs
+    * the streaming write's replay cursor) fetches this ONCE at its head
+    * and then walks in memory, so a 260k-version streaming table costs
     * O(CheckpointEvery) metadata opens per walk, not O(versions).
     * Commits the fold covered answer from the maps; commits outside
     * (a pre-graph table whose checkpoint predates M/O records) fall
@@ -2015,17 +1958,7 @@ object Snapshots {
     // claim FIRST, then compute against v-1: computing positions against
     // a pre-claim latest would silently drop a commit that interleaved
     // between the read and the claim (the lost-update window)
-    val c = claimVersion(f, dir)
-    val v = c.v
-    try {
-      val latest = branch match {
-        case Some(n) =>
-          val (h, isTag) = refRead(f, dir, n).getOrElse(
-            throw new IllegalArgumentException(s"no ref '$n' at $dir"))
-          require(!isTag, s"cannot delete on tag '$n' — tags are immutable")
-          h
-        case None => mainHead(f, dir, v - 1)
-      }
+    claimed(s, f, dir, branch, "delete") { (v, latest) =>
       val fset = files(s, dir, latest)
       def scanOf(fls: Seq[String]) = withMeta(
         s.read.parquet(fls.map(p => new Path(dir, p).toString): _*))
@@ -2058,13 +1991,9 @@ object Snapshots {
         writeCommitMeta(f, dir, v, latest)
         writeManifest(f, dir, v, fset)
         maybeCheckpoint(f, dir, v)
-        branch match {
-          case Some(nm) => writeRef(s, f, dir, nm, v, tag = false)
-          case None => advanceMain(s, f, dir, v)
-        }
         (v, n)
       } finally { hits.unpersist(); () }
-    } finally c.release()
+    }
   }
 
   /** `INSERT INTO t REPLACE WHERE cond SELECT …` (overwrite-by-filter):
@@ -2086,18 +2015,7 @@ object Snapshots {
     require(latestVersion(s, dir) >= 1,
       s"replaceWhere: no versions at $dir")
     // claim FIRST, then compute against v-1 (the deleteWhere rationale)
-    val c = claimVersion(f, dir)
-    val v = c.v
-    try {
-      val latest = branch match {
-        case Some(n) =>
-          val (h, isTag) = refRead(f, dir, n).getOrElse(
-            throw new IllegalArgumentException(s"no ref '$n' at $dir"))
-          require(!isTag,
-            s"cannot replace on tag '$n' — tags are immutable")
-          h
-        case None => mainHead(f, dir, v - 1)
-      }
+    claimed(s, f, dir, branch, "replace") { (v, latest) =>
       val fset = files(s, dir, latest)
       def scanOf(fls: Seq[String]) = withMeta(
         s.read.parquet(fls.map(p => new Path(dir, p).toString): _*))
@@ -2124,13 +2042,9 @@ object Snapshots {
         writeStatLines(f, dir, v, statLines)
         writeManifest(f, dir, v, fset ++ moved)
         maybeCheckpoint(f, dir, v)
-        branch match {
-          case Some(nm) => writeRef(s, f, dir, nm, v, tag = false)
-          case None => advanceMain(s, f, dir, v)
-        }
         (v, n)
       } finally { hits.unpersist(); () }
-    } finally c.release()
+    }
   }
 
   /** UPDATE … SET … WHERE … in ONE published version: matched row
@@ -2172,18 +2086,7 @@ object Snapshots {
     require(latestVersion(s, dir) >= 1, s"updateWhere: no versions at $dir")
     // claim FIRST, then match against the claimed predecessor (the same
     // lost-update reasoning as deleteWhere/upsert)
-    val c = claimVersion(f, dir)
-    val v = c.v
-    try {
-      val latest = branch match {
-        case Some(n) =>
-          val (h, isTag) = refRead(f, dir, n).getOrElse(
-            throw new IllegalArgumentException(s"no ref '$n' at $dir"))
-          require(!isTag,
-            s"cannot update on tag '$n' — tags are immutable")
-          h
-        case None => mainHead(f, dir, v - 1)
-      }
+    claimed(s, f, dir, branch, "update") { (v, latest) =>
       val fset = files(s, dir, latest)
       def scanOf(fls: Seq[String]) = withMeta(
         s.read.parquet(fls.map(p => new Path(dir, p).toString): _*))
@@ -2243,13 +2146,9 @@ object Snapshots {
         writeStatLines(f, dir, v, statLines)
         writeManifest(f, dir, v, fset ++ moved)
         maybeCheckpoint(f, dir, v)
-        branch match {
-          case Some(nm) => writeRef(s, f, dir, nm, v, tag = false)
-          case None => advanceMain(s, f, dir, v)
-        }
         (v, nUpd)
       } finally { matched.unpersist(); () }
-    } finally c.release()
+    }
   }
 
   /** Exact-key pruning kicks in at or below this many distinct source
@@ -2807,18 +2706,7 @@ object Snapshots {
     // claim FIRST, then match against v-1 (same lost-update reasoning as
     // deleteWhere: a commit interleaving between a pre-claim read and the
     // claim would vanish from the published file set)
-    val c = claimVersion(f, dir)
-    val v = c.v
-    try {
-      val latest = branch match {
-        case Some(n) =>
-          val (h, isTag) = refRead(f, dir, n).getOrElse(
-            throw new IllegalArgumentException(s"no ref '$n' at $dir"))
-          require(!isTag,
-            s"cannot upsert on tag '$n' — tags are immutable")
-          h
-        case None => mainHead(f, dir, v - 1)
-      }
+    claimed(s, f, dir, branch, "upsert") { (v, latest) =>
       val fset = files(s, dir, latest)
       // one job over the batch-sized source: key bounds for file
       // pruning, the distinct-key count, AND the row count — the
@@ -2860,12 +2748,8 @@ object Snapshots {
       writeStatLines(f, dir, v, statLines)
       writeManifest(f, dir, v, fset ++ moved)
       maybeCheckpoint(f, dir, v)
-      branch match {
-        case Some(nm) => writeRef(s, f, dir, nm, v, tag = false)
-        case None => advanceMain(s, f, dir, v)
-      }
       (v, nReplaced)
-    } finally c.release()
+    }
   }
 
   /** Apply one CDC batch as ONE published version: `upserts` rows
@@ -2896,18 +2780,7 @@ object Snapshots {
     val f = fs(s, dir)
     require(latestVersion(s, dir) >= 1, s"applyCdc: no versions at $dir")
     val srcKeys = upserts.select(keyCols.map(col): _*)
-    val c = claimVersion(f, dir)
-    val v = c.v
-    try {
-      val latest = branch match {
-        case Some(n) =>
-          val (h, isTag) = refRead(f, dir, n).getOrElse(
-            throw new IllegalArgumentException(s"no ref '$n' at $dir"))
-          require(!isTag,
-            s"cannot apply CDC on tag '$n' — tags are immutable")
-          h
-        case None => mainHead(f, dir, v - 1)
-      }
+    claimed(s, f, dir, branch, "apply CDC") { (v, latest) =>
       val fset = files(s, dir, latest)
       // both key families prune the scan; a marker column (prefixed to
       // stay clear of any user key column) lets the ONE aggregation job
@@ -2963,12 +2836,8 @@ object Snapshots {
       writeStatLines(f, dir, v, statLines)
       writeManifest(f, dir, v, fset ++ moved)
       maybeCheckpoint(f, dir, v)
-      branch match {
-        case Some(nm) => writeRef(s, f, dir, nm, v, tag = false)
-        case None => advanceMain(s, f, dir, v)
-      }
       (v, nGone + aggRow.getLong(1 + 2 * keyCols.size))
-    } finally c.release()
+    }
   }
 
   /** Publish ONE version that removes exact POSITIONS and appends rows —
@@ -3002,18 +2871,7 @@ object Snapshots {
     val f = fs(s, dir)
     require(latestVersion(s, dir) >= 1,
       s"applyPositional: no versions at $dir")
-    val c = claimVersion(f, dir)
-    val v = c.v
-    try {
-      val latest = branch match {
-        case Some(n) =>
-          val (h, isTag) = refRead(f, dir, n).getOrElse(
-            throw new IllegalArgumentException(s"no ref '$n' at $dir"))
-          require(!isTag,
-            s"cannot merge on tag '$n' — tags are immutable")
-          h
-        case None => mainHead(f, dir, v - 1)
-      }
+    claimed(s, f, dir, branch, "merge") { (v, latest) =>
       require(latest == baseVersion,
         s"applyPositional: concurrent commit — positions were matched " +
           s"against version $baseVersion but the claimed head is " +
@@ -3057,12 +2915,8 @@ object Snapshots {
       writeStatLines(f, dir, v, statLines)
       writeManifest(f, dir, v, fset ++ moved)
       maybeCheckpoint(f, dir, v)
-      branch match {
-        case Some(nm) => writeRef(s, f, dir, nm, v, tag = false)
-        case None => advanceMain(s, f, dir, v)
-      }
       (v, nGone)
-    } finally c.release()
+    }
   }
 
   /** Catch a DOWNSTREAM snapshot table up to an upstream one — the
@@ -3257,6 +3111,36 @@ object Snapshots {
     if (f.exists(refPath(dir, "main"))) writeRef(s, f, dir, "main", v,
       tag = false)
 
+  /** The head a `verb` on `ref` bases on when claiming version `v`: the
+    * named branch's head (a missing ref or a tag refuses), else main's. */
+  private def baseOf(f: FileSystem, dir: String, ref: Option[String],
+      v: Int, verb: String): Int = ref match {
+    case Some(n) =>
+      val (h, isTag) = refRead(f, dir, n).getOrElse(
+        throw new IllegalArgumentException(s"no ref '$n' at $dir"))
+      require(!isTag, s"cannot $verb on tag '$n' — tags are immutable")
+      h
+    case None => mainHead(f, dir, v - 1)
+  }
+
+  /** The one claimed section behind every commit and DML verb: hold the
+    * claim on the next version `v`, run `body(v, base)` — which
+    * publishes v on top of `ref`'s head ([[baseOf]]) — then point `ref`
+    * (None = main, when the table is ref-tracked) at v and release. */
+  private def claimed[T](s: SparkSession, f: FileSystem, dir: String,
+      ref: Option[String], verb: String, timeoutMs: Long = 120000L)(
+      body: (Int, Int) => T): T = {
+    val c = claimVersion(f, dir, timeoutMs)
+    try {
+      val out = body(c.v, baseOf(f, dir, ref, c.v, verb))
+      ref match {
+        case Some(n) => writeRef(s, f, dir, n, c.v, tag = false)
+        case None => advanceMain(s, f, dir, c.v)
+      }
+      out
+    } finally c.release()
+  }
+
   /** All named refs: name → (version, isTag). */
   def refs(s: SparkSession, dir: String): Map[String, (Int, Boolean)] = {
     val f = fs(s, dir)
@@ -3332,21 +3216,9 @@ object Snapshots {
       df: DataFrame, append: Boolean,
       renames: Map[String, String] = Map.empty,
       statsCols: Seq[String] = Seq.empty,
-      streamTxn: Option[(String, Long)] = None,
-      statsExprs: Seq[(String, String, String)] = Seq.empty): Int = {
-    val f = fs(s, dir)
-    val c = claimVersion(f, dir)
-    try {
-      val (base, isTag) = refRead(f, dir, name).getOrElse(
-        throw new IllegalArgumentException(s"no ref '$name' at $dir"))
-      require(!isTag, s"cannot commit on tag '$name' — tags are immutable")
-      val v = commitClaimed(s, f, dir, df, append, renames, statsCols,
-        c.v, baseVersion = base, streamTxn = streamTxn,
-        statsExprs = statsExprs)
-      writeRef(s, f, dir, name, v, tag = false)
-      v
-    } finally c.release()
-  }
+      statsExprs: Seq[(String, String, String)] = Seq.empty): Int =
+    commitTo(s, dir, Some(name), FrameParts(df), _ => append, renames,
+      statsCols, statsExprs = statsExprs)
 
   /** Fast-forward branch `name` to `toVersion`, requiring `toVersion` to
     * be a DESCENDANT of the branch head in the commit graph (parent
@@ -4068,10 +3940,7 @@ object Snapshots {
     require(latestVersion(s, dir) >= 1, s"optimize: no versions at $dir")
     // claim FIRST and rewrite exactly v-1: rewriting a pre-claim latest
     // would silently drop a commit that interleaved before the claim
-    val c = claimVersion(f, dir)
-    val v = c.v
-    try {
-      val base = mainHead(f, dir, v - 1)
+    claimed(s, f, dir, None, "optimize") { (v, base) =>
       val df = readEvolved(s, dir, base)
       val mx = df.agg(
         max(col(zorderCols.head)).as(s"mx_${zorderCols.head}"),
@@ -4084,9 +3953,8 @@ object Snapshots {
         .repartitionByRange(numFiles, col("_z"))
         .sortWithinPartitions(col("_z"))
         .drop("_z")
-      commitClaimed(s, f, dir, clustered, append = false,
-        renames = Map.empty, statsCols = zorderCols, v = v,
-        baseVersion = base)
+      commitClaimed(s, f, dir, FrameParts(clustered), append = false,
+        renames = Map.empty, statsCols = zorderCols, v = v, prev = base)
       // record the rewrite as CONTENT-PRESERVING: [[mergeBranch]] may
       // reconcile a branch across it by re-locating deletions by key,
       // where an arbitrary rewrite (INSERT OVERWRITE) stays refused.
@@ -4094,9 +3962,8 @@ object Snapshots {
       // published version without the op, which only DEGRADES (the
       // merge refuses, the change feed types generically), never lies.
       writeCommitOp(f, dir, v, "optimize", Seq.empty)
-      advanceMain(s, f, dir, v)
       v
-    } finally c.release()
+    }
   }
 
   /** A SUBSET of version `v`'s files read through the evolution

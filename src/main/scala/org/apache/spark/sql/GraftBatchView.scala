@@ -1,25 +1,16 @@
 package org.apache.spark.sql
 
-/** Interop shim (hence this package): re-expose the micro-batch frame a
-  * streaming Sink receives as a plain BATCH DataFrame. The engine hands
-  * `addBatch` a frame whose plan still carries streaming-flagged leaves,
-  * so `.write` refuses it ([CALL_ON_STREAMING_DATASET_UNSUPPORTED]);
-  * Spark's own ForeachBatchSink clears the flag exactly this way via the
-  * sql-private `internalCreateDataFrame`. Zero-copy: the already-planned
-  * physical rows are reused, no collect, no re-encoding.
+/** Interop shims (hence this package) over the sql-private `classic`
+  * surface: frames over captured plans, Columns over resolved
+  * expressions, and — for the snapshot source — a V1 streaming relation
+  * and streaming-flagged frames.
   */
 object GraftBatchView {
-  def asBatch(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
-    spark.internalCreateDataFrame(
-      df.queryExecution.toRdd, df.schema, isStreaming = false)
-  }
-
   /** A DataFrame over an already-built logical plan — the SQL-DML
     * commands hand analyzer-captured plans (exprIds intact, so merge
     * conditions and assignments resolve against them) back to the
     * DataFrame API through this. Same sql-private surface class
-    * (`classic.Dataset.ofRows`) as the streaming shims above. */
+    * (`classic.Dataset.ofRows`) as the streaming shims below. */
   def ofRows(spark: SparkSession,
       plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.GraftBatchView
 import org.apache.spark.sql.functions._
 
-/** Compile-time + behavioral guard over the four sql-private shim
-  * directions in [[GraftBatchView]] (`asBatch`, `asStreaming`, `ofRows`,
+/** Compile-time + behavioral guard over the sql-private shim
+  * directions in [[GraftBatchView]] (`asStreaming`, `ofRows`,
   * `exprColumn`). The shim is the repo's only dependency on Spark's
   * `classic` internals, so a Spark upgrade that moves any of them must
   * fail HERE at test time, not at a user's site: each direction is
@@ -28,31 +28,6 @@ class GraftBatchViewSpec extends SparkSpec {
     assert(srel.isStreaming)
     assert(srel.queryExecution.analyzed.isInstanceOf[
       org.apache.spark.sql.execution.datasources.LogicalRelation])
-  }
-
-  test("asBatch re-exposes an engine micro-batch frame as writable") {
-    // asBatch is only meaningful on the frames the STREAMING ENGINE
-    // hands a Sink (their QueryExecution is incremental) — fabricating
-    // one outside a stream throws the exact streaming-query guard the
-    // shim exists to clear. So the direction is pinned end-to-end:
-    // MemoryStream → the graft-snapshots sink, whose addBatch calls
-    // asBatch before Snapshots.commit can `.write` the rows.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val src = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Long]
-    val dir = tmpDir("gbv-sink")
-    val q = src.toDS().toDF("id")
-      .writeStream.format("graft-snapshots")
-      .option("path", dir)
-      .option("checkpointLocation", tmpDir("gbv-cp")).start()
-    try {
-      src.addData(1L, 2L, 3L)
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = graft.sources.Snapshots.read(spark, dir, 1)
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(got == Seq(1L, 2L, 3L))
   }
 
   test("ofRows rebuilds a frame over a captured analyzed plan") {

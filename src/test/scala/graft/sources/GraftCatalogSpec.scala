@@ -1966,6 +1966,50 @@ class GraftCatalogSpec extends SparkSpec {
     } finally qc.stop()
   }
 
+  test("toTable epochs record statsCols bounds and footer null counts, " +
+      "so DELETE … IS NULL opens only the file that holds nulls") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    warehouse
+    sql("CREATE TABLE graft.db.wsn (id BIGINT, payload STRING, x BIGINT)")
+    val dir = dirOf("db", "wsn")
+    val src = MemoryStream[(Long, String, Option[Long])]
+    // null counts are recorded for the stats columns, so x is named too
+    val q = src.toDF().toDF("id", "payload", "x")
+      .writeStream.option("checkpointLocation", tmpDir("wsn-cp"))
+      .option("statsCols", "payload,x")
+      .toTable("graft.db.wsn")
+    try {
+      src.addData((1L, "a", None), (2L, "b", None))       // x all null
+      q.processAllAvailable()
+      src.addData((3L, "c", Some(30L)), (4L, "d", Some(40L)))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(Snapshots.latestVersion(spark, dir) == 2)
+    // each epoch is one file; its vN.stats rows, keyed by column
+    def epochStats(v: Int): Map[String, (String, String)] = {
+      val added = Snapshots.files(spark, dir, v)
+        .diff(if (v > 1) Snapshots.files(spark, dir, v - 1) else Nil)
+      assert(added.size == 1, s"v$v added $added")
+      Snapshots.statsUpTo(spark, dir, v)(added.head)
+        .map { case (c, _, mn, mx) => c -> ((mn, mx)) }.toMap
+    }
+    val s1 = epochStats(1)
+    assert(s1.get("payload").contains(("a", "b")) &&
+      s1.get("null:x").contains(("2", "2")) &&
+      s1.get("nnull:x").contains(("0", "0")), s1.toString)
+    val s2 = epochStats(2)
+    assert(s2.get("payload").contains(("c", "d")) &&
+      s2.get("x").contains(("30", "40")) &&
+      s2.get("null:x").contains(("0", "0")) &&
+      s2.get("nnull:x").contains(("2", "2")), s2.toString)
+    val (_, n) = Snapshots.deleteWhere(spark, dir, col("x").isNull)
+    assert(n == 2 && Snapshots.lastDmlPruneCounts == ((1, 2)),
+      s"deleted $n, opened ${Snapshots.lastDmlPruneCounts}")
+    assert(rows("SELECT * FROM graft.db.wsn") == Seq((3L, "c"), (4L, "d")))
+  }
+
   test("toTable Update mode: keyCols epochs merge by key; without " +
       "keyCols Update is refused") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

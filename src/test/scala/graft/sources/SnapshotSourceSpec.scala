@@ -555,6 +555,57 @@ class SnapshotSourceSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("writeStream.format runs SnapshotStreamingWrite; batch read and " +
+      "write, readStream and the USING view stay on the V1 relation/source") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingRelation}
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val dir = tmpDir("srcident")
+    def v1Relation(d: org.apache.spark.sql.DataFrame) =
+      d.queryExecution.analyzed.collectFirst {
+        case l: LogicalRelation => l }.nonEmpty
+
+    // batch write: the V1 CreatableRelationProvider plans the save (the
+    // commit's own parquet writes report first, the save after them)
+    val saved = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long) =
+        saved.put(qe.analyzed.getClass.getSimpleName)
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception) = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      df(1 to 3).coalesce(1).write.format("graft-snapshots").save(dir)
+      assert(Iterator.continually(
+          saved.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(_ != null).contains("SaveIntoDataSourceCommand"))
+    } finally spark.listenerManager.unregister(listener)
+
+    // batch read, the SQL view (f29) and readStream stay V1
+    assert(v1Relation(readFmt(dir)))
+    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW srcident_v " +
+      s"USING `graft-snapshots` OPTIONS (path '$dir')")
+    assert(v1Relation(spark.table("srcident_v")))
+    assert(spark.readStream.format("graft-snapshots").load(dir)
+      .queryExecution.analyzed.collectFirst {
+        case r: StreamingRelation => r }.nonEmpty)
+
+    // writeStream.format: the one V2 streaming write
+    val src = MemoryStream[(Long, String)]
+    val q = src.toDF().toDF("id", "payload").writeStream
+      .format("graft-snapshots").option("path", dir)
+      .option("checkpointLocation", tmpDir("srcident-cp")).start()
+    try {
+      src.addData((4L, "row4"))
+      q.processAllAvailable()
+      assert(q.lastProgress.sink.description
+        .contains("SnapshotStreamingWrite"), q.lastProgress.sink.description)
+    } finally q.stop()
+    assert(ids(readFmt(dir)) == (1L to 4L))
+  }
+
   test("V2 streaming write: an empty Complete epoch publishes an empty " +
       "rewrite (stamped); an empty Append epoch publishes nothing") {
     val dir = tmpDir("emptyepoch")

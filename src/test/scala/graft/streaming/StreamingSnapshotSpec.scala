@@ -16,6 +16,32 @@ case class DocRow(id: Long, payload: String)
 
 class StreamingSnapshotSpec extends SparkSpec {
 
+  /** The one streaming write, driven directly as the engine's epoch
+    * commit does: `qid` impersonates a real query's exactly-once scope. */
+  private def streamWrite(dir: String, qid: String,
+      branch: Option[String] = None) = {
+    import spark.implicits._
+    val info = new org.apache.spark.sql.connector.write.LogicalWriteInfo {
+      override def options() =
+        org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()
+      override def queryId(): String = qid
+      override def schema() = Seq.empty[DocRow].toDF().schema
+    }
+    graft.sources.SnapshotStreamingWrite(dir, info, truncate = false,
+      branch)
+  }
+
+  /** Stage `rows` as one executor part of `epoch`, the way the engine's
+    * writers do, and return the commit messages `commit` receives. */
+  private def stagedEpoch(w: graft.sources.SnapshotStreamingWrite,
+      epoch: Long, rows: Seq[DocRow])
+      : Array[org.apache.spark.sql.connector.write.WriterCommitMessage] = {
+    val dw = w.createStreamingWriterFactory(null).createWriter(0, 0L, epoch)
+    rows.foreach(r => dw.write(org.apache.spark.sql.catalyst.InternalRow(
+      r.id, org.apache.spark.unsafe.types.UTF8String.fromString(r.payload))))
+    Array(dw.commit())
+  }
+
   test("micro-batch appends commit one readable version each") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -204,25 +230,20 @@ class StreamingSnapshotSpec extends SparkSpec {
     assert(Snapshots.latestVersion(spark, dir) == 3)
     assert(ids(3) == (1L to 10L))
 
-    // direct replay pin: an already-stamped (queryId, batchId) is a
-    // NO-OP (the engine re-delivers the last batch after a crash); the
+    // direct replay pin: an already-stamped (queryId, epochId) is a
+    // NO-OP (the engine re-delivers the last epoch after a crash); the
     // idempotence cursor is scoped per query, so the pin impersonates
-    // the real query via the engine's local property
-    val sink = new graft.sources.SnapshotSink(dir,
-      org.apache.spark.sql.streaming.OutputMode.Append(), Nil, Nil)
-    val qidKey = "sql.streaming.queryId"
-    spark.sparkContext.setLocalProperty(qidKey, queryId)
-    try {
-      sink.addBatch(2L, (90L to 95L).map(i => DocRow(i, s"r$i")).toDF())
-      assert(Snapshots.latestVersion(spark, dir) == 3,
-        "a replayed batch id must not double-commit")
-      // a REGRESSED id (below the stamped cursor) is a checkpoint
-      // rollback — silent skipping would lose data, so it fails loudly
-      val e = intercept[IllegalStateException] {
-        sink.addBatch(0L, Seq(DocRow(99L, "x")).toDF())
-      }
-      assert(e.getMessage.contains("regressed"), e.getMessage)
-    } finally spark.sparkContext.setLocalProperty(qidKey, null)
+    // the real query's id
+    val w = streamWrite(dir, queryId)
+    w.commit(2L, stagedEpoch(w, 2L, (90L to 95L).map(i => DocRow(i, s"r$i"))))
+    assert(Snapshots.latestVersion(spark, dir) == 3,
+      "a replayed batch id must not double-commit")
+    // a REGRESSED id (below the stamped cursor) is a checkpoint
+    // rollback — silent skipping would lose data, so it fails loudly
+    val e = intercept[IllegalStateException] {
+      w.commit(0L, stagedEpoch(w, 0L, Seq(DocRow(99L, "x"))))
+    }
+    assert(e.getMessage.contains("regressed"), e.getMessage)
     // a DIFFERENT query's batch 0 is NOT a replay: batch ids restart at
     // 0 with every fresh checkpoint, and a table-wide cursor would have
     // silently dropped this commit (the SetTransaction scoping contract)
@@ -924,25 +945,46 @@ class StreamingSnapshotSpec extends SparkSpec {
     o.write(s"${System.currentTimeMillis()}\n0\n5".getBytes("UTF-8"))
     o.close()
 
-    val sink = new graft.sources.SnapshotSink(dir,
-      org.apache.spark.sql.streaming.OutputMode.Append(), Nil, Nil)
-    val qidKey = "sql.streaming.queryId"
-    spark.sparkContext.setLocalProperty(qidKey, "fresh-query-uuid")
-    try {
-      // an id EQUAL to the legacy stamp is still treated as the replay
-      // it would have been under the old scheme — skipped, not doubled
-      sink.addBatch(5L, Seq(DocRow(9L, "x")).toDF())
-      assert(Snapshots.latestVersion(spark, dir) == 1,
-        "a batch id equal to the legacy stamp is a replay, skip it")
-      // the legacy stamp (5) cannot be attributed to any query: a fresh
-      // query's batch 0 must COMMIT (its ids legitimately start at 0) —
-      // before the fix this threw 'checkpoint regressed' forever
-      sink.addBatch(0L, Seq(DocRow(2L, "b")).toDF())
-      assert(Snapshots.latestVersion(spark, dir) == 2,
-        "batch 0 of a new query must commit past a legacy stamp")
-    } finally spark.sparkContext.setLocalProperty(qidKey, null)
+    val w = streamWrite(dir, "fresh-query-uuid")
+    // an id EQUAL to the legacy stamp is still treated as the replay
+    // it would have been under the old scheme — skipped, not doubled
+    w.commit(5L, stagedEpoch(w, 5L, Seq(DocRow(9L, "x"))))
+    assert(Snapshots.latestVersion(spark, dir) == 1,
+      "a batch id equal to the legacy stamp is a replay, skip it")
+    // the legacy stamp (5) cannot be attributed to any query: a fresh
+    // query's batch 0 must COMMIT (its ids legitimately start at 0) —
+    // before the fix this threw 'checkpoint regressed' forever
+    w.commit(0L, stagedEpoch(w, 0L, Seq(DocRow(2L, "b"))))
+    assert(Snapshots.latestVersion(spark, dir) == 2,
+      "batch 0 of a new query must commit past a legacy stamp")
     val got = Snapshots.read(spark, dir, 2).select("id").collect()
       .map(_.getLong(0)).toSeq.sorted
     assert(got == Seq(1L, 2L))
+  }
+
+  test("the streaming write skips an epoch re-delivered on a branch, " +
+      "even past a stamp-less main commit") {
+    import spark.implicits._
+    val dir = tmpDir("write-branch-replay")
+    Snapshots.commit(spark, dir, Seq(DocRow(1L, "base")).toDF(),
+      append = false)
+    Snapshots.createRef(spark, dir, "stage")
+    def idsAt(ref: String): Seq[Long] =
+      Snapshots.read(spark, dir, Snapshots.refVersion(spark, dir, ref))
+        .select("id").collect().map(_.getLong(0)).toSeq.sorted
+    val w = streamWrite(dir, "q-branch", branch = Some("stage"))
+    w.commit(0L, stagedEpoch(w, 0L, Seq(DocRow(2L, "s2"))))
+    // a MAIN commit without a stamp interleaves: a cursor read off main's
+    // line would find no stamp and commit epoch 0 a second time
+    Snapshots.commit(spark, dir, Seq(DocRow(77L, "main-only")).toDF(),
+      append = true)
+    val head = Snapshots.latestVersion(spark, dir)
+    w.commit(0L, stagedEpoch(w, 0L, Seq(DocRow(2L, "s2"))))
+    assert(Snapshots.latestVersion(spark, dir) == head &&
+      idsAt("stage") == Seq(1L, 2L),
+      s"a re-delivered branch epoch must be skipped: ${idsAt("stage")}")
+    w.commit(1L, stagedEpoch(w, 1L, Seq(DocRow(3L, "s3"))))
+    assert(idsAt("stage") == Seq(1L, 2L, 3L) &&
+      idsAt("main") == Seq(1L, 77L), "the next epoch lands on the branch")
   }
 }
