@@ -476,6 +476,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
               GraftCatalog.TruncCluster(u, r.newName).render
             case GraftCatalog.BucketCluster(n, c) if c == fields(i).name =>
               GraftCatalog.BucketCluster(n, r.newName).render
+            case GraftCatalog.TruncateCluster(n, c) if c == fields(i).name =>
+              GraftCatalog.TruncateCluster(n, r.newName).render
             case other => other.render
           })
         fields = fields.updated(i, fields(i).copy(name = r.newName))
@@ -784,7 +786,7 @@ private[graft] object GraftCatalog {
     * column's recorded [min,max] (day-aligned files bound their raw
     * timestamps tightly); bucket clustering records the derived BUCKET
     * ID under a virtual stats name, and equality predicates prune by
-    * hashing the literal ([[Snapshots.condMatchableFiles]]). Other
+    * hashing the literal (the one pruning rule, [[StatsPruning]]). Other
     * transforms (truncate, sorted buckets) stay refused — z-order
     * (`optimize`) is the multi-dimensional answer. */
   private[sources] sealed trait ClusterSpec {
@@ -811,7 +813,7 @@ private[graft] object GraftCatalog {
     * PREFIX, integrals by the n-aligned floor `v - pmod(v, n)`. The
     * derived value is additionally recorded under the spec's VIRTUAL
     * stats name (like bucket ids), so equality/range and LIKE-prefix
-    * predicates prune through it ([[Snapshots.condMatchableFiles]]);
+    * predicates prune through it ([[StatsPruning]]);
     * the raw column's bounds are recorded too (like identity), so
     * plain comparisons prune without the derivation. */
   private[sources] final case class TruncateCluster(n: Int, col: String)

@@ -7,11 +7,11 @@ import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapabi
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.StreamingWrite
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.sql.catalyst.expressions.{And => CatAnd, Attribute, EqualTo => CatEqualTo, Expression, GreaterThan => CatGT, GreaterThanOrEqual => CatGTE, In => CatIn, LessThan => CatLT, LessThanOrEqual => CatLTE, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And => CatAnd, Expression}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, Filter, PrunedFilteredScan, RelationProvider}
-import org.apache.spark.sql.types.{DataType, DateType, StructType, TimestampType}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** `graft-snapshots`: the USER-FACING front door of the snapshot table
   * format — the [[Snapshots]] lakehouse layer (versioned manifests,
@@ -46,7 +46,8 @@ import org.apache.spark.sql.types.{DataType, DateType, StructType, TimestampType
   * byte flows through the engine-native scan:
   *  - file-level stats pruning runs in [[SnapshotFileIndex.listFiles]],
   *    the exact hook Spark's planner hands pushed-down data filters to a
-  *    file source through (`FileSourceStrategy` → `location.listFiles`)
+  *    file source through (`FileSourceStrategy` → `location.listFiles`),
+  *    by the one rule every snapshot caller shares ([[StatsPruning]])
   *    — a pruned file never reaches the scan, pinned by the scan's
   *    `numFiles` metric;
   *  - schema evolution resolves via [[Snapshots.evolutionInfo]]: renamed
@@ -1252,26 +1253,18 @@ object SnapshotSource {
     val usable = pushed.filter(_.references.forall(dataFields.contains))
     val pushedCol = usable.flatMap(DvJoinRelation.toColumn)
       .reduceOption(_ && _)
-    val bounds = usable.flatMap(SnapshotSource.filterBounds)
-    lazy val stats = Snapshots.statsUpTo(spark, dir, v1)
+    // the pushed filters analyzed back to Catalyst over the consumer's
+    // schema, for the one pruning rule (analysis only — no job)
+    val groups = pushedCol.map(c => StatsPruning.groupsOf(spark, dir,
+      Snapshots.filterExprOf(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
+        .filter(c)))).getOrElse(Seq.empty)
     val pruneCount = new java.util.concurrent.atomic.AtomicInteger(0)
     val totalCount = new java.util.concurrent.atomic.AtomicInteger(0)
     def pruneFiles(paths: Seq[String]): Seq[String] = {
       totalCount.addAndGet(paths.size)
-      val kept =
-        if (bounds.isEmpty) paths
-        else paths.filter { rel =>
-          stats.get(rel) match {
-            case None => true
-            case Some(cols) => bounds.forall { case (n, op, vals) =>
-              cols.find(_._1 == n) match {
-                case None => true
-                case Some((_, tn, mn, mx)) => vals.exists(v =>
-                  SnapshotFileIndex.admits(tn, mn, mx, op, v))
-              }
-            }
-          }
-        }
+      val kept = StatsPruning.keep(spark, dir, v1, paths, groups,
+        canonVersion)
       pruneCount.addAndGet(kept.size)
       kept
     }
@@ -1422,45 +1415,6 @@ object SnapshotSource {
         cdfSchema(tableSchema)))
   }
 
-  /** Atomic (column, op, candidateValues) stat-bound conjuncts a pushed
-    * SOURCE filter implies — the source-Filter twin of
-    * [[SnapshotFileIndex.extractBounds]], feeding the same
-    * [[SnapshotFileIndex.admits]] comparison. Only shapes whose absence
-    * of a stats match PROVES no row qualifies; everything else
-    * contributes nothing (never mis-prunes). */
-  private[sources] def filterBounds(f: Filter)
-      : Seq[(String, String, Seq[String])] = {
-    import org.apache.spark.sql.{sources => sf}
-    def render(v: Any): Option[String] = v match {
-      case null => None
-      case s: String => Some(s)
-      case n @ (_: Byte | _: Short | _: Int | _: Long | _: Float |
-          _: Double) => Some(n.toString)
-      case d: java.math.BigDecimal => Some(d.toString)
-      case t: java.sql.Timestamp => Some(t.toString)
-      case d: java.sql.Date => Some(d.toString)
-      case d: java.time.LocalDate => Some(d.toString)
-      case _ => None // Instant et al: unparsed = never pruned
-    }
-    f match {
-      case sf.And(l, r) => filterBounds(l) ++ filterBounds(r)
-      case sf.EqualTo(a, v) => render(v).map(x => (a, "=", Seq(x))).toSeq
-      case sf.GreaterThan(a, v) =>
-        render(v).map(x => (a, ">=", Seq(x))).toSeq
-      case sf.GreaterThanOrEqual(a, v) =>
-        render(v).map(x => (a, ">=", Seq(x))).toSeq
-      case sf.LessThan(a, v) => render(v).map(x => (a, "<=", Seq(x))).toSeq
-      case sf.LessThanOrEqual(a, v) =>
-        render(v).map(x => (a, "<=", Seq(x))).toSeq
-      case sf.In(a, vs) =>
-        val rendered = vs.toSeq.map(render)
-        if (rendered.nonEmpty && rendered.forall(_.isDefined))
-          Seq((a, "=", rendered.map(_.get)))
-        else Seq.empty
-      case _ => Seq.empty
-    }
-  }
-
   /** Manifest-relative `paths` read under the CANONICAL column names of
     * version `canonVersion` — the version whose schema `canon` IS (the
     * change-feed consumer's fixed schema). Per-vintage schema remap:
@@ -1499,37 +1453,14 @@ object SnapshotSource {
     val chain: Map[Int, Seq[(String, String)]] =
       Snapshots.renameChain(spark, dir, maxV)
     // the dotted path vintage `c` stores a canonVersion-canonical
-    // (sub)column under: back through renames (canonVersion, c] for old
-    // vintages, forward through (canonVersion, c] for vintages committed
-    // after capture — generalized over nested struct-subfield entries
-    // (Snapshots.applyEntry/invertEntry carry subtree prefixes)
-    def localPath(c: Int, canonical: String): String = {
-      var cur = canonical
-      if (c <= canonVersion) {
-        // inverse application: reverse version order AND reverse entry
-        // order within a version, so a chained same-version rename
-        // (a→b, b→c) inverts exactly as evolutionInfo applies it forward
-        for (later <- canonVersion until c by -1;
-            (o, n) <- chain(later).reverse)
-          cur = Snapshots.invertEntry(cur, o, n)
-        // round-trip guard (see Snapshots.localStatName): a dropped or
-        // re-used name must not alias an unrelated old column — request
-        // a name no file can contain instead, which reads as null
-        var fwd = cur
-        for (later <- (c + 1) to canonVersion; (o, n) <- chain(later))
-          fwd = Snapshots.applyEntry(fwd, o, n)
-        if (fwd != canonical) cur = Snapshots.DropMarker + canonical
-      } else {
-        for (later <- (canonVersion + 1) to c; (o, n) <- chain(later))
-          cur = Snapshots.applyEntry(cur, o, n)
-        // the canonical column was dropped before this vintage: its
-        // replacement (if any) is unrelated — read as null, uniquified
-        // so two dropped columns cannot collide in the schema
-        if (cur == Snapshots.DropMarker)
-          cur = Snapshots.DropMarker + canonical
+    // (sub)column under; a dropped or re-used name requests a name no
+    // file can contain instead (reads as null), uniquified so two dropped
+    // columns cannot collide in the schema
+    def localPath(c: Int, canonical: String): String =
+      Snapshots.localName(chain, canonVersion)(c, canonical) match {
+        case Snapshots.DropMarker => Snapshots.DropMarker + canonical
+        case local => local
       }
-      cur
-    }
     // localized REQUESTED schema, recursive over struct subfields: leaf
     // names follow localPath, shape and (widened) types stay canonical,
     // so parquet clipping null-backfills absent subfields and the rows
@@ -1561,14 +1492,16 @@ object SnapshotSource {
     }.reduce(_.unionByName(_))
   }
 
-  /** The HadoopFsRelation for version `v` of the table at `dir`.
-    * `fileSubset`, when given, restricts the scan to those manifest
-    * paths — the caller asserts the dropped files cannot contribute
-    * (key-stat pruning for the MERGE join scans); schema, deletion
-    * vector handling, and evolution are identical to the full scan. */
-  private[sources] def relationFor(spark: SparkSession, dir: String,
-      v: Int, maxDvPositions: Long,
-      fileSubset: Option[Set[String]] = None): BaseRelation = {
+  /** Version `v` of the table at `dir` as a HadoopFsRelation over its
+    * evolved schema, reading every physical row of each vintage under its
+    * canonical names, with `dv`'s dead ordinals (empty = none) skipped in
+    * the reader. `fileSubset`, when given, restricts the scan to those
+    * manifest paths — the caller asserts the dropped files cannot
+    * contribute. With no `dv` it is the positional DML scan: `_metadata`
+    * row indexes are the deletion vector's positions. */
+  private[sources] def fileRelation(spark: SparkSession, dir: String,
+      v: Int, fileSubset: Option[Set[String]],
+      dv: Map[String, Array[Long]] = Map.empty): HadoopFsRelation = {
     val (schema, inverse) = Snapshots.evolutionInfo(spark, dir, v)
     val rels = fileSubset match {
       case None => Snapshots.files(spark, dir, v)
@@ -1586,13 +1519,20 @@ object SnapshotSource {
       else Map.empty
     }
     val statuses = rels.map { rel =>
-      byName.getOrElse(new Path(rel).getName,
+      rel -> byName.getOrElse(new Path(rel).getName,
         fsys.getFileStatus(new Path(dir, rel)))
     }
-    val stats = Snapshots.statsUpTo(spark, dir, v)
-    val relOfName: Map[String, String] =
-      rels.map(rel => new Path(rel).getName -> rel).toMap
-    val index = new SnapshotFileIndex(root, statuses, stats, relOfName)
+    HadoopFsRelation(new SnapshotFileIndex(spark, dir, v, root, statuses),
+      StructType(Nil), schema, None, new SnapshotParquetFormat(inverse, dv),
+      Map.empty)(spark)
+  }
+
+  /** The relation a read of version `v` plans: [[fileRelation]] with the
+    * version's deletion vector applied. `fileSubset` restricts it as
+    * there (key-stat pruning for the MERGE join scans). */
+  private[sources] def relationFor(spark: SparkSession, dir: String,
+      v: Int, maxDvPositions: Long,
+      fileSubset: Option[Set[String]] = None): BaseRelation = {
     // Right(map) = the driver-held position map (the common, broadcast-
     // cheap case); Left = over the cap, read via the distributed
     // anti-join fallback (DvJoinRelation) instead of refusing
@@ -1613,18 +1553,15 @@ object SnapshotSource {
       }
     dv match {
       case Right(positions) =>
-        val format = new SnapshotParquetFormat(inverse, positions)
-        HadoopFsRelation(index, StructType(Nil), schema, None, format,
-          Map.empty)(spark)
+        fileRelation(spark, dir, v, fileSubset, positions)
       case Left(()) =>
         // over-cap fallback: same vectorized scan (no DV), live rows
         // resolved by a DISTRIBUTED anti-join on (file_path, row_index)
         // instead of a driver-held position map — a version carrying
         // billions of pending deletes stays readable at the cost of the
         // join, and OPTIMIZE restores the map path
-        val base = HadoopFsRelation(index, StructType(Nil), schema, None,
-          new SnapshotParquetFormat(inverse, Map.empty), Map.empty)(spark)
-        new DvJoinRelation(spark, dir, v, schema, base)
+        val base = fileRelation(spark, dir, v, fileSubset)
+        new DvJoinRelation(spark, dir, v, base.dataSchema, base)
     }
   }
 }
@@ -1705,115 +1642,40 @@ private[sources] object DvJoinRelation {
 }
 
 /** The manifest-resolved file set of one snapshot version as a Spark
-  * [[FileIndex]], with per-file min/max stats pruning applied in
-  * `listFiles` — the hook `FileSourceStrategy` hands the query's pushed
-  * data filters to. A file whose recorded bounds cannot satisfy every
-  * extractable conjunct is dropped from the plan before its footer is
-  * ever opened (the scan's `numFiles` metric pins it); files without
-  * stats always scan (conservative), and every surviving filter is
-  * re-applied by the engine above the scan, so pruning is pure
-  * optimization, never correctness. */
-private[sources] class SnapshotFileIndex(root: Path,
-    statuses: Seq[FileStatus],
-    stats: Map[String, Seq[(String, String, String, String)]],
-    relOfName: Map[String, String]) extends FileIndex {
+  * [[FileIndex]] (`files` pairs each manifest path with its status),
+  * with per-file stats pruning applied in `listFiles` — the hook
+  * `FileSourceStrategy` hands the query's pushed data filters to. A file
+  * the one pruning rule ([[StatsPruning]]) proves cannot match is
+  * dropped from the plan before its footer is ever opened (the scan's
+  * `numFiles` metric pins it); every filter is re-applied by the engine
+  * above the scan, so pruning is pure optimization, never correctness. */
+private[sources] class SnapshotFileIndex(spark: SparkSession, dir: String,
+    v: Int, root: Path, files: Seq[(String, FileStatus)]) extends FileIndex {
 
   override def rootPaths: Seq[Path] = Seq(root)
   override def partitionSchema: StructType = StructType(Nil)
-  override def sizeInBytes: Long = statuses.map(_.getLen).sum
+  override def sizeInBytes: Long = files.map(_._2.getLen).sum
   override def inputFiles: Array[String] =
-    statuses.map(_.getPath.toString).toArray
+    files.map(_._2.getPath.toString).toArray
   override def refresh(): Unit = ()
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val conjuncts = dataFilters.flatMap(SnapshotFileIndex.extractBounds)
-    val kept =
-      if (conjuncts.isEmpty) statuses
-      else statuses.filter { st =>
-        stats.get(relOfName.getOrElse(st.getPath.getName, "")) match {
-          case None => true
-          case Some(cols) => conjuncts.forall { case (name, op, values) =>
-            cols.find(_._1 == name) match {
-              case None => true
-              case Some((_, tn, mn, mx)) =>
-                values.exists(v =>
-                  SnapshotFileIndex.admits(tn, mn, mx, op, v))
-            }
-          }
-        }
-      }
-    Seq(PartitionDirectory(InternalRow.empty, kept.toArray))
+    val groups = dataFilters.reduceOption(CatAnd)
+      .map(StatsPruning.groupsOf(spark, dir, _)).getOrElse(Seq.empty)
+    val kept = StatsPruning.keep(spark, dir, v, files.map(_._1), groups)
+      .toSet
+    SnapshotFileIndex.lastPruneCounts = (kept.size, files.size)
+    Seq(PartitionDirectory(InternalRow.empty,
+      files.collect { case (rel, st) if kept(rel) => st }.toArray))
   }
 }
 
 private[sources] object SnapshotFileIndex {
-
-  /** Atomic (column, op, candidateValues) conjuncts a filter expression
-    * implies — only shapes whose absence of a match PROVES no row of the
-    * file qualifies. Disjunctions, casts, and function calls are skipped
-    * (no pruning from them), never mis-translated. */
-  private[sources] def extractBounds(e: Expression)
-      : Seq[(String, String, Seq[String])] = e match {
-    case CatAnd(l, r) => extractBounds(l) ++ extractBounds(r)
-    case CatEqualTo(a: Attribute, l: Literal) =>
-      render(l).map(v => (a.name, "=", Seq(v))).toSeq
-    case CatEqualTo(l: Literal, a: Attribute) =>
-      render(l).map(v => (a.name, "=", Seq(v))).toSeq
-    case CatGT(a: Attribute, l: Literal) =>
-      render(l).map(v => (a.name, ">=", Seq(v))).toSeq
-    case CatGTE(a: Attribute, l: Literal) =>
-      render(l).map(v => (a.name, ">=", Seq(v))).toSeq
-    case CatLT(a: Attribute, l: Literal) =>
-      render(l).map(v => (a.name, "<=", Seq(v))).toSeq
-    case CatLTE(a: Attribute, l: Literal) =>
-      render(l).map(v => (a.name, "<=", Seq(v))).toSeq
-    case CatGT(l: Literal, a: Attribute) =>
-      render(l).map(v => (a.name, "<=", Seq(v))).toSeq
-    case CatGTE(l: Literal, a: Attribute) =>
-      render(l).map(v => (a.name, "<=", Seq(v))).toSeq
-    case CatLT(l: Literal, a: Attribute) =>
-      render(l).map(v => (a.name, ">=", Seq(v))).toSeq
-    case CatLTE(l: Literal, a: Attribute) =>
-      render(l).map(v => (a.name, ">=", Seq(v))).toSeq
-    case CatIn(a: Attribute, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-      val rendered = vs.map(v => render(v.asInstanceOf[Literal]))
-      if (rendered.forall(_.isDefined))
-        Seq((a.name, "=", rendered.map(_.get)))
-      else Seq.empty
-    case _ => Seq.empty
-  }
-
-  /** A literal as the stats side-file's string rendering (None =
-    * unsupported type, no pruning). Temporal literals render through
-    * java.sql — [[Snapshots.inBounds]] normalizes both sides to epoch
-    * millis, so sub-second truncation here cannot mis-prune. */
-  private def render(l: Literal): Option[String] =
-    if (l.value == null) None
-    else l.dataType match {
-      case TimestampType =>
-        Some(new java.sql.Timestamp(
-          l.value.asInstanceOf[Long] / 1000L).toString)
-      case DateType =>
-        Some(java.time.LocalDate.ofEpochDay(
-          l.value.asInstanceOf[Int].toLong).toString)
-      case _: org.apache.spark.sql.types.NumericType =>
-        Some(l.value.toString)
-      case org.apache.spark.sql.types.StringType => Some(l.value.toString)
-      case _ => None
-    }
-
-  /** Could a column with recorded bounds [mn, mx] hold a value `op` v?
-    * Expressed through [[Snapshots.inBounds]] so every type (numeric,
-    * temporal-normalized, string) compares one way: ">=" is satisfiable
-    * iff mx ≥ v (probe [v, mx]), "<=" iff mn ≤ v (probe [mn, v]). */
-  private[sources] def admits(tn: String, mn: String, mx: String,
-      op: String, v: String): Boolean = op match {
-    case "=" => Snapshots.inBounds(tn, mn, mx, v, v)
-    case ">=" => Snapshots.inBounds(tn, mn, mx, v, mx)
-    case "<=" => Snapshots.inBounds(tn, mn, mx, mn, v)
-    case _ => true
-  }
+  /** (files kept, files listed) of the last [[SnapshotFileIndex]]
+    * listing — what an operation that plans its own scan (positional
+    * DML) reports as its pruning. */
+  @volatile private[sources] var lastPruneCounts: (Int, Int) = (0, 0)
 }
 
 /** [[ParquetFileFormat]] that reads snapshot vintages: per file, the

@@ -94,9 +94,11 @@ object Snapshots {
     * `statsCols` records per-FILE min/max of the named columns in a
     * `vN.stats` side-file (one extra aggregate over the staged files —
     * O(files) metadata, never carried row data). File stats are what turn
-    * metadata into pruning at 100 TB: [[readPruned]] and [[purge]] drop
-    * whole files from the plan before any footer is opened, the same
-    * mechanism as a lakehouse format's add-file stats.
+    * metadata into pruning at 100 TB: reads, the change feed,
+    * [[readPruned]], DML, the MERGE family and [[purge]] drop whole files
+    * from the plan before any footer is opened through ONE rule,
+    * [[StatsPruning]] — the same mechanism as a lakehouse format's
+    * add-file stats.
     *
     * CONCURRENT WRITERS serialize through an optimistic claim on the
     * version counter: a writer atomically creates `vN.claim`
@@ -963,6 +965,34 @@ object Snapshots {
     else if (cur.startsWith(n + ".")) o + cur.substring(n.length)
     else cur
 
+  /** The name the (dotted) canonical path `canonical` of version
+    * `canonV` has in the files of vintage `c` — the one canonical →
+    * vintage name walk, behind per-file stats lookups ([[StatsPruning]])
+    * and the change feed's per-vintage reads. Older vintages walk back
+    * through the renames of (c, canonV], in reverse entry order within a
+    * version so a chained same-version rename (a→b, b→c) inverts exactly;
+    * newer vintages walk forward through (canonV, c]. [[DropMarker]] when
+    * the vintage holds no such column: a later commit dropped it, or
+    * re-used the name after a rename or drop (the round-trip guard — an
+    * inverse walk that does not map forward back to `canonical` would
+    * alias an unrelated old column). */
+  private[sources] def localName(chain: Map[Int, Seq[(String, String)]],
+      canonV: Int)(c: Int, canonical: String): String = {
+    var cur = canonical
+    if (c <= canonV) {
+      for (later <- canonV until c by -1; (o, n) <- chain(later).reverse)
+        cur = invertEntry(cur, o, n)
+      var fwd = cur
+      for (later <- (c + 1) to canonV; (o, n) <- chain(later))
+        fwd = applyEntry(fwd, o, n)
+      if (fwd == canonical) cur else DropMarker
+    } else {
+      for (later <- (canonV + 1) to c; (o, n) <- chain(later))
+        cur = applyEntry(cur, o, n)
+      cur
+    }
+  }
+
   /** Every struct-subfield dotted path under `prefix`-named `dt`,
     * depth-first. Arrays/maps are opaque: subfield evolution inside an
     * array element is refused at the ALTER layer, so their innards never
@@ -1508,39 +1538,6 @@ object Snapshots {
       catch { case _: Exception => None })
   }
 
-  /** True iff [lo, hi] intersects the stringified [mn, mx] bounds of a
-    * column of `typeName` — the per-type comparison behind file-level
-    * stats pruning. Date/timestamp values are normalized to epoch millis
-    * before comparing (the two sides may render subseconds differently);
-    * unknown types and unparseable values compare conservatively
-    * (always true). */
-  private[sources] def inBounds(typeName: String, mn: String, mx: String,
-      lo: String, hi: String): Boolean = typeName match {
-    case "byte" | "short" | "integer" | "long" =>
-      try { hi.toLong >= mn.toLong && lo.toLong <= mx.toLong }
-      catch { case _: NumberFormatException => true }
-    case "float" | "double" =>
-      // NaN in ANY operand makes the intersection test meaningless
-      // (parquet footer stats use Float.compare total order, so a file
-      // containing NaN records max=NaN; `x <= NaN` is false and the
-      // file would be pruned for EVERY predicate — silent row loss).
-      // Delta/Iceberg likewise treat NaN bounds as prune-unsafe.
-      try {
-        val (a, b, l, h) = (mn.toDouble, mx.toDouble, lo.toDouble, hi.toDouble)
-        if (a.isNaN || b.isNaN || l.isNaN || h.isNaN) true
-        else h >= a && l <= b
-      }
-      catch { case _: NumberFormatException => true }
-    case "date" | "timestamp" | "timestamp_ntz" =>
-      (temporalMillis(mn), temporalMillis(mx),
-        temporalMillis(lo), temporalMillis(hi)) match {
-        case (Some(a), Some(b), Some(l), Some(h)) => h >= a && l <= b
-        case _ => true // any side unparseable: never prune
-      }
-    case "string" => hi >= mn && lo <= mx
-    case _ => true
-  }
-
   /** Version `v` restricted to files whose recorded `keyCol` stats
     * intersect [lo, hi] — file-level pruning from METADATA alone: the
     * dropped files are never opened, not even for a footer. Files with no
@@ -1548,15 +1545,13 @@ object Snapshots {
     * frame plus (filesRead, filesTotal) for auditability. */
   def readPruned(s: SparkSession, dir: String, v: Int, keyCol: String,
       lo: Any, hi: Any): (DataFrame, (Int, Int)) = {
+    import org.apache.spark.sql.catalyst.expressions.{And,
+      AttributeReference, GreaterThanOrEqual, LessThanOrEqual, Literal}
     val fset = files(s, dir, v)
-    val stats = statsUpTo(s, dir, v)
-    val keep = fset.filter { rel =>
-      stats.get(rel).flatMap(_.find(_._1 == keyCol)) match {
-        case Some((_, tn, mn, mx)) =>
-          inBounds(tn, mn, mx, lo.toString, hi.toString)
-        case None => true
-      }
-    }
+    val key = AttributeReference(keyCol, Literal(lo).dataType)()
+    val keep = StatsPruning.keep(s, dir, v, fset, StatsPruning.groupsOf(s,
+      dir, And(GreaterThanOrEqual(key, Literal(lo)),
+        LessThanOrEqual(key, Literal(hi)))))
     val df0 =
       if (keep.isEmpty)
         s.read.parquet(new Path(dir, fset.head).toString).limit(0)
@@ -1918,6 +1913,23 @@ object Snapshots {
       .withColumn("_ri", col("_metadata.row_index"))
   }
 
+  /** (files kept, files total) of the last positional DML scan
+    * (deleteWhere/replaceWhere/updateWhere) — pins condition-bound stat
+    * pruning, which the scan's [[SnapshotFileIndex]] applies to the
+    * condition Spark pushes to it. */
+  private[sources] def lastDmlPruneCounts: (Int, Int) =
+    SnapshotFileIndex.lastPruneCounts
+
+  /** The positional scan of version `v` (or the `subset` of its files)
+    * behind DML and the MERGE family: every physical row (deletion vector
+    * NOT applied — callers anti-join it) under the version's canonical
+    * schema, so renamed and widened vintages read like a SELECT, plus
+    * `_fp`/`_ri` positions. A filter over it prunes files like a read. */
+  private def positionsScan(s: SparkSession, dir: String, v: Int,
+      subset: Option[Set[String]] = None): DataFrame =
+    withMeta(s.baseRelationToDataFrame(
+      SnapshotSource.fileRelation(s, dir, v, subset)))
+
   /** MERGE-ON-READ delete: rows matching `cond` in the latest version are
     * recorded as (file, row_index) positions in a deletion vector and a
     * new version is published referencing the SAME data files plus the
@@ -1960,18 +1972,7 @@ object Snapshots {
     // between the read and the claim (the lost-update window)
     claimed(s, f, dir, branch, "delete") { (v, latest) =>
       val fset = files(s, dir, latest)
-      def scanOf(fls: Seq[String]) = withMeta(
-        s.read.parquet(fls.map(p => new Path(dir, p).toString): _*))
-      // condition-bound stat pruning: a selective DELETE opens only
-      // stat-overlapping files to locate positions (driver metadata
-      // only — the probe plan below is analyzed, never run)
-      val full = scanOf(fset)
-      val kept = condMatchableFiles(s, dir, latest, fset,
-        filterExprOf(full.filter(condOf(full))))
-      val scan =
-        if (kept.isEmpty) full.limit(0)
-        else if (kept.size == fset.size) full
-        else scanOf(kept)
+      val scan = positionsScan(s, dir, latest)
       val hits0 = scan.filter(condOf(scan))
         .select(col("_fp").as("file_path"), col("_ri").as("row_index"))
       // already-deleted rows must not re-count
@@ -2017,15 +2018,7 @@ object Snapshots {
     // claim FIRST, then compute against v-1 (the deleteWhere rationale)
     claimed(s, f, dir, branch, "replace") { (v, latest) =>
       val fset = files(s, dir, latest)
-      def scanOf(fls: Seq[String]) = withMeta(
-        s.read.parquet(fls.map(p => new Path(dir, p).toString): _*))
-      val full = scanOf(fset)
-      val kept = condMatchableFiles(s, dir, latest, fset,
-        filterExprOf(full.filter(cond)))
-      val scan =
-        if (kept.isEmpty) full.limit(0)
-        else if (kept.size == fset.size) full
-        else scanOf(kept)
+      val scan = positionsScan(s, dir, latest)
       val hits0 = scan.filter(cond)
         .select(col("_fp").as("file_path"), col("_ri").as("row_index"))
       val prev = dvFrame(s, dir, latest)
@@ -2088,17 +2081,7 @@ object Snapshots {
     // lost-update reasoning as deleteWhere/upsert)
     claimed(s, f, dir, branch, "update") { (v, latest) =>
       val fset = files(s, dir, latest)
-      def scanOf(fls: Seq[String]) = withMeta(
-        s.read.parquet(fls.map(p => new Path(dir, p).toString): _*))
-      // condition-bound stat pruning, as in deleteWhere: only files
-      // whose stats admit the condition can hold matched positions
-      val full = scanOf(fset)
-      val kept = condMatchableFiles(s, dir, latest, fset,
-        filterExprOf(full.filter(condOf(full))))
-      val raw =
-        if (kept.isEmpty) full.limit(0)
-        else if (kept.size == fset.size) full
-        else scanOf(kept)
+      val raw = positionsScan(s, dir, latest)
       val prev = dvFrame(s, dir, latest)
       val live = prev.map(p => raw.join(
           p.select(col("file_path").as("_fp"), col("row_index").as("_ri")),
@@ -2198,38 +2181,18 @@ object Snapshots {
       if (nkAll <= mergeMaxExactKeys)
         Some(keyProj.distinct().collect().toSeq)
       else None
-    val stats = statsUpTo(s, dir, latest)
-    val chain = renameChain(s, dir, latest)
-    val localName = localStatName(chain, latest) _
-    val kept = fset.filter { rel =>
-      stats.get(rel) match {
-        case None => true
-        case Some(cols) =>
-          val c = rel match {
-            case FileCommit(n) => n.toInt
-            case _ => latest
-          }
-          val b = keyCols.zipWithIndex.flatMap { case (k, i) =>
-            cols.find(_._1 == localName(c, k)).map(st => (i, st)) }
-          if (b.isEmpty) true
-          else exactRows match {
-            // a file may hold a match only if SOME key lies inside its
-            // bounds on EVERY stat-recorded key column
-            case Some(rows) => rows.exists(kr =>
-              b.forall { case (i, (_, tn, mn, mx)) =>
-                val v = kr.get(i)
-                v != null && inBounds(tn, mn, mx, v.toString, v.toString)
-              })
-            case None =>
-              b.forall { case (i, (_, tn, mn, mx)) =>
-                (lo(i), hi(i)) match {
-                  case (Some(l), Some(h)) => inBounds(tn, mn, mx, l, h)
-                  case _ => true // all-null key column constrains nothing
-                }
-              }
-          }
-      }
+    // exact tier: one alternative per key; range tier: each key
+    // column's [min, max] (an all-null key column constrains nothing)
+    val groups = exactRows match {
+      case Some(rows) =>
+        StatsPruning.keyRows(s, keyCols, keyProj.schema, rows)
+      case None => keyCols.indices.flatMap(i => (lo(i), hi(i)) match {
+        case (Some(l), Some(h)) =>
+          Seq(Seq(Seq(StatsPruning.Atom(keyCols(i), Some(l), Some(h)))))
+        case _ => Seq.empty
+      })
     }
+    val kept = StatsPruning.keep(s, dir, latest, fset, groups)
     lastMergePruneCounts = (kept.size, fset.size)
     val exactFrame = exactRows.map(rows =>
       s.createDataFrame(s.sparkContext.parallelize(rows, 1),
@@ -2267,25 +2230,6 @@ object Snapshots {
     (kept, fset.size)
   }
 
-  /** The name canonical column `canonical` had at commit `c` (walking
-    * the rename chain backwards from `latest`) — per-file stats are
-    * recorded under the WRITING vintage's own column names. */
-  private def localStatName(chain: Map[Int, Seq[(String, String)]],
-      latest: Int)(c: Int, canonical: String): String = {
-    var cur = canonical
-    for (later <- latest until c by -1; (o, n) <- chain(later))
-      if (n == cur) cur = o
-    // round-trip guard: if the inverse result does not map FORWARD back
-    // to the same canonical name, the vintage has no such column — a
-    // later commit dropped it or re-used the name after a rename/drop.
-    // Returning the never-recordable DropMarker makes every stats lookup
-    // miss (conservative: the file is scanned, never wrongly pruned).
-    var fwd = cur
-    for (later <- (c + 1) to latest; (o, n) <- chain(later))
-      if (o == fwd) fwd = n
-    if (fwd == canonical) cur else DropMarker
-  }
-
   /** The bucket id a `bucket(n, col)`-clustered write assigns `value`:
     * Murmur3 seed 42 (exactly `functions.hash`) pmod n — evaluating the
     * SAME Catalyst expression the write side ran, so a predicate
@@ -2319,349 +2263,9 @@ object Snapshots {
     }
   }
 
-  /** (files kept, files total) of the last positional DML scan
-    * (deleteWhere/updateWhere) — pins condition-bound stat pruning. */
-  @volatile private[sources] var lastDmlPruneCounts: (Int, Int) = (0, 0)
-
-  /** File-level stat pruning for the POSITIONAL DML scans: extract
-    * simple per-column constraints from the condition's top-level
-    * conjuncts (`col op literal` / `col IN (literals)` over the
-    * numeric/string types [[inBounds]] compares) and keep only files
-    * whose recorded stats admit every constraint — a selective
-    * DELETE/UPDATE against a 100 TB table opens O(stat-overlapping)
-    * files to locate positions, like the MERGE scan. Strictly
-    * conservative: unparseable conjuncts (ORs, casts, subqueries,
-    * expressions) constrain nothing, files without
-    * stats always survive, and an IN-list prunes by its bounding range
-    * (a superset of the set). */
-  private def condMatchableFiles(s: SparkSession, dir: String,
-      latest: Int, fset: Seq[String],
-      cond: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Seq[String] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.types.{NumericType, StringType}
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    // the ANALYZED (not optimized) condition reaches here, so a SQL
-    // literal still wears its type-promotion cast (`id = 150` analyzes
-    // to `id = CAST(150 AS BIGINT)`) — fold every foldable subtree to
-    // its literal or the extractor below would see no bounds at all
-    def fold(e: Expression): Expression = e.transformUp {
-      case x if x.foldable && !x.isInstanceOf[Literal] =>
-        try Literal.create(x.eval(), x.dataType)
-        catch { case _: Exception => x }
-    }
-    def litStr(l: Literal): Option[String] = l.dataType match {
-      case _: NumericType | StringType => Option(l.value).map(_.toString)
-      case org.apache.spark.sql.types.TimestampType |
-           org.apache.spark.sql.types.TimestampNTZType |
-           org.apache.spark.sql.types.DateType =>
-        // render EXACTLY as the stats side did (Spark's own cast-to-
-        // string under the session timezone) — inBounds normalizes both
-        // sides through temporalMillis, so a day-selective DELETE on a
-        // days()-clustered table prunes through the plain ts stats
-        try Option(org.apache.spark.sql.catalyst.expressions.Cast(
-            l, StringType,
-            Some(s.sessionState.conf.sessionLocalTimeZone)).eval(null))
-          .map(_.toString)
-        catch { case scala.util.control.NonFatal(_) => None }
-      case _ => None
-    }
-    val folded = conjuncts(cond).map(fold)
-    type Atom = (String, Option[String], Option[String])
-    def valueAtom(e: Expression): Option[Atom] =
-      e match {
-        case EqualTo(a: AttributeReference, l: Literal) =>
-          litStr(l).map(v => (a.name, Some(v), Some(v)))
-        case EqualTo(l: Literal, a: AttributeReference) =>
-          litStr(l).map(v => (a.name, Some(v), Some(v)))
-        case GreaterThan(a: AttributeReference, l: Literal) =>
-          litStr(l).map(v => (a.name, Some(v), None))
-        case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
-          litStr(l).map(v => (a.name, Some(v), None))
-        case LessThan(a: AttributeReference, l: Literal) =>
-          litStr(l).map(v => (a.name, None, Some(v)))
-        case LessThanOrEqual(a: AttributeReference, l: Literal) =>
-          litStr(l).map(v => (a.name, None, Some(v)))
-        case GreaterThan(l: Literal, a: AttributeReference) =>
-          litStr(l).map(v => (a.name, None, Some(v)))
-        case GreaterThanOrEqual(l: Literal, a: AttributeReference) =>
-          litStr(l).map(v => (a.name, None, Some(v)))
-        case LessThan(l: Literal, a: AttributeReference) =>
-          litStr(l).map(v => (a.name, Some(v), None))
-        case LessThanOrEqual(l: Literal, a: AttributeReference) =>
-          litStr(l).map(v => (a.name, Some(v), None))
-        // IS NULL / IS NOT NULL prune through the footer-recorded
-        // null / non-null counts (virtual `null:`/`nnull:` rows with
-        // min = max = count): a match needs at least one such row
-        case IsNull(a: AttributeReference) =>
-          Some((s"null:${a.name}", Some("1"), None))
-        case IsNotNull(a: AttributeReference) =>
-          Some((s"nnull:${a.name}", Some("1"), None))
-        // null-safe equality: `a <=> lit` is plain equality for a
-        // non-null literal (null <=> lit is false) and IS NULL for a
-        // null one
-        case EqualNullSafe(a: AttributeReference, l: Literal) =>
-          if (l.value == null) Some((s"null:${a.name}", Some("1"), None))
-          else litStr(l).map(v => (a.name, Some(v), Some(v)))
-        case EqualNullSafe(l: Literal, a: AttributeReference) =>
-          if (l.value == null) Some((s"null:${a.name}", Some("1"), None))
-          else litStr(l).map(v => (a.name, Some(v), Some(v)))
-        // NOT over a comparison is its complement interval; NOT over a
-        // null test flips it. Point exclusions (NOT =, NOT IN) bound
-        // nothing. SQL three-valued caveat: `NOT (a < l)` matches only
-        // non-null a with a >= l — a SUPERSET bound, still sound.
-        case Not(LessThan(a: AttributeReference, l: Literal)) =>
-          litStr(l).map(v => (a.name, Some(v), None))
-        case Not(LessThanOrEqual(a: AttributeReference, l: Literal)) =>
-          litStr(l).map(v => (a.name, Some(v), None))
-        case Not(GreaterThan(a: AttributeReference, l: Literal)) =>
-          litStr(l).map(v => (a.name, None, Some(v)))
-        case Not(GreaterThanOrEqual(a: AttributeReference, l: Literal)) =>
-          litStr(l).map(v => (a.name, None, Some(v)))
-        case Not(LessThan(l: Literal, a: AttributeReference)) =>
-          litStr(l).map(v => (a.name, None, Some(v)))
-        case Not(LessThanOrEqual(l: Literal, a: AttributeReference)) =>
-          litStr(l).map(v => (a.name, None, Some(v)))
-        case Not(GreaterThan(l: Literal, a: AttributeReference)) =>
-          litStr(l).map(v => (a.name, Some(v), None))
-        case Not(GreaterThanOrEqual(l: Literal, a: AttributeReference)) =>
-          litStr(l).map(v => (a.name, Some(v), None))
-        case Not(IsNull(a: AttributeReference)) =>
-          Some((s"nnull:${a.name}", Some("1"), None))
-        case Not(IsNotNull(a: AttributeReference)) =>
-          Some((s"null:${a.name}", Some("1"), None))
-        case In(a: AttributeReference, vs) if vs.nonEmpty &&
-            vs.forall(_.isInstanceOf[Literal]) =>
-          val lits = vs.map(v => litStr(v.asInstanceOf[Literal]))
-          if (lits.exists(_.isEmpty)) None
-          else {
-            val rendered = lits.flatten
-            vs.head.asInstanceOf[Literal].dataType match {
-              case StringType =>
-                Some((a.name, Some(rendered.min), Some(rendered.max)))
-              case _ => // typed ordering — "100" sorts below "40" as text.
-                // A non-finite float/double literal ("NaN", "Infinity")
-                // has no BigDecimal; emit no constraint for the conjunct
-                // (conservative) instead of failing the whole DML
-                try {
-                  val bd = rendered.map(BigDecimal(_))
-                  Some((a.name, Some(bd.min.toString), Some(bd.max.toString)))
-                } catch { case _: NumberFormatException => None }
-            }
-          }
-        case _ => None
-      }
-    // bucket-clustered columns additionally prune EQUALITY/IN conjuncts
-    // through the derived bucket id recorded under the spec's VIRTUAL
-    // stats name: hash the literal with the same Murmur3 the write ran
-    // and bound the admitted bucket-id range (IN-lists by [min,max] of
-    // their ids — a conservative superset, like the value-range tier)
-    val declaredSpecs =
-      GraftCatalog.parseClusterSpecs(GraftCatalog.clusterCols(s, dir))
-    val bucketOf: Map[String, GraftCatalog.BucketCluster] = declaredSpecs
-      .collect { case b: GraftCatalog.BucketCluster => b.col -> b }
-      .toMap
-    val truncOf: Map[String, GraftCatalog.TruncateCluster] = declaredSpecs
-      .collect { case t: GraftCatalog.TruncateCluster => t.col -> t }
-      .toMap
-    def bucketBound(a: AttributeReference, lits: Seq[Literal])
-        : Option[(String, Option[String], Option[String])] =
-      bucketOf.get(a.name).flatMap { b =>
-        if (lits.isEmpty || lits.exists(_.value == null)) None
-        else try {
-          val ids = lits.map(l => bucketIdOf(l.value, l.dataType, b.n))
-          Some((b.render,
-            Some(ids.min.toString), Some(ids.max.toString)))
-        } catch {
-          case scala.util.control.NonFatal(_) => None // never prune
-        }
-      }
-    def bucketAtom(e: Expression): Option[Atom] =
-      if (bucketOf.isEmpty) None
-      else e match {
-        case EqualTo(a: AttributeReference, l: Literal) =>
-          bucketBound(a, Seq(l))
-        case EqualTo(l: Literal, a: AttributeReference) =>
-          bucketBound(a, Seq(l))
-        case In(a: AttributeReference, vs) if vs.nonEmpty &&
-            vs.forall(_.isInstanceOf[Literal]) =>
-          bucketBound(a, vs.map(_.asInstanceOf[Literal]))
-        case _ => None
-      }
-    // truncate-clustered columns prune through the derived value under
-    // the spec's virtual stats name. The transform is MONOTONE
-    // (non-decreasing), so every comparison maps through it — x > L
-    // implies trunc(x) >= trunc(L) — and a LIKE's literal prefix bounds
-    // the derived prefix exactly (equality once the prefix covers the
-    // truncation width).
-    def truncDerive(a: AttributeReference, l: Literal): Option[String] =
-      truncOf.get(a.name).flatMap(t =>
-        truncValueOf(l.value, l.dataType, t.n))
-    def truncLo(a: AttributeReference, l: Literal) =
-      truncDerive(a, l).map(v => (truncOf(a.name).render, Some(v), None))
-    def truncHi(a: AttributeReference, l: Literal) =
-      truncDerive(a, l).map(v => (truncOf(a.name).render, None, Some(v)))
-    // the smallest string no prefix-matching value can reach: bump the
-    // rightmost non-￿ char and drop the rest (None = unbounded)
-    def strSuccessor(p: String): Option[String] = {
-      var i = p.length - 1
-      while (i >= 0 && p.charAt(i) == Char.MaxValue) i -= 1
-      if (i < 0) None
-      else Some(p.substring(0, i) + (p.charAt(i) + 1).toChar)
-    }
-    // the literal prefix a LIKE pattern requires (up to the first
-    // unescaped wildcard); None = no usable prefix, never prune
-    def likePrefix(pat: String, esc: Char): Option[String] = {
-      val b = new StringBuilder
-      var i = 0
-      while (i < pat.length) {
-        val c = pat.charAt(i)
-        if (c == esc) {
-          if (i + 1 >= pat.length) return None // malformed: bail
-          b.append(pat.charAt(i + 1)); i += 2
-        } else if (c == '%' || c == '_')
-          return Some(b.result()).filter(_.nonEmpty)
-        else { b.append(c); i += 1 }
-      }
-      Some(b.result()).filter(_.nonEmpty) // wildcard-free: exact value
-    }
-    def likeBounds(a: AttributeReference, pre: String)
-        : Seq[(String, Option[String], Option[String])] = {
-      // raw-column bounds: matches lie in [prefix, successor(prefix))
-      val raw = (a.name, Some(pre), strSuccessor(pre))
-      // derived bounds when the column is truncate-clustered: once the
-      // prefix covers the truncation width, the derived value of every
-      // match IS the width-truncated prefix — an equality prune
-      val derived = truncOf.get(a.name).flatMap { t =>
-        truncValueOf(org.apache.spark.unsafe.types.UTF8String
-            .fromString(pre), StringType, t.n).map { p0 =>
-          if (p0.length < pre.length) (t.render, Some(p0), Some(p0))
-          else (t.render, Some(pre), strSuccessor(pre))
-        }
-      }
-      Seq(raw) ++ derived.toSeq
-    }
-    def truncAtom(e: Expression): Option[Atom] =
-      if (truncOf.isEmpty) None
-      else e match {
-        case EqualTo(a: AttributeReference, l: Literal) =>
-          truncDerive(a, l).map(v =>
-            (truncOf(a.name).render, Some(v), Some(v)))
-        case EqualTo(l: Literal, a: AttributeReference) =>
-          truncDerive(a, l).map(v =>
-            (truncOf(a.name).render, Some(v), Some(v)))
-        case GreaterThan(a: AttributeReference, l: Literal) => truncLo(a, l)
-        case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
-          truncLo(a, l)
-        case LessThan(a: AttributeReference, l: Literal) => truncHi(a, l)
-        case LessThanOrEqual(a: AttributeReference, l: Literal) =>
-          truncHi(a, l)
-        case GreaterThan(l: Literal, a: AttributeReference) => truncHi(a, l)
-        case GreaterThanOrEqual(l: Literal, a: AttributeReference) =>
-          truncHi(a, l)
-        case LessThan(l: Literal, a: AttributeReference) => truncLo(a, l)
-        case LessThanOrEqual(l: Literal, a: AttributeReference) =>
-          truncLo(a, l)
-        case In(a: AttributeReference, vs) if vs.nonEmpty &&
-            vs.forall(_.isInstanceOf[Literal]) =>
-          truncOf.get(a.name).flatMap { t =>
-            val lits = vs.map(_.asInstanceOf[Literal])
-            if (lits.exists(_.value == null)) None
-            else {
-              val ds = lits.flatMap(l =>
-                truncValueOf(l.value, l.dataType, t.n))
-              if (ds.size != lits.size) None
-              else lits.head.dataType match {
-                case StringType => Some((t.render, Some(ds.min), Some(ds.max)))
-                case _ =>
-                  try {
-                    val bd = ds.map(BigDecimal(_))
-                    Some((t.render,
-                      Some(bd.min.toString), Some(bd.max.toString)))
-                  } catch { case _: NumberFormatException => None }
-              }
-            }
-          }
-        case _ => None
-      }
-    // LIKE-prefix conjuncts prune BOTH tiers (raw bounds always; the
-    // derived tier when the column is truncate-clustered)
-    def likeAtoms(e: Expression): Seq[Atom] = e match {
-      case Like(a: AttributeReference, p: Literal, esc)
-          if p.dataType == StringType && p.value != null =>
-        likePrefix(p.value.toString, esc).toSeq.flatMap(likeBounds(a, _))
-      case StartsWith(a: AttributeReference, p: Literal)
-          if p.dataType == StringType && p.value != null =>
-        likeBounds(a, p.value.toString)
-      case _ => Seq.empty
-    }
-    def atomsForConjunct(e: Expression): Seq[Atom] =
-      valueAtom(e).toSeq ++ bucketAtom(e).toSeq ++
-        truncAtom(e).toSeq ++ likeAtoms(e)
-    val constraints = folded.flatMap(atomsForConjunct)
-    // OR conjuncts prune by the UNION of their disjuncts: a file
-    // survives the Or iff SOME disjunct's atoms admit it (each
-    // disjunct's own AND-ed sub-conjuncts must all admit). Only an Or
-    // whose EVERY disjunct extracts at least one atom constrains
-    // anything — an unextractable disjunct admits all rows, and with
-    // it the whole Or. Soundness: ignoring a disjunct's unextractable
-    // sub-conjunct only widens that disjunct, never prunes more.
-    def disjunctsOf(e: Expression): Seq[Expression] = e match {
-      case Or(l, r) => disjunctsOf(l) ++ disjunctsOf(r)
-      case other => Seq(other)
-    }
-    val orChecks: Seq[Seq[Seq[Atom]]] = folded.flatMap {
-      case o: Or =>
-        val groups = disjunctsOf(o)
-          .map(d => conjuncts(d).flatMap(atomsForConjunct))
-        if (groups.forall(_.nonEmpty)) Some(groups) else None
-      case _ => None
-    }
-    if (constraints.isEmpty && orChecks.isEmpty) {
-      lastDmlPruneCounts = (fset.size, fset.size)
-      return fset
-    }
-    val stats = statsUpTo(s, dir, latest)
-    val chain = renameChain(s, dir, latest)
-    val local = localStatName(chain, latest) _
-    val kept = fset.filter { rel =>
-      stats.get(rel) match {
-        case None => true
-        case Some(cols) =>
-          val c = rel match {
-            case FileCommit(n) => n.toInt
-            case _ => latest
-          }
-          // virtual stat names carry a prefix over a real column name
-          // (`null:`/`nnull:`) — localize the COLUMN half through the
-          // rename chain so null-count pruning survives renames
-          def localized(name: String): String = name.split(":", 2) match {
-            case Array(p, col) if p == "null" || p == "nnull" =>
-              s"$p:${local(c, col)}"
-            case _ => local(c, name)
-          }
-          def atomAdmits(atom: Atom): Boolean = {
-            val (name, lo, hi) = atom
-            cols.find(_._1 == localized(name)) match {
-              case None => true
-              case Some((_, tn, mn, mx)) =>
-                inBounds(tn, mn, mx, lo.getOrElse(mn), hi.getOrElse(mx))
-            }
-          }
-          constraints.forall(atomAdmits) &&
-            orChecks.forall(_.exists(_.forall(atomAdmits)))
-      }
-    }
-    lastDmlPruneCounts = (kept.size, fset.size)
-    kept
-  }
-
   /** The condition a just-built `df.filter(...)` carries, for the
-    * driver-side bound extraction above (analysis only — no job). */
-  private def filterExprOf(df: DataFrame)
+    * driver-side [[StatsPruning]] extraction (analysis only — no job). */
+  private[sources] def filterExprOf(df: DataFrame)
       : org.apache.spark.sql.catalyst.expressions.Expression =
     df.queryExecution.analyzed match {
       case org.apache.spark.sql.catalyst.plans.logical.Filter(c, _) => c
@@ -2721,8 +2325,7 @@ object Snapshots {
       val matched: DataFrame =
         if (matchFiles.isEmpty) emptyPositions(s)
         else {
-          val raw = withMeta(s.read.parquet(
-            matchFiles.map(p => new Path(dir, p).toString): _*))
+          val raw = positionsScan(s, dir, latest, Some(matchFiles.toSet))
           // only LIVE rows can match — an already-deleted position must
           // not re-enter the vector (it would distort the replaced count)
           val live = prev.map(p => raw.join(
@@ -2804,8 +2407,7 @@ object Snapshots {
       val gone: DataFrame =
         if (matchFiles.isEmpty) emptyPositions(s)
         else {
-          val raw = withMeta(s.read.parquet(
-            matchFiles.map(p => new Path(dir, p).toString): _*))
+          val raw = positionsScan(s, dir, latest, Some(matchFiles.toSet))
           val live = prev.map(p => raw.join(
               p.select(col("file_path").as("_fp"),
                 col("row_index").as("_ri")),
@@ -3740,50 +3342,18 @@ object Snapshots {
         }
       (df, applied.toSeq)
     }
-    // file-level stats pruning from METADATA alone: a file whose recorded
-    // key min/max excludes every tombstone value is dropped before any
-    // scan — with commit-time statsCols on the key, a small deletion
-    // request against a 100 TB table opens only the files that can
-    // contain it. Stats are recorded under the writing vintage's own
-    // column name, so the canonical key maps back through the rename
-    // chain first. Absent stats = always scan (conservative).
-    val fileStats = statsUpTo(s, dir, latest)
-    def localKeyName(c: Int, canonical: String): String = {
-      var cur = canonical
-      for (later <- latest until c by -1; (o, n) <- chain(later))
-        if (n == cur) cur = o
-      // same round-trip guard as localStatName: a name re-used after a
-      // rename or drop must not alias an unrelated old column's stats
-      var fwd = cur
-      for (later <- (c + 1) to latest; (o, n) <- chain(later))
-        if (o == fwd) fwd = n
-      if (fwd == canonical) cur else DropMarker
-    }
-    // A file may contain a tombstone only if SOME tombstone row lies
-    // inside the file's recorded bounds on EVERY key column that has
-    // stats — the per-column conjunction generalizes the single-key
-    // bound to composite keys, so a (source, doc_id) purge still opens
-    // only stats-intersecting files. Columns without stats constrain
-    // nothing; a file with no stats at all is always scanned.
-    def statsMayContain(rel: String, c: Int): Boolean =
-      fileStats.get(rel) match {
-        case None => true
-        case Some(cols) =>
-          val bounds = keyCols.zipWithIndex.flatMap { case (k, i) =>
-            cols.find(_._1 == localKeyName(c, k)).map(st => (i, st)) }
-          bounds.isEmpty || tombRows.exists { r =>
-            bounds.forall { case (i, (_, tn, mn, mx)) =>
-              val v = r.get(i)
-              v != null && inBounds(tn, mn, mx, v.toString, v.toString) } }
-      }
-    // 1. candidate detection: key columns only + file-stats pruning
-    var statsScanned = 0
-    val affected: Seq[String] = allFiles.groupBy(commitOf).toSeq
-      .flatMap { case (c, rels0) =>
-        val rels = rels0.filter(statsMayContain(_, c))
-        statsScanned += rels.size
-        if (rels.isEmpty) Seq.empty[String]
-        else {
+    // file-level stats pruning from METADATA alone: a file may contain
+    // a tombstone only if SOME tombstone row lies inside its recorded
+    // bounds on every stat-recorded key column ([[StatsPruning.keyRows]]
+    // — composite keys included), so a small deletion request against a
+    // 100 TB table opens only the files that can contain it
+    val mayContain = StatsPruning.keep(s, dir, latest, allFiles,
+      StatsPruning.keyRows(s, keyCols, tombKeys.schema, tombRows.toSeq))
+    // spec observability: (files the stats let through, files total)
+    lastPurgePruneCounts = (mayContain.size, allFiles.size)
+    // 1. candidate detection: key columns only, per writing commit
+    val affected: Seq[String] = mayContain.groupBy(commitOf).toSeq
+      .flatMap { case (c, rels) =>
         val paths = rels.map(p => new Path(dir, p).toString)
         val (named, _) = applyChain(s.read.parquet(paths: _*), c)
         if (!keyCols.forall(named.columns.contains)) Seq.empty
@@ -3804,14 +3374,12 @@ object Snapshots {
             .getOrElse(throw new IllegalStateException(
               s"purge: unrecognized file $abs"))).toSeq
         }
-        }
       }.distinct
-    // spec observability: (files the stats let through, files total)
-    lastPurgePruneCounts = (statsScanned, allFiles.size)
     // 2. rewrite each affected file once. 2b: a replacement file
     // re-records the stats its original carried (recomputed over the
     // kept rows — bounds can only tighten), appended to the table-level
     // purged.stats side-file so pruning stays effective after deletions.
+    val recordedStats = statsUpTo(s, dir, latest)
     val stage = new Path(dir, "_purge_stage")
     f.delete(stage, true)
     var rowsDeleted = 0L
@@ -3842,7 +3410,7 @@ object Snapshots {
         if (!f.rename(part.get.getPath, dst))
           throw new java.io.IOException(
             s"purge aborted: rename ${part.get.getPath} -> $dst failed")
-        fileStats.get(rel).foreach { cols =>
+        recordedStats.get(rel).foreach { cols =>
           val statCols = cols.filter(c => c._2 != "" &&
             kept.columns.contains(c._1))
           if (statCols.nonEmpty) {

@@ -21,32 +21,34 @@ import org.apache.spark.sql.types.StructType
   */
 object GraftParquetIO {
 
-  /** The SQL-conf keys [[ParquetWriteSupport.init]] consults; the DRIVER
-    * pins them into the shipped Configuration from its session so
+  /** The SQL-conf settings [[ParquetWriteSupport.init]] and the schema
+    * converter consult (the batch writer's `ParquetUtils.prepareWrite`
+    * pins the same set), read from `sql`. */
+  private def writeSettings(sql: SQLConf): Seq[(String, String)] = Seq(
+    SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key ->
+      sql.writeLegacyParquetFormat.toString,
+    SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key ->
+      sql.parquetOutputTimestampType.toString,
+    SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key ->
+      sql.getConf(SQLConf.PARQUET_REBASE_MODE_IN_WRITE).toString,
+    SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE.key ->
+      sql.getConf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE).toString,
+    SQLConf.SESSION_LOCAL_TIMEZONE.key -> sql.sessionLocalTimeZone,
+    "spark.sql.parquet.compression.codec" -> sql.parquetCompressionCodec,
+    SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key ->
+      sql.getConf(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED).toString,
+    SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key ->
+      sql.getConf(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG).toString,
+    SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key ->
+      sql.getConf(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE).toString,
+    SQLConf.VARIANT_WRITE_SHREDDING_ENABLED.key ->
+      sql.getConf(SQLConf.VARIANT_WRITE_SHREDDING_ENABLED).toString)
+
+  /** Pin the write settings into `conf` from the calling thread's SQL
+    * conf — the DRIVER does this for the Configuration it ships, so
     * executors cannot fall back to diverging defaults. */
   def pinWriteConf(conf: Configuration): Configuration = {
-    val sql = SQLConf.get
-    conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key,
-      sql.writeLegacyParquetFormat.toString)
-    conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
-      sql.parquetOutputTimestampType.toString)
-    conf.set(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key,
-      sql.getConf(SQLConf.PARQUET_REBASE_MODE_IN_WRITE).toString)
-    conf.set(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE.key,
-      sql.getConf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE).toString)
-    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sql.sessionLocalTimeZone)
-    conf.set("spark.sql.parquet.compression.codec",
-      sql.parquetCompressionCodec)
-    // the schema converter reads these unconditionally (the batch
-    // writer's ParquetUtils.prepareWrite pins the same set)
-    conf.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key,
-      sql.getConf(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED).toString)
-    conf.set(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
-      sql.getConf(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG).toString)
-    conf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key,
-      sql.getConf(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE).toString)
-    conf.set(SQLConf.VARIANT_WRITE_SHREDDING_ENABLED.key,
-      sql.getConf(SQLConf.VARIANT_WRITE_SHREDDING_ENABLED).toString)
+    writeSettings(SQLConf.get).foreach { case (k, v) => conf.set(k, v) }
     conf
   }
 
@@ -62,6 +64,11 @@ object GraftParquetIO {
   def openWriter(path: Path, schema: StructType, conf: Configuration)
       : ParquetWriter[InternalRow] = {
     val c = new Configuration(conf)
+    // a conf that never went through pinWriteConf takes the missing
+    // settings from this thread's SQL conf instead of failing an
+    // assertion inside ParquetWriteSupport.init
+    writeSettings(SQLConf.get).foreach { case (k, v) =>
+      if (c.get(k) == null) c.set(k, v) }
     ParquetWriteSupport.setSchema(schema, c)
     val codec = c.get("spark.sql.parquet.compression.codec", "snappy")
       .toUpperCase match {

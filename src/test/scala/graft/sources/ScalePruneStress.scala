@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * ≈ sf1) as a catalog table clustered by `(truncate(16, url), lang)`,
   * committed in SPARK_GRAFT_COMMITS slices so the file count scales with
   * history, then measures, per shape: files opened vs total (the
-  * `lastDmlPruneCounts` the DML's condMatchableFiles records) and wall
+  * `lastDmlPruneCounts` the DML scan records from StatsPruning) and wall
   * seconds. The claim under test: opens scale with MATCHING files
   * (cluster groups × commits), never with table size.
   *

@@ -90,6 +90,10 @@ class SnapshotSourceSpec extends SparkSpec {
     val two = readFmt(dir).filter(col("id") >= 9 && col("id") <= 13)
     assert(ids(two) == (9L to 13L) && scanFiles(two) == 2)
 
+    // a sparse IN list prunes per value, not by its [min, max] span
+    val sparse = readFmt(dir).filter(col("id").isin(5L, 25L))
+    assert(ids(sparse) == Seq(5L, 25L) && scanFiles(sparse) == 2)
+
     // an unfiltered read scans everything; a no-stats column prunes nothing
     val all = readFmt(dir)
     assert(ids(all) == (1L to 30L) && scanFiles(all) == 3)
@@ -604,6 +608,24 @@ class SnapshotSourceSpec extends SparkSpec {
         .contains("SnapshotStreamingWrite"), q.lastProgress.sink.description)
     } finally q.stop()
     assert(ids(readFmt(dir)) == (1L to 4L))
+  }
+
+  test("a streamed part staged over an unpinned session Hadoop conf " +
+      "writes and reads back") {
+    val schema = org.apache.spark.sql.types.StructType
+      .fromDDL("id BIGINT, payload STRING")
+    val path = new org.apache.hadoop.fs.Path(tmpDir("unpinned"),
+      "part-0.parquet")
+    val w = new SnapshotStreamDataWriter(path, schema,
+      spark.sessionState.newHadoopConf())
+    Seq(1L -> "a", 2L -> "b").foreach { case (i, p) =>
+      w.write(org.apache.spark.sql.catalyst.InternalRow(i,
+        org.apache.spark.unsafe.types.UTF8String.fromString(p)))
+    }
+    w.commit()
+    val back = spark.read.parquet(path.toString).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    assert(back == Seq(1L -> "a", 2L -> "b"))
   }
 
   test("V2 streaming write: an empty Complete epoch publishes an empty " +

@@ -1569,7 +1569,7 @@ class SnapshotsSpec extends SparkSpec {
       s"n=$n4 counts=${Snapshots.lastDmlPruneCounts}")
     assert(idsOf(dir, v4) == (1L to 300L).filterNot(_ == 150L))
 
-    // an IN list prunes by its bounding range; the unparseable payload
+    // an IN list prunes per listed value; the unparseable payload
     // conjunct constrains nothing
     val (_, n5) = Snapshots.updateWhere(spark, dir,
       col("id").isin(250L, 260L) && col("payload") =!= "nope",
@@ -1824,9 +1824,9 @@ class SnapshotsSpec extends SparkSpec {
       Seq(1L, 2L))
     // belt and braces: a historic NaN bound read back from a stats
     // line compares as never-prunable
-    assert(Snapshots.inBounds("double", "1.0", "NaN", "7.0", "7.0"))
-    assert(Snapshots.inBounds("double", "NaN", "NaN", "7.0", "7.0"))
-    assert(!Snapshots.inBounds("double", "1.0", "2.0", "7.0", "8.0"))
+    assert(StatsPruning.inBounds("double", "1.0", "NaN", "7.0", "7.0"))
+    assert(StatsPruning.inBounds("double", "NaN", "NaN", "7.0", "7.0"))
+    assert(!StatsPruning.inBounds("double", "1.0", "2.0", "7.0", "8.0"))
   }
 
   test("IN-list with a non-finite literal constrains nothing instead " +
