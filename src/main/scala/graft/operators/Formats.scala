@@ -980,10 +980,11 @@ object Formats extends QueryPack {
     // schema + the renames side-file; NO data file rewritten at any
     // table size — the lakehouse evolution posture). Old vintages
     // backfill the added columns as null and remap the renamed column
-    // at read time (Snapshots.readEvolved); VERSION AS OF 1 still shows
-    // the original 3-column schema. The DuckDB oracle replays the
-    // per-language aggregate relationally: backfilled = hot rows
-    // (inserted before the DDL, so their source/n_chars are null).
+    // at read time (the snapshot scan, SnapshotSource.relationFor);
+    // VERSION AS OF 1 still shows the original 3-column schema. The
+    // DuckDB oracle replays the per-language aggregate relationally:
+    // backfilled = hot rows (inserted before the DDL, so their
+    // source/n_chars are null).
     "f36_schema_evolution" -> ((s, d) => {
       val wh = ioDir(d, "f36_wh")
       val cat = withCatalog(s, d, "graft36", wh)
@@ -2387,9 +2388,10 @@ object Formats extends QueryPack {
     // with the priority column under its legacy name `prio`; v2 appends
     // with key_lo LONG, declares the rename prio -> o_orderpriority in
     // the version metadata, and ADDS o_custkey; v3 appends more of the
-    // same. No history is rewritten: Snapshots.readEvolved regroups files
-    // by writing commit, applies the rename chain, widens int -> long,
-    // and null-backfills the added column — the three evolutions parquet
+    // same. No history is rewritten: Snapshots.read requests each
+    // writing commit's files under their own column names (the rename
+    // chain), widens int -> long in the parquet reader, and null-
+    // backfills the added column — the three evolutions parquet
     // mergeSchema cannot express (it errors on int×long and treats a
     // rename as drop+add). The verdict aggregate is recomputed by the
     // oracle from the source table, plus the widened-type pin.
@@ -2420,7 +2422,7 @@ object Formats extends QueryPack {
           append = true)
         ()
       }
-      val ev = graft.sources.Snapshots.readEvolved(s, out, 3)
+      val ev = graft.sources.Snapshots.read(s, out, 3)
       ev.agg(count(lit(1)).as("n"),
           sum(col("o_orderkey")).as("sum_key"),
           sum(col("key_lo")).as("sum_lo"),

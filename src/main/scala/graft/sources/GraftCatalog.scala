@@ -308,10 +308,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * ONE metadata-sized commit — an empty single-part vintage whose
     * parquet footer declares the evolved schema, plus the usual
     * `vN.renames` side-file. No data file is rewritten at ANY table
-    * size: [[Snapshots.evolutionInfo]] picks added columns and widened
+    * size: [[Snapshots.evolvedSchema]] picks added columns and widened
     * types from the new vintage's footer exactly as it would from a
-    * data-bearing append, [[Snapshots.readEvolved]] backfills old
-    * vintages with nulls / remaps renamed columns at read time, and
+    * data-bearing append, every read's scan ([[Snapshots.read]], SQL,
+    * the stream source and the change feed, all through
+    * [[SnapshotSource.relationFor]]) backfills old vintages with nulls /
+    * requests renamed columns under their old names at read time, and
     * VERSION AS OF still shows each version under its own schema. On a
     * table with no commits yet the `_SCHEMA` side-file is simply
     * rewritten (nothing to evolve). DROP COLUMN is the same shape: a
@@ -1031,8 +1033,8 @@ private[graft] object GraftCatalog {
 /** One snapshot table as a DSv2 [[Table]] handle. The handle is
   * METADATA-ONLY: reads are rewritten by [[GraftSqlRules]] onto the f29
   * HadoopFsRelation (schema here must therefore match what
-  * [[SnapshotSource.relationFor]] will produce — both come from
-  * [[Snapshots.evolutionInfo]]); INSERT INTO / INSERT OVERWRITE / CTAS
+  * [[SnapshotSource.versionRelation]] will produce — both come from
+  * [[Snapshots.evolvedSchema]]); INSERT INTO / INSERT OVERWRITE / CTAS
   * ride the official V1 write fallback onto [[Snapshots.commit]]
   * (append / rewrite commits respectively — history stays readable
   * through an INSERT OVERWRITE, unlike a path overwrite).

@@ -289,7 +289,7 @@ private[sources] object GraftProcedures {
           s"changes: version range [$from, $to] not within [1, $head]")
         require(cap >= 1, s"changes: max_rows must be positive, got $cap")
         val rel = new ChangeFeedBatchRelation(spark, dir, from - 1, to,
-          Snapshots.evolutionInfo(spark, dir, head)._1, head)
+          Snapshots.evolvedSchema(spark, dir, head), head)
         val df = org.apache.spark.sql.GraftBatchView.ofRows(spark,
           org.apache.spark.sql.execution.datasources.LogicalRelation(
             rel, false))
@@ -313,7 +313,7 @@ private[sources] object GraftProcedures {
           s"change_view: version range [$from, $to] not within " +
             s"[1, $head]")
         val rel = new ChangeFeedBatchRelation(spark, dir, from - 1, to,
-          Snapshots.evolutionInfo(spark, dir, head)._1, head)
+          Snapshots.evolvedSchema(spark, dir, head), head)
         org.apache.spark.sql.GraftBatchView.ofRows(spark,
           org.apache.spark.sql.execution.datasources.LogicalRelation(
             rel, false))

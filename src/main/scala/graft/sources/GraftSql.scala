@@ -316,8 +316,8 @@ private[graft] object GraftSql {
     val output = r.output.map(_.asInstanceOf[AttributeReference])
     if (v < 1) LocalRelation(output)
     else {
-      val rel = SnapshotSource.relationFor(session, t.dir, v, 20000000L,
-        fileSubset)
+      val rel = SnapshotSource.versionRelation(session, t.dir, v,
+        fileSubset = fileSubset)
       // the relation's schema must line up POSITIONALLY with the output
       // attributes resolution produced (a commit racing between resolve
       // and plan could evolve it) — misalignment would misread columns
@@ -380,7 +380,7 @@ private[graft] object GraftSql {
       .map(n => Snapshots.refVersion(spark, dir, n))
       .getOrElse(Snapshots.mainVersion(spark, dir))
     if (head < 1) return 0L
-    val schema = Snapshots.evolutionInfo(spark, dir, head)._1
+    val schema = Snapshots.evolvedSchema(spark, dir, head)
     val empty = spark.createDataFrame(
       spark.sparkContext.parallelize(
         Seq.empty[org.apache.spark.sql.Row], 1), schema)

@@ -50,10 +50,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    by the one rule every snapshot caller shares ([[StatsPruning]])
   *    — a pruned file never reaches the scan, pinned by the scan's
   *    `numFiles` metric;
-  *  - schema evolution resolves via [[Snapshots.evolutionInfo]]: renamed
+  *  - schema evolution resolves via [[Snapshots.evolvedSchema]]: renamed
   *    vintages are read by a [[ParquetFileFormat]] subclass that remaps
   *    the requested schema per file back to the vintage-local names
-  *    (positional output stays canonical), while type WIDENING
+  *    ([[Snapshots.vintageReads]]; positional output stays canonical),
+  *    while type WIDENING
   *    (int→long, float→double) rides the parquet reader's native schema
   *    promotion and missing columns backfill as null — zero per-row
   *    overhead for evolution;
@@ -189,6 +190,11 @@ class SnapshotSource extends RelationProvider
       .map(_.toLong)
     maxBytesPerTrigger.foreach(m => require(m >= 1,
       "graft-snapshots source: maxBytesPerTrigger must be >= 1"))
+    // the stream's schema and the version it is canonical at, which
+    // anchors each batch's per-vintage names; tableSchemaNow handles the
+    // created-but-never-committed table (declared `_SCHEMA`, version 0 —
+    // the source idles via getOffset=None until v1 commits)
+    val (tschema, atV) = tableSchemaNow(ctx, dir, branch)
     if (parameters.get("readchangefeed").exists(_.toBoolean)) {
       require(!ignoreChanges, "graft-snapshots source: readChangeFeed " +
         "and ignoreChanges are exclusive (the change feed REPRESENTS " +
@@ -197,22 +203,16 @@ class SnapshotSource extends RelationProvider
         "graft-snapshots source: maxFilesPerTrigger/maxBytesPerTrigger " +
         "do not apply to the change feed (its deltas are per-version); " +
         "use maxVersionsPerTrigger")
-      // tableSchemaNow handles the created-but-never-committed table
-      // (declared `_SCHEMA`, schemaVersion 0 — the source idles via
-      // getOffset=None until v1 commits), where an unconditional
-      // evolutionInfo(latest=0) would read a nonexistent manifest
-      val (tschema, atV) = tableSchemaNow(ctx, dir, branch)
       new SnapshotChangeFeedSource(ctx.sparkSession, dir, tschema,
         startingVersion, schemaVersion = atV,
         maxVersionsPerTrigger = maxVersionsPerTrigger,
         metadataPath = metadataPath, branch = branch)
     } else
-      new SnapshotStreamSource(ctx.sparkSession, dir,
-        sourceSchema(ctx, schema, providerName, parameters)._2,
+      new SnapshotStreamSource(ctx.sparkSession, dir, tschema,
         ignoreChanges, startingVersion, maxVersionsPerTrigger,
         metadataPath, branch = branch,
         maxFilesPerTrigger = maxFilesPerTrigger,
-        maxBytesPerTrigger = maxBytesPerTrigger)
+        maxBytesPerTrigger = maxBytesPerTrigger, schemaVersion = atV)
   }
 
   /** The [[TableProvider]] half: `writeStream.format("graft-snapshots")`
@@ -287,11 +287,12 @@ class SnapshotSource extends RelationProvider
         s"graft-snapshots: readChangeFeed range [$from, $to] not " +
           s"within [1, $head] at $dir")
       return new ChangeFeedBatchRelation(spark, dir, from - 1, to,
-        Snapshots.evolutionInfo(spark, dir, head)._1, head)
+        Snapshots.evolvedSchema(spark, dir, head), head)
     }
     val v = resolveVersion(spark, dir, parameters, latest)
-    SnapshotSource.relationFor(spark, dir, v,
-      parameters.get("maxdvpositions").map(_.toLong).getOrElse(20000000L))
+    SnapshotSource.versionRelation(spark, dir, v,
+      parameters.get("maxdvpositions").map(_.toLong)
+        .getOrElse(SnapshotSource.DefaultMaxDvPositions))
   }
 
   private def resolveVersion(spark: SparkSession, dir: String,
@@ -509,7 +510,8 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
     metadataPath: String = "",
     branch: Option[String] = None,
     maxFilesPerTrigger: Option[Int] = None,
-    maxBytesPerTrigger: Option[Long] = None)
+    maxBytesPerTrigger: Option[Long] = None,
+    schemaVersion: Int = -1)
     extends org.apache.spark.sql.execution.streaming.Source {
 
   import org.apache.spark.sql.execution.streaming.{Offset => SrcOffset}
@@ -520,6 +522,12 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
   private def lineHead: Int = branch
     .map(Snapshots.refVersion(spark, dir, _))
     .getOrElse(Snapshots.mainVersion(spark, dir))
+
+  // the version whose canonical schema IS fixedSchema: every batch's
+  // per-vintage names are resolved from here, so a vintage written after
+  // a later RENAME COLUMN still fills the stream's (older) column name
+  private val canonVersion: Int =
+    if (schemaVersion >= 0) schemaVersion else lineHead
 
   private val cursor = new VersionOfferCursor(spark,
     if (metadataPath.isEmpty) // direct (spec) construction only — the
@@ -644,20 +652,6 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
 
   override def commit(end: SrcOffset): Unit = cursor.note(posOf(end))
 
-  // incremental rename detection, memoized across batches (renames are
-  // append-only metadata): lets the common no-renames table skip the
-  // per-vintage grouping entirely
-  private var renamesCheckedTo = 0
-  private var anyRenames = false
-  private def hasRenamesUpTo(v: Int): Boolean = {
-    while (renamesCheckedTo < v) {
-      renamesCheckedTo += 1
-      if (Snapshots.renamesOf(spark, dir, renamesCheckedTo).nonEmpty)
-        anyRenames = true
-    }
-    anyRenames
-  }
-
   // the fresh-stream diff base: the followed LINE's last version
   // strictly below startingVersion (on a linear table = startingVersion
   // - 1). The raw predecessor NUMBER can be an interleaved other-line
@@ -760,47 +754,14 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
           } else Seq.empty
         if (v0 == v1) head else head ++ tail
       }
-    val batch =
-      if (added.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fixedSchema)
-      else if (!hasRenamesUpTo(v1))
-        spark.read.schema(fixedSchema)
-          .parquet(added.map(p => new Path(dir, p).toString): _*)
-      else {
-        // renamed vintages: request each vintage's files under their
-        // LOCAL column names (type widening rides the parquet reader's
-        // native promotion, missing columns backfill null), rename
-        // positionally to the stream's canonical names, union
-        val (canon, inverse) = Snapshots.evolutionInfo(spark, dir, v1)
-        require(fixedSchema.fieldNames.forall(canon.fieldNames.contains),
-          s"graft-snapshots source: the table's schema evolved away from " +
-            s"the stream's (${fixedSchema.fieldNames.mkString(",")} vs " +
-            s"${canon.fieldNames.mkString(",")}); restart the stream to " +
-            "pick up the evolved schema")
-        val byVintage = added.groupBy {
-          case Snapshots.FileCommit(c) => c.toInt
-          case other => throw new IllegalStateException(
-            s"graft-snapshots source: cannot attribute $other to a commit")
-        }
-        byVintage.toSeq.sortBy(_._1).map { case (c, paths) =>
-          import org.apache.spark.sql.functions.col
-          val inv = inverse.getOrElse(c, Map.empty)
-          // recursive localization: struct SUBFIELD renames remap too
-          // (a flat top-level rename would request the canonical leaf
-          // from pre-rename files and silently null it); the cast is a
-          // positional nested-name normalization, a no-op for scalars
-          val local = Snapshots.localizeSchema(fixedSchema, inv)
-          spark.read.schema(local)
-            .parquet(paths.map(p => new Path(dir, p).toString): _*)
-            .select(local.fields.zip(fixedSchema.fields).map {
-              case (lf, cf) =>
-                col(s"`${lf.name}`").cast(cf.dataType).as(cf.name)
-            }.toSeq: _*)
-        }.reduce(_.unionByName(_))
-      }
-    // the engine asserts getBatch frames are streaming-flagged
-    org.apache.spark.sql.GraftBatchView.asStreaming(batch)
+    // the added files through the one snapshot scan, under the stream's
+    // schema (no deletion vector: an append stream emits added rows);
+    // one LogicalRelation, so the streaming-flagged frame keeps its
+    // column pruning and filter pushdown. The engine asserts getBatch
+    // frames are streaming-flagged.
+    org.apache.spark.sql.GraftBatchView.asStreaming(
+      spark.baseRelationToDataFrame(SnapshotSource.fileRelation(spark, dir,
+        added, canonVersion, fixedSchema)))
   }
 
   override def stop(): Unit = ()
@@ -1182,7 +1143,7 @@ object SnapshotSource {
     * never-committed catalog table — its declared `_SCHEMA` side-file. */
   private[sources] def schemaAt(spark: SparkSession, dir: String,
       v: Int): StructType =
-    if (v >= 1) Snapshots.evolutionInfo(spark, dir, v)._1
+    if (v >= 1) Snapshots.evolvedSchema(spark, dir, v)
     else {
       val p = new Path(dir, "_SCHEMA")
       val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1270,6 +1231,14 @@ object SnapshotSource {
     }
     def filtered(df: DataFrame): DataFrame =
       pushedCol.map(df.filter).getOrElse(df)
+    // manifest paths read through the one snapshot scan under the
+    // consumer's schema: names resolve from `canonVersion` (NOT from each
+    // delta's version, whose canonical names may predate a later RENAME
+    // COLUMN and would null-backfill the renamed column), `dv` applied
+    // in the reader
+    def scan(paths: Seq[String], dv: Option[DataFrame] = None): DataFrame =
+      spark.baseRelationToDataFrame(relationFor(spark, dir, paths,
+        canonVersion, tableSchema, dv))
     val graph = Snapshots.commitGraph(f, dir, v1)
     def stamped(df: DataFrame, change: String, v: Int): DataFrame =
       df.withColumn("_change_type", lit(change))
@@ -1330,8 +1299,7 @@ object SnapshotSource {
         val addedRows: Option[DataFrame] = {
           val kept = sourcePrune(added)
           if (kept.isEmpty) None
-          else Some(sourceFilter(readCanonical(spark, dir,
-            kept, canonVersion, tableSchema, withPos = false)))
+          else Some(sourceFilter(scan(kept)))
         }
         val deltaRows: Option[DataFrame] = dvDelta(cv, parent).flatMap {
           delta =>
@@ -1344,8 +1312,7 @@ object SnapshotSource {
             val needed = sourcePrune(parentFiles.filter(p =>
               touched.contains(new Path(p).getName)))
             if (needed.isEmpty) None
-            else Some(sourceFilter(readCanonical(spark, dir,
-                needed, canonVersion, tableSchema, withPos = true)
+            else Some(sourceFilter(Snapshots.withMeta(scan(needed))
               .join(delta.select(
                 col("file_path").as("_fp"), col("row_index").as("_ri")),
                 Seq("_fp", "_ri"), "left_semi")
@@ -1391,17 +1358,9 @@ object SnapshotSource {
       } else {
         // rewrite: retract the parent's live rows, insert the new ones
         // (fixed-type frames — prune + filter at the source)
-        def live(v: Int): DataFrame = {
-          val kept = pruneFiles(Snapshots.files(spark, dir, v))
-          val withPos = readCanonical(spark, dir, kept, canonVersion,
-            tableSchema, withPos = true)
-          filtered(Snapshots.dvFrame(spark, dir, v)
-            .map(dv => withPos.join(dv.select(
-              col("file_path").as("_fp"), col("row_index").as("_ri")),
-              Seq("_fp", "_ri"), "left_anti"))
-            .getOrElse(withPos)
-            .drop("_fp", "_ri"))
-        }
+        def live(v: Int): DataFrame = filtered(scan(
+          pruneFiles(Snapshots.files(spark, dir, v)),
+          Snapshots.dvFrame(spark, dir, v)))
         val dels =
           if (parent >= 1) Seq(stamped(live(parent), "delete", cv))
           else Seq.empty
@@ -1415,154 +1374,89 @@ object SnapshotSource {
         cdfSchema(tableSchema)))
   }
 
-  /** Manifest-relative `paths` read under the CANONICAL column names of
-    * version `canonVersion` — the version whose schema `canon` IS (the
-    * change-feed consumer's fixed schema). Per-vintage schema remap:
-    * each file's columns are requested under the names its writing
-    * commit used, resolved by walking the rename chain from
-    * `canonVersion` BACK to the vintage (or forward, for vintages
-    * committed after the schema was captured) — anchoring at the
-    * DELTA's version instead would key the map on that era's canonical
-    * names and silently null-backfill any column renamed later.
-    * Widening rides the parquet reader's promotion, missing columns
-    * backfill null. `withPos=true` appends `_fp`/`_ri` metadata
-    * position columns (for deletion-vector joins). */
-  private[sources] def readCanonical(spark: SparkSession, dir: String,
-      paths: Seq[String], canonVersion: Int, canon: StructType,
-      withPos: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val posCols =
-      if (withPos) Seq(col("_metadata.file_path").as("_fp"),
-        col("_metadata.row_index").as("_ri"))
-      else Seq.empty
-    if (paths.isEmpty) {
-      val s = if (withPos) canon
-        .add("_fp", org.apache.spark.sql.types.StringType)
-        .add("_ri", org.apache.spark.sql.types.LongType) else canon
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-    }
-    val byVintage = paths.groupBy {
-      case Snapshots.FileCommit(c) => c.toInt
-      case other => throw new IllegalStateException(
-        s"graft-snapshots: cannot attribute $other to a commit")
-    }
-    // rename declarations of every version the walk can touch — O(max
-    // version) tiny side-file reads, no data
-    val maxV = math.max(canonVersion, byVintage.keys.max)
-    val chain: Map[Int, Seq[(String, String)]] =
-      Snapshots.renameChain(spark, dir, maxV)
-    // the dotted path vintage `c` stores a canonVersion-canonical
-    // (sub)column under; a dropped or re-used name requests a name no
-    // file can contain instead (reads as null), uniquified so two dropped
-    // columns cannot collide in the schema
-    def localPath(c: Int, canonical: String): String =
-      Snapshots.localName(chain, canonVersion)(c, canonical) match {
-        case Snapshots.DropMarker => Snapshots.DropMarker + canonical
-        case local => local
-      }
-    // localized REQUESTED schema, recursive over struct subfields: leaf
-    // names follow localPath, shape and (widened) types stay canonical,
-    // so parquet clipping null-backfills absent subfields and the rows
-    // come back positionally canonical
-    def localStruct(st: StructType, c: Int, prefix: String): StructType =
-      StructType(st.map { fld =>
-        val p = prefix + fld.name
-        val lp = localPath(c, p)
-        val leaf = if (lp.startsWith(Snapshots.DropMarker))
-          Snapshots.DropMarker + fld.name
-        else Snapshots.leafOf(lp)
-        fld.dataType match {
-          case s: StructType =>
-            fld.copy(name = leaf, dataType = localStruct(s, c, p + "."))
-          case _ => fld.copy(name = leaf)
-        }
-      })
-    byVintage.toSeq.sortBy(_._1).map { case (c, ps) =>
-      val local = localStruct(canon, c, "")
-      spark.read.schema(local)
-        .parquet(ps.map(p => new Path(dir, p).toString): _*)
-        .select(local.fields.zip(canon.fields).map {
-          // the cast is a no-op for scalars (requested = canonical type)
-          // and a positional nested-name normalization for structs (same
-          // shape by construction, local subfield leaves → canonical)
-          case (lf, cf) =>
-            col(s"`${lf.name}`").cast(cf.dataType).as(cf.name)
-        }.toSeq ++ posCols: _*)
-    }.reduce(_.unionByName(_))
-  }
+  /** Past this many deletion-vector positions a read stops holding the
+    * vector on the driver and anti-joins it instead ([[DvJoinRelation]]);
+    * the `maxDvPositions` reader option overrides it per read. */
+  private[sources] val DefaultMaxDvPositions: Long = 20000000L
 
-  /** Version `v` of the table at `dir` as a HadoopFsRelation over its
-    * evolved schema, reading every physical row of each vintage under its
-    * canonical names, with `dv`'s dead ordinals (empty = none) skipped in
-    * the reader. `fileSubset`, when given, restricts the scan to those
-    * manifest paths — the caller asserts the dropped files cannot
-    * contribute. With no `dv` it is the positional DML scan: `_metadata`
-    * row indexes are the deletion vector's positions. */
+  /** THE scan of snapshot data files — every read plans it: SQL and
+    * `format("graft-snapshots")`, [[Snapshots.read]] and its pruned,
+    * time-travel, compaction and optimize callers, the stream source's
+    * micro-batches, the change feed and the DML/MERGE positional scans.
+    * `files` (manifest-relative) read as a [[HadoopFsRelation]] that
+    * presents `schema`, the canonical schema of version `canonV`: each
+    * vintage's columns are requested under the names its files store
+    * them ([[Snapshots.vintageReads]]), so renamed vintages decode
+    * natively, type widening rides the parquet reader's promotion (or a
+    * cast after decoding where the reader cannot widen) and absent
+    * columns backfill null. `dv` (file name → sorted dead
+    * ordinals, empty = none) is skipped inside the reader. With no `dv`
+    * it is the positional DML scan: `_metadata` row indexes are the
+    * deletion vector's positions. */
   private[sources] def fileRelation(spark: SparkSession, dir: String,
-      v: Int, fileSubset: Option[Set[String]],
+      files: Seq[String], canonV: Int, schema: StructType,
       dv: Map[String, Array[Long]] = Map.empty): HadoopFsRelation = {
-    val (schema, inverse) = Snapshots.evolutionInfo(spark, dir, v)
-    val rels = fileSubset match {
-      case None => Snapshots.files(spark, dir, v)
-      case Some(keep) => Snapshots.files(spark, dir, v).filter(keep)
-    }
     val root = new Path(dir)
     val fsys = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // one listing of data/ resolves every manifest path's FileStatus
     // (O(files) metadata, no per-file RPC)
     val byName: Map[String, FileStatus] = {
       val dataDir = new Path(dir, "data")
-      if (fsys.exists(dataDir))
+      if (files.nonEmpty && fsys.exists(dataDir))
         fsys.listStatus(dataDir).filter(_.isFile)
           .map(st => st.getPath.getName -> st).toMap
       else Map.empty
     }
-    val statuses = rels.map { rel =>
+    val statuses = files.map { rel =>
       rel -> byName.getOrElse(new Path(rel).getName,
         fsys.getFileStatus(new Path(dir, rel)))
     }
-    HadoopFsRelation(new SnapshotFileIndex(spark, dir, v, root, statuses),
-      StructType(Nil), schema, None, new SnapshotParquetFormat(inverse, dv),
+    HadoopFsRelation(
+      new SnapshotFileIndex(spark, dir, canonV, root, statuses),
+      StructType(Nil), schema, None,
+      new SnapshotParquetFormat(
+        Snapshots.vintageReads(spark, dir, files, canonV, schema), dv),
       Map.empty)(spark)
   }
 
-  /** The relation a read of version `v` plans: [[fileRelation]] with the
-    * version's deletion vector applied. `fileSubset` restricts it as
-    * there (key-stat pruning for the MERGE join scans). */
+  /** [[fileRelation]] with deletion-vector frame `dv` applied: up to
+    * `maxDvPositions` positions load onto the driver once and are
+    * skipped in the reader; past the cap the read falls back to the
+    * distributed anti-join ([[DvJoinRelation]]) instead of refusing. */
   private[sources] def relationFor(spark: SparkSession, dir: String,
-      v: Int, maxDvPositions: Long,
-      fileSubset: Option[Set[String]] = None): BaseRelation = {
-    // Right(map) = the driver-held position map (the common, broadcast-
-    // cheap case); Left = over the cap, read via the distributed
-    // anti-join fallback (DvJoinRelation) instead of refusing
-    val dv: Either[Unit, Map[String, Array[Long]]] =
-      Snapshots.dvFrame(spark, dir, v) match {
-        case None => Right(Map.empty)
-        case Some(frame) =>
-          // ONE job: cap-check on the collected size (collecting and
-          // counting separately would scan the vector twice)
-          val rows = frame.limit(
-            math.min(maxDvPositions + 1, Int.MaxValue.toLong).toInt)
-            .collect()
-          if (rows.length > maxDvPositions) Left(())
-          else Right(rows
+      files: Seq[String], canonV: Int, schema: StructType,
+      dv: Option[DataFrame],
+      maxDvPositions: Long = DefaultMaxDvPositions): BaseRelation = {
+    // ONE job: cap-check on the collected size (collecting and counting
+    // separately would scan the vector twice)
+    val positions = dv.map(_.limit(
+      math.min(maxDvPositions + 1, Int.MaxValue.toLong).toInt).collect())
+    positions match {
+      case Some(rows) if rows.length > maxDvPositions =>
+        // over the cap: same vectorized scan (no DV), live rows resolved
+        // by a DISTRIBUTED anti-join on (file_path, row_index) — a
+        // version carrying billions of pending deletes stays readable at
+        // the cost of the join, and OPTIMIZE restores the map path
+        new DvJoinRelation(spark, schema,
+          fileRelation(spark, dir, files, canonV, schema), dv.get)
+      case _ =>
+        fileRelation(spark, dir, files, canonV, schema,
+          positions.getOrElse(Array.empty)
             .map(r => (new Path(r.getString(0)).getName, r.getLong(1)))
-            .groupBy(_._1).map { case (f, xs) =>
-              f -> xs.map(_._2).sorted })
-      }
-    dv match {
-      case Right(positions) =>
-        fileRelation(spark, dir, v, fileSubset, positions)
-      case Left(()) =>
-        // over-cap fallback: same vectorized scan (no DV), live rows
-        // resolved by a DISTRIBUTED anti-join on (file_path, row_index)
-        // instead of a driver-held position map — a version carrying
-        // billions of pending deletes stays readable at the cost of the
-        // join, and OPTIMIZE restores the map path
-        val base = fileRelation(spark, dir, v, fileSubset)
-        new DvJoinRelation(spark, dir, v, base.dataSchema, base)
+            .groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2).sorted })
     }
+  }
+
+  /** Version `v` as a read plans it: its files (restricted to
+    * `fileSubset` when given — the caller asserts the dropped files
+    * cannot contribute), its evolved schema, its deletion vector. */
+  private[sources] def versionRelation(spark: SparkSession, dir: String,
+      v: Int, maxDvPositions: Long = DefaultMaxDvPositions,
+      fileSubset: Option[Set[String]] = None): BaseRelation = {
+    val all = Snapshots.files(spark, dir, v)
+    relationFor(spark, dir, fileSubset.fold(all)(all.filter), v,
+      Snapshots.evolvedSchema(spark, dir, v, all),
+      Snapshots.dvFrame(spark, dir, v), maxDvPositions)
   }
 }
 
@@ -1578,8 +1472,7 @@ object SnapshotSource {
   * `needConversion=false`: the built scan hands back the join's
   * already-internal rows, no Row re-encoding. */
 private[sources] class DvJoinRelation(spark: SparkSession,
-    dir: String, v: Int, override val schema: StructType,
-    base: HadoopFsRelation)
+    override val schema: StructType, base: HadoopFsRelation, dv: DataFrame)
     extends BaseRelation with PrunedFilteredScan {
 
   override def sqlContext: SQLContext = spark.sqlContext
@@ -1601,10 +1494,7 @@ private[sources] class DvJoinRelation(spark: SparkSession,
     val withPos = df.select(col("*"),
       col("_metadata.file_path").as("_fp"),
       col("_metadata.row_index").as("_ri"))
-    val dvf = Snapshots.dvFrame(spark, dir, v).getOrElse(
-      throw new IllegalStateException(
-        s"graft-snapshots: version $v of $dir lost its deletion vector"))
-    withPos.join(dvf.select(col("file_path").as("_fp"),
+    withPos.join(dv.select(col("file_path").as("_fp"),
         col("row_index").as("_ri")), Seq("_fp", "_ri"), "left_anti")
       .select(requiredColumns.map(col).toSeq: _*)
   }
@@ -1641,16 +1531,18 @@ private[sources] object DvJoinRelation {
   }
 }
 
-/** The manifest-resolved file set of one snapshot version as a Spark
-  * [[FileIndex]] (`files` pairs each manifest path with its status),
-  * with per-file stats pruning applied in `listFiles` — the hook
+/** A manifest-resolved file set as a Spark [[FileIndex]] (`files` pairs
+  * each manifest path with its status; the scan's columns are canonical
+  * at version `canonV`), with per-file stats pruning applied in
+  * `listFiles` — the hook
   * `FileSourceStrategy` hands the query's pushed data filters to. A file
   * the one pruning rule ([[StatsPruning]]) proves cannot match is
   * dropped from the plan before its footer is ever opened (the scan's
   * `numFiles` metric pins it); every filter is re-applied by the engine
   * above the scan, so pruning is pure optimization, never correctness. */
 private[sources] class SnapshotFileIndex(spark: SparkSession, dir: String,
-    v: Int, root: Path, files: Seq[(String, FileStatus)]) extends FileIndex {
+    canonV: Int, root: Path, files: Seq[(String, FileStatus)])
+    extends FileIndex {
 
   override def rootPaths: Seq[Path] = Seq(root)
   override def partitionSchema: StructType = StructType(Nil)
@@ -1663,7 +1555,10 @@ private[sources] class SnapshotFileIndex(spark: SparkSession, dir: String,
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val groups = dataFilters.reduceOption(CatAnd)
       .map(StatsPruning.groupsOf(spark, dir, _)).getOrElse(Seq.empty)
-    val kept = StatsPruning.keep(spark, dir, v, files.map(_._1), groups)
+    // stats are recorded by the commit that wrote each file
+    val rels = files.map(_._1)
+    val statsV = (canonV +: rels.map(Snapshots.vintageOf)).max
+    val kept = StatsPruning.keep(spark, dir, statsV, rels, groups, canonV)
       .toSet
     SnapshotFileIndex.lastPruneCounts = (kept.size, files.size)
     Seq(PartitionDirectory(InternalRow.empty,
@@ -1680,26 +1575,30 @@ private[sources] object SnapshotFileIndex {
 
 /** [[ParquetFileFormat]] that reads snapshot vintages: per file, the
   * requested schema's canonical column names are remapped to the names
-  * the writing commit used (inverse rename chain), so old files decode
-  * natively — positional output already matches the canonical schema,
-  * type widening rides the parquet reader's schema promotion, and
-  * missing columns backfill null. When the version carries a deletion
-  * vector, dead row ordinals (broadcast once) are skipped inside the
-  * reader — files stay unsplit and unfiltered in that mode so ordinals
-  * stay aligned with commit-time `_metadata.row_index` positions (the
-  * engine re-applies every filter above the scan). */
+  * the writing commit used (`vintages`, from [[Snapshots.vintageReads]]),
+  * so old files decode natively — positional output already matches the
+  * canonical schema, type widening rides the parquet reader's schema
+  * promotion, and missing columns backfill null. A column stored at a
+  * type the reader cannot widen in place is requested at that type and
+  * cast after decoding (rows, not columnar batches, for such a scan).
+  * When the scan carries a deletion vector, dead row ordinals (broadcast
+  * once) are skipped inside the reader — files stay unsplit and
+  * unfiltered in that mode so ordinals stay aligned with commit-time
+  * `_metadata.row_index` positions (the engine re-applies every filter
+  * above the scan). */
 private[sources] class SnapshotParquetFormat(
-    inverse: Map[Int, Map[String, String]],
+    vintages: Map[Int, Snapshots.VintageRead],
     dv: Map[String, Array[Long]]) extends ParquetFileFormat {
 
-  private val anyRenames = inverse.values.exists(_.nonEmpty)
+  private val plain = Snapshots.VintageRead(Map.empty, Map.empty)
+  private val anyCasts = vintages.values.exists(_.casts.nonEmpty)
   private val hasDv = dv.nonEmpty
 
   override def toString: String = "SnapshotParquet"
 
   override def supportBatch(spark: SparkSession,
       schema: StructType): Boolean =
-    !hasDv && super.supportBatch(spark, schema)
+    !hasDv && !anyCasts && super.supportBatch(spark, schema)
 
   override def isSplitable(spark: SparkSession,
       options: Map[String, String], path: Path): Boolean =
@@ -1711,39 +1610,52 @@ private[sources] class SnapshotParquetFormat(
       options: Map[String, String],
       hadoopConf: org.apache.hadoop.conf.Configuration)
       : PartitionedFile => Iterator[InternalRow] = {
-    if (!anyRenames && !hasDv)
+    if (vintages.values.forall(_ == plain) && !hasDv)
       return super.buildReaderWithPartitionValues(spark, dataSchema,
         partitionSchema, requiredSchema, filters, options, hadoopConf)
-    // one delegate reader per vintage-distinct name mapping; parquet
-    // filters are dropped when a DV is live (row-group skips would
-    // desynchronize ordinals) and name-remapped otherwise
-    val readers: Map[Map[String, String],
-        PartitionedFile => Iterator[InternalRow]] =
-      (inverse.values.toSet + Map.empty[String, String]).map { inv =>
-        def local(st: StructType) = Snapshots.localizeSchema(st, inv)
-        val fl =
-          if (hasDv) Seq.empty
-          else filters.flatMap(SnapshotParquetFormat.remapFilter(_, inv))
-        // each delegate gets its OWN conf copy: the parquet reader writes
-        // the requested schema into the conf it is handed, and a shared
-        // mutable conf would leave every vintage reading the LAST
-        // delegate's schema (nulls from renamed vintages)
-        inv -> super.buildReaderWithPartitionValues(spark,
-          local(dataSchema), partitionSchema, local(requiredSchema), fl,
-          options, new org.apache.hadoop.conf.Configuration(hadoopConf))
-      }.toMap
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
+      UnsafeProjection}
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    // one delegate reader per vintage-distinct way of reading, plus the
+    // projection casting its stored-type columns; parquet filters are
+    // dropped when a DV is live (row-group skips would desynchronize
+    // ordinals), and otherwise name-remapped, minus those on cast
+    // columns (their literals are typed for the canonical column)
+    val readers = (vintages.values.toSet + plain).map { vr =>
+      def local(st: StructType) = Snapshots.localizeSchema(
+        StructType(st.map(f => vr.casts.get(f.name)
+          .fold(f)(t => f.copy(dataType = t)))), vr.names)
+      val fl =
+        if (hasDv) Seq.empty
+        else filters.filterNot(_.references.exists(vr.casts.contains))
+          .flatMap(SnapshotParquetFormat.remapFilter(_, vr.names))
+      val cast =
+        if (!requiredSchema.fieldNames.exists(vr.casts.contains)) None
+        else Some((requiredSchema ++ partitionSchema).zipWithIndex.map {
+          case (f, i) => vr.casts.get(f.name) match {
+            case Some(t) => Cast(BoundReference(i, t, nullable = true),
+              f.dataType, tz)
+            case None => BoundReference(i, f.dataType, f.nullable)
+          }
+        })
+      // each delegate gets its OWN conf copy: the parquet reader writes
+      // the requested schema into the conf it is handed, and a shared
+      // mutable conf would leave every vintage reading the LAST
+      // delegate's schema (nulls from renamed vintages)
+      vr -> (super.buildReaderWithPartitionValues(spark,
+        local(dataSchema), partitionSchema, local(requiredSchema), fl,
+        options, new org.apache.hadoop.conf.Configuration(hadoopConf)),
+        cast)
+    }.toMap
     val dvBc = if (hasDv) Some(spark.sparkContext.broadcast(dv)) else None
-    val invByVintage = inverse
+    val byVintage = vintages
+    val fallback = plain
     (file: PartitionedFile) => {
       val name = file.toPath.getName
-      val vintage = name match {
-        case Snapshots.FileCommit(c) => c.toInt
-        case _ => throw new IllegalStateException(
-          s"graft-snapshots: cannot attribute $name to a commit")
-      }
-      val inv = invByVintage.getOrElse(vintage, Map.empty)
-      val rows = readers(inv)(file)
-      dvBc.flatMap(_.value.get(name)) match {
+      val (read, cast) =
+        readers(byVintage.getOrElse(Snapshots.vintageOf(name), fallback))
+      val rows = read(file)
+      val live = dvBc.flatMap(_.value.get(name)) match {
         case None => rows
         case Some(dead) =>
           // sequential ordinal filter: reader yields full-file row order
@@ -1757,6 +1669,7 @@ private[sources] class SnapshotParquetFormat(
             !(cursor < dead.length && dead(cursor) == ordinal)
           }
       }
+      cast.fold(live)(exprs => live.map(UnsafeProjection.create(exprs)))
     }
   }
 }

@@ -20,9 +20,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * become the new version while every prior version stays readable.
   * Concurrent writers serialize through an atomic claim on the version
   * counter (see [[commit]]); schema evolution rides in `vN.renames`
-  * metadata ([[readEvolved]]), per-file key stats in `vN.stats`
-  * ([[readPruned]]), and compliance deletion rewrites history in place
-  * ([[purge]]).
+  * metadata and every read presents a version under its evolved schema
+  * ([[read]], [[evolvedSchema]]), per-file key stats in `vN.stats` prune
+  * whole files ([[readPruned]]), and compliance deletion rewrites history
+  * in place ([[purge]]). Every read of data files — [[read]],
+  * [[readAsOf]], [[readPruned]], [[optimize]], [[compact]], the stream
+  * source's micro-batches and the change feed — plans the one
+  * vintage-aware scan SQL reads use ([[SnapshotSource.relationFor]]).
   */
 object Snapshots {
 
@@ -89,7 +93,7 @@ object Snapshots {
     * as `old`, and from this version on its canonical name is `new`. The
     * mapping rides in a tiny `vN.renames` side-file next to the manifest
     * (the table-metadata home); no data file is rewritten — history is
-    * remapped at read time by [[readEvolved]].
+    * remapped at read time by [[read]].
     *
     * `statsCols` records per-FILE min/max of the named columns in a
     * `vN.stats` side-file (one extra aggregate over the staged files —
@@ -916,8 +920,8 @@ object Snapshots {
   /** Reserved rename TARGET that records a logical DROP COLUMN in the
     * rename-chain machinery: a `vN.renames` entry `(col -> DropMarker)`
     * means the column ceases to exist from version N on. History stays
-    * readable — time travel below N shows the column; [[readEvolved]] /
-    * [[evolutionInfo]] exclude it at N and beyond; a LATER commit may
+    * readable — time travel below N shows the column; [[read]] /
+    * [[evolvedSchema]] exclude it at N and beyond; a LATER commit may
     * re-add a fresh column under the same name (old vintages backfill
     * null for it, exactly like any added column). A NUL char can never
     * collide with a real column name. */
@@ -968,7 +972,8 @@ object Snapshots {
   /** The name the (dotted) canonical path `canonical` of version
     * `canonV` has in the files of vintage `c` — the one canonical →
     * vintage name walk, behind per-file stats lookups ([[StatsPruning]])
-    * and the change feed's per-vintage reads. Older vintages walk back
+    * and every scan's per-vintage requested schema ([[vintageReads]]).
+    * Older vintages walk back
     * through the renames of (c, canonV], in reverse entry order within a
     * version so a chained same-version rename (a→b, b→c) inverts exactly;
     * newer vintages walk forward through (canonV, c]. [[DropMarker]] when
@@ -990,6 +995,84 @@ object Snapshots {
       for (later <- (canonV + 1) to c; (o, n) <- chain(later))
         cur = applyEntry(cur, o, n)
       cur
+    }
+  }
+
+  /** The commit that wrote manifest path `rel` (its `vC-…` name survives
+    * purge rewrites). */
+  private[sources] def vintageOf(rel: String): Int = rel match {
+    case FileCommit(c) => c.toInt
+    case other => throw new IllegalStateException(
+      s"graft-snapshots: cannot attribute $other to a commit")
+  }
+
+  /** How the snapshot scan reads one vintage's files under a canonical
+    * schema. `names` maps each canonical (dotted) path to the LEAF the
+    * vintage's files store it under, by [[localName]] (identity entries
+    * omitted); a path the vintage cannot hold — dropped, or a name
+    * re-used after a rename or drop — maps to a [[DropMarker]]-prefixed
+    * leaf no file contains, so it reads null instead of an unrelated old
+    * column. `casts` holds the top-level columns stored at a type the
+    * parquet readers cannot widen in place (say long into double): they
+    * are requested at that stored type and cast after decoding. */
+  private[sources] final case class VintageRead(names: Map[String, String],
+      casts: Map[String, org.apache.spark.sql.types.DataType])
+
+  /** The [[VintageRead]] of every vintage among `paths` under `schema`,
+    * canonical at version `canonV`: one rename-chain fetch and one
+    * driver-side footer read per vintage, no job. */
+  private[sources] def vintageReads(s: SparkSession, dir: String,
+      paths: Seq[String], canonV: Int,
+      schema: org.apache.spark.sql.types.StructType)
+      : Map[Int, VintageRead] = {
+    val byVintage = paths.groupBy(vintageOf)
+    if (byVintage.isEmpty) Map.empty
+    else {
+      val local = localName(renameChain(s, dir,
+        (canonV +: byVintage.keys.toSeq).max), canonV) _
+      val canonical = schema.fields.toSeq.flatMap(f =>
+        f.name +: subPaths(f.name, f.dataType))
+      val conf = s.sparkContext.hadoopConfiguration
+      byVintage.map { case (c, ps) =>
+        val names = canonical.flatMap { p =>
+          val leaf = local(c, p) match {
+            case DropMarker => DropMarker + leafOf(p)
+            case l => leafOf(l)
+          }
+          if (leaf == leafOf(p)) None else Some(p -> leaf)
+        }.toMap
+        val stored = org.apache.spark.sql.execution.datasources.parquet
+          .GraftParquetIO.footerSchema(s, new Path(dir, ps.head), conf)
+        val casts = schema.fields.toSeq.flatMap { f =>
+          stored.find(_.name == names.getOrElse(f.name, f.name))
+            .map(_.dataType).filter(castAfterRead(_, f.dataType))
+            .map(f.name -> _)
+        }.toMap
+        c -> VintageRead(names, casts)
+      }
+    }
+  }
+
+  /** Whether a column stored as `stored` widens losslessly to
+    * `canonical` in a way the parquet readers (vectorized and row-based
+    * alike) cannot decode in place. They promote int → long, int →
+    * double and float → double; array elements and map entries follow
+    * the same rule; struct subfields are left to the reader (a
+    * positional cast cannot align a struct whose subfields were added
+    * or renamed). Anything else that widens is cast. */
+  private def castAfterRead(stored: org.apache.spark.sql.types.DataType,
+      canonical: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    (stored, canonical) match {
+      case (a, b) if a == b => false
+      case (IntegerType, LongType | DoubleType) | (FloatType, DoubleType) =>
+        false
+      case (ArrayType(se, _), ArrayType(ce, _)) => castAfterRead(se, ce)
+      case (MapType(sk, sv, _), MapType(ck, cv, _)) =>
+        castAfterRead(sk, ck) || castAfterRead(sv, cv)
+      case (_: StructType, _) => false
+      case _ => scala.util.Try(widen(stored, canonical)).toOption
+        .contains(canonical)
     }
   }
 
@@ -1027,46 +1110,6 @@ object Snapshots {
         case _ => f.copy(name = nm)
       }
     })
-
-  /** Align column `c` (typed `from`) to type `to`: structs align BY
-    * NAME (missing subfields backfill null, shared ones recurse — a
-    * positional struct cast would refuse unioned field sets outright),
-    * arrays align element-wise, everything else is a plain cast. A null
-    * struct stays null rather than becoming a struct of nulls. */
-  private[sources] def alignTo(c: org.apache.spark.sql.Column,
-      from: org.apache.spark.sql.types.DataType,
-      to: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{lit, struct, transform, when}
-    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-    (from, to) match {
-      case (f, t) if f == t => c
-      case (f: StructType, t: StructType) =>
-        val kids = t.fields.toSeq.map { tf =>
-          f.fields.find(_.name == tf.name) match {
-            case Some(ff) =>
-              alignTo(c.getField(tf.name), ff.dataType, tf.dataType)
-                .as(tf.name)
-            case None => lit(null).cast(tf.dataType).as(tf.name)
-          }
-        }
-        when(c.isNull, lit(null).cast(t)).otherwise(struct(kids: _*))
-      case (f: ArrayType, t: ArrayType) =>
-        transform(c, x => alignTo(x, f.elementType, t.elementType))
-      case (f: MapType, t: MapType) =>
-        // recurse into key/value types the way arrays recurse into
-        // elements — widen() unions struct field sets inside map values,
-        // so two vintages with diverging map-value structs must align by
-        // name here rather than hit a refusing plain cast (r21, advisor
-        // finding; reachable via direct snapshot-API writes)
-        org.apache.spark.sql.functions.map_from_arrays(
-          transform(org.apache.spark.sql.functions.map_keys(c),
-            k => alignTo(k, f.keyType, t.keyType)),
-          transform(org.apache.spark.sql.functions.map_values(c),
-            v => alignTo(v, f.valueType, t.valueType)))
-      case (_, t) => c.cast(t)
-    }
-  }
 
   private[sources] val CheckpointEvery = 20
 
@@ -1541,27 +1584,22 @@ object Snapshots {
   /** Version `v` restricted to files whose recorded `keyCol` stats
     * intersect [lo, hi] — file-level pruning from METADATA alone: the
     * dropped files are never opened, not even for a footer. Files with no
-    * recorded stats are always read (conservative). Returns the pruned
-    * frame plus (filesRead, filesTotal) for auditability. */
+    * recorded stats are always read (conservative). `keyCol` is canonical
+    * at `v`; the frame is [[read]]'s scan over the kept files. Returns
+    * the pruned frame plus (filesRead, filesTotal) for auditability. */
   def readPruned(s: SparkSession, dir: String, v: Int, keyCol: String,
       lo: Any, hi: Any): (DataFrame, (Int, Int)) = {
     import org.apache.spark.sql.catalyst.expressions.{And,
       AttributeReference, GreaterThanOrEqual, LessThanOrEqual, Literal}
+    import org.apache.spark.sql.functions.col
     val fset = files(s, dir, v)
     val key = AttributeReference(keyCol, Literal(lo).dataType)()
     val keep = StatsPruning.keep(s, dir, v, fset, StatsPruning.groupsOf(s,
       dir, And(GreaterThanOrEqual(key, Literal(lo)),
         LessThanOrEqual(key, Literal(hi)))))
-    val df0 =
-      if (keep.isEmpty)
-        s.read.parquet(new Path(dir, fset.head).toString).limit(0)
-      else {
-        val base = s.read.parquet(keep.map(p => new Path(dir, p).toString): _*)
-        if (hasDv(s, dir, v)) applyDv(s, dir, v, withMeta(base)) else base
-      }
-    import org.apache.spark.sql.functions.col
-    val df = df0.filter(col(keyCol) >= lo && col(keyCol) <= hi)
-    (df, (keep.size, fset.size))
+    val df = s.baseRelationToDataFrame(SnapshotSource.relationFor(s, dir,
+      keep, v, evolvedSchema(s, dir, v, fset), dvFrame(s, dir, v)))
+    (df.filter(col(keyCol) >= lo && col(keyCol) <= hi), (keep.size, fset.size))
   }
 
   /** Renames declared AT commit `v` (empty if none). */
@@ -1626,118 +1664,39 @@ object Snapshots {
 
   private[sources] val FileCommit = """^(?:data/)?(?:purged-)*v(\d+)-.*$""".r
 
-  /** Read version `v` under the table's EVOLVED schema: files are grouped
-    * by the commit that wrote them (recoverable from the `vC-i-…` name,
-    * including through purge rewrites), each vintage gets the rename
-    * chain of every LATER commit ≤ v applied, column types are widened to
-    * the vintages' common type, and columns a vintage predates backfill
-    * as null (unionByName). History is never rewritten: evolution costs
-    * one projection per vintage at read time, nothing at commit time —
-    * the posture a 100 TB multi-year table requires (f16 proves the
-    * read-side union; this adds type WIDENING int→long and RENAME
-    * mapping, neither of which parquet mergeSchema can express — it
-    * errors on int×long and sees a renamed column as drop+add). */
-  def readEvolved(s: SparkSession, dir: String, v: Int): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val fset = files(s, dir, v)
-    val dv = hasDv(s, dir, v)
-    val byCommit: Map[Int, Seq[String]] = fset.groupBy {
-      case FileCommit(c) => c.toInt
-      case other => throw new IllegalStateException(
-        s"readEvolved: cannot attribute $other to a commit")
-    }
-    val chain = renameChain(s, dir, v)
-    val frames = byCommit.toSeq.sortBy(_._1).map { case (c, paths) =>
-      val base = s.read.parquet(paths.map(p => new Path(dir, p).toString): _*)
-      // position metadata rides each vintage scan so a deletion vector
-      // can be applied after the union (renames never touch _fp/_ri)
-      var df = if (dv) withMeta(base) else base
-      for (later <- (c + 1) to v; (o, n) <- chain(later))
-        df = applyChainEntryDf(df, o, n)
-      df
-    }
-    val target = frames.flatMap(_.schema.fields)
-      .groupBy(_.name).map { case (n, fs) =>
-        n -> fs.map(_.dataType).reduce(widen) }
-    val casted = frames.map { f =>
-      f.select(f.columns.toSeq.map(c =>
-        alignTo(col(c), f.schema(c).dataType, target(c)).as(c)): _*) }
-    val union = casted.reduce(_.unionByName(_, allowMissingColumns = true))
-    if (dv) applyDv(s, dir, v, union) else union
-  }
-
-  /** Apply one rename-chain entry to a DataFrame at read time: a
-    * top-level entry renames/drops the column, a dotted entry rebuilds
-    * the parent struct in place (withField + dropFields — field order
-    * shifts are re-normalized by [[alignTo]] before any union). Entries
-    * whose path the frame lacks are no-ops: the vintage predates the
-    * field. */
-  private def applyChainEntryDf(df: DataFrame, o: String,
-      n: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.{DataType, StructType}
-    if (!o.contains('.')) {
-      if (!df.columns.contains(o)) df
-      else if (n == DropMarker) df.drop(o)
-      else df.withColumnRenamed(o, n)
-    } else {
-      val top = o.takeWhile(_ != '.')
-      val rest = o.substring(top.length + 1)
-      def hasPath(dt: DataType, segs: List[String]): Boolean =
-        (dt, segs) match {
-          case (_, Nil) => true
-          case (st: StructType, h :: t) =>
-            st.fields.find(_.name == h).exists(f => hasPath(f.dataType, t))
-          case _ => false
-        }
-      val i = df.schema.fieldNames.indexOf(top)
-      if (i < 0 || !hasPath(df.schema.fields(i).dataType,
-          rest.split('.').toList)) df
-      else if (n == DropMarker)
-        df.withColumn(top, col(top).dropFields(rest))
-      else {
-        // a nested rename stays inside its parent struct, so the new
-        // full path shares the old top segment — strip it for withField
-        val newRest = n.substring(n.indexOf('.') + 1)
-        df.withColumn(top,
-          col(top).withField(newRest, col(o)).dropFields(rest))
-      }
-    }
-  }
-
   /** Metadata-only resolution of version `v`'s EVOLVED schema: per
-    * vintage, one parquet footer is read (a commit writes one DataFrame,
-    * so its files share a schema), the rename chain of every later
-    * commit ≤ v maps local names to canonical ones, and types widen
-    * across vintages ([[widen]]). Returns the evolved schema (column
-    * order matching [[readEvolved]]'s union: first vintage's columns,
-    * then later additions in vintage order) plus, per vintage, the
-    * INVERSE name map canonical → vintage-local (identity entries
-    * omitted) — what a scan needs to request columns from old files
-    * under their historical names. O(vintages) footer reads, no data. */
-  private[sources] def evolutionInfo(s: SparkSession, dir: String, v: Int)
-      : (org.apache.spark.sql.types.StructType, Map[Int, Map[String, String]]) = {
+    * vintage, one parquet footer is read on the driver (a commit writes
+    * one DataFrame, so its files share a schema; no Spark job), the
+    * rename chain of every later commit ≤ v maps local names to
+    * canonical ones, and types widen across vintages ([[widen]]). Column
+    * order: the first vintage's columns, then later additions in vintage
+    * order. O(vintages) footer reads, no data. */
+  private[sources] def evolvedSchema(s: SparkSession, dir: String, v: Int)
+      : org.apache.spark.sql.types.StructType =
+    evolvedSchema(s, dir, v, files(s, dir, v))
+
+  /** [[evolvedSchema]] over `fset`, version `v`'s already-read file
+    * list. */
+  private[sources] def evolvedSchema(s: SparkSession, dir: String, v: Int,
+      fset: Seq[String]): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types.{StructField, StructType}
-    val fset = files(s, dir, v)
-    val byCommit: Map[Int, Seq[String]] = fset.groupBy {
-      case FileCommit(c) => c.toInt
-      case other => throw new IllegalStateException(
-        s"evolutionInfo: cannot attribute $other to a commit")
-    }
     val chain = renameChain(s, dir, v)
-    val vintages = byCommit.toSeq.sortBy(_._1).map { case (c, paths) =>
-      val sch = s.read.parquet(new Path(dir, paths.head).toString).schema
-      // fwd maps every LOCAL dotted path — top-level names plus struct
-      // subfield paths — to its CURRENT canonical path (or DropMarker);
-      // a purely top-level history degenerates to the original
-      // name-to-name walk
-      var fwd: Map[String, String] =
-        sch.fields.toSeq.flatMap(f =>
-          f.name +: subPaths(f.name, f.dataType))
-          .map(n => n -> n).toMap
-      for (later <- (c + 1) to v; (o, n) <- chain(later))
-        fwd = fwd.map { case (l, cur) => l -> applyEntry(cur, o, n) }
-      (c, sch, fwd)
+    val conf = s.sparkContext.hadoopConfiguration
+    val vintages = fset.groupBy(vintageOf).toSeq.sortBy(_._1).map {
+      case (c, paths) =>
+        val sch = org.apache.spark.sql.execution.datasources.parquet
+          .GraftParquetIO.footerSchema(s, new Path(dir, paths.head), conf)
+        // fwd maps every LOCAL dotted path — top-level names plus struct
+        // subfield paths — to its CURRENT canonical path (or DropMarker);
+        // a purely top-level history degenerates to the original
+        // name-to-name walk
+        var fwd: Map[String, String] =
+          sch.fields.toSeq.flatMap(f =>
+            f.name +: subPaths(f.name, f.dataType))
+            .map(n => n -> n).toMap
+        for (later <- (c + 1) to v; (o, n) <- chain(later))
+          fwd = fwd.map { case (l, cur) => l -> applyEntry(cur, o, n) }
+        (sch, fwd)
     }
     // the CANONICALIZED type of a vintage-local field: struct subfields
     // rename to their canonical leaves and logically-dropped ones vanish,
@@ -1757,59 +1716,18 @@ object Snapshots {
         case other => other
       }
     val widened: Map[String, org.apache.spark.sql.types.DataType] =
-      vintages.flatMap { case (_, sch, fwd) =>
+      vintages.flatMap { case (sch, fwd) =>
         sch.fields.map(f =>
           fwd(f.name) -> canonType(f.name, f.dataType, fwd)) }
         .filter(_._1 != DropMarker) // logically dropped at <= v
         .groupBy(_._1).map { case (n, ts) =>
           n -> ts.map(_._2).reduce(widen) }
     val order = scala.collection.mutable.LinkedHashSet.empty[String]
-    vintages.foreach { case (_, sch, fwd) =>
+    vintages.foreach { case (sch, fwd) =>
       sch.fieldNames.foreach { n =>
         if (fwd(n) != DropMarker) { order += fwd(n); () } } }
-    val evolved = StructType(order.toSeq.map(n =>
+    StructType(order.toSeq.map(n =>
       StructField(n, widened(n), nullable = true)))
-    def parentOf(p: String): String = {
-      val i = p.lastIndexOf('.'); if (i < 0) "" else p.substring(0, i)
-    }
-    val inverse = vintages.map { case (c, _, fwd) =>
-      val byCanonical: Map[String, String] =
-        fwd.collect { case (l, cn) if cn != DropMarker => cn -> l }
-      val top = order.iterator.flatMap { cn =>
-        byCanonical.get(cn) match {
-          case Some(l) if l != cn => Some(cn -> l)
-          case Some(_) => None // identity entry omitted
-          case None if fwd.contains(cn) =>
-            // the vintage HAS a physical column named `cn`, but it maps
-            // elsewhere (renamed away or dropped) — MASK it with a name
-            // no file can contain (reads as null), or a canonical name
-            // RE-USED after a rename/drop would silently leak the
-            // unrelated old column's values
-            Some(cn -> (DropMarker + cn))
-          case None => None // genuinely absent: backfills null
-        }
-      }.toMap
-      // nested entries: canonical subfield path → vintage-local LEAF
-      // name (the reader's recursive schema localization rebuilds full
-      // paths), with the same re-used-name masking — a subfield dropped
-      // then re-added must read null in pre-drop vintages, never the
-      // unrelated old values
-      val nested = evolved.fields.toSeq
-        .flatMap(f => subPaths(f.name, f.dataType))
-        .flatMap { cn =>
-          byCanonical.get(cn) match {
-            case Some(l) if leafOf(l) != leafOf(cn) => Some(cn -> leafOf(l))
-            case Some(_) => None
-            case None => byCanonical.get(parentOf(cn)) match {
-              case Some(pl) if fwd.contains(pl + "." + leafOf(cn)) =>
-                Some(cn -> (DropMarker + leafOf(cn)))
-              case _ => None // absent (or under an absent/masked parent)
-            }
-          }
-        }
-      c -> (top ++ nested)
-    }.toMap
-    (evolved, inverse)
   }
 
   /** The manifest body: one relative path per line inside a JSON array
@@ -1893,21 +1811,9 @@ object Snapshots {
   private[sources] def hasDv(s: SparkSession, dir: String, v: Int): Boolean =
     fs(s, dir).exists(dvDir(dir, v))
 
-  /** Anti-join `df` (which must expose `_fp`/`_ri` hidden-metadata
-    * columns) against version `v`'s deletion vector, if any. */
-  private def applyDv(s: SparkSession, dir: String, v: Int,
-      df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    dvFrame(s, dir, v) match {
-      case None => df.drop("_fp", "_ri")
-      case Some(dv) =>
-        df.join(dv.select(col("file_path").as("_fp"),
-            col("row_index").as("_ri")), Seq("_fp", "_ri"), "left_anti")
-          .drop("_fp", "_ri")
-    }
-  }
-
-  private def withMeta(df: DataFrame): DataFrame = {
+  /** `df` (a file scan) plus its rows' `_fp`/`_ri` positions — the
+    * `(file_path, row_index)` a deletion vector records. */
+  private[sources] def withMeta(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.col
     df.withColumn("_fp", col("_metadata.file_path"))
       .withColumn("_ri", col("_metadata.row_index"))
@@ -1926,9 +1832,11 @@ object Snapshots {
     * schema, so renamed and widened vintages read like a SELECT, plus
     * `_fp`/`_ri` positions. A filter over it prunes files like a read. */
   private def positionsScan(s: SparkSession, dir: String, v: Int,
-      subset: Option[Set[String]] = None): DataFrame =
-    withMeta(s.baseRelationToDataFrame(
-      SnapshotSource.fileRelation(s, dir, v, subset)))
+      subset: Option[Set[String]] = None): DataFrame = {
+    val all = files(s, dir, v)
+    withMeta(s.baseRelationToDataFrame(SnapshotSource.fileRelation(s, dir,
+      subset.fold(all)(all.filter), v, evolvedSchema(s, dir, v, all))))
+  }
 
   /** MERGE-ON-READ delete: rows matching `cond` in the latest version are
     * recorded as (file, row_index) positions in a deletion vector and a
@@ -2671,12 +2579,15 @@ object Snapshots {
     read(s, dir, v)
   }
 
-  /** Scan exactly version `v`'s file set, minus any deletion vector. */
-  def read(s: SparkSession, dir: String, v: Int): DataFrame = {
-    val paths = files(s, dir, v).map(p => new Path(dir, p).toString)
-    val base = s.read.parquet(paths: _*)
-    if (hasDv(s, dir, v)) applyDv(s, dir, v, withMeta(base)) else base
-  }
+  /** Version `v` under its EVOLVED schema: exactly its file set, every
+    * vintage's columns under the names canonical at `v` (renames mapped,
+    * types widened, columns a vintage predates backfilled null), minus
+    * any deletion vector — the relation SQL and
+    * `format("graft-snapshots")` plan ([[SnapshotSource.versionRelation]]).
+    * History is never rewritten: evolution costs nothing at commit time
+    * and no per-row work at read time. */
+  def read(s: SparkSession, dir: String, v: Int): DataFrame =
+    s.baseRelationToDataFrame(SnapshotSource.versionRelation(s, dir, v))
 
   // ---- named refs: branches and tags ------------------------------------
 
@@ -3509,7 +3420,7 @@ object Snapshots {
     // claim FIRST and rewrite exactly v-1: rewriting a pre-claim latest
     // would silently drop a commit that interleaved before the claim
     claimed(s, f, dir, None, "optimize") { (v, base) =>
-      val df = readEvolved(s, dir, base)
+      val df = read(s, dir, base)
       val mx = df.agg(
         max(col(zorderCols.head)).as(s"mx_${zorderCols.head}"),
         zorderCols.tail.map(c => max(col(c)).as(s"mx_$c")): _*)
@@ -3534,41 +3445,6 @@ object Snapshots {
     }
   }
 
-  /** A SUBSET of version `v`'s files read through the evolution
-    * machinery and aligned onto the version's FULL evolved schema
-    * (missing columns null-backfilled, types widened, renames mapped
-    * to canonical names) with `v`'s deletion vector applied — what
-    * [[compact]] stages, so one packed vintage carries exactly one
-    * schema no matter how many vintages its inputs spanned. */
-  private def readEvolvedSubset(s: SparkSession, dir: String, v: Int,
-      paths: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val (evolved, _) = evolutionInfo(s, dir, v)
-    val dv = hasDv(s, dir, v)
-    val byCommit: Map[Int, Seq[String]] = paths.groupBy {
-      case FileCommit(c) => c.toInt
-      case other => throw new IllegalStateException(
-        s"readEvolvedSubset: cannot attribute $other to a commit")
-    }
-    val chain = renameChain(s, dir, v)
-    val frames = byCommit.toSeq.sortBy(_._1).map { case (c, ps) =>
-      val base = s.read.parquet(ps.map(p => new Path(dir, p).toString): _*)
-      var df = if (dv) withMeta(base) else base
-      for (later <- (c + 1) to v; (o, n) <- chain(later))
-        df = applyChainEntryDf(df, o, n)
-      // align to the evolved target BEFORE the union — vintages may
-      // disagree on a column's width (int vs long) or a struct's field
-      // set, which unionByName alone would refuse
-      df.select(evolved.fields.toSeq.map(fd =>
-        (if (df.columns.contains(fd.name))
-          alignTo(col(fd.name), df.schema(fd.name).dataType, fd.dataType)
-         else lit(null).cast(fd.dataType)).as(fd.name)) ++
-        (if (dv) Seq(col("_fp"), col("_ri")) else Nil): _*)
-    }
-    val union = frames.reduce(_.unionByName(_))
-    if (dv) applyDv(s, dir, v, union) else union
-  }
-
   /** Incremental small-file COMPACTION of a snapshot table — the
     * maintenance verb a long-lived streaming-fed table needs: files
     * below `smallBytes` are bin-packed into ~`targetBytes` outputs and
@@ -3584,9 +3460,10 @@ object Snapshots {
     *     kept files' entries survive — merge-on-read debt shrinks
     *     incrementally without optimize's full rewrite.
     *   - The packed vintage carries the version's full EVOLVED schema
-    *     ([[readEvolvedSubset]]): inputs may span schema vintages, the
-    *     output is one schema, and reads of the new version see
-    *     exactly what they saw before.
+    *     (the small files read through [[read]]'s scan, restricted to
+    *     them): inputs may span schema vintages, the output is one
+    *     schema, and reads of the new version see exactly what they saw
+    *     before.
     *   - coalesce, not repartition: packing must not shuffle — output
     *     sizes approximate the target by input grouping, which is the
     *     right trade at any scale.
@@ -3616,7 +3493,8 @@ object Snapshots {
       val keep = sized.map(_._1).filterNot(smallSet)
       val nOut = math.max(1, math.ceil(sized.filter(x =>
         smallSet(x._1)).map(_._2).sum.toDouble / targetBytes).toInt)
-      val subset = readEvolvedSubset(s, dir, base, small)
+      val subset = s.baseRelationToDataFrame(SnapshotSource
+        .versionRelation(s, dir, base, fileSubset = Some(smallSet)))
       // a PARTITIONED BY table's maintenance must not destroy its
       // value-aligned layout: repack along the declared clustering
       // columns (and re-record their bounds) instead of arbitrary

@@ -2,9 +2,11 @@ package org.apache.spark.sql.execution.datasources.parquet
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -17,7 +19,9 @@ import org.apache.spark.sql.types.StructType
   * format's V2 STREAMING write uses it to write each micro-batch
   * partition straight to a staged part file on the executor, so a
   * streaming epoch costs exactly one pass over its rows (no second
-  * driver-orchestrated job like a V1 `Sink.addBatch` re-plan).
+  * driver-orchestrated job like a V1 `Sink.addBatch` re-plan). The
+  * snapshot format's schema resolution reads each vintage's schema from
+  * one footer through [[footerSchema]].
   */
 object GraftParquetIO {
 
@@ -79,5 +83,22 @@ object GraftParquetIO {
       case _ => CompressionCodecName.SNAPPY
     }
     new Builder(path).withConf(c).withCompressionCodec(codec).build()
+  }
+
+  /** The schema `spark.read.parquet(path).schema` infers for one parquet
+    * file, read from its footer on the calling thread: Spark's own
+    * conversion ([[ParquetFileFormat.readSchema]] — the embedded Spark
+    * row schema when present, else the converted parquet schema, under
+    * the session's conversion settings), made nullable as a file
+    * relation's data schema is. Inference gets there through a Spark
+    * job per call; this opens one footer and starts none. */
+  def footerSchema(spark: SparkSession, path: Path, conf: Configuration)
+      : StructType = {
+    val rd = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+    val meta = try rd.getFooter finally rd.close()
+    ParquetFileFormat.readSchema(Seq(new Footer(path, meta)), spark)
+      .getOrElse(throw new IllegalStateException(
+        s"no parquet schema in the footer of $path"))
+      .asNullable
   }
 }

@@ -2169,8 +2169,8 @@ class GraftCatalogSpec extends SparkSpec {
     sql("ALTER TABLE graft.db.nm4 RENAME COLUMN meta.w TO width")     // v4
     // compact spans pre- and post-evolution vintages: the packed
     // vintage must carry ONE schema — the head's evolved struct —
-    // and the content must be unchanged (readEvolvedSubset's nested
-    // alignment)
+    // and the content must be unchanged (the scan's nested
+    // localization over the packed subset)
     val packed = Snapshots.compact(spark, dirOf("db", "nm4"),
       smallBytes = 1L << 30, targetBytes = 1L << 30, minFiles = 2)
     assert(packed == 5, s"compact should publish v5, got $packed")
@@ -2182,7 +2182,7 @@ class GraftCatalogSpec extends SparkSpec {
       s"compacted content diverged: $got")
     // the change feed replays the FULL history under the consumer's
     // (head) schema: pre-rename vintages remap meta.w -> meta.width at
-    // read time (readCanonical's nested localization); the signed fold
+    // read time (the scan's nested localization); the signed fold
     // over inserts converges to the head
     sql("CALL graft.system.change_view(table => 'db.nm4', " +
       "view_name => 'nm4_changes', starting_version => 1)")
@@ -2287,7 +2287,7 @@ class GraftCatalogSpec extends SparkSpec {
     assert(got == Seq((1L, 10), (3L, 30), (4L, 40)),
       s"purged table lost the nested remap: $got")
     // a streaming read resolves the same canonical schema and remaps
-    // every vintage (readCanonical's localized per-vintage request)
+    // every vintage (the scan's localized per-vintage request)
     val cp = java.nio.file.Files.createTempDirectory("nm6cp").toString
     val q = spark.readStream.table("graft.db.nm6")
       .selectExpr("doc_id", "meta.width AS width")

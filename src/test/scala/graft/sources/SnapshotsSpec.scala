@@ -138,7 +138,7 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.commit(spark, dir, v2, append = true,
       renames = Map("val" -> "value"))
 
-    val ev = Snapshots.readEvolved(spark, dir, 2)
+    val ev = Snapshots.read(spark, dir, 2)
     assert(ev.schema("id").dataType ==
       org.apache.spark.sql.types.LongType, "int must widen to long")
     val rows = ev.select("id", "value", "extra")
@@ -148,7 +148,7 @@ class SnapshotsSpec extends SparkSpec {
       (3L, "c", Some(30.0)), (4L, "d", Some(40.0))))
 
     // as-of v1 the legacy schema is what existed: old name, int type
-    val asOf1 = Snapshots.readEvolved(spark, dir, 1)
+    val asOf1 = Snapshots.read(spark, dir, 1)
     assert(asOf1.columns.toSet == Set("id", "val"))
     assert(asOf1.schema("id").dataType ==
       org.apache.spark.sql.types.IntegerType)
@@ -156,7 +156,7 @@ class SnapshotsSpec extends SparkSpec {
     // composition with purge: commit attribution survives the
     // purged- rename, and the evolved read still resolves
     Snapshots.purge(spark, dir, Seq(2L).toDF("id"), Seq("id"))
-    val after = Snapshots.readEvolved(spark, dir, 2)
+    val after = Snapshots.read(spark, dir, 2)
       .select("id").collect().map(_.getLong(0)).toSeq.sorted
     assert(after == Seq(1L, 3L, 4L))
   }
@@ -177,7 +177,7 @@ class SnapshotsSpec extends SparkSpec {
         (_, v) => struct(v.getField("_1").as("a"),
           v.getField("_2").as("b"))).as("m"))
     Snapshots.commit(spark, dir, v2, append = true)
-    val ev = Snapshots.readEvolved(spark, dir, 2)
+    val ev = Snapshots.read(spark, dir, 2)
     val rows = ev.select(col("id"),
         element_at(col("m"), "k").getField("a").as("a"),
         element_at(col("m"), "k").getField("b").as("b"))
@@ -344,8 +344,8 @@ class SnapshotsSpec extends SparkSpec {
     assert(idsOf(dir, 3) == (1L to 20L).filterNot(_ % 5 == 0))
     // prior version untouched
     assert(idsOf(dir, 2) == (1L to 20L))
-    // readEvolved and readPruned see through the vector too
-    assert(Snapshots.readEvolved(spark, dir, 3).count() == 16)
+    // the evolved read sees through the vector too
+    assert(Snapshots.read(spark, dir, 3).count() == 16)
 
     // cumulative second delete; re-deleting counts nothing
     val (v4, n4) = Snapshots.deleteWhere(spark, dir,
@@ -512,8 +512,8 @@ class SnapshotsSpec extends SparkSpec {
 
   test("widen is a commutative, associative, idempotent lattice join") {
     import org.apache.spark.sql.types._
-    // exercised through readEvolved: every ordered pair of vintage types
-    // must land on the same evolved type regardless of commit order
+    // exercised through the evolved read: every ordered pair of vintage
+    // types must land on the same evolved type regardless of commit order
     val types: Seq[(DataType, Any)] = Seq(
       (IntegerType, 1), (LongType, 2L), (FloatType, 3.0f),
       (DoubleType, 4.0))
@@ -526,7 +526,7 @@ class SnapshotsSpec extends SparkSpec {
         lit(vb).cast(tb).as("x"))
       Snapshots.commit(spark, dir, a, append = false)
       Snapshots.commit(spark, dir, b, append = true)
-      val ev = Snapshots.readEvolved(spark, dir, 2)
+      val ev = Snapshots.read(spark, dir, 2)
       val expect = (ta, tb) match {
         case (x, y) if x == y => x
         case (IntegerType, LongType) | (LongType, IntegerType) => LongType
@@ -1614,14 +1614,15 @@ class SnapshotsSpec extends SparkSpec {
         Seq("payload" -> upper(col("payload"))))
       assert(n == 5)
     }
-    // pinned composition — delete: parquet schema inference, the DV
-    // write (the ONE data scan), and the cached-positions count (2 jobs
-    // under AQE's staged aggregate); update adds only the staging write
-    // of the matched rows (also served from the cache). A regression
-    // that recounts by re-scanning the table or re-reading the
-    // just-written vector shows up as extra jobs here.
-    assert(delJobs == 4, s"deleteWhere ran $delJobs jobs, pinned 4")
-    assert(updJobs == 5, s"updateWhere ran $updJobs jobs, pinned 5")
+    // pinned composition — delete: the DV write (the ONE data scan) and
+    // the cached-positions count (2 jobs under AQE's staged aggregate);
+    // the scan's schema comes from parquet footers read on the driver,
+    // no inference job. Update adds only the staging write of the
+    // matched rows (also served from the cache). A regression that
+    // recounts by re-scanning the table or re-reading the just-written
+    // vector shows up as extra jobs here.
+    assert(delJobs == 3, s"deleteWhere ran $delJobs jobs, pinned 3")
+    assert(updJobs == 4, s"updateWhere ran $updJobs jobs, pinned 4")
     // and the published tables are correct
     assert(idsOf(d1, 2) == (6L to 20L))
     assert(Snapshots.read(spark, d2, 2)
@@ -1684,7 +1685,7 @@ class SnapshotsSpec extends SparkSpec {
     val (v4, nDel) = Snapshots.deleteWhere(spark, dir,
       col("id") === 5L || col("id") === 100L)
     assert(v4 == 4 && nDel == 2)
-    val before = Snapshots.readEvolved(spark, dir, 4)
+    val before = Snapshots.read(spark, dir, 4)
       .select("id").collect().map(_.getLong(0)).toSet
     val bigFile = Snapshots.files(spark, dir, 3)
       .filterNot(Snapshots.files(spark, dir, 2).toSet).head
@@ -1698,7 +1699,7 @@ class SnapshotsSpec extends SparkSpec {
     // content identical through the evolved read (id=5 stays deleted —
     // its deletion MATERIALIZED; id=100 stays deleted via the carried
     // DV entry for the kept big file)
-    val got = Snapshots.readEvolved(spark, dir, 5)
+    val got = Snapshots.read(spark, dir, 5)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(got == before)
     assert(Snapshots.hasDv(spark, dir, 5), "kept-file DV entry carries")
@@ -1940,7 +1941,7 @@ class SnapshotsSpec extends SparkSpec {
     // the rename declared at v100 resolves through the checkpoint after
     // a memo wipe: the evolved read exposes `note`, not `payload`
     Snapshots.forgetMemos(dir)
-    val evolved = Snapshots.readEvolved(spark, dir, 200)
+    val evolved = Snapshots.read(spark, dir, 200)
     assert(evolved.columns.contains("note") &&
       !evolved.columns.contains("payload"))
     assert(evolved.filter(col("id") === 42L).select("note")

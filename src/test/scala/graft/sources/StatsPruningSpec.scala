@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
 
 /** Pins the one stats-pruning rule ([[StatsPruning]]): a pruned read, a
   * pruned change-feed read and DELETE's located rows each equal the
-  * unpruned evolved read ([[Snapshots.readEvolved]]) under the same
+  * unpruned evolved read ([[EvolvedUnionOracle]]) under the same
   * predicate — across rename chains with swaps and re-used names,
   * bucket/truncate-clustered catalog tables and a non-UTC session time
   * zone — and the positional DML scan resolves renamed columns. */
@@ -170,7 +170,7 @@ class StatsPruningSpec extends SparkSpec {
     val (v, applied) = Snapshots.applyCdc(spark, dir,
       Seq((3L, "C")).toDF("key", "v"), Seq(1L).toDF("key"), Seq("key"))
     assert(applied == 3, "one replaced, one deleted, one staged")
-    val got = Snapshots.readEvolved(spark, dir, v).collect()
+    val got = EvolvedUnionOracle.read(spark, dir, v).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
     assert(got == Seq(2L -> "B", 3L -> "C", 4L -> "d", 5L -> "e"))
   }
@@ -279,7 +279,7 @@ class StatsPruningSpec extends SparkSpec {
     val cols = "id" +: t.names
     // the unpruned evolved read, filtered in a local relation
     def expected(p: String): Seq[String] = {
-      val ev = Snapshots.readEvolved(spark, t.dir,
+      val ev = EvolvedUnionOracle.read(spark, t.dir,
         Snapshots.latestVersion(spark, t.dir))
       sorted(spark.createDataFrame(ev.collect().toSeq.asJava, ev.schema)
         .filter(expr(p)), cols)
