@@ -57,7 +57,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    while type WIDENING
   *    (int→long, float→double) rides the parquet reader's native schema
   *    promotion and missing columns backfill as null — zero per-row
-  *    overhead for evolution;
+  *    overhead for evolution; a (sub)field the reader cannot widen (say
+  *    long→double) is read at its stored type and cast after decoding;
   *  - a merge-on-read version's deletion vector loads once, broadcasts,
   *    and filters rows by file-ordinal inside the reader (row-wise while
   *    a DV is pending; OPTIMIZE restores the columnar path).
@@ -754,6 +755,19 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
           } else Seq.empty
         if (v0 == v1) head else head ++ tail
       }
+    // a column the stream reads that a commit after canonVersion dropped
+    // has no value in the newer files: refuse rather than emit null
+    val newer = added.map(Snapshots.vintageOf).distinct
+      .filter(_ > canonVersion)
+    if (newer.nonEmpty) {
+      val local = Snapshots.localName(
+        Snapshots.renameChain(spark, dir, newer.max), canonVersion) _
+      for (c <- newer; n <- fixedSchema.fieldNames)
+        require(local(c, n) != Snapshots.DropMarker,
+          s"graft-snapshots source: the table's schema evolved away from " +
+            s"the stream's (version $c dropped column $n); restart the " +
+            "stream to pick up the evolved schema")
+    }
     // the added files through the one snapshot scan, under the stream's
     // schema (no deletion vector: an append stream emits added rows);
     // one LogicalRelation, so the streaming-flagged frame keeps its
@@ -1578,9 +1592,11 @@ private[sources] object SnapshotFileIndex {
   * the writing commit used (`vintages`, from [[Snapshots.vintageReads]]),
   * so old files decode natively — positional output already matches the
   * canonical schema, type widening rides the parquet reader's schema
-  * promotion, and missing columns backfill null. A column stored at a
-  * type the reader cannot widen in place is requested at that type and
-  * cast after decoding (rows, not columnar batches, for such a scan).
+  * promotion, and missing columns backfill null. A column stored (in
+  * part) at a type the reader cannot widen in place is requested at that
+  * type and cast after decoding ([[Snapshots.VintageRead.readType]]); a
+  * scan reading such a column hands rows, not columnar batches, to the
+  * engine (decoding stays vectorized).
   * When the scan carries a deletion vector, dead row ordinals (broadcast
   * once) are skipped inside the reader — files stay unsplit and
   * unfiltered in that mode so ordinals stay aligned with commit-time
@@ -1590,15 +1606,18 @@ private[sources] class SnapshotParquetFormat(
     vintages: Map[Int, Snapshots.VintageRead],
     dv: Map[String, Array[Long]]) extends ParquetFileFormat {
 
-  private val plain = Snapshots.VintageRead(Map.empty, Map.empty)
-  private val anyCasts = vintages.values.exists(_.casts.nonEmpty)
+  private val plain = Snapshots.VintageRead(Map.empty, StructType(Nil))
   private val hasDv = dv.nonEmpty
+
+  /** Whether any vintage reads a column of `schema` at another type. */
+  private def anyCasts(schema: StructType): Boolean =
+    vintages.values.exists(vr => schema.exists(vr.readType(_).isDefined))
 
   override def toString: String = "SnapshotParquet"
 
   override def supportBatch(spark: SparkSession,
       schema: StructType): Boolean =
-    !hasDv && !anyCasts && super.supportBatch(spark, schema)
+    !hasDv && !anyCasts(schema) && super.supportBatch(spark, schema)
 
   override def isSplitable(spark: SparkSession,
       options: Map[String, String], path: Path): Boolean =
@@ -1610,7 +1629,8 @@ private[sources] class SnapshotParquetFormat(
       options: Map[String, String],
       hadoopConf: org.apache.hadoop.conf.Configuration)
       : PartitionedFile => Iterator[InternalRow] = {
-    if (vintages.values.forall(_ == plain) && !hasDv)
+    if (vintages.values.forall(_.names.isEmpty) && !hasDv &&
+        !anyCasts(dataSchema))
       return super.buildReaderWithPartitionValues(spark, dataSchema,
         partitionSchema, requiredSchema, filters, options, hadoopConf)
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
@@ -1623,26 +1643,30 @@ private[sources] class SnapshotParquetFormat(
     // columns (their literals are typed for the canonical column)
     val readers = (vintages.values.toSet + plain).map { vr =>
       def local(st: StructType) = Snapshots.localizeSchema(
-        StructType(st.map(f => vr.casts.get(f.name)
+        StructType(st.map(f => vr.readType(f)
           .fold(f)(t => f.copy(dataType = t)))), vr.names)
+      val castCols = dataSchema.filter(vr.readType(_).isDefined).map(_.name)
       val fl =
         if (hasDv) Seq.empty
-        else filters.filterNot(_.references.exists(vr.casts.contains))
+        else filters.filterNot(_.references.exists(r =>
+            castCols.exists(c => r == c || r.startsWith(c + "."))))
           .flatMap(SnapshotParquetFormat.remapFilter(_, vr.names))
+      val casts = requiredSchema.map(vr.readType)
       val cast =
-        if (!requiredSchema.fieldNames.exists(vr.casts.contains)) None
-        else Some((requiredSchema ++ partitionSchema).zipWithIndex.map {
-          case (f, i) => vr.casts.get(f.name) match {
-            case Some(t) => Cast(BoundReference(i, t, nullable = true),
-              f.dataType, tz)
-            case None => BoundReference(i, f.dataType, f.nullable)
-          }
-        })
+        if (casts.forall(_.isEmpty)) None
+        else Some((casts ++ partitionSchema.map(_ => None))
+          .zip(requiredSchema ++ partitionSchema).zipWithIndex.map {
+            case ((Some(t), f), i) => Cast(BoundReference(i, t,
+              nullable = true), f.dataType, tz)
+            case ((None, f), i) => BoundReference(i, f.dataType, f.nullable)
+          })
       // each delegate gets its OWN conf copy: the parquet reader writes
       // the requested schema into the conf it is handed, and a shared
       // mutable conf would leave every vintage reading the LAST
-      // delegate's schema (nulls from renamed vintages)
-      vr -> (super.buildReaderWithPartitionValues(spark,
+      // delegate's schema (nulls from renamed vintages). The delegate is
+      // a plain parquet format: its batch check must not read the
+      // vintage-local names as canonical ones
+      vr -> (new ParquetFileFormat().buildReaderWithPartitionValues(spark,
         local(dataSchema), partitionSchema, local(requiredSchema), fl,
         options, new org.apache.hadoop.conf.Configuration(hadoopConf)),
         cast)

@@ -1012,15 +1012,64 @@ object Snapshots {
     * omitted); a path the vintage cannot hold — dropped, or a name
     * re-used after a rename or drop — maps to a [[DropMarker]]-prefixed
     * leaf no file contains, so it reads null instead of an unrelated old
-    * column. `casts` holds the top-level columns stored at a type the
-    * parquet readers cannot widen in place (say long into double): they
-    * are requested at that stored type and cast after decoding. */
+    * column. `stored` is the vintage's footer schema, which decides the
+    * columns the reader cannot decode at their canonical type
+    * ([[readType]]). */
   private[sources] final case class VintageRead(names: Map[String, String],
-      casts: Map[String, org.apache.spark.sql.types.DataType])
+      stored: org.apache.spark.sql.types.StructType) {
+
+    /** The type to request top-level canonical column `f` at when the
+      * parquet readers cannot widen (part of) it in place: `f`'s shape
+      * with the stored leaf type wherever a stored leaf must be cast
+      * after decoding (say long into double, also as a struct subfield,
+      * array element or map entry). None when the reader decodes `f` at
+      * its own type. `f` may be nested-pruned: the walk follows its
+      * fields. */
+    def readType(f: org.apache.spark.sql.types.StructField)
+        : Option[org.apache.spark.sql.types.DataType] =
+      stored.find(_.name == names.getOrElse(f.name, f.name))
+        .flatMap(sf => requestType(f.name, sf.dataType, f.dataType))
+
+    private def requestType(path: String,
+        stored: org.apache.spark.sql.types.DataType,
+        canonical: org.apache.spark.sql.types.DataType)
+        : Option[org.apache.spark.sql.types.DataType] = {
+      import org.apache.spark.sql.types._
+      (stored, canonical) match {
+        case (a, b) if a == b => None
+        // the promotions both parquet readers decode in place
+        case (IntegerType, LongType | DoubleType) | (FloatType, DoubleType) =>
+          None
+        // array and map innards carry no rename entries: a null path
+        // keeps their struct subfields under their own names
+        case (ArrayType(se, _), ArrayType(ce, n)) =>
+          requestType(null, se, ce).map(ArrayType(_, n))
+        case (MapType(sk, sv, _), MapType(ck, cv, n)) =>
+          val (k, v) = (requestType(null, sk, ck), requestType(null, sv, cv))
+          if (k.isEmpty && v.isEmpty) None
+          else Some(MapType(k.getOrElse(ck), v.getOrElse(cv), n))
+        case (ss: StructType, cs: StructType) =>
+          // the canonical shape, field for field: localizeSchema renames
+          // the leaves, and a cast after decoding is positional
+          val kids = cs.fields.toSeq.map { cf =>
+            val p = if (path == null) null else path + "." + cf.name
+            val leaf = if (p == null) cf.name else names.getOrElse(p, cf.name)
+            ss.find(_.name == leaf)
+              .flatMap(sf => requestType(p, sf.dataType, cf.dataType))
+          }
+          if (kids.forall(_.isEmpty)) None
+          else Some(StructType(cs.fields.zip(kids).map {
+            case (cf, k) => k.fold(cf)(t => cf.copy(dataType = t))
+          }))
+        case _ => scala.util.Try(widen(stored, canonical)).toOption
+          .filter(_ == canonical).map(_ => stored)
+      }
+    }
+  }
 
   /** The [[VintageRead]] of every vintage among `paths` under `schema`,
     * canonical at version `canonV`: one rename-chain fetch and one
-    * driver-side footer read per vintage, no job. */
+    * (memoized) footer per vintage, no job. */
   private[sources] def vintageReads(s: SparkSession, dir: String,
       paths: Seq[String], canonV: Int,
       schema: org.apache.spark.sql.types.StructType)
@@ -1032,7 +1081,6 @@ object Snapshots {
         (canonV +: byVintage.keys.toSeq).max), canonV) _
       val canonical = schema.fields.toSeq.flatMap(f =>
         f.name +: subPaths(f.name, f.dataType))
-      val conf = s.sparkContext.hadoopConfiguration
       byVintage.map { case (c, ps) =>
         val names = canonical.flatMap { p =>
           val leaf = local(c, p) match {
@@ -1041,38 +1089,34 @@ object Snapshots {
           }
           if (leaf == leafOf(p)) None else Some(p -> leaf)
         }.toMap
-        val stored = org.apache.spark.sql.execution.datasources.parquet
-          .GraftParquetIO.footerSchema(s, new Path(dir, ps.head), conf)
-        val casts = schema.fields.toSeq.flatMap { f =>
-          stored.find(_.name == names.getOrElse(f.name, f.name))
-            .map(_.dataType).filter(castAfterRead(_, f.dataType))
-            .map(f.name -> _)
-        }.toMap
-        c -> VintageRead(names, casts)
+        c -> VintageRead(names, footerSchema(s, dir, ps.head))
       }
     }
   }
 
-  /** Whether a column stored as `stored` widens losslessly to
-    * `canonical` in a way the parquet readers (vectorized and row-based
-    * alike) cannot decode in place. They promote int → long, int →
-    * double and float → double; array elements and map entries follow
-    * the same rule; struct subfields are left to the reader (a
-    * positional cast cannot align a struct whose subfields were added
-    * or renamed). Anything else that widens is cast. */
-  private def castAfterRead(stored: org.apache.spark.sql.types.DataType,
-      canonical: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    (stored, canonical) match {
-      case (a, b) if a == b => false
-      case (IntegerType, LongType | DoubleType) | (FloatType, DoubleType) =>
-        false
-      case (ArrayType(se, _), ArrayType(ce, _)) => castAfterRead(se, ce)
-      case (MapType(sk, sv, _), MapType(ck, cv, _)) =>
-        castAfterRead(sk, ck) || castAfterRead(sv, cv)
-      case (_: StructType, _) => false
-      case _ => scala.util.Try(widen(stored, canonical)).toOption
-        .contains(canonical)
+  /** Session memo of data-file footer schemas, by absolute path. Data
+    * files are immutable and uniquely named (commit version plus the
+    * writing job's uuid), so an entry never goes stale; LRU-bounded. */
+  private val footerMemo = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String,
+        org.apache.spark.sql.types.StructType](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String,
+          org.apache.spark.sql.types.StructType]): Boolean = size > 4096
+    })
+
+  /** The schema of data file `rel` (manifest-relative) from its footer,
+    * read on the driver once per session: a commit writes one
+    * DataFrame, so one file stands for its vintage in
+    * [[evolvedSchema]] and [[vintageReads]] alike. */
+  private[sources] def footerSchema(s: SparkSession, dir: String,
+      rel: String): org.apache.spark.sql.types.StructType = {
+    val p = new Path(dir, rel)
+    val key = p.toString
+    Option(footerMemo.get(key)).getOrElse {
+      val sch = org.apache.spark.sql.execution.datasources.parquet
+        .GraftParquetIO.footerSchema(s, p, s.sparkContext.hadoopConfiguration)
+      footerMemo.put(key, sch)
+      sch
     }
   }
 
@@ -1665,12 +1709,11 @@ object Snapshots {
   private[sources] val FileCommit = """^(?:data/)?(?:purged-)*v(\d+)-.*$""".r
 
   /** Metadata-only resolution of version `v`'s EVOLVED schema: per
-    * vintage, one parquet footer is read on the driver (a commit writes
-    * one DataFrame, so its files share a schema; no Spark job), the
-    * rename chain of every later commit ≤ v maps local names to
-    * canonical ones, and types widen across vintages ([[widen]]). Column
-    * order: the first vintage's columns, then later additions in vintage
-    * order. O(vintages) footer reads, no data. */
+    * vintage, one parquet footer ([[footerSchema]], on the driver, no
+    * Spark job), the rename chain of every later commit ≤ v maps local
+    * names to canonical ones, and types widen across vintages
+    * ([[widen]]). Column order: the first vintage's columns, then later
+    * additions in vintage order. O(vintages) footers, no data. */
   private[sources] def evolvedSchema(s: SparkSession, dir: String, v: Int)
       : org.apache.spark.sql.types.StructType =
     evolvedSchema(s, dir, v, files(s, dir, v))
@@ -1681,11 +1724,9 @@ object Snapshots {
       fset: Seq[String]): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types.{StructField, StructType}
     val chain = renameChain(s, dir, v)
-    val conf = s.sparkContext.hadoopConfiguration
     val vintages = fset.groupBy(vintageOf).toSeq.sortBy(_._1).map {
       case (c, paths) =>
-        val sch = org.apache.spark.sql.execution.datasources.parquet
-          .GraftParquetIO.footerSchema(s, new Path(dir, paths.head), conf)
+        val sch = footerSchema(s, dir, paths.head)
         // fwd maps every LOCAL dotted path — top-level names plus struct
         // subfield paths — to its CURRENT canonical path (or DropMarker);
         // a purely top-level history degenerates to the original

@@ -2326,6 +2326,23 @@ class GraftCatalogSpec extends SparkSpec {
       e.getMessage.contains("NOT_SUPPORTED_CHANGE_COLUMN"), e.getMessage)
   }
 
+  test("nested ALTER COLUMN TYPE BIGINT to DOUBLE casts the older " +
+      "vintage's subfield after decoding") {
+    warehouse
+    sql("CREATE TABLE graft.db.nmwd (id BIGINT, meta STRUCT<w: BIGINT>)")
+    sql("INSERT INTO graft.db.nmwd VALUES (1, named_struct('w', " +
+      "CAST(7 AS BIGINT)))")
+    sql("ALTER TABLE graft.db.nmwd ALTER COLUMN meta.w TYPE DOUBLE")
+    sql("INSERT INTO graft.db.nmwd VALUES (2, named_struct('w', 0.5D))")
+    val got = sql("SELECT id, meta.w FROM graft.db.nmwd ORDER BY id")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(got == Seq((1L, 7.0), (2L, 0.5)), got)
+    sql("CALL graft.system.optimize(table => 'db.nmwd', " +
+      "zorder_cols => 'id')")
+    assert(sql("SELECT id, meta.w FROM graft.db.nmwd ORDER BY id")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == got)
+  }
+
   test("nested RENAME/DROP refusals: CHECK-referenced subfield, a " +
       "struct's only subfield, non-struct parents") {
     warehouse

@@ -80,6 +80,90 @@ class SnapshotScanSpec extends SparkSpec {
       .select("id")) == Seq("2"))
   }
 
+  test("struct subfields the reader cannot widen read through read, " +
+      "compact and optimize") {
+    val dir = tmpDir("scan-subfield")
+    val v1 = StructType(Seq(StructField("id", LongType),
+      StructField("meta", StructType(Seq(StructField("w", LongType),
+        StructField("h", IntegerType)))),
+      StructField("ms", ArrayType(StructType(Seq(
+        StructField("w", LongType))))),
+      StructField("mv", MapType(StringType, StructType(Seq(
+        StructField("w", ShortType)))))))
+    val v2 = StructType(Seq(StructField("id", LongType),
+      StructField("meta", StructType(Seq(StructField("w", DoubleType),
+        StructField("height", IntegerType)))),
+      StructField("ms", ArrayType(StructType(Seq(
+        StructField("w", DoubleType))))),
+      StructField("mv", MapType(StringType, StructType(Seq(
+        StructField("w", IntegerType)))))))
+    def frame(schema: StructType, rs: Seq[org.apache.spark.sql.Row]) =
+      spark.createDataFrame(java.util.Arrays.asList(rs: _*), schema)
+        .coalesce(1)
+    import org.apache.spark.sql.Row
+    Snapshots.commit(spark, dir, frame(v1, Seq(
+      Row(1L, Row(7L, 70), Seq(Row(7L)), Map("a" -> Row(7.toShort))),
+      Row(2L, Row(8L, 80), Seq(Row(8L), null), Map("b" -> Row(8.toShort))),
+      Row(3L, null, null, null))), append = false, statsCols = Seq("id"))
+    Snapshots.commit(spark, dir, frame(v2, Seq(
+      Row(4L, Row(0.5, 40), Seq(Row(0.5)), Map("c" -> Row(40000))))),
+      append = true, renames = Map("meta.h" -> "meta.height"),
+      statsCols = Seq("id"))
+    // by value: the oracle's subfield rebuild moves a renamed subfield
+    // last, the scan keeps its place
+    def vals(df: DataFrame): Seq[String] = rows(df.select(col("id"),
+      col("meta.w"), col("meta.height"), col("ms.w"),
+      map_values(col("mv")).getField("w")))
+    val want = Seq("1,7.0,70,ArraySeq(7.0),ArraySeq(7)",
+      "2,8.0,80,ArraySeq(8.0, null),ArraySeq(8)",
+      "3,null,null,null,null", "4,0.5,40,ArraySeq(0.5),ArraySeq(40000)")
+    assert(vals(EvolvedUnionOracle.read(spark, dir, 2)) == want)
+    assert(vals(Snapshots.read(spark, dir, 2)) == want)
+    assert(vals(readFmt(dir)) == want)
+    assert(Snapshots.read(spark, dir, 2).schema("meta").dataType ==
+      StructType(Seq(StructField("w", DoubleType),
+        StructField("height", IntegerType))))
+    // a pushed filter on the cast subfield sees canonical values
+    assert(rows(Snapshots.read(spark, dir, 2).filter(col("meta.w") > 7.5)
+      .select("id")) == Seq("2"))
+    Snapshots.deleteWhere(spark, dir, col("id") === 2L)
+    assert(vals(Snapshots.read(spark, dir, 3)) ==
+      vals(EvolvedUnionOracle.read(spark, dir, 3)))
+    val vc = Snapshots.compact(spark, dir, smallBytes = 1L << 30,
+      targetBytes = 1L << 30, minFiles = 2)
+    assert(vc == 4)
+    assert(vals(Snapshots.read(spark, dir, vc)) == want.patch(1, Nil, 1))
+    assert(vals(EvolvedUnionOracle.read(spark, dir, vc)) ==
+      want.patch(1, Nil, 1))
+    val vo = Snapshots.optimize(spark, dir, Seq("id"), numFiles = 2)
+    assert(vals(Snapshots.read(spark, dir, vo)) == want.patch(1, Nil, 1))
+    assert(vals(EvolvedUnionOracle.read(spark, dir, vo)) ==
+      want.patch(1, Nil, 1))
+  }
+
+  test("a plain stream refuses a column dropped after it started") {
+    val dir = tmpDir("scan-stream-drop")
+    Snapshots.commit(spark, dir, Seq((1L, "a", 1.5)).toDF("id", "v", "x")
+      .coalesce(1), append = false)
+    val q = spark.readStream.format("graft-snapshots").load(dir)
+      .writeStream.format("memory").queryName("scan_stream_drop").start()
+    try {
+      q.processAllAvailable()
+      // a rename is followed: the stream keeps its own name for the column
+      Snapshots.commit(spark, dir, Seq((2L, "b", 2.5)).toDF("id", "w", "x")
+        .coalesce(1), append = true, renames = Map("v" -> "w"))
+      q.processAllAvailable()
+      assert(rows(spark.table("scan_stream_drop")) == Seq("1,a,1.5", "2,b,2.5"))
+      Snapshots.commit(spark, dir, Seq((3L, "c")).toDF("id", "w")
+        .coalesce(1), append = true, renames = Map("x" -> Snapshots.DropMarker))
+      val e = intercept[Exception](q.processAllAvailable())
+      val msg = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString(" / ")
+      assert(msg.contains("evolved away") && msg.contains("dropped column x"),
+        msg)
+    } finally q.stop()
+  }
+
   test("a 3-vintage load and Snapshots.read start no construct job") {
     val dir = tmpDir("scan-jobs")
     Snapshots.commit(spark, dir, Seq((1, "a")).toDF("id", "v")
