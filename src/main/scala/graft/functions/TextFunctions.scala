@@ -77,19 +77,6 @@ object TextFunctions {
     transform(shingleStructs(c, n),
       s => xxhash64((0 until n).map(i => s.getField(s"f$i")): _*))
 
-  /** (hash, total-token-chars) struct per n-gram — for mass/coverage
-    * computations (Gopher top-gram and duplicate-gram rules) that need the
-    * gram's character weight but never its text: the shuffle key becomes a
-    * fixed-width (8+8)-byte struct instead of the gram string. `len` is
-    * Σ length(tokenᵢ), i.e. the characters the gram covers net of its
-    * n−1 separators.
-    */
-  def shingleHashLens(c: Column, n: Int): Column =
-    transform(shingleStructs(c, n), s => struct(
-      xxhash64((0 until n).map(i => s.getField(s"f$i")): _*).as("h"),
-      (0 until n).map(i => length(s.getField(s"f$i"))).reduce(_ + _)
-        .as("len")))
-
   def distinctShingleHashes(c: Column, n: Int): Column =
     array_distinct(shingleHashes(c, n))
 
@@ -109,27 +96,4 @@ object TextFunctions {
     */
   def fingerprint(c: Column): Column =
     md5(regexp_replace(lower(trim(c)), "\\s+", " "))
-
-  /** 64-bit SimHash over a (deduplicated) feature-array column.
-    * Returns a struct of the 64 per-bit majority sums folded into one long.
-    *
-    * Implemented as a pure expression over the feature array (no UDF):
-    * for bit j, sum over features of ±1 by the j-th bit of xxhash64(feature);
-    * simhash bit j = (sum >= 0).
-    */
-  def simhash64(features: Column): Column = {
-    val bitCols = (0 until 64).map { j =>
-      val s = aggregate(
-        features,
-        lit(0),
-        (acc, f) => acc +
-          when(shiftright(xxhash64(f), j).bitwiseAND(lit(1L)) === 1L, lit(1))
-            .otherwise(lit(-1)))
-      when(s >= 0, lit(1L << j)).otherwise(lit(0L))
-    }
-    bitCols.reduce(_.bitwiseOR(_))
-  }
-
-  /** Hamming distance between two 64-bit signatures. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 }

@@ -28,10 +28,4 @@ object VectorFunctions {
   def l2norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
-
-  /** Cosine when norms are precomputed (the scale path: normalize once,
-    * join on the dot product only).
-    */
-  def cosinePrenormed(dotCol: Column, na: Column, nb: Column): Column =
-    dotCol / (na * nb)
 }

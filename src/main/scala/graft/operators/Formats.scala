@@ -94,6 +94,25 @@ object Formats extends QueryPack {
     s2
   }
 
+  /** Run the streaming aggregate `agg` into the complete-mode memory
+    * view `view` until all available input is processed, then stop it
+    * and delete its temporary checkpoint (the view outlives the query).
+    * Returns the number of micro-batches that read input. */
+  private def drainToView(agg: DataFrame, view: String): Int = {
+    val cp = java.nio.file.Files.createTempDirectory(s"$view-cp").toFile
+    val q = agg.writeStream.format("memory").queryName(view)
+      .outputMode("complete")
+      .option("checkpointLocation", cp.toString).start()
+    try {
+      q.processAllAvailable()
+      q.recentProgress.count(_.numInputRows > 0)
+    } finally {
+      q.stop()
+      org.apache.hadoop.fs.FileUtil.fullyDelete(cp)
+      ()
+    }
+  }
+
   /** Order-independent (count, checksum) over the canonical document
     * fields — the f10 manifest canon, shared by f17/f19. concat (not
     * concat_ws): a NULL field nulls the row hash on BOTH engines (see
@@ -1137,7 +1156,6 @@ object Formats extends QueryPack {
       // scaladoc) — the child session needs the catalog re-pinned
       val s2 = streamSession(s)
       withCatalog(s2, d, "graft38", wh)
-      val cp = java.nio.file.Files.createTempDirectory("f38cp").toString
       val feed = s2.readStream.option("readChangeFeed", "true")
         .table(s"$cat.db.sdocs")
       // rows in (inserts + update postimages) add, rows out (deletes +
@@ -1145,13 +1163,9 @@ object Formats extends QueryPack {
       val sgn = when(col("_change_type").isin("insert",
         "update_postimage"), 1L).otherwise(-1L)
       val view = s"f38_view_${math.abs(d.hashCode)}"
-      val q = feed.groupBy(col("lang"))
+      drainToView(feed.groupBy(col("lang"))
         .agg(sum(sgn).as("n_docs"),
-          sum(sgn * col("n_chars")).as("sum_chars"))
-        .writeStream.format("memory").queryName(view)
-        .outputMode("complete")
-        .option("checkpointLocation", cp).start()
-      try q.processAllAvailable() finally q.stop()
+          sum(sgn * col("n_chars")).as("sum_chars")), view)
       val fed = s2.table(view)
         .select(col("lang"), col("n_docs"), col("sum_chars"))
       val head = s2.sql(s"SELECT * FROM $cat.db.sdocs")
@@ -1284,20 +1298,15 @@ object Formats extends QueryPack {
       // the replay itself is the operator under test); state partitions
       // sized to the per-lang key count, not the batch shuffle default
       val s2 = streamSession(s)
-      val cp = java.nio.file.Files.createTempDirectory("f34cp").toString
       val feed = s2.readStream.format("graft-snapshots")
         .option("path", out).option("readChangeFeed", "true").load()
       // rows in (inserts + update postimages) add, rows out (deletes +
       // update preimages) retract — the four-type signed-fold contract
       val sgn = when(col("_change_type").isin("insert",
         "update_postimage"), 1L).otherwise(-1L)
-      val q = feed.groupBy(col("lang"))
+      drainToView(feed.groupBy(col("lang"))
         .agg(sum(sgn).as("n_docs"), sum(sgn * col("n_chars"))
-          .as("sum_chars"))
-        .writeStream.format("memory").queryName("f34_view")
-        .outputMode("complete")
-        .option("checkpointLocation", cp).start()
-      try q.processAllAvailable() finally q.stop()
+          .as("sum_chars")), "f34_view")
       val view = s2.table("f34_view")
         .select(col("lang"), col("n_docs"), col("sum_chars"))
       val head = graft.sources.Snapshots
@@ -1340,23 +1349,15 @@ object Formats extends QueryPack {
       }
       // state partitions sized to the per-lang key count (streamSession)
       val s2 = streamSession(s)
-      val cp = java.nio.file.Files.createTempDirectory("f40cp").toString
       val feed = s2.readStream.format("graft-snapshots")
         .option("path", out).option("readChangeFeed", "true")
         .option("maxVersionsPerTrigger", "1").load()
       val sgn = when(col("_change_type").isin("insert",
         "update_postimage"), 1L).otherwise(-1L)
       val view = s"f40_view_${math.abs(d.hashCode)}"
-      val q = feed.groupBy(col("lang"))
+      val batches = drainToView(feed.groupBy(col("lang"))
         .agg(sum(sgn).as("n_docs"),
-          sum(sgn * col("n_chars")).as("sum_chars"))
-        .writeStream.format("memory").queryName(view)
-        .outputMode("complete")
-        .option("checkpointLocation", cp).start()
-      val batches =
-        try { q.processAllAvailable()
-          q.recentProgress.count(_.numInputRows > 0) }
-        finally q.stop()
+          sum(sgn * col("n_chars")).as("sum_chars")), view)
       val fed = s2.table(view)
         .select(col("lang"), col("n_docs"), col("sum_chars"))
       val head = graft.sources.Snapshots
@@ -2210,9 +2211,10 @@ object Formats extends QueryPack {
 
     // Merge-on-read deletion vectors (f26): documents land as two
     // snapshot commits; deleteWhere(doc_id % 13 = 0) then publishes v3 as
-    // the SAME data files plus a (file, row_index) deletion vector — the
-    // cheap-delete path: one filtered scan and a positions write, no
-    // rewrite, reads anti-join the vector. optimize afterwards
+    // the SAME data files, each hit file with a row_index deletion vector
+    // — the cheap-delete path: one filtered scan and one small vector per
+    // hit file, no rewrite, each read task skips its file's dead rows.
+    // optimize afterwards
     // MATERIALIZES the vector into a DV-free clustered v4 (the
     // delete-compaction step). Verdict: the v3 count + content checksum
     // are oracle-recomputed from source minus the deleted keys,

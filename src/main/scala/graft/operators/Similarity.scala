@@ -90,17 +90,6 @@ object Similarity extends QueryPack {
     (Await.result(f1, Duration.Inf), Await.result(f2, Duration.Inf))
   }
 
-  private def inParallel3[A, B, C](s: SparkSession, fa: => A, fb: => B,
-      fc: => C): (A, B, C) = {
-    import scala.concurrent.Await
-    import scala.concurrent.duration.Duration
-    val f1 = phase(s)(fa)
-    val f2 = phase(s)(fb)
-    val f3 = phase(s)(fc)
-    (Await.result(f1, Duration.Inf), Await.result(f2, Duration.Inf),
-      Await.result(f3, Duration.Inf))
-  }
-
   /** Persist the corpus frame for the duration of a TRAINING window — the
     * seed collect, every Lloyd round, and the corpus count each re-ran the
     * parquet scan + normalization (5-11 full passes per index build) —

@@ -160,12 +160,12 @@ case class GraftSqlRules(session: SparkSession) extends Rule[LogicalPlan] {
         case None => m
       }
     // metadata-only COUNT: a bare `SELECT count(*) [AS …] FROM t` folds
-    // to the manifest's parquet-footer row counts minus the deletion
-    // vector's (Snapshots.metadataRowCount) — zero Spark jobs, zero
-    // bytes of data read, at ANY table size. Only row-count-preserving
-    // shapes qualify: no grouping, no filter (neither WHERE nor a
-    // FILTER clause), no DISTINCT, every aggregate a count of a
-    // non-null constant.
+    // to the manifest's parquet-footer row counts minus its deletion
+    // vectors' cardinalities (Snapshots.metadataRowCount) — zero Spark
+    // jobs, zero bytes of data read, at ANY table size. Only
+    // row-count-preserving shapes qualify: no grouping, no filter
+    // (neither WHERE nor a FILTER clause), no DISTINCT, every aggregate
+    // a count of a non-null constant.
     case agg @ Aggregate(Nil, exprs, child, _) if agg.resolved &&
         exprs.nonEmpty && exprs.forall(GraftSql.isCountStar) =>
       GraftSql.countTarget(child) match {
@@ -639,27 +639,16 @@ private[graft] case class GraftMergeCommand(dir: String,
       v1ScanAt(spark, t, target, headV))
     // positional addressing for the theta path: withColumn keeps the
     // existing attributes' expr ids, so captured clause expressions
-    // still resolve; the reader's DV filter guarantees every surfaced
-    // position is LIVE. (A never-committed table has no file scan to
-    // draw metadata from — and no live rows to address.)
+    // still resolve; the reader's deletion vectors guarantee every
+    // surfaced position is LIVE. (A never-committed table has no file
+    // scan to draw metadata from — and no live rows to address.)
     val PosFp = "_graft_pos_fp"
     val PosRi = "_graft_pos_ri"
     val tgtDF =
       if (!thetaOnly || headV < 1) tgtDF0
-      else
-        try tgtDF0
-          .withColumn(PosFp, col("_metadata.file_path"))
-          .withColumn(PosRi, col("_metadata.row_index"))
-        catch {
-          // the over-cap deletion-vector fallback relation exposes no
-          // file metadata — no positions to address matched rows with
-          case e: org.apache.spark.sql.AnalysisException =>
-            throw new UnsupportedOperationException(
-              "graft catalog: theta-only MERGE addresses matched rows " +
-                "by position, which this table's oversized pending " +
-                "deletion vector hides — run CALL graft.system" +
-                ".optimize(...) or compact(...) first", e)
-        }
+      else tgtDF0
+        .withColumn(PosFp, col("_metadata.file_path"))
+        .withColumn(PosRi, col("_metadata.row_index"))
     def positionsOf(df: DataFrame): DataFrame =
       if (headV < 1) Snapshots.emptyPositions(spark)
       else df.select(col(PosFp).as("file_path"),

@@ -28,12 +28,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *  - `timestampAsOf`: pin to the version live at an instant — epoch
   *    millis or a `yyyy-MM-dd[ HH:mm:ss]` literal ([[Snapshots.versionAsOf]],
   *    durable across compliance purges via the vN.meta commit instants)
-  *  - `maxDvPositions`: cap on deletion-vector positions loaded onto the
-  *    driver for a merge-on-read version (default 20M; beyond it the
-  *    read falls back to a DISTRIBUTED anti-join on
-  *    `(_metadata.file_path, row_index)` — see [[DvJoinRelation]] — so
-  *    any DV size stays readable; OPTIMIZE materializes the vector and
-  *    restores the map path)
   *
   * ARCHITECTURE — resolve metadata, delegate execution: the provider
   * resolves the manifest to a concrete file set and hands Spark a
@@ -59,9 +53,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    promotion and missing columns backfill as null — zero per-row
   *    overhead for evolution; a (sub)field the reader cannot widen (say
   *    long→double) is read at its stored type and cast after decoding;
-  *  - a merge-on-read version's deletion vector loads once, broadcasts,
-  *    and filters rows by file-ordinal inside the reader (row-wise while
-  *    a DV is pending; OPTIMIZE restores the columnar path).
+  *  - a merge-on-read version's deletes are per-file vectors the
+  *    manifest names ([[DeletionVectors]]): each task opens the vector
+  *    of the file it reads and skips its dead ordinals inside the reader
+  *    (row-wise while a vector is pending; OPTIMIZE restores the
+  *    columnar path). The driver never holds positions, so building a
+  *    read starts no job at any vector size.
   *
   * The write side ([[CreatableRelationProvider]]) maps SaveMode onto the
   * commit protocol: Append = carry the file set forward, Overwrite = a
@@ -290,10 +287,8 @@ class SnapshotSource extends RelationProvider
       return new ChangeFeedBatchRelation(spark, dir, from - 1, to,
         Snapshots.evolvedSchema(spark, dir, head), head)
     }
-    val v = resolveVersion(spark, dir, parameters, latest)
-    SnapshotSource.versionRelation(spark, dir, v,
-      parameters.get("maxdvpositions").map(_.toLong)
-        .getOrElse(SnapshotSource.DefaultMaxDvPositions))
+    SnapshotSource.versionRelation(spark, dir,
+      resolveVersion(spark, dir, parameters, latest))
   }
 
   private def resolveVersion(spark: SparkSession, dir: String,
@@ -686,8 +681,9 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
     cursor.note(p1)
     val v0 = p0.v
     val v1 = p1.v
-    val base: Set[String] =
-      if (v0 >= 1) Snapshots.files(spark, dir, v0).toSet else Set.empty
+    val baseEs =
+      if (v0 >= 1) Snapshots.entries(spark, dir, v0) else Seq.empty
+    val base: Set[String] = baseEs.map(_.path).toSet
     if (!ignoreChanges && v1 > v0) {
       // walk the LINE's parent chain from v1 back to v0 — branch commits
       // share the global version counter but are NOT on this line, so a
@@ -700,25 +696,23 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
         val parent = g.parent(v)
         v = if (parent < v) parent else -1
       }
-      lazy val dv0Count: Long =
-        if (v0 >= 1 && Snapshots.hasDv(spark, dir, v0))
-          Snapshots.dvFrame(spark, dir, v0).get.count()
-        else -1L
-      var prev = base
+      var prev = baseEs.map(e => e.path -> e.dv).toMap
       chain.reverseIterator.foreach { cv =>
-        val cur = Snapshots.files(spark, dir, cv).toSet
-        require(v0 < 1 || prev.isEmpty || prev.subsetOf(cur),
+        val cur = Snapshots.entries(spark, dir, cv)
+        val curSet = cur.map(_.path).toSet
+        require(v0 < 1 || prev.isEmpty || prev.keys.forall(curSet),
           s"graft-snapshots source: version $cv of $dir rewrites files — " +
             "an append stream cannot represent it; pass " +
             "ignoreChanges=true to emit only added files' rows " +
             "(deletes will not retract)")
-        require(!Snapshots.hasDv(spark, dir, cv) ||
-          (dv0Count >= 0 &&
-            Snapshots.dvFrame(spark, dir, cv).get.count() == dv0Count),
+        // a version deletes rows when a line names a vector its
+        // predecessor's line did not (manifest entries, no job)
+        require(cur.forall(e =>
+            e.dv.isEmpty || prev.get(e.path).contains(e.dv)),
           s"graft-snapshots source: version $cv of $dir deletes rows " +
             "(deletion vector) — pass ignoreChanges=true to stream only " +
             "appended rows")
-        prev = cur
+        prev = cur.map(e => e.path -> e.dv).toMap
       }
     }
     val added: Seq[String] =
@@ -774,8 +768,8 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
     // column pruning and filter pushdown. The engine asserts getBatch
     // frames are streaming-flagged.
     org.apache.spark.sql.GraftBatchView.asStreaming(
-      spark.baseRelationToDataFrame(SnapshotSource.fileRelation(spark, dir,
-        added, canonVersion, fixedSchema)))
+      spark.baseRelationToDataFrame(SnapshotSource.relationFor(spark, dir,
+        added.map(Snapshots.Entry(_)), canonVersion, fixedSchema)))
   }
 
   override def stop(): Unit = ()
@@ -788,10 +782,10 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
   * `update_postimage`) and `_commit_version` column — the CDC view of
   * the table, subsuming `ignoreChanges` (which emits added rows and
   * silently DROPS deletes). Per version, against its parent:
-  *  - files added → their rows as `insert`s;
-  *  - new deletion-vector positions → the deleted rows' CONTENT (read
-  *    from the parent's files, where they still physically live) as
-  *    `delete`s;
+  *  - files added → their live rows as `insert`s;
+  *  - files whose deletion vector changed → the rows live under the
+  *    parent's vector and dead under the new one (content read from the
+  *    files, where they still physically live) as `delete`s;
   *  - a version recorded as an UPDATE/UPSERT (`vN.op`) types its delta
   *    as `update_preimage` (the replaced row's old content) and
   *    `update_postimage` (its replacement) instead — so a consumer can
@@ -806,8 +800,8 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
   * converges to the table's head under appends, upserts, deletes, and
   * rewrites alike (StreamingSnapshotSpec pins it; f34 hash-certifies a
   * CDF-maintained view against the oracle). Scale shape: each batch
-  * reads only the delta's files plus, for DV deltas, the parent file
-  * set it position-joins — never table history. */
+  * reads only the delta's files plus the files whose vector changed —
+  * never table history. */
 private[graft] class SnapshotChangeFeedSource(spark: SparkSession,
     dir: String, tableSchema: StructType, startingVersion: Int = 1,
     schemaVersion: Int = -1,
@@ -1192,17 +1186,16 @@ object SnapshotSource {
   /** The row-level changes of main-line versions in `(v0, v1]` — the
     * shared assembly behind the streaming change feed and the batch
     * `readChangeFeed` relation. Per version, against its parent: added
-    * files' rows as `insert`s; new deletion-vector positions as
-    * `delete` rows (content read from the parent's files, where they
-    * still physically live); versions recorded as updates/upserts
+    * files' live rows as `insert`s; the rows a file's changed deletion
+    * vector kills as `delete` rows (content read from the file, where
+    * they still physically live); versions recorded as updates/upserts
     * (`vN.op`) pair their delta as `update_preimage`/`update_postimage`
     * instead (key-split for applyCdc batches); a REWRITE as
     * compensating delete-all of the parent's live rows + insert-all of
     * the version's. Each row is stamped `_change_type` /
     * `_commit_version` / `_commit_timestamp` (the vN.meta instant,
     * purge-durable). Scale shape: reads only the delta's files, plus
-    * the parent file set a DV delta position-joins — never table
-    * history. */
+    * the files whose vector changed — never table history. */
   /** Spec observability: (filesRead, filesCandidate) of the last
     * changesBetween assembly — pins that pushed filters prune change-
     * feed scans at the FILE level from commit-time stats. */
@@ -1226,7 +1219,7 @@ object SnapshotSource {
     //    parquet row-group stats skip within surviving files.
     val dataFields = tableSchema.fieldNames.toSet
     val usable = pushed.filter(_.references.forall(dataFields.contains))
-    val pushedCol = usable.flatMap(DvJoinRelation.toColumn)
+    val pushedCol = usable.flatMap(filterColumn)
       .reduceOption(_ && _)
     // the pushed filters analyzed back to Catalyst over the consumer's
     // schema, for the one pruning rule (analysis only — no job)
@@ -1248,24 +1241,22 @@ object SnapshotSource {
     // manifest paths read through the one snapshot scan under the
     // consumer's schema: names resolve from `canonVersion` (NOT from each
     // delta's version, whose canonical names may predate a later RENAME
-    // COLUMN and would null-backfill the renamed column), `dv` applied
-    // in the reader
-    def scan(paths: Seq[String], dv: Option[DataFrame] = None): DataFrame =
-      spark.baseRelationToDataFrame(relationFor(spark, dir, paths,
-        canonVersion, tableSchema, dv))
+    // COLUMN and would null-backfill the renamed column), each line's
+    // deletion vector applied in the reader
+    def scan(es: Seq[Snapshots.Entry]): DataFrame =
+      spark.baseRelationToDataFrame(relationFor(spark, dir, es,
+        canonVersion, tableSchema))
+    def pruned(es: Seq[Snapshots.Entry],
+        prune: Seq[String] => Seq[String]): Seq[Snapshots.Entry] = {
+      val kept = prune(es.map(_.path)).toSet
+      es.filter(e => kept(e.path))
+    }
     val graph = Snapshots.commitGraph(f, dir, v1)
     def stamped(df: DataFrame, change: String, v: Int): DataFrame =
       df.withColumn("_change_type", lit(change))
         .withColumn("_commit_version", lit(v.toLong))
         .withColumn("_commit_timestamp",
           timestamp_millis(lit(graph.instant(v))))
-    def dvDelta(v: Int, parent: Int): Option[DataFrame] =
-      Snapshots.dvFrame(spark, dir, v).map { cur =>
-        (if (parent >= 1) Snapshots.dvFrame(spark, dir, parent) else None)
-          .map(p => cur.join(p, Seq("file_path", "row_index"),
-            "left_anti"))
-          .getOrElse(cur)
-      }
     // main's parent chain (ascending) over (v0, v1] — branch commits
     // share the version counter but are not on this line
     val chain = scala.collection.mutable.ArrayBuffer.empty[Int]
@@ -1277,17 +1268,19 @@ object SnapshotSource {
     }
     val frames = chain.reverseIterator.flatMap { cv =>
       val parent = graph.parent(cv)
-      val parentFiles: Seq[String] =
-        if (parent >= 1) Snapshots.files(spark, dir, parent)
+      val parentEs =
+        if (parent >= 1) Snapshots.entries(spark, dir, parent)
         else Seq.empty
-      val curFiles = Snapshots.files(spark, dir, cv)
-      if (parentFiles.forall(curFiles.toSet.contains)) {
-        // append-shaped commit: added files' rows go in, DV-delta rows
-        // go out — TYPED by the recorded operation (vN.op): an
-        // updateWhere version pairs them as update_preimage/postimage
-        // outright; an upsert/applyCdc version splits by key (a delta
-        // row whose key re-appears in the added rows was updated, the
-        // rest were genuine deletes — and symmetrically for inserts).
+      val curEs = Snapshots.entries(spark, dir, cv)
+      val curByPath = curEs.map(e => e.path -> e).toMap
+      if (parentEs.forall(e => curByPath.contains(e.path))) {
+        // append-shaped commit: added files' live rows go in, rows a
+        // changed vector kills go out — TYPED by the recorded operation
+        // (vN.op): an updateWhere version pairs them as
+        // update_preimage/postimage outright; an upsert/applyCdc version
+        // splits by key (a delta row whose key re-appears in the added
+        // rows was updated, the rest were genuine deletes — and
+        // symmetrically for inserts).
         // No op file (plain appends/deletes, pre-op-file tables) keeps
         // the generic insert/delete typing.
         val opInfo = graph.op(cv)
@@ -1309,28 +1302,26 @@ object SnapshotSource {
           } else pruneFiles(paths)
         def sourceFilter(df: DataFrame): DataFrame =
           if (splitTyped) df else filtered(df)
-        val added = curFiles.filterNot(parentFiles.toSet)
+        val parentPaths = parentEs.map(_.path).toSet
         val addedRows: Option[DataFrame] = {
-          val kept = sourcePrune(added)
+          val kept = pruned(curEs.filterNot(e => parentPaths(e.path)),
+            sourcePrune)
           if (kept.isEmpty) None
           else Some(sourceFilter(scan(kept)))
         }
-        val deltaRows: Option[DataFrame] = dvDelta(cv, parent).flatMap {
-          delta =>
-            // only the files the delta's positions actually reference
-            // are opened (file list = a bounded metadata collect), not
-            // the whole parent set — at 100 TB a small delete's change
-            // batch reads a handful of files, never the table
-            val touched = delta.select(col("file_path")).distinct()
-              .collect().map(r => new Path(r.getString(0)).getName).toSet
-            val needed = sourcePrune(parentFiles.filter(p =>
-              touched.contains(new Path(p).getName)))
-            if (needed.isEmpty) None
-            else Some(sourceFilter(Snapshots.withMeta(scan(needed))
-              .join(delta.select(
-                col("file_path").as("_fp"), col("row_index").as("_ri")),
-                Seq("_fp", "_ri"), "left_semi")
-              .drop("_fp", "_ri")))
+        // only the files whose vector this version changed are opened —
+        // a per-file diff of manifest lines, no job — so at 100 TB a
+        // small delete's change batch reads a handful of files, never
+        // the table: their rows live at the parent, dead at `cv`
+        val deltaRows: Option[DataFrame] = {
+          val before = pruned(parentEs.filter(e =>
+            curByPath(e.path).dv != e.dv), sourcePrune)
+          val after = before.map(e => curByPath(e.path))
+          if (before.isEmpty) None
+          else Some(sourceFilter(Snapshots.withMeta(scan(before))
+            .join(Snapshots.withMeta(scan(after)).select("_fp", "_ri"),
+              Seq("_fp", "_ri"), "left_anti")
+            .drop("_fp", "_ri")))
         }
         (opInfo, addedRows, deltaRows) match {
           case (Some(("update", _)), post, pre) =>
@@ -1372,13 +1363,12 @@ object SnapshotSource {
       } else {
         // rewrite: retract the parent's live rows, insert the new ones
         // (fixed-type frames — prune + filter at the source)
-        def live(v: Int): DataFrame = filtered(scan(
-          pruneFiles(Snapshots.files(spark, dir, v)),
-          Snapshots.dvFrame(spark, dir, v)))
+        def live(es: Seq[Snapshots.Entry]): DataFrame =
+          filtered(scan(pruned(es, pruneFiles)))
         val dels =
-          if (parent >= 1) Seq(stamped(live(parent), "delete", cv))
+          if (parent >= 1) Seq(stamped(live(parentEs), "delete", cv))
           else Seq.empty
-        dels :+ stamped(live(cv), "insert", cv)
+        dels :+ stamped(live(curEs), "insert", cv)
       }
     }.toSeq
     lastCdfPrune = (pruneCount.get(), totalCount.get())
@@ -1388,28 +1378,23 @@ object SnapshotSource {
         cdfSchema(tableSchema)))
   }
 
-  /** Past this many deletion-vector positions a read stops holding the
-    * vector on the driver and anti-joins it instead ([[DvJoinRelation]]);
-    * the `maxDvPositions` reader option overrides it per read. */
-  private[sources] val DefaultMaxDvPositions: Long = 20000000L
-
   /** THE scan of snapshot data files — every read plans it: SQL and
     * `format("graft-snapshots")`, [[Snapshots.read]] and its pruned,
     * time-travel, compaction and optimize callers, the stream source's
     * micro-batches, the change feed and the DML/MERGE positional scans.
-    * `files` (manifest-relative) read as a [[HadoopFsRelation]] that
+    * The manifest lines `files` read as a [[HadoopFsRelation]] that
     * presents `schema`, the canonical schema of version `canonV`: each
     * vintage's columns are requested under the names its files store
     * them ([[Snapshots.vintageReads]]), so renamed vintages decode
     * natively, type widening rides the parquet reader's promotion (or a
     * cast after decoding where the reader cannot widen) and absent
-    * columns backfill null. `dv` (file name → sorted dead
-    * ordinals, empty = none) is skipped inside the reader. With no `dv`
-    * it is the positional DML scan: `_metadata` row indexes are the
-    * deletion vector's positions. */
-  private[sources] def fileRelation(spark: SparkSession, dir: String,
-      files: Seq[String], canonV: Int, schema: StructType,
-      dv: Map[String, Array[Long]] = Map.empty): HadoopFsRelation = {
+    * columns backfill null. A line's deletion vector is opened by the
+    * task reading its file and its dead rows skipped inside the reader;
+    * `_metadata` row indexes stay the file's own ordinals, the positions
+    * a vector records. Building the relation starts no job. */
+  private[sources] def relationFor(spark: SparkSession, dir: String,
+      files: Seq[Snapshots.Entry], canonV: Int,
+      schema: StructType): HadoopFsRelation = {
     val root = new Path(dir)
     val fsys = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // one listing of data/ resolves every manifest path's FileStatus
@@ -1421,127 +1406,53 @@ object SnapshotSource {
           .map(st => st.getPath.getName -> st).toMap
       else Map.empty
     }
-    val statuses = files.map { rel =>
-      rel -> byName.getOrElse(new Path(rel).getName,
-        fsys.getFileStatus(new Path(dir, rel)))
+    val statuses = files.map { e =>
+      e.path -> byName.getOrElse(new Path(e.path).getName,
+        fsys.getFileStatus(new Path(dir, e.path)))
     }
+    val paths = files.map(_.path)
     HadoopFsRelation(
       new SnapshotFileIndex(spark, dir, canonV, root, statuses),
       StructType(Nil), schema, None,
       new SnapshotParquetFormat(
-        Snapshots.vintageReads(spark, dir, files, canonV, schema), dv),
+        Snapshots.vintageReads(spark, dir, paths, canonV, schema), dir,
+        files.flatMap(e => e.dv.map(new Path(e.path).getName -> _)).toMap),
       Map.empty)(spark)
   }
 
-  /** [[fileRelation]] with deletion-vector frame `dv` applied: up to
-    * `maxDvPositions` positions load onto the driver once and are
-    * skipped in the reader; past the cap the read falls back to the
-    * distributed anti-join ([[DvJoinRelation]]) instead of refusing. */
-  private[sources] def relationFor(spark: SparkSession, dir: String,
-      files: Seq[String], canonV: Int, schema: StructType,
-      dv: Option[DataFrame],
-      maxDvPositions: Long = DefaultMaxDvPositions): BaseRelation = {
-    // ONE job: cap-check on the collected size (collecting and counting
-    // separately would scan the vector twice)
-    val positions = dv.map(_.limit(
-      math.min(maxDvPositions + 1, Int.MaxValue.toLong).toInt).collect())
-    positions match {
-      case Some(rows) if rows.length > maxDvPositions =>
-        // over the cap: same vectorized scan (no DV), live rows resolved
-        // by a DISTRIBUTED anti-join on (file_path, row_index) — a
-        // version carrying billions of pending deletes stays readable at
-        // the cost of the join, and OPTIMIZE restores the map path
-        new DvJoinRelation(spark, schema,
-          fileRelation(spark, dir, files, canonV, schema), dv.get)
-      case _ =>
-        fileRelation(spark, dir, files, canonV, schema,
-          positions.getOrElse(Array.empty)
-            .map(r => (new Path(r.getString(0)).getName, r.getLong(1)))
-            .groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2).sorted })
-    }
-  }
-
-  /** Version `v` as a read plans it: its files (restricted to
+  /** Version `v` as a read plans it: its manifest lines (restricted to
     * `fileSubset` when given — the caller asserts the dropped files
-    * cannot contribute), its evolved schema, its deletion vector. */
+    * cannot contribute), its evolved schema. */
   private[sources] def versionRelation(spark: SparkSession, dir: String,
-      v: Int, maxDvPositions: Long = DefaultMaxDvPositions,
-      fileSubset: Option[Set[String]] = None): BaseRelation = {
-    val all = Snapshots.files(spark, dir, v)
-    relationFor(spark, dir, fileSubset.fold(all)(all.filter), v,
-      Snapshots.evolvedSchema(spark, dir, v, all),
-      Snapshots.dvFrame(spark, dir, v), maxDvPositions)
-  }
-}
-
-/** The over-`maxDvPositions` read path: a merge-on-read version whose
-  * deletion vector is too large to hold on the driver reads as the
-  * UN-DV'd vectorized scan anti-joined with the DV frame on
-  * `(_metadata.file_path, _metadata.row_index)` — fully distributed
-  * (AQE picks the join strategy; at this size it is a shuffle join by
-  * construction). Declared via `PrunedFilteredScan` so column pruning
-  * still reaches the parquet scan; every filter is reported unhandled
-  * (the engine re-applies them above), but translatable ones are ALSO
-  * applied inside so pushdown + stats pruning reach the inner scan.
-  * `needConversion=false`: the built scan hands back the join's
-  * already-internal rows, no Row re-encoding. */
-private[sources] class DvJoinRelation(spark: SparkSession,
-    override val schema: StructType, base: HadoopFsRelation, dv: DataFrame)
-    extends BaseRelation with PrunedFilteredScan {
-
-  override def sqlContext: SQLContext = spark.sqlContext
-  override def needConversion: Boolean = false
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
-    filters
-
-  /** The live-row plan the scan executes — exposed so the spec can pin
-    * the anti-join shape. */
-  private[sources] def livePlan(requiredColumns: Array[String],
-      filters: Array[Filter]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val df0 = org.apache.spark.sql.GraftBatchView.ofRows(spark,
-      org.apache.spark.sql.execution.datasources.LogicalRelation(
-        base, false))
-    val pushed = filters.flatMap(DvJoinRelation.toColumn)
-      .reduceOption(_ && _)
-    val df = pushed.map(df0.filter).getOrElse(df0)
-    val withPos = df.select(col("*"),
-      col("_metadata.file_path").as("_fp"),
-      col("_metadata.row_index").as("_ri"))
-    withPos.join(dv.select(col("file_path").as("_fp"),
-        col("row_index").as("_ri")), Seq("_fp", "_ri"), "left_anti")
-      .select(requiredColumns.map(col).toSeq: _*)
+      v: Int, fileSubset: Option[Set[String]] = None): HadoopFsRelation = {
+    val all = Snapshots.entries(spark, dir, v)
+    relationFor(spark, dir, fileSubset.fold(all)(k => all.filter(e =>
+      k(e.path))), v, Snapshots.evolvedSchema(spark, dir, v, all.map(_.path)))
   }
 
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): org.apache.spark.rdd.RDD[
-      org.apache.spark.sql.Row] =
-    livePlan(requiredColumns, filters).queryExecution.toRdd
-      .asInstanceOf[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
-}
-
-private[sources] object DvJoinRelation {
-  import org.apache.spark.sql.{functions => F, Column}
-  import org.apache.spark.sql.sources._
-
-  /** Best-effort source-Filter → Column (for inner pushdown only; the
-    * engine re-applies every filter above, so a None is never wrong). */
-  private[sources] def toColumn(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v) => Some(F.col(a) === F.lit(v))
-    case GreaterThan(a, v) => Some(F.col(a) > F.lit(v))
-    case GreaterThanOrEqual(a, v) => Some(F.col(a) >= F.lit(v))
-    case LessThan(a, v) => Some(F.col(a) < F.lit(v))
-    case LessThanOrEqual(a, v) => Some(F.col(a) <= F.lit(v))
-    case In(a, vs) => Some(F.col(a).isin(vs.toSeq.map(F.lit(_)): _*))
-    case IsNull(a) => Some(F.col(a).isNull)
-    case IsNotNull(a) => Some(F.col(a).isNotNull)
-    case StringStartsWith(a, v) => Some(F.col(a).startsWith(v))
-    case And(l, r) => for (lc <- toColumn(l); rc <- toColumn(r))
-      yield lc && rc
-    case Or(l, r) => for (lc <- toColumn(l); rc <- toColumn(r))
-      yield lc || rc
-    case Not(c) => toColumn(c).map(!_)
-    case _ => None
+  /** Best-effort source-Filter → Column, for the change feed's inner
+    * pushdown (the engine re-applies every filter above, so a None is
+    * never wrong). */
+  private def filterColumn(f: Filter): Option[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.{functions => F}
+    import org.apache.spark.sql.sources._
+    f match {
+      case EqualTo(a, v) => Some(F.col(a) === F.lit(v))
+      case GreaterThan(a, v) => Some(F.col(a) > F.lit(v))
+      case GreaterThanOrEqual(a, v) => Some(F.col(a) >= F.lit(v))
+      case LessThan(a, v) => Some(F.col(a) < F.lit(v))
+      case LessThanOrEqual(a, v) => Some(F.col(a) <= F.lit(v))
+      case In(a, vs) => Some(F.col(a).isin(vs.toSeq.map(F.lit(_)): _*))
+      case IsNull(a) => Some(F.col(a).isNull)
+      case IsNotNull(a) => Some(F.col(a).isNotNull)
+      case StringStartsWith(a, v) => Some(F.col(a).startsWith(v))
+      case And(l, r) => for (lc <- filterColumn(l); rc <- filterColumn(r))
+        yield lc && rc
+      case Or(l, r) => for (lc <- filterColumn(l); rc <- filterColumn(r))
+        yield lc || rc
+      case Not(c) => filterColumn(c).map(!_)
+      case _ => None
+    }
   }
 }
 
@@ -1597,14 +1508,16 @@ private[sources] object SnapshotFileIndex {
   * type and cast after decoding ([[Snapshots.VintageRead.readType]]); a
   * scan reading such a column hands rows, not columnar batches, to the
   * engine (decoding stays vectorized).
-  * When the scan carries a deletion vector, dead row ordinals (broadcast
-  * once) are skipped inside the reader — files stay unsplit and
-  * unfiltered in that mode so ordinals stay aligned with commit-time
+  * `dv` maps a data file's name to its deletion vector (relative to the
+  * table `dir`): the task reading that file opens the vector and skips
+  * its dead row ordinals inside the reader. Such a file is read unsplit,
+  * and while any file of the scan has a vector no filter reaches the
+  * parquet reader, so ordinals stay aligned with commit-time
   * `_metadata.row_index` positions (the engine re-applies every filter
   * above the scan). */
 private[sources] class SnapshotParquetFormat(
-    vintages: Map[Int, Snapshots.VintageRead],
-    dv: Map[String, Array[Long]]) extends ParquetFileFormat {
+    vintages: Map[Int, Snapshots.VintageRead], dir: String,
+    dv: Map[String, String]) extends ParquetFileFormat {
 
   private val plain = Snapshots.VintageRead(Map.empty, StructType(Nil))
   private val hasDv = dv.nonEmpty
@@ -1621,7 +1534,7 @@ private[sources] class SnapshotParquetFormat(
 
   override def isSplitable(spark: SparkSession,
       options: Map[String, String], path: Path): Boolean =
-    !hasDv && super.isSplitable(spark, options, path)
+    !dv.contains(path.getName) && super.isSplitable(spark, options, path)
 
   override def buildReaderWithPartitionValues(spark: SparkSession,
       dataSchema: StructType, partitionSchema: StructType,
@@ -1671,27 +1584,27 @@ private[sources] class SnapshotParquetFormat(
         options, new org.apache.hadoop.conf.Configuration(hadoopConf)),
         cast)
     }.toMap
-    val dvBc = if (hasDv) Some(spark.sparkContext.broadcast(dv)) else None
+    val conf = if (!hasDv) None else Some(spark.sparkContext.broadcast(
+      new SerializableHadoopConf(hadoopConf)))
     val byVintage = vintages
     val fallback = plain
+    val tableDir = dir
+    val vectors = dv
     (file: PartitionedFile) => {
       val name = file.toPath.getName
       val (read, cast) =
         readers(byVintage.getOrElse(Snapshots.vintageOf(name), fallback))
       val rows = read(file)
-      val live = dvBc.flatMap(_.value.get(name)) match {
+      val live = vectors.get(name) match {
         case None => rows
-        case Some(dead) =>
-          // sequential ordinal filter: reader yields full-file row order
-          // (unsplit, no pushed filters), dead is sorted
+        case Some(rel) =>
+          val p = new Path(tableDir, rel)
+          val dead =
+            DeletionVectors.read(p.getFileSystem(conf.get.value.value), p)
+          // ordinal filter: the reader yields full-file row order
+          // (unsplit, no pushed filters)
           var ordinal = -1L
-          var cursor = 0
-          rows.filter { _ =>
-            ordinal += 1
-            while (cursor < dead.length && dead(cursor) < ordinal)
-              cursor += 1
-            !(cursor < dead.length && dead(cursor) == ordinal)
-          }
+          rows.filter { _ => ordinal += 1; !dead.contains(ordinal) }
       }
       cast.fold(live)(exprs => live.map(UnsafeProjection.create(exprs)))
     }

@@ -73,14 +73,52 @@ object Snapshots {
       .sorted.lastOption.getOrElse(0)
   }
 
-  private[sources] def files(s: SparkSession, dir: String, v: Int): Seq[String] = {
-    val txt = readSmall(fs(s, dir), manifest(dir, v))
-    // manifest body: one relative path per line inside a JSON array of
-    // strings (kept trivially parseable without a JSON library)
-    txt.split('\n').map(_.trim).filter(_.nonEmpty)
-      .filter(l => l != "[" && l != "]")
-      .map(_.stripSuffix(",").stripPrefix("\"").stripSuffix("\""))
-      .toSeq
+  /** One manifest line: a data file (table-relative) and, once
+    * merge-on-read deletes hit it, its current deletion vector (a
+    * [[DeletionVectors]] file, table-relative) and that vector's
+    * cardinality. */
+  private[sources] final case class Entry(path: String,
+      dv: Option[String] = None, deleted: Long = 0L)
+
+  /** Version `v`'s manifest. The body is a JSON array with one line per
+    * data file: a plain string, or `["file", "vector", deleted]` for a
+    * file with a deletion vector (kept trivially parseable without a
+    * JSON library). */
+  private def manifestEntries(f: FileSystem, dir: String, v: Int)
+      : Seq[Entry] = {
+    def unquote(x: String) = x.trim.stripPrefix("\"").stripSuffix("\"")
+    readSmall(f, manifest(dir, v)).split('\n').map(_.trim)
+      .filter(l => l.nonEmpty && l != "[" && l != "]")
+      .map(_.stripSuffix(","))
+      .map { l =>
+        if (!l.startsWith("[")) Entry(unquote(l))
+        else {
+          val a = l.stripPrefix("[").stripSuffix("]").split(',')
+          Entry(unquote(a(0)), Some(unquote(a(1))), a(2).trim.toLong)
+        }
+      }.toSeq
+  }
+
+  private[sources] def files(s: SparkSession, dir: String,
+      v: Int): Seq[String] =
+    manifestEntries(fs(s, dir), dir, v).map(_.path)
+
+  /** Version `v`'s manifest entries, deletion vectors included — what
+    * every reader and writer of vectors resolves. A version of a table
+    * written before per-file vectors keeps its whole-table vector in a
+    * `dv/vN/` directory this build cannot apply: refused, never read
+    * without its deletes. */
+  private[sources] def entries(s: SparkSession, dir: String, v: Int)
+      : Seq[Entry] = {
+    val f = fs(s, dir)
+    val es = manifestEntries(f, dir, v)
+    if (es.forall(_.dv.isEmpty) && f.exists(new Path(dir, s"dv/v$v")))
+      throw new UnsupportedOperationException(
+        s"graft-snapshots: version $v of $dir keeps its deletion vector " +
+          s"in the legacy whole-table layout (dv/v$v/), which this build " +
+          "no longer reads — run optimize on the table with the previous " +
+          "build to materialize the deletes, then use it here")
+    es
   }
 
   /** Commit `df` as the next version. `append = true` carries the previous
@@ -333,27 +371,15 @@ object Snapshots {
   }
 
   /** COUNT(*) of version `v` from METADATA alone: the parquet footers
-    * of the manifest's files minus the deletion vector's positions
-    * (each DV row is ONE deleted position in a live file — every DV
-    * writer anti-joins new hits against the prior vector and appends
-    * carry vectors forward untouched, so positions are unique and all
-    * reference manifest files). Zero Spark jobs, O(files + dv files)
+    * of the manifest's files minus the cardinalities of their deletion
+    * vectors, which the manifest lines carry. Zero Spark jobs, O(files)
     * driver footer reads — the lakehouse metadata-count at any table
     * size; [[GraftSqlRules]] folds bare `SELECT count(*)` over a
     * catalog table onto this. */
   def metadataRowCount(s: SparkSession, dir: String,
-      v: Int): Long = {
-    val total = files(s, dir, v)
-      .map(p => parquetRowCount(new Path(dir, p), s)).sum
-    val f = fs(s, dir)
-    val dv = dvDir(dir, v)
-    val deleted =
-      if (!f.exists(dv)) 0L
-      else f.listStatus(dv).map(_.getPath)
-        .filter(p => p.getName.endsWith(".parquet"))
-        .map(p => parquetRowCount(p, s)).sum
-    total - deleted
-  }
+      v: Int): Long =
+    entries(s, dir, v).map(e =>
+      parquetRowCount(new Path(dir, e.path), s) - e.deleted).sum
 
   private val ClaimName = """^v(\d+)\.claim$""".r
 
@@ -710,21 +736,8 @@ object Snapshots {
       case StagedParts(files, schema) =>
         moveStaged(s, f, dir, files, schema, statsCols, v, statsExprs)
     }
-    val carried = if (append && prev > 0) files(s, dir, prev) else Seq.empty
-    // an append CARRIES the base's deletion vector too: the positions
-    // stay valid (every carried file is untouched), and without the
-    // carry a plain append after a merge-on-read delete would silently
-    // RESURRECT the deleted rows in the new version
-    if (append && prev > 0 && hasDv(s, dir, prev))
-      dvFrame(s, dir, prev).foreach(
-        _.write.mode("overwrite").parquet(dvDir(dir, v).toString))
-    else {
-      // an ABORTED mutation (deleteWhere/updateWhere/upsert that failed
-      // between its vector write and its manifest) can orphan dv/vN for
-      // a version number this commit now claims — inheriting it would
-      // silently delete this version's rows
-      f.delete(dvDir(dir, v), true); ()
-    }
+    // an append carries the base's lines, deletion vectors included
+    val carried = if (append && prev > 0) entries(s, dir, prev) else Seq.empty
     // meta precedes the manifest: a version without meta never becomes
     // visible (versions resolve through manifests), so `manifest => meta`
     // holds and a stream batch id stamped in meta is crash-consistent
@@ -737,7 +750,7 @@ object Snapshots {
       try o.write(body.getBytes("UTF-8")) finally o.close()
     }
     writeStatLines(f, dir, v, statLines)
-    writeManifest(f, dir, v, carried ++ moved)
+    writeManifest(f, dir, v, carried ++ moved.map(Entry(_)))
     maybeCheckpoint(f, dir, v)
     v
   }
@@ -1636,13 +1649,14 @@ object Snapshots {
     import org.apache.spark.sql.catalyst.expressions.{And,
       AttributeReference, GreaterThanOrEqual, LessThanOrEqual, Literal}
     import org.apache.spark.sql.functions.col
-    val fset = files(s, dir, v)
+    val es = entries(s, dir, v)
+    val fset = es.map(_.path)
     val key = AttributeReference(keyCol, Literal(lo).dataType)()
     val keep = StatsPruning.keep(s, dir, v, fset, StatsPruning.groupsOf(s,
       dir, And(GreaterThanOrEqual(key, Literal(lo)),
-        LessThanOrEqual(key, Literal(hi)))))
+        LessThanOrEqual(key, Literal(hi))))).toSet
     val df = s.baseRelationToDataFrame(SnapshotSource.relationFor(s, dir,
-      keep, v, evolvedSchema(s, dir, v, fset), dvFrame(s, dir, v)))
+      es.filter(e => keep(e.path)), v, evolvedSchema(s, dir, v, fset)))
     (df.filter(col(keyCol) >= lo && col(keyCol) <= hi), (keep.size, fset.size))
   }
 
@@ -1771,11 +1785,14 @@ object Snapshots {
       StructField(n, widened(n), nullable = true)))
   }
 
-  /** The manifest body: one relative path per line inside a JSON array
-    * of strings — ONE renderer shared by initial publish and purge's
-    * republish, so the two cannot drift. */
-  private def manifestBody(fileSet: Seq[String]): String =
-    fileSet.map(p => "  \"" + p + "\"").mkString("[\n", ",\n", "\n]")
+  /** The manifest body ([[manifestEntries]] parses it) — ONE renderer
+    * shared by initial publish and purge's republish, so the two cannot
+    * drift. */
+  private def manifestBody(es: Seq[Entry]): String =
+    es.map {
+      case Entry(p, None, _) => "  \"" + p + "\""
+      case Entry(p, Some(d), n) => s"""  ["$p", "$d", $n]"""
+    }.mkString("[\n", ",\n", "\n]")
 
   /** Write `body` to `target` atomically via temp file + OVERWRITE-capable
     * rename — shared by every small-pointer write that must never be
@@ -1815,10 +1832,10 @@ object Snapshots {
 
   /** Write manifest vN atomically (temp name + checked rename). */
   private def writeManifest(f: FileSystem, dir: String, v: Int,
-      fileSet: Seq[String]): Unit = {
+      es: Seq[Entry]): Unit = {
     val tmp = new Path(dir, s"_v$v.json.tmp")
     val o = f.create(tmp, true)
-    try o.write(manifestBody(fileSet).getBytes("UTF-8")) finally o.close()
+    try o.write(manifestBody(es).getBytes("UTF-8")) finally o.close()
     if (!f.rename(tmp, manifest(dir, v)))
       throw new java.io.IOException(
         s"snapshot commit aborted: manifest rename for v$v returned false")
@@ -1826,31 +1843,9 @@ object Snapshots {
 
   // ---- deletion vectors (merge-on-read deletes) ---------------------------
 
-  private def dvDir(dir: String, v: Int) = new Path(dir, s"dv/v$v")
-
-  /** The (file_path, row_index) positions deleted as of version `v`, or
-    * None if the version carries no deletion vector. */
-  /** Row count of version `v`'s deletion-vector directory, summed from
-    * its parquet footers — driver metadata reads, zero Spark jobs (the
-    * applyCdc removal audit uses it so auditing costs no cluster work). */
-  private def dvRowCountFromFooters(s: SparkSession, dir: String,
-      v: Int): Long = {
-    val d = dvDir(dir, v)
-    val f = fs(s, dir)
-    if (!f.exists(d)) 0L
-    else f.listStatus(d).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      .map(st => parquetRowCount(st.getPath, s)).sum
-  }
-
-  private[sources] def dvFrame(s: SparkSession, dir: String, v: Int)
-      : Option[DataFrame] = {
-    val p = dvDir(dir, v)
-    if (fs(s, dir).exists(p)) Some(s.read.parquet(p.toString)) else None
-  }
-
+  /** Whether any file of version `v` carries a deletion vector. */
   private[sources] def hasDv(s: SparkSession, dir: String, v: Int): Boolean =
-    fs(s, dir).exists(dvDir(dir, v))
+    entries(s, dir, v).exists(_.dv.isDefined)
 
   /** `df` (a file scan) plus its rows' `_fp`/`_ri` positions — the
     * `(file_path, row_index)` a deletion vector records. */
@@ -1867,25 +1862,27 @@ object Snapshots {
   private[sources] def lastDmlPruneCounts: (Int, Int) =
     SnapshotFileIndex.lastPruneCounts
 
-  /** The positional scan of version `v` (or the `subset` of its files)
-    * behind DML and the MERGE family: every physical row (deletion vector
-    * NOT applied — callers anti-join it) under the version's canonical
-    * schema, so renamed and widened vintages read like a SELECT, plus
-    * `_fp`/`_ri` positions. A filter over it prunes files like a read. */
+  /** The positional scan behind DML and the MERGE family: the live rows
+    * of version `v`'s entries `es` (or of the `subset` of its files),
+    * deletion vectors applied in the reader, under the version's
+    * canonical schema, so renamed and widened vintages read like a
+    * SELECT, plus `_fp`/`_ri` positions. A filter over it prunes files
+    * like a read. */
   private def positionsScan(s: SparkSession, dir: String, v: Int,
-      subset: Option[Set[String]] = None): DataFrame = {
-    val all = files(s, dir, v)
-    withMeta(s.baseRelationToDataFrame(SnapshotSource.fileRelation(s, dir,
-      subset.fold(all)(all.filter), v, evolvedSchema(s, dir, v, all))))
-  }
+      es: Seq[Entry], subset: Option[Set[String]] = None): DataFrame =
+    withMeta(s.baseRelationToDataFrame(SnapshotSource.relationFor(s, dir,
+      subset.fold(es)(k => es.filter(e => k(e.path))), v,
+      evolvedSchema(s, dir, v, es.map(_.path)))))
 
-  /** MERGE-ON-READ delete: rows matching `cond` in the latest version are
-    * recorded as (file, row_index) positions in a deletion vector and a
-    * new version is published referencing the SAME data files plus the
-    * vector — no data file is rewritten, so a delete over a 100 TB table
-    * costs one filtered scan and a positions write, not a rewrite. Reads
-    * of the new version anti-join the vector (AQE broadcasts it while it
-    * is small); prior versions are untouched and still resolve the rows.
+  /** MERGE-ON-READ delete: the row indexes of rows matching `cond` in
+    * the latest version join the deletion vectors of the files holding
+    * them ([[DeletionVectors.extend]]), and a new version is published
+    * referencing the SAME data files — no data file is rewritten, and
+    * only the touched files get new vectors, so a delete over a 100 TB
+    * table costs one filtered scan plus one small vector per hit file,
+    * however many deletes came before. Each read task of the new version
+    * opens the vector of the file it reads and skips its dead rows; prior
+    * versions are untouched and still resolve the rows.
     * [[optimize]] MATERIALIZES the vector (its rewrite reads through the
     * DV), publishing a DV-free clustered version — the delete-compaction
     * step; [[purge]] is the physical compliance path and requires a
@@ -1920,29 +1917,15 @@ object Snapshots {
     // a pre-claim latest would silently drop a commit that interleaved
     // between the read and the claim (the lost-update window)
     claimed(s, f, dir, branch, "delete") { (v, latest) =>
-      val fset = files(s, dir, latest)
-      val scan = positionsScan(s, dir, latest)
-      val hits0 = scan.filter(condOf(scan))
-        .select(col("_fp").as("file_path"), col("_ri").as("row_index"))
-      // already-deleted rows must not re-count
-      val prev = dvFrame(s, dir, latest)
-      val hits = prev.map(p => hits0.join(p, Seq("file_path", "row_index"),
-        "left_anti")).getOrElse(hits0)
-      // the new positions are counted from CACHE, not by re-scanning the
-      // table or re-reading the vector just written: the DV write
-      // materializes `hits` (its plan fragment is persisted), so the
-      // whole delete costs exactly one data scan (positions are new by
-      // construction — the anti-join above excludes prior deletes)
-      hits.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val union = prev.map(_.unionByName(hits)).getOrElse(hits)
-        union.write.mode("overwrite").parquet(dvDir(dir, v).toString)
-        val n = hits.count()
-        writeCommitMeta(f, dir, v, latest)
-        writeManifest(f, dir, v, fset)
-        maybeCheckpoint(f, dir, v)
-        (v, n)
-      } finally { hits.unpersist(); () }
+      val prev = entries(s, dir, latest)
+      val scan = positionsScan(s, dir, latest, prev)
+      val (next, n) = DeletionVectors.extend(s, dir, v, prev,
+        scan.filter(condOf(scan))
+          .select(col("_fp").as("file_path"), col("_ri").as("row_index")))
+      writeCommitMeta(f, dir, v, latest)
+      writeManifest(f, dir, v, next)
+      maybeCheckpoint(f, dir, v)
+      (v, n)
     }
   }
 
@@ -1966,26 +1949,18 @@ object Snapshots {
       s"replaceWhere: no versions at $dir")
     // claim FIRST, then compute against v-1 (the deleteWhere rationale)
     claimed(s, f, dir, branch, "replace") { (v, latest) =>
-      val fset = files(s, dir, latest)
-      val scan = positionsScan(s, dir, latest)
-      val hits0 = scan.filter(cond)
-        .select(col("_fp").as("file_path"), col("_ri").as("row_index"))
-      val prev = dvFrame(s, dir, latest)
-      val hits = prev.map(p => hits0.join(p,
-        Seq("file_path", "row_index"), "left_anti")).getOrElse(hits0)
-      hits.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val union = prev.map(_.unionByName(hits)).getOrElse(hits)
-        union.write.mode("overwrite").parquet(dvDir(dir, v).toString)
-        val n = hits.count()
-        val (moved, statLines) = stageAndMove(s, f, dir, df, statsCols,
-          v, statsExprs)
-        writeCommitMeta(f, dir, v, latest)
-        writeStatLines(f, dir, v, statLines)
-        writeManifest(f, dir, v, fset ++ moved)
-        maybeCheckpoint(f, dir, v)
-        (v, n)
-      } finally { hits.unpersist(); () }
+      val prev = entries(s, dir, latest)
+      val scan = positionsScan(s, dir, latest, prev)
+      val (next, n) = DeletionVectors.extend(s, dir, v, prev,
+        scan.filter(cond)
+          .select(col("_fp").as("file_path"), col("_ri").as("row_index")))
+      val (moved, statLines) = stageAndMove(s, f, dir, df, statsCols,
+        v, statsExprs)
+      writeCommitMeta(f, dir, v, latest)
+      writeStatLines(f, dir, v, statLines)
+      writeManifest(f, dir, v, next ++ moved.map(Entry(_)))
+      maybeCheckpoint(f, dir, v)
+      (v, n)
     }
   }
 
@@ -1993,7 +1968,7 @@ object Snapshots {
     * positions join the deletion vector and the UPDATED rows land as
     * fresh appended files — [[upsert]] mechanics keyed by POSITION
     * instead of by key (so tables without a key column update fine), at
-    * the same 100 TB cost shape: one filtered scan, a positions write,
+    * the same 100 TB cost shape: one filtered scan, a vector per hit file,
     * and the matched rows, never a rewrite of matched files. `sets`
     * maps column name → new-value Column (resolved against this table's
     * scan; values are cast back to the column's current type, the SQL
@@ -2029,32 +2004,24 @@ object Snapshots {
     // claim FIRST, then match against the claimed predecessor (the same
     // lost-update reasoning as deleteWhere/upsert)
     claimed(s, f, dir, branch, "update") { (v, latest) =>
-      val fset = files(s, dir, latest)
-      val raw = positionsScan(s, dir, latest)
-      val prev = dvFrame(s, dir, latest)
-      val live = prev.map(p => raw.join(
-          p.select(col("file_path").as("_fp"), col("row_index").as("_ri")),
-          Seq("_fp", "_ri"), "left_anti")).getOrElse(raw)
-      // `matched` feeds THREE consumers — the DV positions, the updated
-      // rows staged as fresh files, and the metrics count — so it is
+      val prev = entries(s, dir, latest)
+      val live = positionsScan(s, dir, latest, prev)
+      // `matched` feeds TWO consumers — the vector writer (which also
+      // counts it) and the updated rows staged as fresh files — so it is
       // persisted once: the whole update costs ONE scan of the table
-      // (the first consumer materializes the cache; the others read it
-      // back), instead of re-scanning per consumer or re-reading the
-      // just-written vector. Positions are new by construction (`live`
-      // excludes prior deletes), so count(matched) IS rowsUpdated.
       val matched = live.filter(condOf(live))
       matched.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val types = raw.schema.fields.map(fd => fd.name -> fd.dataType)
+        val types = live.schema.fields.map(fd => fd.name -> fd.dataType)
           .toMap
-        val sets = setsOf(raw)
+        val sets = setsOf(live)
         require(sets.nonEmpty, "updateWhere needs at least one assignment")
         val setMap = sets.toMap
         require(setMap.keys.forall(types.contains),
           s"updateWhere: unknown column(s) ${setMap.keys.filterNot(types
             .contains).mkString(", ")}")
-        val dataCols = raw.columns.filterNot(Set("_fp", "_ri"))
+        val dataCols = live.columns.filterNot(Set("_fp", "_ri"))
         val updated = matched.select(dataCols.toSeq.map { cn =>
           setMap.get(cn).map(_.cast(types(cn)).as(cn)).getOrElse(col(cn))
         }: _*)
@@ -2064,11 +2031,8 @@ object Snapshots {
         // invalidate. It runs BEFORE the vector write so a refusal
         // leaves no DV behind.
         validate.foreach(_(updated))
-        val gone = matched
-          .select(col("_fp").as("file_path"), col("_ri").as("row_index"))
-        val union = prev.map(_.unionByName(gone)).getOrElse(gone)
-        union.write.mode("overwrite").parquet(dvDir(dir, v).toString)
-        val nUpd = matched.count()
+        val (next, nUpd) = DeletionVectors.extend(s, dir, v, prev, matched
+          .select(col("_fp").as("file_path"), col("_ri").as("row_index")))
         val (moved, statLines) = stageAndMove(s, f, dir, updated,
           statsColsOf(updated.schema), v)
         writeCommitMeta(f, dir, v, latest)
@@ -2076,7 +2040,7 @@ object Snapshots {
         // UPDATED (its replacement is in the staged files)
         writeCommitOp(f, dir, v, "update", Seq.empty)
         writeStatLines(f, dir, v, statLines)
-        writeManifest(f, dir, v, fset ++ moved)
+        writeManifest(f, dir, v, next ++ moved.map(Entry(_)))
         maybeCheckpoint(f, dir, v)
         (v, nUpd)
       } finally { matched.unpersist(); () }
@@ -2221,23 +2185,27 @@ object Snapshots {
       case _ => org.apache.spark.sql.catalyst.expressions.Literal(true)
     }
 
-  /** An empty (file_path, row_index) positions frame — the matched set
-    * when key-stat pruning proves no live file can hold a source key. */
+  /** The `(file_path, row_index)` shape of row positions: `_metadata`
+    * coordinates, what [[DeletionVectors.extend]] takes. */
+  private[sources] val positionsSchema =
+    org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("file_path",
+        org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("row_index",
+        org.apache.spark.sql.types.LongType)))
+
+  /** An empty positions frame — the matched set of a table with no
+    * committed version. */
   private[sources] def emptyPositions(s: SparkSession): DataFrame =
-    s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("file_path",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("row_index",
-          org.apache.spark.sql.types.LongType))))
+    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      positionsSchema)
 
   /** MERGE INTO (upsert) in ONE published version: rows of `src` whose
     * key matches a live row REPLACE it (the old position joins the
     * deletion vector), and every `src` row lands in fresh files appended
     * to the carried file set — so an upsert over a 100 TB table costs a
     * key-join scan OVER THE STAT-OVERLAPPING FILES ONLY
-    * ([[matchableFiles]]), a positions write, and the size of `src`,
+    * ([[matchableFiles]]), a vector per hit file, and the size of `src`,
     * never a rewrite of matched files or a full-table scan. `src` must
     * have the table's schema and unique keys (the standard MERGE source
     * constraint — duplicate source keys would make the result
@@ -2260,7 +2228,8 @@ object Snapshots {
     // deleteWhere: a commit interleaving between a pre-claim read and the
     // claim would vanish from the published file set)
     claimed(s, f, dir, branch, "upsert") { (v, latest) =>
-      val fset = files(s, dir, latest)
+      val prev = entries(s, dir, latest)
+      val fset = prev.map(_.path)
       // one job over the batch-sized source: key bounds for file
       // pruning, the distinct-key count, AND the row count — the
       // uniqueness check rides along instead of costing two more jobs
@@ -2270,35 +2239,27 @@ object Snapshots {
       require(aggRow.getLong(0) ==
           aggRow.getLong(1 + 2 * keyCols.size),
         "upsert source must have unique keys")
-      val prev = dvFrame(s, dir, latest)
-      val matched: DataFrame =
-        if (matchFiles.isEmpty) emptyPositions(s)
+      val (next, nReplaced) =
+        if (matchFiles.isEmpty) (prev, 0L)
         else {
-          val raw = positionsScan(s, dir, latest, Some(matchFiles.toSet))
-          // only LIVE rows can match — an already-deleted position must
-          // not re-enter the vector (it would distort the replaced count)
-          val live = prev.map(p => raw.join(
-              p.select(col("file_path").as("_fp"),
-                col("row_index").as("_ri")),
-              Seq("_fp", "_ri"), "left_anti")).getOrElse(raw)
+          // only LIVE rows can match: the scan applies the vectors
+          val live = positionsScan(s, dir, latest, prev,
+            Some(matchFiles.toSet))
           // a collected exact-key set re-enters as a broadcast local
           // relation: no source recomputation, no shuffle on the scan
           val keyFrame = exactKeys.map(broadcast)
             .getOrElse(srcKeys.distinct())
-          live.join(keyFrame, keyCols, "left_semi")
-            .select(col("_fp").as("file_path"), col("_ri").as("row_index"))
+          DeletionVectors.extend(s, dir, v, prev,
+            live.join(keyFrame, keyCols, "left_semi").select(
+              col("_fp").as("file_path"), col("_ri").as("row_index")))
         }
-      val union = prev.map(_.unionByName(matched)).getOrElse(matched)
-      union.write.mode("overwrite").parquet(dvDir(dir, v).toString)
-      val nReplaced = s.read.parquet(dvDir(dir, v).toString).count() -
-        prev.map(_.count()).getOrElse(0L)
       val (moved, statLines) = stageAndMove(s, f, dir, src, statsCols, v)
       writeCommitMeta(f, dir, v, latest, streamTxn)
       // change-feed typing: delta positions are REPLACED rows (their
       // postimages are the staged rows sharing the key)
       writeCommitOp(f, dir, v, "upsert", keyCols)
       writeStatLines(f, dir, v, statLines)
-      writeManifest(f, dir, v, fset ++ moved)
+      writeManifest(f, dir, v, next ++ moved.map(Entry(_)))
       maybeCheckpoint(f, dir, v)
       (v, nReplaced)
     }
@@ -2308,7 +2269,7 @@ object Snapshots {
     * replace-or-insert by key (exactly [[upsert]]'s mechanics) and
     * `deleteKeys` rows leave via the deletion vector — the MERGE shape a
     * change-data feed needs (update + insert + delete in one commit).
-    * Cost at 100 TB: a key-join scan of the live set, a positions write,
+    * Cost at 100 TB: a key-join scan of the live set, a vector per hit file,
     * and the size of the batch — never a rewrite.
     *
     * `expectedRemoved`, when given, is the caller's REMOVAL AUDIT: the
@@ -2333,7 +2294,8 @@ object Snapshots {
     require(latestVersion(s, dir) >= 1, s"applyCdc: no versions at $dir")
     val srcKeys = upserts.select(keyCols.map(col): _*)
     claimed(s, f, dir, branch, "apply CDC") { (v, latest) =>
-      val fset = files(s, dir, latest)
+      val prev = entries(s, dir, latest)
+      val fset = prev.map(_.path)
       // both key families prune the scan; a marker column (prefixed to
       // stay clear of any user key column) lets the ONE aggregation job
       // also count the upsert side for the uniqueness check (previously
@@ -2350,31 +2312,20 @@ object Snapshots {
       require(aggRow.getLong(1 + 2 * keyCols.size) ==
           aggRow.getLong(2 + 2 * keyCols.size),
         "applyCdc upsert batch must have unique keys")
-      val prev = dvFrame(s, dir, latest)
       // replaced (upsert keys) and deleted (delete keys) positions join
-      // the vector together — one commit, one new vector
-      val gone: DataFrame =
-        if (matchFiles.isEmpty) emptyPositions(s)
+      // the vectors together — one commit, one vector write; the writer's
+      // count of newly dead rows is the removal audit's figure
+      val (next, nGone) =
+        if (matchFiles.isEmpty) (prev, 0L)
         else {
-          val raw = positionsScan(s, dir, latest, Some(matchFiles.toSet))
-          val live = prev.map(p => raw.join(
-              p.select(col("file_path").as("_fp"),
-                col("row_index").as("_ri")),
-              Seq("_fp", "_ri"), "left_anti")).getOrElse(raw)
+          val live = positionsScan(s, dir, latest, prev,
+            Some(matchFiles.toSet))
           val keyFrame = exactKeys.map(broadcast).getOrElse(
             allKeys.select(keyCols.map(col): _*).distinct())
-          live.join(keyFrame, keyCols, "left_semi")
-            .select(col("_fp").as("file_path"), col("_ri").as("row_index"))
+          DeletionVectors.extend(s, dir, v, prev,
+            live.join(keyFrame, keyCols, "left_semi").select(
+              col("_fp").as("file_path"), col("_ri").as("row_index")))
         }
-      val union = prev.map(_.unionByName(gone)).getOrElse(gone)
-      union.write.mode("overwrite").parquet(dvDir(dir, v).toString)
-      // removal-audit count from parquet FOOTERS of the just-written and
-      // previous vectors — driver metadata reads, ZERO extra jobs (was:
-      // two count() jobs re-reading both vectors per CDC commit). gone is
-      // disjoint from prev by construction (live = raw anti-join prev),
-      // so new − prev is exactly the rows this commit removed.
-      val nGone = dvRowCountFromFooters(s, dir, v) -
-        (if (prev.isDefined) dvRowCountFromFooters(s, dir, latest) else 0L)
       expectedRemoved.foreach(e => require(nGone == e,
         s"applyCdc removal audit: the staged keys matched $nGone live " +
           s"rows but the caller intended to remove $e"))
@@ -2385,7 +2336,7 @@ object Snapshots {
       // staged rows was UPDATED, the rest were genuine deletes
       writeCommitOp(f, dir, v, "cdc", keyCols)
       writeStatLines(f, dir, v, statLines)
-      writeManifest(f, dir, v, fset ++ moved)
+      writeManifest(f, dir, v, next ++ moved.map(Entry(_)))
       maybeCheckpoint(f, dir, v)
       (v, nGone + aggRow.getLong(1 + 2 * keyCols.size))
     }
@@ -2398,9 +2349,9 @@ object Snapshots {
     * Delta's fallback is a full-join rewrite — here the deletion-vector
     * model [[updateWhereBound]] already uses does it without rewriting a
     * file). `gone` must be `(file_path, row_index)` pairs of LIVE rows of
-    * version `baseVersion` (the reader's DV filter guarantees liveness
-    * when the caller scanned with `_metadata`); duplicates are dropped
-    * before the vector write, so `expectedRemoved` (the caller's routed
+    * version `baseVersion` (the reader's vectors guarantee liveness
+    * when the caller scanned with `_metadata`); a duplicate position
+    * counts once (vectors are sets), so `expectedRemoved` (the caller's routed
     * row count) catches BOTH a duplicate-matched target row (two source
     * rows hit one position — SQL's non-deterministic-update error) and a
     * stale base. Because positions — unlike keys — cannot be re-resolved
@@ -2427,31 +2378,13 @@ object Snapshots {
         s"applyPositional: concurrent commit — positions were matched " +
           s"against version $baseVersion but the claimed head is " +
           s"$latest; retry the MERGE")
-      val fset = files(s, dir, latest)
-      val prev = dvFrame(s, dir, latest)
-      val nGone: Long =
-        if (expectedRemoved == 0L) {
-          // insert-only: the base's vector still CARRIES (its positions
-          // stay valid on the untouched files — dropping it would
-          // resurrect previously deleted rows, commitClaimed's append
-          // rule); with no prior vector, an ORPHANED dv/vN from an
-          // aborted claimant must not be inherited
-          prev match {
-            case Some(p) => p.write.mode("overwrite")
-              .parquet(dvDir(dir, v).toString)
-            case None => f.delete(dvDir(dir, v), true); ()
-          }
-          0L
-        } else {
-          val distinctGone = gone
-            .select(col("file_path"), col("row_index")).distinct()
-          val union = prev.map(_.unionByName(distinctGone))
-            .getOrElse(distinctGone)
-          union.write.mode("overwrite").parquet(dvDir(dir, v).toString)
-          dvRowCountFromFooters(s, dir, v) -
-            (if (prev.isDefined) dvRowCountFromFooters(s, dir, latest)
-             else 0L)
-        }
+      val prev = entries(s, dir, latest)
+      // insert-only carries the base's lines as they are; otherwise a
+      // duplicate position counts once (vectors are sets)
+      val (next, nGone) =
+        if (expectedRemoved == 0L) (prev, 0L)
+        else DeletionVectors.extend(s, dir, v, prev,
+          gone.select(col("file_path"), col("row_index")))
       require(nGone == expectedRemoved,
         s"applyPositional: the routed clauses matched $expectedRemoved " +
           s"target rows but only $nGone distinct live positions — " +
@@ -2464,7 +2397,7 @@ object Snapshots {
       // no keys: the feed's generic typing (deletes out, inserts in)
       writeCommitOp(f, dir, v, "cdc", Seq.empty)
       writeStatLines(f, dir, v, statLines)
-      writeManifest(f, dir, v, fset ++ moved)
+      writeManifest(f, dir, v, next ++ moved.map(Entry(_)))
       maybeCheckpoint(f, dir, v)
       (v, nGone)
     }
@@ -2813,11 +2746,12 @@ object Snapshots {
     *    file set a superset of the base's — appends, merge-on-read
     *    deletes and updates qualify; rewrites/compactions do not), with
     *    no schema renames on either side's new commits;
-    *  - divergent DELETIONS reconcile by POSITION UNION: each side's
-    *    deletion-vector delta since the base is computed (an anti-join
-    *    of position sets), and as long as the two deltas touch DISJOINT
-    *    positions the merged version carries base ∪ both deltas — a
-    *    GDPR-delete branch or a deleting main reunites cleanly. Both
+    *  - divergent DELETIONS reconcile by POSITION UNION, file by file:
+    *    a base file whose vector only one side changed takes that
+    *    side's manifest line; one both sides changed gets the union of
+    *    the two vectors, as long as their deltas since the base touch
+    *    DISJOINT positions — a GDPR-delete branch or a deleting main
+    *    reunites cleanly. Both
     *    sides touching the SAME base position is refused (one side may
     *    have UPDATED the row the other deleted — silently unioning
     *    would drop the delete), with a position sample;
@@ -2844,8 +2778,8 @@ object Snapshots {
     *
     * Scale shape at 100 TB: the fast path touches only manifests and
     * refs; conflict detection reads ONLY the files each side ADDED
-    * (key columns only, one distinct-join) plus the position deltas
-    * (DV-sized parquet, never row data), never the base.
+    * (key columns only, one distinct-join) plus the vectors of files
+    * both sides deleted from, never the base.
     * @return the merged version (main's new head) */
   def mergeBranch(s: SparkSession, dir: String, name: String,
       keyCols: Seq[String] = Seq.empty): Int = {
@@ -2879,83 +2813,84 @@ object Snapshots {
         return bHead
       }
       // diverged — validate the file-set-monotone shape on both sides
-      // and reconcile deletion-vector DELTAS by position union
-      val baseDvF: Option[DataFrame] =
-        if (base >= 1) dvFrame(s, dir, base) else None
-      def dvDeltaOf(head: Int): Option[DataFrame] =
-        dvFrame(s, dir, head).map { cur =>
-          baseDvF.map(b => cur.join(b, Seq("file_path", "row_index"),
-            "left_anti")).getOrElse(cur)
-        }
-      val mDelta = dvDeltaOf(mHead)
-      val bDelta = dvDeltaOf(bHead)
-      for (a <- mDelta; b <- bDelta) {
-        val clash = a.join(b, Seq("file_path", "row_index"))
-          .limit(3).collect()
-        require(clash.isEmpty,
-          s"mergeBranch: both sides deleted the same base row " +
-            s"position(s) since v$base — ${clash.mkString(", ")} … — " +
-            "ambiguous (one side may have UPDATED the row the other " +
-            "deleted); rebase, or replay one side's deletes after " +
-            "merging the rest")
-      }
-      val baseFiles =
-        if (base >= 1) files(s, dir, base) else Seq.empty[String]
-      val mFiles = files(s, dir, mHead)
-      val bFiles = files(s, dir, bHead)
+      // and reconcile the deletion vectors file by file
+      val baseEs = if (base >= 1) entries(s, dir, base) else Seq.empty[Entry]
+      val mEs = entries(s, dir, mHead)
+      val bEs = entries(s, dir, bHead)
+      val baseFiles = baseEs.map(_.path)
+      val mFiles = mEs.map(_.path)
+      val baseDv = baseEs.map(e => e.path -> e.dv).toMap
+      val mByPath = mEs.map(e => e.path -> e).toMap
+      val bByPath = bEs.map(e => e.path -> e).toMap
+      // the base files whose vector each side changed since the base
+      def changed(es: Seq[Entry]): Seq[Entry] =
+        es.filter(e => baseDv.get(e.path).exists(_ != e.dv))
+      val mChanged = changed(mEs).map(_.path).toSet
+      val bChanged = changed(bEs)
+      val clash = DeletionVectors.overlap(s, dir, bChanged
+        .filter(e => mChanged(e.path))
+        .flatMap(e => for (m <- mByPath(e.path).dv; b <- e.dv)
+          yield (e.path, baseDv(e.path), m, b)))
+      require(clash.isEmpty,
+        s"mergeBranch: both sides deleted the same base row " +
+          s"position(s) since v$base — ${clash.mkString(", ")} … — " +
+          "ambiguous (one side may have UPDATED the row the other " +
+          "deleted); rebase, or replay one side's deletes after " +
+          "merging the rest")
       val baseSet = baseFiles.toSet
       // the BRANCH must stay file-set-monotone (rebase otherwise); MAIN
       // may have rewritten, IF every rewrite is a recorded
       // content-preserving optimize (handled below)
-      require(baseFiles.forall(bFiles.toSet.contains),
+      require(baseFiles.forall(bByPath.contains),
         s"mergeBranch: branch '$name' rewrote files since the base " +
           s"v$base — only an append-only branch merges; rebase instead")
-      val bAdded = bFiles.filterNot(baseSet)
-      val mAdded = mFiles.filterNot(baseSet)
-      val mRewrote = !baseFiles.forall(mFiles.toSet.contains)
+      val bAdded = bEs.filterNot(e => baseSet(e.path))
+      val mAdded = mEs.filterNot(e => baseSet(e.path))
+      val mRewrote = !baseFiles.forall(mByPath.contains)
       val newVs = (mAdded ++ bAdded).collect {
-        case FileCommit(c) => c.toInt }.distinct
+        case Entry(FileCommit(c), _, _) => c.toInt }.distinct
       require(newVs.forall(renamesOf(s, dir, _).isEmpty),
         s"mergeBranch: schema renames on a diverged side — merge " +
           "before renaming, or rebase")
-      def absPaths(rels: Seq[String]): Seq[String] =
-        rels.map(p => new Path(dir, p).toString)
-      def liveOf(fls: Seq[String], dv: Option[DataFrame]): DataFrame = {
-        val raw = withMeta(s.read.parquet(absPaths(fls): _*))
-        dv.map(p => raw.join(p.select(col("file_path").as("_fp"),
-            col("row_index").as("_ri")), Seq("_fp", "_ri"), "left_anti"))
-          .getOrElse(raw)
+      // every side read goes through the one snapshot scan, canonical at
+      // main's head, so vintages older than the base read like a SELECT
+      val schema = evolvedSchema(s, dir, mHead, mFiles)
+      def liveOf(es: Seq[Entry]): DataFrame =
+        withMeta(s.baseRelationToDataFrame(SnapshotSource.relationFor(s,
+          dir, es, mHead, schema)))
+      def keysOf(es: Seq[Entry]): DataFrame =
+        liveOf(es).select(keyCols.map(col): _*).distinct()
+      def refuseSharedKeys(mKeys: DataFrame, bKeys: DataFrame): Unit = {
+        val sample = mKeys.join(bKeys, keyCols).limit(3).collect()
+        require(sample.isEmpty,
+          s"mergeBranch: both sides appended rows for key(s) " +
+            s"${sample.mkString(", ")} … — resolve by rebasing or " +
+            "upserting one side after a merge of the rest")
       }
+      // a base file only the branch deleted from takes the branch's
+      // line; one main also changed (or rewrote away) unions the two
+      val (bTake, bUnion) = bChanged.partition(e =>
+        mByPath.get(e.path).exists(_.dv == baseDv(e.path)))
+      val taken = bTake.map(e => e.path -> e).toMap
+      def mainLine(e: Entry): Entry = taken.getOrElse(e.path, e)
       val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       try {
-      val (mergedManifest, mergedDv) =
+      val (lines, hits) =
         if (!mRewrote) {
-          if (keyCols.nonEmpty && mAdded.nonEmpty && bAdded.nonEmpty) {
-            def keysOf(paths: Seq[String]) =
-              s.read.parquet(absPaths(paths): _*)
-                .select(keyCols.map(col): _*).distinct()
-            val conflicts = keysOf(mAdded).join(keysOf(bAdded), keyCols)
-            val sample = conflicts.limit(3).collect()
-            require(sample.isEmpty,
-              s"mergeBranch: both sides appended rows for key(s) " +
-                s"${sample.mkString(", ")} … — resolve by rebasing or " +
-                "upserting one side after a merge of the rest")
-          }
-          // union manifest and the UNION deletion vector (base
-          // positions + both sides' disjoint deltas)
-          (baseFiles ++ mAdded ++ bAdded,
-            (baseDvF.toSeq ++ mDelta.toSeq ++ bDelta.toSeq)
-              .reduceOption(_.unionByName(_)))
+          if (keyCols.nonEmpty && mAdded.nonEmpty && bAdded.nonEmpty)
+            refuseSharedKeys(keysOf(mAdded), keysOf(bAdded))
+          (baseFiles.map(p => mainLine(mByPath(p))) ++ mAdded ++ bAdded,
+            Seq(DeletionVectors.positions(s, dir, bUnion)))
         } else {
           // MAIN REWROTE since the base. A recorded optimize preserves
-          // row content (it only materializes the base vector and
+          // row content (it only materializes the base vectors and
           // re-clusters), so the branch still reconciles: the merged
           // manifest is main's head files + the branch's additions, and
-          // the branch's deletion delta re-locates — positions into
-          // files the merge still carries stay positions, positions
-          // into rewritten-away files re-locate BY KEY against main's
-          // live head (refused without keyCols, and on any ambiguity:
-          // a deleted key missing from the live head, or matching more
+          // the branch's deletions re-locate — deletions in files the
+          // merge still carries stay positions, deletions in
+          // rewritten-away files re-locate BY KEY against main's live
+          // head (refused without keyCols, and on any ambiguity: a
+          // deleted key missing from the live head, or matching more
           // than one live row). A recorded RESTORE also qualifies: it
           // reverts content rather than preserving it, but the same
           // per-key checks carry the proof obligation — a branch-deleted
@@ -2963,9 +2898,9 @@ object Snapshots {
           // the base row byte-for-byte (the content check below), and a
           // key the restore reverted away refuses as missing. Arbitrary
           // rewrites (INSERT OVERWRITE — no recorded op) stay refused:
-          // their content relationship to the base is unknown. Cost: the re-location
-          // reads the dropped files' deleted rows (DV-delta-sized) and
-          // key-joins main's live head once; the key-conflict check
+          // their content relationship to the base is unknown. Cost: the
+          // re-location reads the dropped files the branch deleted from
+          // and key-joins main's live head once; the key-conflict check
           // reads base + head key columns (content-level — the
           // compacted files carry base rows, so file-level "added"
           // keys would false-positive).
@@ -2984,126 +2919,94 @@ object Snapshots {
                   "cannot be re-located; rebase instead")
             x = if (p < x) p else 0
           }
-          val mHeadDv = dvFrame(s, dir, mHead)
-          lazy val headLive = liveOf(mFiles, mHeadDv)
-          val dropped = baseFiles.filterNot(mFiles.toSet)
-          val (keptDelta, relocated) = bDelta match {
-            case None => (None, None)
-            case Some(bd0) =>
-              import org.apache.spark.sql.functions.{broadcast,
-                element_at, split}
-              val dnDf = s.createDataFrame(
-                s.sparkContext.parallelize(
-                  dropped.map(p =>
-                    org.apache.spark.sql.Row(new Path(p).getName)), 1),
-                org.apache.spark.sql.types.StructType(Seq(
-                  org.apache.spark.sql.types.StructField("_fname",
-                    org.apache.spark.sql.types.StringType))))
-              val bd = bd0.withColumn("_fname",
-                element_at(split(col("file_path"), "/"), -1))
-              val kept = bd.join(broadcast(dnDf), Seq("_fname"),
-                "left_anti").drop("_fname")
-              val moved = bd.join(broadcast(dnDf), Seq("_fname"),
-                  "left_semi")
-                .select(col("file_path").as("_fp"),
-                  col("row_index").as("_ri"))
-              if (moved.isEmpty) (Some(kept), None)
-              else {
-                require(keyCols.nonEmpty,
-                  s"mergeBranch: branch '$name' deleted rows in files " +
-                    "a main-side optimize rewrote — pass keyCols so " +
-                    "the deletions can be re-located by key")
-                val delBaseRows = liveOf(dropped, None)
-                  .join(moved, Seq("_fp", "_ri"), "left_semi")
-                val delKeys = delBaseRows
-                  .select(keyCols.map(col): _*).distinct()
-                val matched = headLive.join(delKeys, keyCols, "inner")
-                  .select(keyCols.map(col) :+ col("_fp") :+
-                    col("_ri"): _*)
-                matched.persist(
-                  org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-                cached += matched
-                import org.apache.spark.sql.functions.{count, lit}
-                val dup = matched.groupBy(keyCols.map(col): _*)
-                  .agg(count(lit(1)).as("_graft_n"))
-                  .filter(col("_graft_n") > 1)
-                  .limit(3).collect()
-                require(dup.isEmpty,
-                  s"mergeBranch: re-locating branch '$name' deletions " +
-                    s"found multiple live main rows for key(s) " +
-                    s"${dup.mkString(", ")} … — ambiguous; rebase")
-                val missing = delKeys.join(matched, keyCols, "left_anti")
-                  .limit(3).collect()
-                require(missing.isEmpty,
-                  s"mergeBranch: branch '$name' deleted key(s) " +
-                    s"${missing.mkString(", ")} … with no live row at " +
-                    "main's head (main deleted or updated them since " +
-                    "the base) — ambiguous; rebase, or replay the " +
-                    "deletes after merging the rest")
-                // CONTENT check: the relocation is only sound when
-                // main's live head row for the key still carries the
-                // BASE row's content. If main UPDATED the row since the
-                // base (merge-on-read update = DV + same-key append)
-                // and then compacted, the key-changing-update refusal
-                // above cannot see it — DV'ing the replacement would
-                // let the branch's delete of the OLD content silently
-                // destroy main's update. Null-safe full-row compare of
-                // the deleted base rows against the matched head rows
-                // (DV-delta-sized on both sides, never the whole head).
-                val dataCols = delBaseRows.columns
-                  .filterNot(c => c == "_fp" || c == "_ri").toSeq
-                val hb = headLive.join(delKeys, keyCols, "left_semi")
-                  .select(dataCols.map(col): _*).alias("_h")
-                val bb = delBaseRows
-                  .select(dataCols.map(col): _*).alias("_b")
-                val sameRow = dataCols.map(c =>
-                  col(s"_h.$c") <=> col(s"_b.$c")).reduce(_ && _)
-                val updated = hb.join(bb, sameRow, "left_anti")
-                  .select(keyCols.map(c => col(s"_h.$c")): _*)
-                  .limit(3).collect()
-                require(updated.isEmpty,
-                  s"mergeBranch: main updated row content for key(s) " +
-                    s"${updated.mkString(", ")} … since the base — " +
-                    s"re-locating branch '$name' deletions would " +
-                    "silently destroy main's updates; rebase, or " +
-                    "replay the deletes after merging the rest")
-                (Some(kept),
-                  Some(matched.select(col("_fp").as("file_path"),
-                    col("_ri").as("row_index"))))
-              }
-          }
+          lazy val headLive = liveOf(mEs)
+          val (keptUnion, dropped) =
+            bUnion.partition(e => mByPath.contains(e.path))
+          val relocated: Option[DataFrame] =
+            if (dropped.isEmpty) None
+            else {
+              require(keyCols.nonEmpty,
+                s"mergeBranch: branch '$name' deleted rows in files " +
+                  "a main-side optimize rewrote — pass keyCols so " +
+                  "the deletions can be re-located by key")
+              // rows live at the base that the branch deleted
+              val delBaseRows = liveOf(dropped.map(e =>
+                  Entry(e.path, baseDv(e.path))))
+                .join(liveOf(dropped).select("_fp", "_ri"),
+                  Seq("_fp", "_ri"), "left_anti")
+              val delKeys = delBaseRows
+                .select(keyCols.map(col): _*).distinct()
+              val matched = headLive.join(delKeys, keyCols, "inner")
+                .select(keyCols.map(col) :+ col("_fp") :+
+                  col("_ri"): _*)
+              matched.persist(
+                org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              cached += matched
+              import org.apache.spark.sql.functions.{count, lit}
+              val dup = matched.groupBy(keyCols.map(col): _*)
+                .agg(count(lit(1)).as("_graft_n"))
+                .filter(col("_graft_n") > 1)
+                .limit(3).collect()
+              require(dup.isEmpty,
+                s"mergeBranch: re-locating branch '$name' deletions " +
+                  s"found multiple live main rows for key(s) " +
+                  s"${dup.mkString(", ")} … — ambiguous; rebase")
+              val missing = delKeys.join(matched, keyCols, "left_anti")
+                .limit(3).collect()
+              require(missing.isEmpty,
+                s"mergeBranch: branch '$name' deleted key(s) " +
+                  s"${missing.mkString(", ")} … with no live row at " +
+                  "main's head (main deleted or updated them since " +
+                  "the base) — ambiguous; rebase, or replay the " +
+                  "deletes after merging the rest")
+              // CONTENT check: the relocation is only sound when
+              // main's live head row for the key still carries the
+              // BASE row's content. If main UPDATED the row since the
+              // base (merge-on-read update = vector + same-key append)
+              // and then compacted, the key-changing-update refusal
+              // above cannot see it — deleting the replacement would
+              // let the branch's delete of the OLD content silently
+              // destroy main's update. Null-safe full-row compare of
+              // the deleted base rows against the matched head rows
+              // (branch-delete-sized on both sides, never the whole head).
+              val dataCols = delBaseRows.columns
+                .filterNot(c => c == "_fp" || c == "_ri").toSeq
+              val hb = headLive.join(delKeys, keyCols, "left_semi")
+                .select(dataCols.map(col): _*).alias("_h")
+              val bb = delBaseRows
+                .select(dataCols.map(col): _*).alias("_b")
+              val sameRow = dataCols.map(c =>
+                col(s"_h.$c") <=> col(s"_b.$c")).reduce(_ && _)
+              val updated = hb.join(bb, sameRow, "left_anti")
+                .select(keyCols.map(c => col(s"_h.$c")): _*)
+                .limit(3).collect()
+              require(updated.isEmpty,
+                s"mergeBranch: main updated row content for key(s) " +
+                  s"${updated.mkString(", ")} … since the base — " +
+                  s"re-locating branch '$name' deletions would " +
+                  "silently destroy main's updates; rebase, or " +
+                  "replay the deletes after merging the rest")
+              Some(matched.select(col("_fp").as("file_path"),
+                col("_ri").as("row_index")))
+            }
           if (keyCols.nonEmpty && bAdded.nonEmpty) {
             val headKeys = headLive.select(keyCols.map(col): _*)
               .distinct()
-            val mNewKeys =
-              if (base >= 1)
-                headKeys.join(liveOf(baseFiles, baseDvF)
-                  .select(keyCols.map(col): _*).distinct(),
-                  keyCols, "left_anti")
-              else headKeys
-            val bKeys = s.read.parquet(absPaths(bAdded): _*)
-              .select(keyCols.map(col): _*).distinct()
-            val sample = mNewKeys.join(bKeys, keyCols).limit(3).collect()
-            require(sample.isEmpty,
-              s"mergeBranch: both sides appended rows for key(s) " +
-                s"${sample.mkString(", ")} … — resolve by rebasing or " +
-                "upserting one side after a merge of the rest")
+            refuseSharedKeys(
+              if (base >= 1) headKeys.join(keysOf(baseEs), keyCols,
+                "left_anti")
+              else headKeys,
+              keysOf(bAdded))
           }
-          (mFiles ++ bAdded,
-            (mHeadDv.toSeq ++ keptDelta.toSeq ++ relocated.toSeq)
-              .reduceOption(_.unionByName(_)))
+          (mEs.map(mainLine) ++ bAdded,
+            DeletionVectors.positions(s, dir, keptUnion) +: relocated.toSeq)
         }
-      mergedDv match {
-        case Some(dv) =>
-          dv.distinct().write.mode("overwrite")
-            .parquet(dvDir(dir, v).toString)
-        case None =>
-          // an aborted mutation's orphan dv/vN for this version number
-          // must not poison the merge (same guard as commitClaimed)
-          f.delete(dvDir(dir, v), true); ()
-      }
+      val merged =
+        if (bUnion.isEmpty) lines
+        else DeletionVectors.extend(s, dir, v, lines,
+          hits.reduce(_.unionByName(_)))._1
       writeCommitMeta(f, dir, v, mHead, parent2 = Some(bHead))
-      writeManifest(f, dir, v, mergedManifest)
+      writeManifest(f, dir, v, merged)
       maybeCheckpoint(f, dir, v)
       writeRef(s, f, dir, "main", v, tag = false)
       v
@@ -3173,16 +3076,19 @@ object Snapshots {
     // manifests participate
     val oldVs = (1 until cutoff)
       .filter(v => !pinned.contains(v) && f.exists(manifest(dir, v)))
+    // data files and deletion vectors alike: a file goes when only
+    // dropped versions name it
+    def named(v: Int): Seq[String] =
+      manifestEntries(f, dir, v).flatMap(e => e.path +: e.dv.toSeq)
     val retained = ((cutoff to latest) ++ pinned.filter(_ < cutoff))
-      .flatMap(files(s, dir, _)).toSet
-    val old = oldVs.flatMap(files(s, dir, _)).toSet
+      .flatMap(named).toSet
+    val old = oldVs.flatMap(named).toSet
     val dead = (old -- retained).toSeq.sorted
     dead.foreach(p => f.delete(new Path(dir, p), false))
     oldVs.foreach { v =>
       f.delete(manifest(dir, v), false)
       f.delete(new Path(dir, s"v$v.meta"), false) // its commit instant
       f.delete(new Path(dir, s"v$v.op"), false) // its change-feed typing
-      f.delete(dvDir(dir, v), true) // a dropped version's deletion vector
       // vN.renames and vN.stats stay: carried-forward files in retained
       // versions still need the rename chain and their recorded bounds
     }
@@ -3252,17 +3158,18 @@ object Snapshots {
     // the pre-lock read and the claim, and its version must be purged too
     val latest = lock.v - 1
     val liveVs = (1 to latest).filter(v => f.exists(manifest(dir, v)))
+    val lines = liveVs.map(v => v -> entries(s, dir, v)).toMap
     // a rewritten file's row indexes would invalidate deletion-vector
     // positions and RESURRECT logically-deleted rows — materialize DVs
     // (optimize) and vacuum DV-carrying history before a physical purge
-    liveVs.filter(hasDv(s, dir, _)) match {
+    liveVs.filter(lines(_).exists(_.dv.isDefined)) match {
       case Seq() =>
       case vs => throw new IllegalStateException(
         s"purge requires a DV-free live set; versions ${vs.mkString(",")} " +
           "carry deletion vectors — run optimize to materialize them and " +
           "vacuum the DV-carrying versions first")
     }
-    val perVersion = liveVs.map(v => v -> files(s, dir, v)).toMap
+    val perVersion = lines.map { case (v, es) => v -> es.map(_.path) }
     val allFiles = perVersion.values.flatten.toSeq.distinct
     val tombKeys = tombstones.select(keyCols.map(col): _*).distinct()
     val tombRows = tombKeys.collect()
@@ -3397,7 +3304,7 @@ object Snapshots {
           case Some(opt) => opt       // rewritten (Some) or emptied (None)
         })
       liveAfter ++= mapped
-      swapManifest(s, f, dir, v, mapped)
+      swapManifest(s, f, dir, v, mapped.map(Entry(_)))
     }
     // 3b. merge replacement stats into purged.stats, dropping lines for
     // paths no live manifest references anymore (bounds the file)
@@ -3434,9 +3341,9 @@ object Snapshots {
   /** Atomically REPLACE manifest vN (overwrite-capable rename; see the
     * purge republish step for why delete-then-recreate is not safe). */
   private def swapManifest(s: SparkSession, f: FileSystem, dir: String,
-      v: Int, fileSet: Seq[String]): Unit =
+      v: Int, es: Seq[Entry]): Unit =
     atomicOverwrite(s, f, dir, manifest(dir, v), s"_v$v.json.tmp",
-      manifestBody(fileSet))
+      manifestBody(es))
 
   /** `OPTIMIZE ZORDER BY (cols...)` as a snapshot REWRITE commit — the
     * composition that makes the table-format layer self-maintaining:
@@ -3497,8 +3404,8 @@ object Snapshots {
     *     100 TB table costs the day's small-file accretion, not the
     *     table.
     *   - Deletions MATERIALIZE for the rewritten files only (the pack
-    *     reads through the vector), so their DV entries drop while
-    *     kept files' entries survive — merge-on-read debt shrinks
+    *     reads through their vectors), so their vectors drop while
+    *     kept files' lines keep theirs — merge-on-read debt shrinks
     *     incrementally without optimize's full rewrite.
     *   - The packed vintage carries the version's full EVOLVED schema
     *     (the small files read through [[read]]'s scan, restricted to
@@ -3516,8 +3423,6 @@ object Snapshots {
   def compact(s: SparkSession, dir: String,
       smallBytes: Long = 32L << 20, targetBytes: Long = 128L << 20,
       minFiles: Int = 2): Int = {
-    import org.apache.spark.sql.functions.{broadcast, col, element_at,
-      split}
     require(smallBytes > 0 && targetBytes > 0 && minFiles >= 2,
       "compact: thresholds must be positive (minFiles >= 2)")
     val f = fs(s, dir)
@@ -3526,16 +3431,20 @@ object Snapshots {
     try {
       val v = c.v
       val base = mainHead(f, dir, v - 1)
-      val sized = files(s, dir, base).map(p =>
-        p -> f.getFileStatus(new Path(dir, p)).getLen)
+      val es = entries(s, dir, base)
+      val sized = es.map(e =>
+        e.path -> f.getFileStatus(new Path(dir, e.path)).getLen)
       val small = sized.filter(_._2 < smallBytes).map(_._1)
       if (small.size < minFiles) return base
       val smallSet = small.toSet
-      val keep = sized.map(_._1).filterNot(smallSet)
+      // kept files keep their lines, deletion vectors included; the
+      // packed read materializes the rewritten files' deletes
+      val keep = es.filterNot(e => smallSet(e.path))
       val nOut = math.max(1, math.ceil(sized.filter(x =>
         smallSet(x._1)).map(_._2).sum.toDouble / targetBytes).toInt)
-      val subset = s.baseRelationToDataFrame(SnapshotSource
-        .versionRelation(s, dir, base, fileSubset = Some(smallSet)))
+      val subset = s.baseRelationToDataFrame(SnapshotSource.relationFor(s,
+        dir, es.filter(e => smallSet(e.path)), base,
+        evolvedSchema(s, dir, base, es.map(_.path))))
       // a PARTITIONED BY table's maintenance must not destroy its
       // value-aligned layout: repack along the declared clustering
       // columns (and re-record their bounds) instead of arbitrary
@@ -3555,29 +3464,10 @@ object Snapshots {
         (b.render, s"pmod(hash(`${b.col}`), ${b.n})", "integer") }
       val (moved, statLines) = stageAndMove(s, f, dir, packed,
         statCols, v, virt)
-      // new DV = the base's entries for KEPT files only — the packed
-      // read materialized the rewritten files' deletions. File names
-      // are unique per table (vN-i- prefixes), so the last path
-      // segment keys the anti-join.
-      val keptDv = dvFrame(s, dir, base).map { dv0 =>
-        import s.implicits._
-        val gone = small.map(p => new Path(p).getName).toDF("_gone")
-        dv0.join(broadcast(gone),
-          element_at(split(col("file_path"), "/"), -1) === col("_gone"),
-          "left_anti")
-      }
-      keptDv match {
-        case Some(kd) if !kd.isEmpty =>
-          kd.write.mode("overwrite").parquet(dvDir(dir, v).toString)
-        case _ =>
-          // none left (or none existed): same orphan-vector guard as
-          // every other commit path
-          f.delete(dvDir(dir, v), true); ()
-      }
       f.delete(new Path(dir, s"v$v.op"), false)
       writeCommitMeta(f, dir, v, base)
       writeStatLines(f, dir, v, statLines)
-      writeManifest(f, dir, v, keep ++ moved)
+      writeManifest(f, dir, v, keep ++ moved.map(Entry(_)))
       // after the publish, like optimize: a crash in between leaves a
       // version that merges refuse and the change feed types
       // generically — degraded, never wrong
@@ -3590,16 +3480,16 @@ object Snapshots {
 
   /** RESTORE main's CONTENT to what version `toVersion` held, as ONE
     * new metadata-sized commit — the lakehouse rollback verb. The new
-    * head's manifest re-lists `toVersion`'s file set and its deletion
-    * vector is copied forward, so time travel, the change feed, and
-    * every consumer's `startingVersion` stay intact: history is never
-    * rewritten (that is [[purge]]'s deliberate job). Zero data files
-    * are read or written at any table size — the cost is one manifest
-    * plus an O(DV-files) copy. The target's files are guaranteed live:
-    * [[vacuum]] deletes a version's manifest together with its
-    * then-unreferenced files, so a resolvable manifest implies its
-    * file set, and the restore commit re-references it (protecting it
-    * from future vacuums) before the claim releases.
+    * head's manifest republishes `toVersion`'s lines, deletion vectors
+    * included, so time travel, the change feed, and every consumer's
+    * `startingVersion` stay intact: history is never rewritten (that is
+    * [[purge]]'s deliberate job). Zero data files or vectors are read or
+    * written at any table size — the cost is one manifest. The target's
+    * files are guaranteed live: [[vacuum]] deletes a version's manifest
+    * together with its then-unreferenced files and vectors, so a
+    * resolvable manifest implies its file set, and the restore commit
+    * re-references it (protecting it from future vacuums) before the
+    * claim releases.
     *
     * Semantics at the edges:
     *  - Column RENAMES are not undone — names resolve through the
@@ -3636,20 +3526,14 @@ object Snapshots {
       require(mainAncestry(f, dir, head).contains(toVersion),
         s"restore: version $toVersion is not on main's ancestry " +
           "(branch content reaches main via fast_forward/merge_branch)")
-      val fset = files(s, dir, toVersion)
-      if (hasDv(s, dir, toVersion))
-        dvFrame(s, dir, toVersion).foreach(
-          _.write.mode("overwrite").parquet(dvDir(dir, v).toString))
-      else {
-        // orphan-vector guard, as commitClaimed: an aborted mutation
-        // may have left dv/vN for this reclaimed version number
-        f.delete(dvDir(dir, v), true); ()
-      }
-      f.delete(new Path(dir, s"v$v.op"), false) // stale-op guard, ditto
+      // the target's lines, deletion vectors included, republished
+      val restored = entries(s, dir, toVersion)
+      // stale-op guard: an aborted commit may have left vN.op behind
+      f.delete(new Path(dir, s"v$v.op"), false)
       // meta precedes the manifest (crash-consistency direction shared
       // with every commit path: no manifest, never visible)
       writeCommitMeta(f, dir, v, head)
-      writeManifest(f, dir, v, fset)
+      writeManifest(f, dir, v, restored)
       // recorded AFTER publish like optimize's op — a crash in between
       // leaves a version that types generically, never one that lies
       writeCommitOp(f, dir, v, "restore", Seq(toVersion.toString))

@@ -35,14 +35,6 @@ object EventStreaming {
       .select(col("window.start").as("w_start"), col("event_type"),
         col("n"), col("sum_value"))
 
-  /** Sliding windows: 10-minute span every 5 minutes. */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "10 minutes", "5 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("w_start"), col("user_id"), col("n"))
-
   /** Gap-based sessions (30 min) per user — built-in session_window state
     * merge; the batch equivalent is EventOps q30_sessionize.
     */
@@ -355,12 +347,4 @@ object EventStreaming {
         .option("maxFilesPerTrigger", 1)
         .parquet(dir))
   }
-
-  /** Sink helper: append to parquet with a checkpoint. */
-  def writeParquetStream(df: DataFrame, outDir: String, checkpoint: String) =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .format("parquet")
-      .option("path", outDir)
 }

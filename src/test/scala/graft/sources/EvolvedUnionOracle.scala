@@ -11,22 +11,23 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * commit ≤ v is applied to the frame (top-level renames and drops,
   * struct-subfield rebuilds), every column is aligned by name onto the
   * vintages' widened common type (structs, arrays and maps recurse), the
-  * frames are unioned by name (absent columns null) and the deletion
-  * vector is anti-joined on `(_metadata.file_path, row_index)`. It
-  * shares only the rename chain and [[Snapshots.widen]] with the scan —
-  * no name resolution, no schema localization, no reader-side vector. */
+  * frames are unioned by name (absent columns null) and the positions
+  * of the deletion vectors ([[deadPositions]]) are anti-joined on
+  * `(_metadata.file_name, row_index)`. It shares only the rename chain
+  * and [[Snapshots.widen]] with the scan — no name resolution, no schema
+  * localization, no reader-side vector. */
 object EvolvedUnionOracle {
 
   def read(s: SparkSession, dir: String, v: Int): DataFrame = {
     val fset = Snapshots.files(s, dir, v)
-    val dv = Snapshots.dvFrame(s, dir, v)
+    val dv = deadPositions(s, dir, v)
     val chain = Snapshots.renameChain(s, dir, v)
     val frames = fset.groupBy(Snapshots.vintageOf).toSeq.sortBy(_._1).map {
       case (c, paths) =>
         val base = s.read.parquet(paths.map(p => new Path(dir, p).toString): _*)
         var df =
           if (dv.isEmpty) base
-          else base.withColumn("_fp", col("_metadata.file_path"))
+          else base.withColumn("_fp", col("_metadata.file_name"))
             .withColumn("_ri", col("_metadata.row_index"))
         for (later <- (c + 1) to v; (o, n) <- chain(later))
           df = applyEntry(df, o, n)
@@ -42,10 +43,27 @@ object EvolvedUnionOracle {
     dv match {
       case None => union
       case Some(d) =>
-        union.join(d.select(col("file_path").as("_fp"),
+        union.join(d.select(col("file_name").as("_fp"),
             col("row_index").as("_ri")), Seq("_fp", "_ri"), "left_anti")
           .drop("_fp", "_ri")
     }
+  }
+
+  /** The `(file_name, row_index)` positions version `v`'s deletion
+    * vectors hold, decoded on the driver (spec-sized tables), or None
+    * when no file of `v` has a vector. */
+  def deadPositions(s: SparkSession, dir: String, v: Int)
+      : Option[DataFrame] = {
+    import s.implicits._
+    val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
+    val dead = Snapshots.entries(s, dir, v).flatMap(e => e.dv.toSeq
+      .flatMap { d =>
+        val it = DeletionVectors.read(fs, new Path(dir, d)).getLongIterator
+        Iterator.continually(it).takeWhile(_.hasNext)
+          .map(i => (new Path(e.path).getName, i.next())).toSeq
+      })
+    if (dead.isEmpty) None
+    else Some(dead.toDF("file_name", "row_index"))
   }
 
   /** One rename-chain entry on a frame: a top-level entry renames or

@@ -120,9 +120,10 @@ class GraftCatalogSpec extends SparkSpec {
     // ONE version, NO deletion vector (the scale guard: a DV would
     // carry a position per row), history intact
     assert(Snapshots.latestVersion(spark, dir) == 2)
-    val dv = new Path(dir, "dv/v2")
+    val dv = new Path(dir, "dv")
     val f = dv.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!f.exists(dv), "DELETE-all must not write a deletion vector")
+    assert(!Snapshots.hasDv(spark, dir, 2) && !f.exists(dv),
+      "DELETE-all must not write a deletion vector")
     assert(rows("SELECT * FROM graft.db.tw VERSION AS OF 1") ==
       Seq((1L, "a"), (2L, "b"), (3L, "c")))
 
@@ -138,7 +139,7 @@ class GraftCatalogSpec extends SparkSpec {
     sql("DELETE FROM graft.db.tw WHERE 1 = 1")
     assert(GraftSql.lastRowsAffected == 1L)
     assert(sql("SELECT * FROM graft.db.tw").count() == 0)
-    assert(!f.exists(new Path(dir, "dv/v6")))
+    assert(!Snapshots.hasDv(spark, dir, 6) && !f.exists(dv))
   }
 
   test("UPDATE SET routes to updateWhere; WHERE optional") {

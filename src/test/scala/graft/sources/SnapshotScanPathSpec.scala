@@ -9,8 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Snapshot data files turn into rows through ONE scan
   * ([[SnapshotSource.relationFor]] over [[SnapshotParquetFormat]]). The
   * DataFrame-union readers it replaced cannot come back unnoticed: their
-  * names stay gone from src/main, and no snapshot source reads parquet
-  * through a requested schema of its own (`read.schema(…).parquet`). */
+  * names stay gone from src/main, no snapshot source reads parquet
+  * through a requested schema of its own (`read.schema(…).parquet`), and
+  * `Snapshots` reads no data file set as raw parquet. Deletion vectors
+  * have one writer ([[DeletionVectors]]) and no driver-side position
+  * collect or cap. */
 class SnapshotScanPathSpec extends AnyFunSuite {
   private def sources(under: String): Seq[Path] = {
     val main = Paths.get("src/main")
@@ -35,5 +38,33 @@ class SnapshotScanPathSpec extends AnyFunSuite {
       ownSchema.findFirstIn(Files.readString(p)).nonEmpty)
     assert(unions.isEmpty,
       s"read snapshot files through SnapshotSource.relationFor: $unions")
+    val raw = Files.readString(
+      Paths.get("src/main/scala/graft/sources/Snapshots.scala"))
+    assert(!raw.contains("s.read.parquet(absPaths"),
+      "Snapshots reads data files as raw parquet: plan them through " +
+        "SnapshotSource.relationFor")
+  }
+
+  test("deletion vectors have one writer and no driver-side cap") {
+    val gone = Seq("DvJoinRelation", "maxDvPositions",
+      "DefaultMaxDvPositions", "dvDir")
+    val back = sources("src/main").flatMap { p =>
+      val text = Files.readString(p)
+      gone.filter(n => s"(?i)\\b$n\\b".r.findFirstIn(text).nonEmpty)
+        .map(n => s"${p.getFileName}: $n")
+    }
+    assert(back.isEmpty, s"the driver-held vector path is back: $back")
+    val writeOp = """\.(write|create|rename|parquet|serializePortable)\b""".r
+    val writes = sources("src/main")
+      .filterNot(_.getFileName.toString == "DeletionVectors.scala")
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.toSeq.zipWithIndex.collect {
+          case (l, i) if l.contains("DeletionVectors.write") ||
+              (l.contains("dv/") && writeOp.findFirstIn(l).nonEmpty) =>
+            s"${p.getFileName}:${i + 1}: ${l.trim}"
+        }
+      }
+    assert(writes.isEmpty,
+      s"write deletion vectors through DeletionVectors.extend: $writes")
   }
 }

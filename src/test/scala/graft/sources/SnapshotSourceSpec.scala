@@ -142,40 +142,30 @@ class SnapshotSourceSpec extends SparkSpec {
       (11L to 20L).filterNot(_ % 5 == 0))
   }
 
-  test("over-cap DV reads fall back to the distributed anti-join") {
-    val dir = tmpDir("srcdvcap")
-    Snapshots.commit(spark, dir, df(1 to 20).repartition(2), append = false)
-    Snapshots.deleteWhere(spark, dir, col("id") % 5 === 0)
-
-    // cap lowered below the 4 recorded positions: the read must NOT
-    // refuse — it plans the DvJoinRelation fallback…
-    val fb = readFmt(dir, "maxDvPositions" -> "2")
-    val rel = fb.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation
-          if l.relation.isInstanceOf[DvJoinRelation] =>
-        l.relation.asInstanceOf[DvJoinRelation]
-    }
-    assert(rel.nonEmpty, "over-cap read must plan the join fallback:\n" +
-      fb.queryExecution.analyzed)
-    // …whose internal plan is an anti-join on the metadata position
-    // columns (the distributed path — no driver-held position map)
-    val inner = rel.get.livePlan(Array("id", "payload"), Array.empty)
-      .queryExecution.optimizedPlan
-    val joins = inner.collect {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join
-          if j.joinType.sql.contains("ANTI") => j
-    }
-    assert(joins.nonEmpty, s"expected an anti-join in:\n$inner")
-
-    // identical results to the in-cap map path, filters included
-    assert(ids(fb) == (1L to 20L).filterNot(_ % 5 == 0))
-    assert(ids(fb.filter(col("id") > 10)) ==
-      (11L to 20L).filterNot(_ % 5 == 0))
-    assert(fb.filter(col("payload") === "row7").count() == 1)
-    assert(fb.count() == 16)
-    // a pinned pre-DV version through the same lowered cap is untouched
-    assert(ids(readFmt(dir, "maxDvPositions" -> "2",
-      "versionAsOf" -> "1")) == (1L to 20L))
+  test("many-delete reads apply vectors in the task") {
+    val dir = tmpDir("srcdvmany")
+    Snapshots.commit(spark, dir, df(1 to 4000).repartition(4),
+      append = false)
+    // most rows of every file die, over two commits: the second extends
+    // the vectors the first wrote
+    Snapshots.deleteWhere(spark, dir, col("id") % 5 =!= 0 && col("id") <= 2000)
+    Snapshots.deleteWhere(spark, dir, col("id") % 5 =!= 0)
+    val live = (1L to 4000L).filter(_ % 5 == 0)
+    val read = readFmt(dir)
+    // one plain file relation, whatever the count: no join, no option;
+    // pushed filters still apply
+    val plan = read.queryExecution.optimizedPlan
+    assert(plan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.isEmpty, s"expected no join in:\n$plan")
+    assert(ids(read) == live)
+    assert(ids(read.filter(col("id") > 3000)) == live.filter(_ > 3000))
+    assert(read.filter(col("payload") === "row35").count() == 1)
+    assert(read.filter(col("payload") === "row36").count() == 0)
+    assert(read.count() == live.size)
+    assert(Snapshots.metadataRowCount(spark, dir, 3) == live.size)
+    // the pre-delete version reads every row
+    assert(ids(readFmt(dir, "versionAsOf" -> "1")) == (1L to 4000L))
   }
 
   test("batch readChangeFeed: ranged change rows with stamps") {

@@ -977,13 +977,18 @@ class SnapshotsSpec extends SparkSpec {
     val dir = tmpDir("snaporphandv")
     Snapshots.commit(spark, dir, df(1 to 10), append = false) // v1
     // simulate a deleteWhere/updateWhere that died between its vector
-    // write and its manifest: dv/v2 exists, v2 was never published
+    // write and its manifest: v1's file has a vector written for v2,
+    // and v2 was never published
     val v1File = Snapshots.files(spark, dir, 1).head
-    Seq((v1File, 0L), (v1File, 1L)).toDF("file_path", "row_index")
-      .write.parquet(s"$dir/dv/v2")
+    val orphan = new org.apache.hadoop.fs.Path(dir,
+      DeletionVectors.pathFor(v1File, 2))
+    val bm = new org.roaringbitmap.longlong.Roaring64NavigableMap()
+    bm.addLong(0L); bm.addLong(1L)
+    DeletionVectors.write(
+      orphan.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      orphan, bm)
     // the next commit claims v2 (no manifest ever published for it);
-    // a plain append with no prior vector must DROP the orphan, not
-    // inherit it
+    // a plain append names no vector, so the orphan is never inherited
     Snapshots.commit(spark, dir, df(11 to 12), append = true) // v2
     assert(idsOf(dir, 2) == (1L to 12L),
       "rows deleted by an orphan vector = silent data loss")
@@ -1614,15 +1619,15 @@ class SnapshotsSpec extends SparkSpec {
         Seq("payload" -> upper(col("payload"))))
       assert(n == 5)
     }
-    // pinned composition — delete: the DV write (the ONE data scan) and
-    // the cached-positions count (2 jobs under AQE's staged aggregate);
-    // the scan's schema comes from parquet footers read on the driver,
-    // no inference job. Update adds only the staging write of the
-    // matched rows (also served from the cache). A regression that
-    // recounts by re-scanning the table or re-reading the just-written
-    // vector shows up as extra jobs here.
-    assert(delJobs == 3, s"deleteWhere ran $delJobs jobs, pinned 3")
-    assert(updJobs == 4, s"updateWhere ran $updJobs jobs, pinned 4")
+    // pinned composition — delete: the vector write, the ONE data scan,
+    // whose per-file records carry the count of newly deleted rows; the
+    // scan's schema comes from parquet footers read on the driver, no
+    // inference job. Update adds only the staging write of the matched
+    // rows (served from the cache the vector write filled). A regression
+    // that recounts by re-scanning the table or re-reading the
+    // just-written vectors shows up as extra jobs here.
+    assert(delJobs == 1, s"deleteWhere ran $delJobs jobs, pinned 1")
+    assert(updJobs == 2, s"updateWhere ran $updJobs jobs, pinned 2")
     // and the published tables are correct
     assert(idsOf(d1, 2) == (6L to 20L))
     assert(Snapshots.read(spark, d2, 2)

@@ -155,18 +155,25 @@ class ZorderSpec extends SparkSpec {
     val mx = rows.agg(max(col("x")).as("mc"), max(col("y")).as("mo"))
     val zdir = tmpDir("zorder")
     val kdir = tmpDir("keyorder")
-    rows.crossJoin(broadcast(mx))
-      .withColumn("z", Layouts.zvalue8(
-        Layouts.bucket8(col("x"), col("mc")),
-        Layouts.bucket8(col("y"), col("mo"))))
-      .drop("mc", "mo")
-      .repartitionByRange(4, col("z")).sortWithinPartitions(col("z"))
-      .drop("z")
-      .write.option("parquet.block.size", 16 * 1024)
-      .mode("overwrite").parquet(zdir)
-    rows.repartitionByRange(4, col("x")).sortWithinPartitions(col("x"))
-      .write.option("parquet.block.size", 16 * 1024)
-      .mode("overwrite").parquet(kdir)
+    // exact range bounds (every row sampled), so the layouts, and the
+    // rows the probes decode, do not depend on the RDD ids earlier suites
+    // used to seed the sample; 8 KiB row groups let the box skip at a
+    // granularity finer than its z-ranges
+    withConf("spark.sql.execution.rangeExchange.sampleSizePerPartition" ->
+        n.toString) {
+      rows.crossJoin(broadcast(mx))
+        .withColumn("z", Layouts.zvalue8(
+          Layouts.bucket8(col("x"), col("mc")),
+          Layouts.bucket8(col("y"), col("mo"))))
+        .drop("mc", "mo")
+        .repartitionByRange(4, col("z")).sortWithinPartitions(col("z"))
+        .drop("z")
+        .write.option("parquet.block.size", 8 * 1024)
+        .mode("overwrite").parquet(zdir)
+      rows.repartitionByRange(4, col("x")).sortWithinPartitions(col("x"))
+        .write.option("parquet.block.size", 8 * 1024)
+        .mode("overwrite").parquet(kdir)
+    }
 
     // ~10% x ~10% box
     def q(dir: String): DataFrame =
