@@ -215,10 +215,10 @@ private[sources] object GraftProcedures {
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         val head = Snapshots.latestVersion(spark, dir)
         require(head >= 1, s"history: no versions at $dir")
-        // one commit-graph fetch serves the line walk, every instant,
-        // parent list and op verb below — O(CheckpointEvery) metadata
-        // opens for a deep table, not three side-files per version
-        val graph = Snapshots.commitGraph(f, dir, head)
+        // one state serves the line walk, every instant, parent list
+        // and op verb below — O(CheckpointEvery) metadata opens for a
+        // deep table, not three side-files per version
+        val graph = Snapshots.state(f, dir, head)
         val onMain = graph.ancestrySet(Snapshots.mainVersion(spark, dir))
         val schema = new StructType()
           .add("version", IntegerType).add("committed_at", TimestampType)
@@ -229,7 +229,7 @@ private[sources] object GraftProcedures {
           // vacuumed versions have no manifest anymore — skip them
           scala.util.Try(Snapshots.files(spark, dir, v)).toOption.map {
             fls =>
-              Seq[Any](v, graph.instant(v) * 1000L,
+              Seq[Any](v, graph.instant(f, dir, v) * 1000L,
                 graph.parents(v).filter(_ >= 1).mkString(" "),
                 fls.size, Snapshots.hasDv(spark, dir, v),
                 onMain.contains(v),

@@ -472,10 +472,10 @@ private[sources] final class LineAncestry(spark: SparkSession,
   def upTo(f: org.apache.hadoop.fs.FileSystem, head: Int)
       : scala.collection.SortedSet[Int] = synchronized {
     if (head > walkedHead) {
-      // one commit-graph fetch (checkpoint + suffix), then in-memory:
-      // a stream RESTART against a year-deep table pays
+      // one state resolve (checkpoint + suffix), then in-memory: a
+      // stream RESTART against a year-deep table pays
       // O(CheckpointEvery) metadata opens, not O(versions)
-      val g = Snapshots.commitGraph(f, dir, head)
+      val g = Snapshots.state(f, dir, head)
       var v = head
       while (v >= 1 && !onLine.contains(v)) {
         onLine += v
@@ -560,7 +560,7 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
     if (!addedCache.contains(cv) && addedCache.size > 1024)
       addedCache.clear()
     addedCache.getOrElseUpdate(cv, {
-      val parent = Snapshots.commitGraph(f, dir, cv).parent(cv)
+      val parent = Snapshots.state(f, dir, cv).parent(cv)
       val parentSet =
         if (parent >= 1) Snapshots.files(spark, dir, parent).toSet
         else Set.empty[String]
@@ -681,6 +681,10 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
     cursor.note(p1)
     val v0 = p0.v
     val v1 = p1.v
+    // one state covers the line walks, the dropped-column check and the
+    // scan: its version is at or above every added file's and the
+    // stream's schema version
+    val st = Snapshots.state(f, dir, math.max(v1, canonVersion))
     val baseEs =
       if (v0 >= 1) Snapshots.entries(spark, dir, v0) else Seq.empty
     val base: Set[String] = baseEs.map(_.path).toSet
@@ -689,11 +693,10 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
       // share the global version counter but are NOT on this line, so a
       // pure-append line must not fail on an interleaved other-line commit
       val chain = scala.collection.mutable.ArrayBuffer.empty[Int]
-      val g = Snapshots.commitGraph(f, dir, v1)
       var v = v1
       while (v > v0 && v >= 1) {
         chain += v
-        val parent = g.parent(v)
+        val parent = st.parent(v)
         v = if (parent < v) parent else -1
       }
       var prev = baseEs.map(e => e.path -> e.dv).toMap
@@ -730,11 +733,10 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
         def resolve(p: FilePos): Int =
           if (p.i < 0) paths(p.v).size else p.i
         val vs = scala.collection.mutable.ArrayBuffer.empty[Int]
-        val g = Snapshots.commitGraph(f, dir, v1)
         var v = v1
         while (v > v0 && v >= 1) {
           vs += v
-          val parent = g.parent(v)
+          val parent = st.parent(v)
           v = if (parent < v) parent else -1
         }
         val tail = vs.reverseIterator.flatMap { cv =>
@@ -754,8 +756,7 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
     val newer = added.map(Snapshots.vintageOf).distinct
       .filter(_ > canonVersion)
     if (newer.nonEmpty) {
-      val local = Snapshots.localName(
-        Snapshots.renameChain(spark, dir, newer.max), canonVersion) _
+      val local = Snapshots.localName(st.chain, canonVersion) _
       for (c <- newer; n <- fixedSchema.fieldNames)
         require(local(c, n) != Snapshots.DropMarker,
           s"graft-snapshots source: the table's schema evolved away from " +
@@ -769,7 +770,7 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
     // frames are streaming-flagged.
     org.apache.spark.sql.GraftBatchView.asStreaming(
       spark.baseRelationToDataFrame(SnapshotSource.relationFor(spark, dir,
-        added.map(Snapshots.Entry(_)), canonVersion, fixedSchema)))
+        st, added.map(Snapshots.Entry(_)), canonVersion, fixedSchema)))
   }
 
   override def stop(): Unit = ()
@@ -1229,9 +1230,12 @@ object SnapshotSource {
         .filter(c)))).getOrElse(Seq.empty)
     val pruneCount = new java.util.concurrent.atomic.AtomicInteger(0)
     val totalCount = new java.util.concurrent.atomic.AtomicInteger(0)
+    // one state serves the parent walk, instants, op typing, pruning and
+    // every scan: its version covers the delta's files and `canonVersion`
+    val st = Snapshots.state(f, dir, math.max(v1, canonVersion))
     def pruneFiles(paths: Seq[String]): Seq[String] = {
       totalCount.addAndGet(paths.size)
-      val kept = StatsPruning.keep(spark, dir, v1, paths, groups,
+      val kept = StatsPruning.keep(spark, dir, st, paths, groups,
         canonVersion)
       pruneCount.addAndGet(kept.size)
       kept
@@ -1244,30 +1248,29 @@ object SnapshotSource {
     // COLUMN and would null-backfill the renamed column), each line's
     // deletion vector applied in the reader
     def scan(es: Seq[Snapshots.Entry]): DataFrame =
-      spark.baseRelationToDataFrame(relationFor(spark, dir, es,
+      spark.baseRelationToDataFrame(relationFor(spark, dir, st, es,
         canonVersion, tableSchema))
     def pruned(es: Seq[Snapshots.Entry],
         prune: Seq[String] => Seq[String]): Seq[Snapshots.Entry] = {
       val kept = prune(es.map(_.path)).toSet
       es.filter(e => kept(e.path))
     }
-    val graph = Snapshots.commitGraph(f, dir, v1)
     def stamped(df: DataFrame, change: String, v: Int): DataFrame =
       df.withColumn("_change_type", lit(change))
         .withColumn("_commit_version", lit(v.toLong))
         .withColumn("_commit_timestamp",
-          timestamp_millis(lit(graph.instant(v))))
+          timestamp_millis(lit(st.instant(f, dir, v))))
     // main's parent chain (ascending) over (v0, v1] — branch commits
     // share the version counter but are not on this line
     val chain = scala.collection.mutable.ArrayBuffer.empty[Int]
     var v = v1
     while (v > v0 && v >= 1) {
       chain += v
-      val parent = graph.parent(v)
+      val parent = st.parent(v)
       v = if (parent < v) parent else -1
     }
     val frames = chain.reverseIterator.flatMap { cv =>
-      val parent = graph.parent(cv)
+      val parent = st.parent(cv)
       val parentEs =
         if (parent >= 1) Snapshots.entries(spark, dir, parent)
         else Seq.empty
@@ -1283,7 +1286,7 @@ object SnapshotSource {
         // symmetrically for inserts).
         // No op file (plain appends/deletes, pre-op-file tables) keeps
         // the generic insert/delete typing.
-        val opInfo = graph.op(cv)
+        val opInfo = st.op(cv)
         // key-split typing joins pre against post: pruning or filtering
         // EITHER input before the split would misclassify change types
         // (a preimage whose postimage the filter drops would read as a
@@ -1391,9 +1394,11 @@ object SnapshotSource {
     * columns backfill null. A line's deletion vector is opened by the
     * task reading its file and its dead rows skipped inside the reader;
     * `_metadata` row indexes stay the file's own ordinals, the positions
-    * a vector records. Building the relation starts no job. */
+    * a vector records. Names and stats come from state `st`, whose
+    * version covers `canonV` and every vintage of `files`. Building the
+    * relation starts no job and reads no side-file. */
   private[sources] def relationFor(spark: SparkSession, dir: String,
-      files: Seq[Snapshots.Entry], canonV: Int,
+      st: Snapshots.TableState, files: Seq[Snapshots.Entry], canonV: Int,
       schema: StructType): HadoopFsRelation = {
     val root = new Path(dir)
     val fsys = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1412,10 +1417,10 @@ object SnapshotSource {
     }
     val paths = files.map(_.path)
     HadoopFsRelation(
-      new SnapshotFileIndex(spark, dir, canonV, root, statuses),
+      new SnapshotFileIndex(spark, dir, st, canonV, root, statuses),
       StructType(Nil), schema, None,
       new SnapshotParquetFormat(
-        Snapshots.vintageReads(spark, dir, paths, canonV, schema), dir,
+        Snapshots.vintageReads(spark, dir, st, paths, canonV, schema), dir,
         files.flatMap(e => e.dv.map(new Path(e.path).getName -> _)).toMap),
       Map.empty)(spark)
   }
@@ -1426,8 +1431,10 @@ object SnapshotSource {
   private[sources] def versionRelation(spark: SparkSession, dir: String,
       v: Int, fileSubset: Option[Set[String]] = None): HadoopFsRelation = {
     val all = Snapshots.entries(spark, dir, v)
-    relationFor(spark, dir, fileSubset.fold(all)(k => all.filter(e =>
-      k(e.path))), v, Snapshots.evolvedSchema(spark, dir, v, all.map(_.path)))
+    val st = Snapshots.state(spark, dir, v)
+    relationFor(spark, dir, st, fileSubset.fold(all)(k => all.filter(e =>
+      k(e.path))), v, Snapshots.evolvedSchema(spark, dir, st, v,
+      all.map(_.path)))
   }
 
   /** Best-effort source-Filter → Column, for the change feed's inner
@@ -1458,7 +1465,8 @@ object SnapshotSource {
 
 /** A manifest-resolved file set as a Spark [[FileIndex]] (`files` pairs
   * each manifest path with its status; the scan's columns are canonical
-  * at version `canonV`), with per-file stats pruning applied in
+  * at version `canonV`; stats and names come from state `st`), with
+  * per-file stats pruning applied in
   * `listFiles` — the hook
   * `FileSourceStrategy` hands the query's pushed data filters to. A file
   * the one pruning rule ([[StatsPruning]]) proves cannot match is
@@ -1466,7 +1474,8 @@ object SnapshotSource {
   * `numFiles` metric pins it); every filter is re-applied by the engine
   * above the scan, so pruning is pure optimization, never correctness. */
 private[sources] class SnapshotFileIndex(spark: SparkSession, dir: String,
-    canonV: Int, root: Path, files: Seq[(String, FileStatus)])
+    st: Snapshots.TableState, canonV: Int, root: Path,
+    files: Seq[(String, FileStatus)])
     extends FileIndex {
 
   override def rootPaths: Seq[Path] = Seq(root)
@@ -1480,11 +1489,8 @@ private[sources] class SnapshotFileIndex(spark: SparkSession, dir: String,
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val groups = dataFilters.reduceOption(CatAnd)
       .map(StatsPruning.groupsOf(spark, dir, _)).getOrElse(Seq.empty)
-    // stats are recorded by the commit that wrote each file
     val rels = files.map(_._1)
-    val statsV = (canonV +: rels.map(Snapshots.vintageOf)).max
-    val kept = StatsPruning.keep(spark, dir, statsV, rels, groups, canonV)
-      .toSet
+    val kept = StatsPruning.keep(spark, dir, st, rels, groups, canonV).toSet
     SnapshotFileIndex.lastPruneCounts = (kept.size, files.size)
     Seq(PartitionDirectory(InternalRow.empty,
       files.collect { case (rel, st) if kept(rel) => st }.toArray))

@@ -885,11 +885,11 @@ object Snapshots {
       : Option[(Long, Boolean)] = {
     val f = fs(s, dir)
     // a branch-targeted stream's replay cursor lives on the BRANCH's
-    // ancestry — main's stamps are another line's history. One graph
-    // fetch, then an in-memory walk: a stream restarting against a
+    // ancestry — main's stamps are another line's history. One state
+    // resolve, then an in-memory walk: a stream restarting against a
     // year-deep table costs O(CheckpointEvery) opens, not O(versions).
     var v = ref.map(refVersion(s, dir, _)).getOrElse(mainVersion(s, dir))
-    val g = commitGraph(f, dir, v)
+    val g = state(f, dir, v)
     while (v >= 1) {
       g.txn(v) match {
         case Some(stamp) =>
@@ -907,26 +907,28 @@ object Snapshots {
     None
   }
 
-  // ---- metadata checkpointing (Delta-checkpoint shape) ---------------------
+  // ---- table state and checkpointing (Delta Snapshot shape) -------------
   //
-  // Every CheckpointEvery-th published version additionally writes a
-  // `vN.ckpt` side-file folding the CUMULATIVE metadata of commits 1..N
-  // that readers otherwise reassemble with an O(history) side-file walk:
-  // the per-file stat lines (S records) and the per-commit rename
-  // declarations (R records). Readers resolve "all metadata up to v" as
-  // the newest checkpoint <= v plus a suffix walk over at most
-  // CheckpointEvery files, with an additive session memo on top - so a
-  // pruned read, DML matched-scan, MERGE, CDF read or purge of a deep
-  // table (a streaming-fed table at 10 s triggers accumulates ~260k
-  // versions in a month) costs O(CheckpointEvery) metadata opens, not
-  // O(history) driver RPCs. A checkpoint is REDUNDANT state: absent
-  // (old tables, a crashed write), readers fall back to the longer
-  // walk; a failed checkpoint write never fails its commit. Memo
-  // entries are validated by the table EPOCH (v1's commit instant): a
+  // "All metadata up to v" — every file's stat lines (S records), every
+  // commit's rename declarations (R), and the commit graph: parents,
+  // instants and stream-txn stamps (M) and operation verbs (O) — is ONE
+  // immutable value per (table, version), a [[TableState]]. [[state]]
+  // folds it from the nearest cached state or the newest `vN.ckpt`
+  // checkpoint at or below v, plus the side-files of the versions after
+  // that base, and keeps it in one bounded cache keyed by (dir, epoch,
+  // v), so a pruned read, DML matched-scan, MERGE, CDF read or purge of a
+  // deep table (a streaming-fed table at 10 s triggers accumulates ~260k
+  // versions in a month) costs O(CheckpointEvery) metadata opens cold
+  // and one epoch read warm, not O(history) driver RPCs. Every
+  // CheckpointEvery-th published version writes its state as `vN.ckpt`.
+  // A checkpoint is REDUNDANT state: absent (old tables, a crashed
+  // write), the fold starts lower; a failed checkpoint write never fails
+  // its commit. The EPOCH (v1's commit instant) keys the cache because a
   // table dropped and recreated at the same path restarts version
-  // numbering, so version-keyed session state must not survive
-  // recreation - the Delta _last_checkpoint + driver-side snapshot
-  // cache shape.
+  // numbering. A reader resolves the state once and passes it down;
+  // because states are immutable, concurrent readers and committers never
+  // see a half-extended one. The shape is Delta Lake's Snapshot (Armbrust
+  // et al., VLDB 2020): a checkpoint plus a log suffix, cached per version.
 
   private val SepCh = 1.toChar // the side-file field separator
 
@@ -1081,17 +1083,17 @@ object Snapshots {
   }
 
   /** The [[VintageRead]] of every vintage among `paths` under `schema`,
-    * canonical at version `canonV`: one rename-chain fetch and one
+    * canonical at version `canonV`: names from the rename chain of `st`
+    * (whose version covers `canonV` and every vintage) and one
     * (memoized) footer per vintage, no job. */
   private[sources] def vintageReads(s: SparkSession, dir: String,
-      paths: Seq[String], canonV: Int,
+      st: TableState, paths: Seq[String], canonV: Int,
       schema: org.apache.spark.sql.types.StructType)
       : Map[Int, VintageRead] = {
     val byVintage = paths.groupBy(vintageOf)
     if (byVintage.isEmpty) Map.empty
     else {
-      val local = localName(renameChain(s, dir,
-        (canonV +: byVintage.keys.toSeq).max), canonV) _
+      val local = localName(st.chain, canonV) _
       val canonical = schema.fields.toSeq.flatMap(f =>
         f.name +: subPaths(f.name, f.dataType))
       byVintage.map { case (c, ps) =>
@@ -1183,70 +1185,184 @@ object Snapshots {
     * versions main-side first, streaming-write txn stamp `queryId:batch`). */
   private[sources] type MetaRec = (Long, Seq[Int], Option[String])
 
-  /** Parsed cumulative metadata of commits 1..v. `metas`/`ops` (the
-    * COMMIT GRAPH: parent pointers, commit instants, stream-txn stamps,
-    * operation verbs) cover every commit 1..v when present — older
-    * checkpoints lack them and readers fall back to per-version
-    * side-file reads until the next checkpoint upgrades. */
-  private[sources] case class Ckpt(v: Int,
-      stats: Vector[(String, (String, String, String, String))],
-      renames: Map[Int, Seq[(String, String)]],
-      metas: Map[Int, MetaRec] = Map.empty,
-      ops: Map[Int, (String, Seq[String])] = Map.empty)
+  /** One recorded stat line: (manifest path, (column, type, min, max)). */
+  private[sources] type StatLine = (String, (String, String, String, String))
 
-  private val ckptMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), (Long, Ckpt)]
-  private val coverMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Ckpt)]
-  private val cumStatsMemo = scala.collection.concurrent.TrieMap.empty[
-    String, (Long, Int, Vector[(String, (String, String, String, String))])]
-  private val cumRenMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (Long, Int, Map[Int, Seq[(String, String)]])]
+  /** The table's metadata as of version `v`: the stat lines of every file
+    * commits 1..v wrote, the rename chain of commits 1..v, and the COMMIT
+    * GRAPH of versions 1..v (parent pointers, commit instants, stream-txn
+    * stamps, operation verbs). Immutable: [[state]] builds it once per
+    * (table, epoch, version) and every reader of that version shares it;
+    * a `vN.ckpt` checkpoint is this value rendered ([[renderCkpt]]).
+    * Every deep-history walk (branch merge, time travel,
+    * `system.history`, the streaming source's line ancestry, the
+    * streaming write's replay cursor) resolves one state at its head and
+    * then walks in memory, so a 260k-version streaming table costs
+    * O(CheckpointEvery) metadata opens per walk, not O(versions). The
+    * graph answers for versions 1..v only; asking it about a later
+    * version is a caller bug and throws. */
+  private[sources] final case class TableState(v: Int,
+      stats: Vector[StatLine],
+      renames: Map[Int, Seq[(String, String)]],
+      metas: Map[Int, MetaRec],
+      ops: Map[Int, (String, Seq[String])]) {
+
+    /** The rename chain as a TOTAL map (commits without renames resolve
+      * to empty). */
+    lazy val chain: Map[Int, Seq[(String, String)]] =
+      renames.withDefaultValue(Seq.empty)
+
+    /** The recorded stats by manifest path (files without stats are
+      * absent). */
+    lazy val statsByFile: Map[String, Seq[(String, String, String, String)]] =
+      stats.groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2) }
+
+    private def meta(c: Int): MetaRec = metas.getOrElse(c,
+      throw new IllegalArgumentException(
+        s"graft-snapshots: version $c is outside the state of version $v"))
+    def parents(c: Int): Seq[Int] = meta(c)._2
+    def parent(c: Int): Int = parents(c).headOption.getOrElse(c - 1)
+    def txn(c: Int): Option[String] = meta(c)._3
+    /** Every version's meta is folded, so a version absent from `ops`
+      * has no op file. */
+    def op(c: Int): Option[(String, Seq[String])] = { meta(c); ops.get(c) }
+    /** The recorded commit instant, else (no `vN.meta`: a pre-meta
+      * table) the manifest's mtime ([[commitInstant]]). */
+    def instant(f: FileSystem, dir: String, c: Int): Long = {
+      val t = meta(c)._1
+      if (t != 0L) t else commitInstant(f, dir, c)
+    }
+    /** `head` plus every ancestor through FIRST-parent pointers — the
+      * line-membership set. */
+    def ancestrySet(head: Int): Set[Int] = {
+      val anc = scala.collection.mutable.Set.empty[Int]
+      var x = head
+      while (x >= 1 && !anc.contains(x)) {
+        anc += x
+        val p = parent(x)
+        x = if (p < x) p else 0 // defensive: never loop
+      }
+      anc.toSet
+    }
+  }
+
+  private val NoState =
+    TableState(0, Vector.empty, Map.empty, Map.empty, Map.empty)
+
+  /** How many table states [[state]] keeps (least recently used go
+    * first). */
+  private val StatesKept = 64
+
+  /** The one cache of table states, by (dir, epoch, version). Entries
+    * never go stale (a published version's metadata never changes), so
+    * eviction is only for space. */
+  private val states = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[(String, Long, Int), TableState](
+        16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[
+          (String, Long, Int), TableState]): Boolean = size > StatesKept
+    })
 
   /** The table's identity fingerprint: v1's commit instant (0 when that
-    * meta is absent - legacy or vacuumed roots). */
+    * meta is absent - legacy or vacuumed roots). A table dropped and
+    * recreated at the same path restarts version numbering, so a state
+    * of the old table must not serve the new one. */
   private def tableEpoch(f: FileSystem, dir: String): Long =
     try readMeta(f, dir, 1).flatMap(_.head.toLongOption).getOrElse(0L)
     catch { case scala.util.control.NonFatal(_) => 0L }
 
-  private def parseStatLines(txt: String)
-      : Vector[(String, (String, String, String, String))] =
+  /** Version `v`'s [[TableState]] — the one resolver of snapshot
+    * metadata. It reads the table's epoch once (one `v1.meta` open) and
+    * returns the cached state, or builds it by folding the side-files of
+    * the versions after the newest base at or below `v`: the nearest
+    * cached state of the same epoch or the newest checkpoint, whichever
+    * is newer, else nothing. `v` must be published: side-files precede
+    * the manifest (and a claimant reusing an aborted version number
+    * clears the orphans first), so a published version's metadata is
+    * complete and never changes. A reader resolves the state once and
+    * passes it down. */
+  private[sources] def state(s: SparkSession, dir: String, v: Int)
+      : TableState = state(fs(s, dir), dir, v)
+
+  private[sources] def state(f: FileSystem, dir: String, v: Int)
+      : TableState =
+    if (v < 1) NoState
+    else {
+      val key = (dir, tableEpoch(f, dir), v)
+      Option(states.get(key)).getOrElse {
+        import scala.jdk.CollectionConverters._
+        val near = states.synchronized {
+          states.asScala.collect {
+            case ((d, e, c), st) if d == dir && e == key._2 && c < v => st
+          }.maxByOption(_.v)
+        }
+        val ckpt = ((v / CheckpointEvery) * CheckpointEvery to
+            near.fold(0)(_.v) + 1 by -CheckpointEvery).iterator
+          .flatMap(readCheckpoint(f, dir, _)).nextOption()
+        val st = fold(f, dir, ckpt.orElse(near).getOrElse(NoState), v)
+        states.put(key, st)
+        st
+      }
+    }
+
+  /** `base` extended by the side-files of versions (base.v, v]. A
+    * pre-graph checkpoint (no M/O records) folds the graph from 1; the
+    * next checkpoint write upgrades it durably. */
+  private def fold(f: FileSystem, dir: String, base: TableState, v: Int)
+      : TableState = {
+    val from = base.v
+    val gFrom = if (base.metas.isEmpty) 0 else from
+    TableState(v,
+      base.stats ++ (from + 1 to v).flatMap(statLinesOf(f, dir, _)),
+      base.renames ++ (from + 1 to v).map(c => c -> renamesOf(f, dir, c))
+        .filter(_._2.nonEmpty),
+      base.metas ++ (gFrom + 1 to v).map(c => c -> metaRecOf(f, dir, c)),
+      base.ops ++
+        (gFrom + 1 to v).flatMap(c => commitOpF(f, dir, c).map(c -> _)))
+  }
+
+  /** Spec support: drop every cached state of `dir` — a fresh driver
+    * reading an existing table, so specs can pin the COLD read cost of
+    * the checkpoint path itself. */
+  private[sources] def forgetStates(dir: String): Unit =
+    states.synchronized { states.keySet.removeIf(_._1 == dir); () }
+
+  private def parseStatLines(txt: String): Vector[StatLine] =
     txt.split('\n').toVector.filter(_.contains(SepCh)).map { l =>
       val a = l.split(SepCh)
       (a(0), (a(1), a(2), a(3), a(4)))
     }
 
   private def statLinesOf(f: FileSystem, dir: String, c: Int)
-      : Vector[(String, (String, String, String, String))] = {
+      : Vector[StatLine] = {
     val p = new Path(dir, s"v$c.stats")
     if (!f.exists(p)) Vector.empty else parseStatLines(readSmall(f, p))
   }
 
-  private def renderCkpt(ck: Ckpt): String = {
+  private def renderCkpt(st: TableState): String = {
     val sep = SepCh.toString
     val b = new StringBuilder
-    b.append(Seq("C", "1", ck.v.toString).mkString(sep)).append('\n')
-    ck.stats.foreach { case (p, (c, tn, mn, mx)) =>
+    b.append(Seq("C", "1", st.v.toString).mkString(sep)).append('\n')
+    st.stats.foreach { case (p, (c, tn, mn, mx)) =>
       b.append(Seq("S", p, c, tn, mn, mx).mkString(sep)).append('\n') }
-    ck.renames.toSeq.sortBy(_._1).foreach { case (c, rs) =>
+    st.renames.toSeq.sortBy(_._1).foreach { case (c, rs) =>
       rs.foreach { case (o, n) =>
         b.append(Seq("R", c.toString, o, n).mkString(sep)).append('\n') }
     }
     // commit-graph records: M = meta (instant, space-separated parents,
     // optional stream-txn stamp), O = operation verb + key columns. The
     // parser ignores unknown tags, so pre-graph readers skip these.
-    ck.metas.toSeq.sortBy(_._1).foreach { case (c, (ts, ps, txn)) =>
+    st.metas.toSeq.sortBy(_._1).foreach { case (c, (ts, ps, txn)) =>
       b.append(Seq("M", c.toString, ts.toString, ps.mkString(" "),
         txn.getOrElse("")).mkString(sep)).append('\n') }
-    ck.ops.toSeq.sortBy(_._1).foreach { case (c, (verb, keys)) =>
+    st.ops.toSeq.sortBy(_._1).foreach { case (c, (verb, keys)) =>
       b.append(Seq("O", c.toString, verb, keys.mkString(","))
         .mkString(sep)).append('\n') }
     b.result()
   }
 
-  private def parseCkpt(v: Int, txt: String): Ckpt = {
-    val stats =
-      Vector.newBuilder[(String, (String, String, String, String))]
+  private def parseCkpt(v: Int, txt: String): TableState = {
+    val stats = Vector.newBuilder[StatLine]
     val ren =
       scala.collection.mutable.Map.empty[Int, List[(String, String)]]
     val metas = Map.newBuilder[Int, MetaRec]
@@ -1272,113 +1388,26 @@ object Snapshots {
         case _ => // C marker / future record types: ignore
       }
     }
-    Ckpt(v, stats.result(),
+    TableState(v, stats.result(),
       ren.iterator.map { case (k, vs) => k -> (vs: Seq[(String, String)]) }
         .toMap,
       metas.result(), ops.result())
   }
 
-  private def loadCkpt(f: FileSystem, dir: String, cv: Int, epoch: Long)
-      : Option[Ckpt] =
-    ckptMemo.get((dir, cv)) match {
-      case Some((e, ck)) if e == epoch => Some(ck)
-      case _ =>
-        val p = ckptPath(dir, cv)
-        if (!f.exists(p)) None
-        else {
-          val ck =
-            try Some(parseCkpt(cv, readSmall(f, p)))
-            catch { case scala.util.control.NonFatal(_) => None }
-          ck.foreach(c => ckptMemo.put((dir, cv), (epoch, c)))
-          ck
-        }
-    }
-
-  /** Newest checkpoint at or below `v` - exists-probes multiples of
-    * [[CheckpointEvery]] downward (cheap RPCs, memoized; checkpoint-less
-    * old tables pay v/CheckpointEvery probes once per session). */
-  private def newestCkptAt(f: FileSystem, dir: String, v: Int,
-      epoch: Long): Option[Ckpt] = {
-    val top = (v / CheckpointEvery) * CheckpointEvery
-    coverMemo.get(dir) match {
-      case Some((e, ck)) if e == epoch && ck.v == top => return Some(ck)
-      case _ =>
-    }
-    var c = top
-    while (c >= CheckpointEvery) {
-      loadCkpt(f, dir, c, epoch) match {
-        case Some(ck) =>
-          coverMemo.get(dir) match {
-            case Some((e, old)) if e == epoch && old.v >= ck.v =>
-            case _ => coverMemo.put(dir, (epoch, ck))
-          }
-          return Some(ck)
-        case None => c -= CheckpointEvery
-      }
-    }
-    None
-  }
-
-  /** All stat lines recorded by commits 1..v: additive session memo,
-    * else newest checkpoint + suffix walk, else (checkpoint-less old
-    * tables) the full walk. Stat side-files are IMMUTABLE once their
-    * version is resolvable (side-files precede the manifest; a claimant
-    * reusing an aborted version number clears orphans first), which is
-    * what makes the memo sound. */
-  private def statLinesUpTo(f: FileSystem, dir: String, v: Int)
-      : Vector[(String, (String, String, String, String))] = {
-    val epoch = tableEpoch(f, dir)
-    cumStatsMemo.get(dir) match {
-      case Some((e, cv, lines)) if e == epoch && cv == v => lines
-      case Some((e, cv, lines)) if e == epoch && cv < v =>
-        val ext = lines ++ (cv + 1 to v).flatMap(statLinesOf(f, dir, _))
-        cumStatsMemo.put(dir, (epoch, v, ext))
-        ext
-      case prior =>
-        val ck = newestCkptAt(f, dir, v, epoch)
-        val from = ck.map(_.v).getOrElse(0)
-        val all = ck.map(_.stats).getOrElse(Vector.empty) ++
-          (from + 1 to v).flatMap(statLinesOf(f, dir, _))
-        // a time-travel read below the memo's version must not shrink it
-        val shrink = prior.exists(t => t._1 == epoch && t._2 > v)
-        if (!shrink) cumStatsMemo.put(dir, (epoch, v, all))
-        all
-    }
-  }
-
-  /** The rename chain of commits 1..v as a TOTAL map (commits without
-    * renames resolve to empty): checkpoint + suffix + memo, the
-    * schema-evolution twin of [[statLinesUpTo]]. Replaces the former
-    * per-caller `(1 to v).map(renamesOf)` walks. */
-  private[sources] def renameChain(s: SparkSession, dir: String, v: Int)
-      : Map[Int, Seq[(String, String)]] = {
-    val f = fs(s, dir)
-    val epoch = tableEpoch(f, dir)
-    val m: Map[Int, Seq[(String, String)]] = cumRenMemo.get(dir) match {
-      case Some((e, cv, ch)) if e == epoch && cv == v => ch
-      case Some((e, cv, ch)) if e == epoch && cv > v =>
-        ch.filter(_._1 <= v) // rename entries are version-keyed
-      case Some((e, cv, ch)) if e == epoch && cv < v =>
-        val ext = ch ++ (cv + 1 to v)
-          .map(c => c -> renamesOfF(f, dir, c)).filter(_._2.nonEmpty)
-        cumRenMemo.put(dir, (epoch, v, ext))
-        ext
-      case _ =>
-        val ck = newestCkptAt(f, dir, v, epoch)
-        val from = ck.map(_.v).getOrElse(0)
-        val all = ck.map(_.renames).getOrElse(Map.empty) ++
-          (from + 1 to v).map(c => c -> renamesOfF(f, dir, c))
-            .filter(_._2.nonEmpty)
-        cumRenMemo.put(dir, (epoch, v, all))
-        all
-    }
-    m.withDefaultValue(Seq.empty)
+  /** Checkpoint `c`, or None when it is absent or unreadable (the fold
+    * then starts lower). */
+  private def readCheckpoint(f: FileSystem, dir: String, c: Int)
+      : Option[TableState] = {
+    val p = ckptPath(dir, c)
+    if (!f.exists(p)) None
+    else try Some(parseCkpt(c, readSmall(f, p)))
+    catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** One commit's [[MetaRec]] from its `vN.meta` side-file; the linear
     * default `(0, Seq(c-1), None)` for absent metas (legacy or vacuumed
     * versions) — the same fallbacks [[commitParent]]/[[commitInstant]]
-    * apply per call, baked into the fold so covered commits never
+    * apply per call, baked into the fold so folded versions never
     * re-probe the filesystem. */
   private def metaRecOf(f: FileSystem, dir: String, c: Int): MetaRec =
     readMeta(f, dir, c) match {
@@ -1391,122 +1420,28 @@ object Snapshots {
       case None => (0L, Seq(c - 1), None)
     }
 
-  /** The COMMIT GRAPH of versions 1..v, resolved as checkpoint + suffix
-    * walk + additive session memo — the ancestry twin of
-    * [[statLinesUpTo]]. Every deep-history walk (branch merge, time
-    * travel, `system.history`, the streaming source's line ancestry,
-    * the streaming write's replay cursor) fetches this ONCE at its head
-    * and then walks in memory, so a 260k-version streaming table costs
-    * O(CheckpointEvery) metadata opens per walk, not O(versions).
-    * Commits the fold covered answer from the maps; commits outside
-    * (a pre-graph table whose checkpoint predates M/O records) fall
-    * back to per-version side-file reads — never wrong, only slower
-    * until the next checkpoint upgrades. */
-  private[sources] final class CommitGraph(f: FileSystem, dir: String,
-      metas: Map[Int, MetaRec], ops: Map[Int, (String, Seq[String])]) {
-    private def covered(c: Int): Boolean = metas.contains(c)
-    def parents(c: Int): Seq[Int] =
-      metas.get(c).map(_._2).getOrElse(commitParents(f, dir, c))
-    def parent(c: Int): Int = parents(c).headOption.getOrElse(c - 1)
-    def instant(c: Int): Long = metas.get(c).map(_._1).filter(_ != 0L)
-      .getOrElse(commitInstant(f, dir, c))
-    def txn(c: Int): Option[String] =
-      if (covered(c)) metas(c)._3
-      else readMeta(f, dir, c).filter(_.size >= 3).map(_(2))
-        .filter(_.nonEmpty)
-    def op(c: Int): Option[(String, Seq[String])] =
-      // the fold records an entry for EVERY covered commit's meta, so a
-      // covered commit absent from `ops` genuinely has no op file
-      if (covered(c)) ops.get(c) else commitOpF(f, dir, c)
-    /** `head` plus every ancestor through FIRST-parent pointers — the
-      * line-membership set ([[mainAncestry]]'s walk, in memory). */
-    def ancestrySet(head: Int): Set[Int] = {
-      val anc = scala.collection.mutable.Set.empty[Int]
-      var v = head
-      while (v >= 1 && !anc.contains(v)) {
-        anc += v
-        val p = parent(v)
-        v = if (p < v) p else 0 // defensive: never loop
-      }
-      anc.toSet
-    }
-  }
-
-  private val cumGraphMemo = scala.collection.concurrent.TrieMap.empty[
-    String, (Long, Int, Map[Int, MetaRec], Map[Int, (String, Seq[String])])]
-
-  /** The commit graph covering versions 1..v (see [[CommitGraph]]). */
-  private[sources] def commitGraph(f: FileSystem, dir: String, v: Int)
-      : CommitGraph = {
-    val epoch = tableEpoch(f, dir)
-    def fold(m0: Map[Int, MetaRec],
-        o0: Map[Int, (String, Seq[String])], from: Int)
-        : (Map[Int, MetaRec], Map[Int, (String, Seq[String])]) = {
-      val m = m0 ++ (from + 1 to v).map(c => c -> metaRecOf(f, dir, c))
-      val o = o0 ++
-        (from + 1 to v).flatMap(c => commitOpF(f, dir, c).map(c -> _))
-      cumGraphMemo.put(dir, (epoch, v, m, o))
-      (m, o)
-    }
-    val (ms, os) = cumGraphMemo.get(dir) match {
-      case Some((e, cv, m, o)) if e == epoch && cv >= v => (m, o)
-      case Some((e, cv, m, o)) if e == epoch => fold(m, o, cv)
-      case _ =>
-        val ck = newestCkptAt(f, dir, v, epoch)
-        // a pre-graph checkpoint (no M records) folds from scratch ONCE
-        // per session; the next checkpoint write upgrades it durably
-        val from = ck.filter(_.metas.nonEmpty).map(_.v).getOrElse(0)
-        fold(ck.map(_.metas).getOrElse(Map.empty),
-          ck.map(_.ops).getOrElse(Map.empty), from)
-    }
-    new CommitGraph(f, dir, ms, os)
-  }
-
-  private[sources] def commitGraph(s: SparkSession, dir: String, v: Int)
-      : CommitGraph = commitGraph(fs(s, dir), dir, v)
-
   /** Write `v`'s checkpoint when `v` is a [[CheckpointEvery]] multiple.
     * Called AFTER the manifest publish by every commit path;
     * best-effort (redundant state - a failure degrades reads to the
-    * longer suffix walk, never to wrong data). Atomic tmp+rename so a
-    * reader never sees a torn checkpoint. */
+    * longer suffix walk, never to wrong data). */
   private def maybeCheckpoint(f: FileSystem, dir: String, v: Int): Unit =
     if (v > 0 && v % CheckpointEvery == 0) {
       try writeCheckpoint(f, dir, v)
       catch { case scala.util.control.NonFatal(_) => () }
     }
 
-  /** Write version `v`'s checkpoint unconditionally (`v` must be a
-    * [[CheckpointEvery]] multiple whose side-files are resolvable).
-    * Throws on failure — [[maybeCheckpoint]] downgrades that to
-    * best-effort, [[checkpointNow]] surfaces it. */
-  private def writeCheckpoint(f: FileSystem, dir: String, v: Int)
-      : Unit = {
-        val epoch = tableEpoch(f, dir)
-        val base = newestCkptAt(f, dir, v - 1, epoch)
-        val from = base.map(_.v).getOrElse(0)
-        // graph records fold from the base when it carries them; a
-        // pre-graph base checkpoint upgrades by folding 1..v once
-        val gFrom = base.filter(_.metas.nonEmpty).map(_.v).getOrElse(0)
-        val ck = Ckpt(v,
-          base.map(_.stats).getOrElse(Vector.empty) ++
-            (from + 1 to v).flatMap(statLinesOf(f, dir, _)),
-          base.map(_.renames).getOrElse(Map.empty) ++
-            (from + 1 to v).map(c => c -> renamesOfF(f, dir, c))
-              .filter(_._2.nonEmpty),
-          base.map(_.metas).getOrElse(Map.empty) ++
-            (gFrom + 1 to v).map(c => c -> metaRecOf(f, dir, c)),
-          base.map(_.ops).getOrElse(Map.empty) ++
-            (gFrom + 1 to v).flatMap(c =>
-              commitOpF(f, dir, c).map(c -> _)))
-        val tmp = new Path(dir, s"_v$v.ckpt.tmp")
-        val o = f.create(tmp, true)
-        try o.write(renderCkpt(ck).getBytes("UTF-8")) finally o.close()
-        if (f.rename(tmp, ckptPath(dir, v))) {
-          ckptMemo.put((dir, v), (epoch, ck))
-          coverMemo.put(dir, (epoch, ck))
-        }
-        ()
+  /** Write version `v`'s state as its checkpoint, unconditionally (`v`
+    * must be a published [[CheckpointEvery]] multiple). Atomic
+    * tmp+rename so a reader never sees a torn checkpoint. Throws on
+    * failure — [[maybeCheckpoint]] downgrades that to best-effort,
+    * [[checkpointNow]] surfaces it. */
+  private def writeCheckpoint(f: FileSystem, dir: String, v: Int): Unit = {
+    val tmp = new Path(dir, s"_v$v.ckpt.tmp")
+    val o = f.create(tmp, true)
+    try o.write(renderCkpt(state(f, dir, v)).getBytes("UTF-8"))
+    finally o.close()
+    f.rename(tmp, ckptPath(dir, v))
+    ()
   }
 
   /** Force-write the newest reachable checkpoint — the top
@@ -1528,23 +1463,11 @@ object Snapshots {
     } finally lock.release()
   }
 
-  /** Spec support: forget this session's memoized metadata for `dir` —
-    * simulates a fresh driver reading an existing table, so specs can
-    * pin the COLD read cost of the checkpoint path itself. */
-  private[sources] def forgetMemos(dir: String): Unit = {
-    cumStatsMemo.remove(dir)
-    cumRenMemo.remove(dir)
-    cumGraphMemo.remove(dir)
-    coverMemo.remove(dir)
-    ckptMemo.keys.filter(_._1 == dir).foreach(ckptMemo.remove)
-    ()
-  }
-
   /** A freshly CLAIMED version number may carry side-file orphans from
     * a claimant that died mid-publish (side-files are written BEFORE
     * the manifest - the crash-consistency direction that makes a
-    * RESOLVABLE version's metadata complete and therefore memoizable).
-    * Cleared centrally when a claim is won. */
+    * RESOLVABLE version's metadata complete and therefore a
+    * [[TableState]] immutable). Cleared centrally when a claim is won. */
   private def clearStaleSideFiles(f: FileSystem, dir: String, v: Int)
       : Unit = {
     f.delete(new Path(dir, s"v$v.op"), false)
@@ -1554,19 +1477,17 @@ object Snapshots {
     ()
   }
 
-  /** Per-file (col, typeName, min, max) stats recorded by commits 1..v,
-    * keyed by manifest-relative path. Files without stats are simply
-    * absent (conservative: never pruned). Checkpoint + memo backed (see
-    * the checkpointing section above) - O(CheckpointEvery) side-file
-    * opens instead of O(v); the purge-maintained `purged.stats` overlay
-    * (see purge step 2b) is MUTABLE and therefore read fresh each call. */
-  private[sources] def statsUpTo(s: SparkSession, dir: String, v: Int)
-      : Map[String, Seq[(String, String, String, String)]] = {
+  /** Per-file (col, typeName, min, max) stats of state `st`, keyed by
+    * manifest-relative path. Files without stats are simply absent
+    * (conservative: never pruned). The purge-maintained `purged.stats`
+    * overlay (see purge step 2b) is MUTABLE and therefore read fresh
+    * each call. */
+  private[sources] def statsUpTo(s: SparkSession, dir: String,
+      st: TableState): Map[String, Seq[(String, String, String, String)]] = {
     val f = fs(s, dir)
     val pp = new Path(dir, "purged.stats")
-    val purged =
-      if (!f.exists(pp)) Vector.empty else parseStatLines(readSmall(f, pp))
-    (statLinesUpTo(f, dir, v) ++ purged)
+    if (!f.exists(pp)) st.statsByFile
+    else (st.stats ++ parseStatLines(readSmall(f, pp)))
       .groupBy(_._1).map { case (pth, xs) => pth -> xs.map(_._2) }
   }
 
@@ -1587,8 +1508,8 @@ object Snapshots {
   private[sources] def fileInventory(s: SparkSession, dir: String, v: Int)
       : Seq[(String, Int, Long, Long, String)] = {
     val f = fs(s, dir)
-    val stats = statsUpTo(s, dir, v)
     val fset = files(s, dir, v)
+    val stats = statsUpTo(s, dir, state(f, dir, v))
     val meta: Map[String, (Long, Long)] =
       if (fset.size <= inventoryDistributeThreshold)
         fset.map { p =>
@@ -1651,20 +1572,19 @@ object Snapshots {
     import org.apache.spark.sql.functions.col
     val es = entries(s, dir, v)
     val fset = es.map(_.path)
+    val st = state(s, dir, v)
     val key = AttributeReference(keyCol, Literal(lo).dataType)()
-    val keep = StatsPruning.keep(s, dir, v, fset, StatsPruning.groupsOf(s,
+    val keep = StatsPruning.keep(s, dir, st, fset, StatsPruning.groupsOf(s,
       dir, And(GreaterThanOrEqual(key, Literal(lo)),
         LessThanOrEqual(key, Literal(hi))))).toSet
     val df = s.baseRelationToDataFrame(SnapshotSource.relationFor(s, dir,
-      es.filter(e => keep(e.path)), v, evolvedSchema(s, dir, v, fset)))
+      st, es.filter(e => keep(e.path)), v,
+      evolvedSchema(s, dir, st, v, fset)))
     (df.filter(col(keyCol) >= lo && col(keyCol) <= hi), (keep.size, fset.size))
   }
 
   /** Renames declared AT commit `v` (empty if none). */
-  private[sources] def renamesOf(s: SparkSession, dir: String, v: Int)
-      : Seq[(String, String)] = renamesOfF(fs(s, dir), dir, v)
-
-  private def renamesOfF(f: FileSystem, dir: String, v: Int)
+  private def renamesOf(f: FileSystem, dir: String, v: Int)
       : Seq[(String, String)] = {
     val p = new Path(dir, s"v$v.renames")
     if (!f.exists(p)) Seq.empty
@@ -1729,15 +1649,18 @@ object Snapshots {
     * ([[widen]]). Column order: the first vintage's columns, then later
     * additions in vintage order. O(vintages) footers, no data. */
   private[sources] def evolvedSchema(s: SparkSession, dir: String, v: Int)
-      : org.apache.spark.sql.types.StructType =
-    evolvedSchema(s, dir, v, files(s, dir, v))
+      : org.apache.spark.sql.types.StructType = {
+    val fset = files(s, dir, v)
+    evolvedSchema(s, dir, state(s, dir, v), v, fset)
+  }
 
   /** [[evolvedSchema]] over `fset`, version `v`'s already-read file
-    * list. */
-  private[sources] def evolvedSchema(s: SparkSession, dir: String, v: Int,
-      fset: Seq[String]): org.apache.spark.sql.types.StructType = {
+    * list, with the rename chain of `st` (a state at or above `v`). */
+  private[sources] def evolvedSchema(s: SparkSession, dir: String,
+      st: TableState, v: Int, fset: Seq[String])
+      : org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types.{StructField, StructType}
-    val chain = renameChain(s, dir, v)
+    val chain = st.chain
     val vintages = fset.groupBy(vintageOf).toSeq.sortBy(_._1).map {
       case (c, paths) =>
         val sch = footerSchema(s, dir, paths.head)
@@ -1863,16 +1786,16 @@ object Snapshots {
     SnapshotFileIndex.lastPruneCounts
 
   /** The positional scan behind DML and the MERGE family: the live rows
-    * of version `v`'s entries `es` (or of the `subset` of its files),
-    * deletion vectors applied in the reader, under the version's
-    * canonical schema, so renamed and widened vintages read like a
-    * SELECT, plus `_fp`/`_ri` positions. A filter over it prunes files
-    * like a read. */
-  private def positionsScan(s: SparkSession, dir: String, v: Int,
+    * of the entries `es` of state `st`'s version (or of the `subset` of
+    * its files), deletion vectors applied in the reader, under the
+    * version's canonical schema, so renamed and widened vintages read
+    * like a SELECT, plus `_fp`/`_ri` positions. A filter over it prunes
+    * files like a read. */
+  private def positionsScan(s: SparkSession, dir: String, st: TableState,
       es: Seq[Entry], subset: Option[Set[String]] = None): DataFrame =
     withMeta(s.baseRelationToDataFrame(SnapshotSource.relationFor(s, dir,
-      subset.fold(es)(k => es.filter(e => k(e.path))), v,
-      evolvedSchema(s, dir, v, es.map(_.path)))))
+      st, subset.fold(es)(k => es.filter(e => k(e.path))), st.v,
+      evolvedSchema(s, dir, st, st.v, es.map(_.path)))))
 
   /** MERGE-ON-READ delete: the row indexes of rows matching `cond` in
     * the latest version join the deletion vectors of the files holding
@@ -1918,7 +1841,7 @@ object Snapshots {
     // between the read and the claim (the lost-update window)
     claimed(s, f, dir, branch, "delete") { (v, latest) =>
       val prev = entries(s, dir, latest)
-      val scan = positionsScan(s, dir, latest, prev)
+      val scan = positionsScan(s, dir, state(f, dir, latest), prev)
       val (next, n) = DeletionVectors.extend(s, dir, v, prev,
         scan.filter(condOf(scan))
           .select(col("_fp").as("file_path"), col("_ri").as("row_index")))
@@ -1950,7 +1873,7 @@ object Snapshots {
     // claim FIRST, then compute against v-1 (the deleteWhere rationale)
     claimed(s, f, dir, branch, "replace") { (v, latest) =>
       val prev = entries(s, dir, latest)
-      val scan = positionsScan(s, dir, latest, prev)
+      val scan = positionsScan(s, dir, state(f, dir, latest), prev)
       val (next, n) = DeletionVectors.extend(s, dir, v, prev,
         scan.filter(cond)
           .select(col("_fp").as("file_path"), col("_ri").as("row_index")))
@@ -2005,7 +1928,7 @@ object Snapshots {
     // lost-update reasoning as deleteWhere/upsert)
     claimed(s, f, dir, branch, "update") { (v, latest) =>
       val prev = entries(s, dir, latest)
-      val live = positionsScan(s, dir, latest, prev)
+      val live = positionsScan(s, dir, state(f, dir, latest), prev)
       // `matched` feeds TWO consumers — the vector writer (which also
       // counts it) and the updated rows staged as fresh files — so it is
       // persisted once: the whole update costs ONE scan of the table
@@ -2074,7 +1997,7 @@ object Snapshots {
     * @return (prunedFiles, broadcastable exact-key frame when small
     *         enough, the aggregation row: nkAll, per-key mn/mx pairs,
     *         then `extraAggs` in order) */
-  private def matchableFiles(s: SparkSession, dir: String, latest: Int,
+  private def matchableFiles(s: SparkSession, dir: String, st: TableState,
       fset: Seq[String], keyCols: Seq[String], keys: DataFrame,
       extraAggs: Seq[org.apache.spark.sql.Column] = Seq.empty)
       : (Seq[String], Option[DataFrame], org.apache.spark.sql.Row) = {
@@ -2105,7 +2028,7 @@ object Snapshots {
         case _ => Seq.empty
       })
     }
-    val kept = StatsPruning.keep(s, dir, latest, fset, groups)
+    val kept = StatsPruning.keep(s, dir, st, fset, groups)
     lastMergePruneCounts = (kept.size, fset.size)
     val exactFrame = exactRows.map(rows =>
       s.createDataFrame(s.sparkContext.parallelize(rows, 1),
@@ -2138,7 +2061,8 @@ object Snapshots {
   private[sources] def mergeJoinPrunedFiles(s: SparkSession, dir: String,
       v: Int, keyCols: Seq[String], keys: DataFrame): (Seq[String], Int) = {
     val fset = files(s, dir, v)
-    val (kept, _, _) = matchableFiles(s, dir, v, fset, keyCols, keys)
+    val (kept, _, _) =
+      matchableFiles(s, dir, state(s, dir, v), fset, keyCols, keys)
     lastMergeJoinPruneCounts = (kept.size, fset.size)
     (kept, fset.size)
   }
@@ -2230,11 +2154,12 @@ object Snapshots {
     claimed(s, f, dir, branch, "upsert") { (v, latest) =>
       val prev = entries(s, dir, latest)
       val fset = prev.map(_.path)
+      val st = state(f, dir, latest)
       // one job over the batch-sized source: key bounds for file
       // pruning, the distinct-key count, AND the row count — the
       // uniqueness check rides along instead of costing two more jobs
       val (matchFiles, exactKeys, aggRow) = matchableFiles(s, dir,
-        latest, fset, keyCols, srcKeys,
+        st, fset, keyCols, srcKeys,
         extraAggs = Seq(count(lit(1)).as("_n")))
       require(aggRow.getLong(0) ==
           aggRow.getLong(1 + 2 * keyCols.size),
@@ -2243,7 +2168,7 @@ object Snapshots {
         if (matchFiles.isEmpty) (prev, 0L)
         else {
           // only LIVE rows can match: the scan applies the vectors
-          val live = positionsScan(s, dir, latest, prev,
+          val live = positionsScan(s, dir, st, prev,
             Some(matchFiles.toSet))
           // a collected exact-key set re-enters as a broadcast local
           // relation: no source recomputation, no shuffle on the scan
@@ -2296,6 +2221,7 @@ object Snapshots {
     claimed(s, f, dir, branch, "apply CDC") { (v, latest) =>
       val prev = entries(s, dir, latest)
       val fset = prev.map(_.path)
+      val st = state(f, dir, latest)
       // both key families prune the scan; a marker column (prefixed to
       // stay clear of any user key column) lets the ONE aggregation job
       // also count the upsert side for the uniqueness check (previously
@@ -2307,7 +2233,7 @@ object Snapshots {
       val upsDistinct = count_distinct(when(col(mk) === 0,
         struct(keyCols.map(col): _*))).as("_nk_ups")
       val (matchFiles, exactKeys, aggRow) = matchableFiles(s, dir,
-        latest, fset, keyCols, allKeys,
+        st, fset, keyCols, allKeys,
         extraAggs = Seq(upsCount, upsDistinct))
       require(aggRow.getLong(1 + 2 * keyCols.size) ==
           aggRow.getLong(2 + 2 * keyCols.size),
@@ -2318,7 +2244,7 @@ object Snapshots {
       val (next, nGone) =
         if (matchFiles.isEmpty) (prev, 0L)
         else {
-          val live = positionsScan(s, dir, latest, prev,
+          val live = positionsScan(s, dir, st, prev,
             Some(matchFiles.toSet))
           val keyFrame = exactKeys.map(broadcast).getOrElse(
             allKeys.select(keyCols.map(col): _*).distinct())
@@ -2474,10 +2400,10 @@ object Snapshots {
           case ManifestName(n) => Some(n.toInt)
           case _ => None
         })
-      // commit instants through the graph: one checkpoint + suffix read
+      // commit instants through one state: a checkpoint + suffix read
       // instead of one vN.meta open per live manifest
-      val g = commitGraph(f, dir, published.maxOption.getOrElse(0))
-      val candidates = published.filter(g.instant(_) <= tsMillis)
+      val g = state(f, dir, published.maxOption.getOrElse(0))
+      val candidates = published.filter(g.instant(f, dir, _) <= tsMillis)
       // on a ref-tracked table, time travel follows the requested LINE
       // (main by default, a named ref when given): branch commits share
       // the global version counter, so the raw max over all manifests
@@ -2517,31 +2443,31 @@ object Snapshots {
       .getOrElse(mainVersion(s, dir))
     if (head < 1) return 1
     // one directory listing bounds the vacuum check; instants and the
-    // line walk come off one commit-graph fetch — no per-version RPCs
+    // line walk come off one state — no per-version RPCs
     val live = f.listStatus(new Path(dir)).toSeq
       .flatMap(_.getPath.getName match {
         case ManifestName(n) => Some(n.toInt)
         case _ => None
       }).toSet
-    val g = commitGraph(f, dir, head)
+    val g = state(f, dir, head)
     g.ancestrySet(head).toSeq.sorted
       .find(v => live.contains(v) &&
-        (try g.instant(v) >= tsMillis
+        (try g.instant(f, dir, v) >= tsMillis
          catch { case _: Exception => false }))
       .getOrElse(head + 1)
   }
 
   /** The set of versions on a line: `head` plus every ancestor
     * reachable through the vN.meta parent pointers — one
-    * [[commitGraph]] fetch (checkpoint + ≤CheckpointEvery side-files),
+    * [[state]] (checkpoint + ≤CheckpointEvery side-files, cold),
     * then an in-memory walk. */
   private def mainAncestry(f: FileSystem, dir: String, head: Int)
       : Set[Int] =
-    commitGraph(f, dir, head).ancestrySet(head)
+    state(f, dir, head).ancestrySet(head)
 
   /** Whether version `v` lies on the line headed by `head` (is `head`
     * or one of its first-parent ancestors) — branch time travel's
-    * membership check. One commit-graph fetch. */
+    * membership check. One state resolve. */
   def onLine(s: SparkSession, dir: String, head: Int, v: Int): Boolean =
     v >= 1 && v <= head && mainAncestry(fs(s, dir), dir, head).contains(v)
 
@@ -2724,7 +2650,7 @@ object Snapshots {
       require(!isTag, s"cannot fast-forward tag '$name'")
       require(f.exists(manifest(dir, toVersion)),
         s"fastForward: version $toVersion does not exist at $dir")
-      val g = commitGraph(f, dir, toVersion)
+      val g = state(f, dir, toVersion)
       var walk = toVersion
       while (walk > head) walk = g.parent(walk)
       require(walk == head,
@@ -2793,10 +2719,10 @@ object Snapshots {
       require(!isTag, s"cannot merge tag '$name' — tags are immutable")
       val mHead = mainHead(f, dir, v - 1)
       require(mHead >= 1, s"mergeBranch: main has no commits at $dir")
-      // one graph fetch serves both sides' ancestry walks, the rewrite
-      // validation below, and the op lookups — O(CheckpointEvery)
-      // metadata opens however deep the table's history is
-      val g = commitGraph(f, dir, math.max(mHead, bHead))
+      // one state serves both sides' ancestry walks, the rename and
+      // rewrite validation below, the op lookups and the side reads —
+      // O(CheckpointEvery) metadata opens however deep the history is
+      val g = state(f, dir, math.max(mHead, bHead))
       def ancestors(x0: Int): List[Int] = {
         var x = x0; val buf = List.newBuilder[Int]
         while (x >= 1) {
@@ -2849,15 +2775,15 @@ object Snapshots {
       val mRewrote = !baseFiles.forall(mByPath.contains)
       val newVs = (mAdded ++ bAdded).collect {
         case Entry(FileCommit(c), _, _) => c.toInt }.distinct
-      require(newVs.forall(renamesOf(s, dir, _).isEmpty),
+      require(newVs.forall(g.chain(_).isEmpty),
         s"mergeBranch: schema renames on a diverged side — merge " +
           "before renaming, or rebase")
       // every side read goes through the one snapshot scan, canonical at
       // main's head, so vintages older than the base read like a SELECT
-      val schema = evolvedSchema(s, dir, mHead, mFiles)
+      val schema = evolvedSchema(s, dir, g, mHead, mFiles)
       def liveOf(es: Seq[Entry]): DataFrame =
         withMeta(s.baseRelationToDataFrame(SnapshotSource.relationFor(s,
-          dir, es, mHead, schema)))
+          dir, g, es, mHead, schema)))
       def keysOf(es: Seq[Entry]): DataFrame =
         liveOf(es).select(keyCols.map(col): _*).distinct()
       def refuseSharedKeys(mKeys: DataFrame, bKeys: DataFrame): Unit = {
@@ -3037,7 +2963,11 @@ object Snapshots {
     * query reprocesses it from its checkpoint (exactly-once holds; the
     * cost is a re-run, not data loss) — but operators running
     * long-PAUSE streams should still raise the default 24h (or pass
-    * Long.MaxValue to skip stage sweeping) rather than pay re-runs. */
+    * Long.MaxValue to skip stage sweeping) rather than pay re-runs. The
+    * same horizon sweeps `dv/`: a deletion vector that no retained
+    * manifest names and that is older than the horizon was left by a DML
+    * commit that died before its publish, and is deleted (counted in
+    * filesDeleted). */
   def vacuum(s: SparkSession, dir: String, keep: Int,
       stageOrphanMs: Long = 24L * 3600 * 1000): (Int, Int) = {
     require(keep >= 1, "must keep at least the latest version")
@@ -3070,7 +3000,6 @@ object Snapshots {
     }
     val latest = latestVersion(s, dir)
     val cutoff = math.max(1, latest - keep + 1)
-    if (cutoff <= 1) return (0, 0)
     val pinned = refs(s, dir).values.map(_._1).toSet
     // versions below the cutoff may already be vacuumed — only live
     // manifests participate
@@ -3092,19 +3021,31 @@ object Snapshots {
       // vN.renames and vN.stats stay: carried-forward files in retained
       // versions still need the rename chain and their recorded bounds
     }
-    // checkpoint GC: newestCkptAt reads top-down and stops at the FIRST
-    // hit, so among the dropped versions' checkpoints only the newest
-    // can still be read (as the base under live versions just above the
-    // cutoff) — the older ones are dead weight holding vacuumed
+    // checkpoint GC: a state folds from the newest checkpoint at or
+    // below its version, so among the dropped versions' checkpoints only
+    // the newest can still be read (as the base under live versions just
+    // above the cutoff) — the older ones are dead weight holding vacuumed
     // history's folded metadata; drop them
     oldVs.filter(v => v % CheckpointEvery == 0 &&
         f.exists(ckptPath(dir, v)))
       .sorted.dropRight(1)
-      .foreach { v =>
-        f.delete(ckptPath(dir, v), false)
-        ckptMemo.remove((dir, v))
+      .foreach(v => f.delete(ckptPath(dir, v), false))
+    // deletion vectors no retained manifest names: a DML commit that
+    // died between writing its vectors and publishing its manifest left
+    // them. A live commit publishes moments after writing, so only
+    // vectors older than the stage-orphan horizon go.
+    val vectors = new Path(dir, "dv")
+    val orphans =
+      if (stageOrphanMs == Long.MaxValue || !f.exists(vectors)) Seq.empty
+      else {
+        val horizon = System.currentTimeMillis() - stageOrphanMs
+        f.listStatus(vectors).toSeq.filter(st => st.isFile &&
+            st.getModificationTime < horizon &&
+            !retained.contains(s"dv/${st.getPath.getName}"))
+          .map(_.getPath)
       }
-    (dead.size, oldVs.size)
+    orphans.foreach(f.delete(_, false))
+    (dead.size + orphans.size, oldVs.size)
   }
 
   /** Compliance deletion (right-to-be-forgotten) INTO history: every
@@ -3180,54 +3121,43 @@ object Snapshots {
     val tombDf = s.createDataFrame(
       s.sparkContext.parallelize(tombRows.toSeq, 1), tombKeys.schema)
     // The live set may span schema vintages (f22): candidate detection
-    // and rewrite both run per WRITING-COMMIT group, with the rename
-    // chain applied before the key join — a single mergeSchema scan would
-    // fail outright on an int×long widening and miss a renamed key.
-    val chain = renameChain(s, dir, latest)
-    def commitOf(rel: String): Int = rel match {
-      case FileCommit(c) => c.toInt
-      case other => throw new IllegalStateException(
-        s"purge: cannot attribute $other to a commit")
-    }
-    def applyChain(df0: DataFrame, c: Int): (DataFrame, Seq[(String, String)]) = {
-      var df = df0
-      val applied = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      // a logical DROP is skipped: the rewritten file must keep its
-      // vintage's own schema (time travel below the drop still reads
-      // the column), and a dropped column can never be a purge key
-      for (later <- (c + 1) to latest; (o, n) <- chain(later))
-        if (n != DropMarker && df.columns.contains(o)) {
-          df = df.withColumnRenamed(o, n); applied += ((o, n))
-        }
-      (df, applied.toSeq)
-    }
+    // and rewrite both run per WRITING-COMMIT group, on the vintage's OWN
+    // column names — each canonical key maps to the name its vintage
+    // stores it under ([[localName]]), so a file is rewritten under its
+    // own schema (time travel keeps reading it) and a single mergeSchema
+    // scan's int×long failure or missed renamed key cannot arise.
+    val st = state(f, dir, latest)
+    val local = localName(st.chain, latest) _
+    // a vintage whose files lack a key — it maps to DropMarker (dropped
+    // or its name re-used since) or predates the column — holds no match
+    def vintageKeys(c: Int, df: DataFrame): Option[Seq[String]] =
+      Some(keyCols.map(local(c, _))).filter(_.forall(df.columns.contains))
     // file-level stats pruning from METADATA alone: a file may contain
     // a tombstone only if SOME tombstone row lies inside its recorded
     // bounds on every stat-recorded key column ([[StatsPruning.keyRows]]
     // — composite keys included), so a small deletion request against a
     // 100 TB table opens only the files that can contain it
-    val mayContain = StatsPruning.keep(s, dir, latest, allFiles,
+    val mayContain = StatsPruning.keep(s, dir, st, allFiles,
       StatsPruning.keyRows(s, keyCols, tombKeys.schema, tombRows.toSeq))
     // spec observability: (files the stats let through, files total)
     lastPurgePruneCounts = (mayContain.size, allFiles.size)
     // 1. candidate detection: key columns only, per writing commit
-    val affected: Seq[String] = mayContain.groupBy(commitOf).toSeq
+    val affected: Seq[String] = mayContain.groupBy(vintageOf).toSeq
       .flatMap { case (c, rels) =>
         val paths = rels.map(p => new Path(dir, p).toString)
-        val (named, _) = applyChain(s.read.parquet(paths: _*), c)
-        if (!keyCols.forall(named.columns.contains)) Seq.empty
-        else {
+        val vintage = s.read.parquet(paths: _*)
+        vintageKeys(c, vintage).toSeq.flatMap { keys =>
           // per-column isin prefilter (a safe superset of the key join)
           // pushes into the parquet scan so row-group stats prune before
           // any row decodes — for composite keys it is the AND of each
           // column's distinct tombstone values
-          val pruned = keyCols.zipWithIndex.foldLeft(named) {
+          val pruned = keys.zipWithIndex.foldLeft(vintage) {
             case (df, (k, i)) =>
               df.filter(col(k).isin(
                 tombRows.map(_.get(i)).distinct.toSeq: _*)) }
           val hits = pruned
-            .select(keyCols.map(col) :+ input_file_name().as("_f"): _*)
-            .join(broadcast(tombDf), keyCols)
+            .select(keys.map(col) :+ input_file_name().as("_f"): _*)
+            .join(broadcast(tombDf.toDF(keys: _*)), keys)
             .select(col("_f")).distinct().collect().map(_.getString(0))
           hits.map(abs => rels.find(rel => abs.endsWith("/" + rel))
             .getOrElse(throw new IllegalStateException(
@@ -3238,7 +3168,7 @@ object Snapshots {
     // re-records the stats its original carried (recomputed over the
     // kept rows — bounds can only tighten), appended to the table-level
     // purged.stats side-file so pruning stays effective after deletions.
-    val recordedStats = statsUpTo(s, dir, latest)
+    val recordedStats = statsUpTo(s, dir, st)
     val stage = new Path(dir, "_purge_stage")
     f.delete(stage, true)
     var rowsDeleted = 0L
@@ -3246,12 +3176,11 @@ object Snapshots {
     val replacement: Map[String, Option[String]] = affected.map { rel =>
       val src = new Path(dir, rel).toString
       val before = s.read.parquet(src)
-      val (named, applied) = applyChain(before, commitOf(rel))
-      val kept0 = named.join(broadcast(tombDf), keyCols, "left_anti")
-      // restore the vintage's own column names — purge must not evolve
-      // the file's schema as a side effect
-      val kept = applied.reverse.foldLeft(kept0) { case (df, (o, n)) =>
-        df.withColumnRenamed(n, o) }
+      // joined on the vintage's own key names and written back in its
+      // own column order: purge must not evolve the file's schema
+      val keys = vintageKeys(vintageOf(rel), before).get
+      val kept = before.join(broadcast(tombDf.toDF(keys: _*)), keys,
+        "left_anti").select(before.columns.map(c => col(s"`$c`")): _*)
       val fileStage = new Path(stage, new Path(rel).getName)
       kept.coalesce(1).write.mode("overwrite").parquet(fileStage.toString)
       val part = f.listStatus(fileStage).toSeq.find(st =>
@@ -3442,9 +3371,10 @@ object Snapshots {
       val keep = es.filterNot(e => smallSet(e.path))
       val nOut = math.max(1, math.ceil(sized.filter(x =>
         smallSet(x._1)).map(_._2).sum.toDouble / targetBytes).toInt)
+      val st = state(f, dir, base)
       val subset = s.baseRelationToDataFrame(SnapshotSource.relationFor(s,
-        dir, es.filter(e => smallSet(e.path)), base,
-        evolvedSchema(s, dir, base, es.map(_.path))))
+        dir, st, es.filter(e => smallSet(e.path)), base,
+        evolvedSchema(s, dir, st, base, es.map(_.path))))
       // a PARTITIONED BY table's maintenance must not destroy its
       // value-aligned layout: repack along the declared clustering
       // columns (and re-record their bounds) instead of arbitrary

@@ -250,18 +250,18 @@ private[sources] object StatsPruning {
     })
 
   /** The subset of `fset` whose recorded stats admit `groups` — the
-    * keep-loop every caller shares. Stats come from commits 1..`v`; atom
-    * columns are canonical at `canonV` (default `v`) and each file's
-    * lookup goes through [[Snapshots.localName]] to the name its writing
-    * vintage recorded. */
-  def keep(s: SparkSession, dir: String, v: Int, fset: Seq[String],
-      groups: Groups, canonV: Int = -1): Seq[String] =
+    * keep-loop every caller shares. Stats and renames come from state
+    * `st`, whose version covers every file of `fset` and `canonV`; atom
+    * columns are canonical at `canonV` (default: the state's version)
+    * and each file's lookup goes through [[Snapshots.localName]] to the
+    * name its writing vintage recorded. */
+  def keep(s: SparkSession, dir: String, st: Snapshots.TableState,
+      fset: Seq[String], groups: Groups, canonV: Int = -1): Seq[String] =
     if (groups.isEmpty) fset
     else {
-      val cv = if (canonV < 0) v else canonV
-      val stats = Snapshots.statsUpTo(s, dir, v)
-      val local = Snapshots.localName(
-        Snapshots.renameChain(s, dir, math.max(v, cv)), cv) _
+      val cv = if (canonV < 0) st.v else canonV
+      val stats = Snapshots.statsUpTo(s, dir, st)
+      val local = Snapshots.localName(st.chain, cv) _
       fset.filter { rel =>
         stats.get(rel).forall { cols =>
           val c = rel match {

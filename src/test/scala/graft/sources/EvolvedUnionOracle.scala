@@ -21,7 +21,7 @@ object EvolvedUnionOracle {
   def read(s: SparkSession, dir: String, v: Int): DataFrame = {
     val fset = Snapshots.files(s, dir, v)
     val dv = deadPositions(s, dir, v)
-    val chain = Snapshots.renameChain(s, dir, v)
+    val chain = Snapshots.state(s, dir, v).chain
     val frames = fset.groupBy(Snapshots.vintageOf).toSeq.sortBy(_._1).map {
       case (c, paths) =>
         val base = s.read.parquet(paths.map(p => new Path(dir, p).toString): _*)

@@ -1205,7 +1205,7 @@ class GraftCatalogSpec extends SparkSpec {
     val ck = new org.apache.hadoop.fs.Path(dir,
       s"v${Snapshots.CheckpointEvery}.ckpt")
     f.delete(ck, false) // simulate loss
-    Snapshots.forgetMemos(dir)
+    Snapshots.forgetStates(dir)
     val v = sql("CALL graft.system.checkpoint(table => 'db.ckv')")
       .head().getInt(0)
     assert(v == Snapshots.CheckpointEvery && f.exists(ck))
@@ -1993,7 +1993,8 @@ class GraftCatalogSpec extends SparkSpec {
       val added = Snapshots.files(spark, dir, v)
         .diff(if (v > 1) Snapshots.files(spark, dir, v - 1) else Nil)
       assert(added.size == 1, s"v$v added $added")
-      Snapshots.statsUpTo(spark, dir, v)(added.head)
+      Snapshots.statsUpTo(spark, dir, Snapshots.state(spark, dir, v))(
+        added.head)
         .map { case (c, _, mn, mx) => c -> ((mn, mx)) }.toMap
     }
     val s1 = epochStats(1)

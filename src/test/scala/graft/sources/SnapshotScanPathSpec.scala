@@ -45,6 +45,43 @@ class SnapshotScanPathSpec extends AnyFunSuite {
         "SnapshotSource.relationFor")
   }
 
+  test("one table state per version: one fold, one cache, one epoch read") {
+    val gone = Seq("cumStatsMemo", "cumRenMemo", "cumGraphMemo",
+      "coverMemo", "ckptMemo", "statLinesUpTo", "newestCkptAt")
+    val back = sources("src/main").flatMap { p =>
+      val text = Files.readString(p)
+      gone.filter(n => s"\\b$n\\b".r.findFirstIn(text).nonEmpty)
+        .map(n => s"${p.getFileName}: $n")
+    }
+    assert(back.isEmpty, s"a per-field metadata memo is back: $back")
+    // the epoch is read by the state resolver alone (`def state`), so a
+    // warm lookup cannot pay one v1.meta open per field
+    val memberDef = """^  (?:[\w\[\]]+\s+)*def\s+(\w+)""".r.unanchored
+    val epochReads = sources("src/main").flatMap { p =>
+      var enclosing = ""
+      Files.readAllLines(p).asScala.toSeq.zipWithIndex.flatMap {
+        case (l, i) =>
+          l match {
+            case memberDef(n) => enclosing = n
+            case _ =>
+          }
+          if (l.contains("tableEpoch(") &&
+              !Set("tableEpoch", "state")(enclosing))
+            Some(s"${p.getFileName}:${i + 1} in $enclosing")
+          else None
+      }
+    }
+    assert(epochReads.isEmpty,
+      s"tableEpoch read outside the state resolver: $epochReads")
+    val snapshots = Files.readString(
+      Paths.get("src/main/scala/graft/sources/Snapshots.scala"))
+    val caches = """concurrent\.TrieMap|synchronizedMap""".r
+      .findAllIn(snapshots).size
+    assert(caches <= 2,
+      s"Snapshots holds $caches caches: only the state cache and " +
+        "footerMemo may exist")
+  }
+
   test("deletion vectors have one writer and no driver-side cap") {
     val gone = Seq("DvJoinRelation", "maxDvPositions",
       "DefaultMaxDvPositions", "dvDir")

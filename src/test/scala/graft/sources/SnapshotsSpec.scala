@@ -100,6 +100,54 @@ class SnapshotsSpec extends SparkSpec {
     lens() // touch to avoid unused warning paths
   }
 
+  test("purge joins each vintage on its own key names: a key renamed " +
+      "after the file's vintage, and a later column re-using the old name") {
+    import spark.implicits._
+    val dir = tmpDir("snappurgelocal")
+    // v1 stores the key as `k`; v2 renames k -> key; v3 adds a fresh
+    // column that re-uses the name `k`, with values that collide with
+    // v1's old keys
+    Snapshots.commit(spark, dir, (1 to 6).map(i => (i.toLong, s"a$i"))
+      .toDF("k", "p").coalesce(1), append = false, statsCols = Seq("k"))
+    Snapshots.commit(spark, dir, (7 to 8).map(i => (i.toLong, s"b$i"))
+      .toDF("key", "p").coalesce(1), append = true,
+      renames = Map("k" -> "key"), statsCols = Seq("key"))
+    Snapshots.commit(spark, dir, Seq((9L, "c9", 1L), (10L, "c10", 2L),
+      (11L, "c11", 3L)).toDF("key", "p", "k").coalesce(1), append = true,
+      statsCols = Seq("key"))
+    def keys(v: Int, c: String) = Snapshots.read(spark, dir, v)
+      .select(col(c)).collect().map(_.getLong(0)).toSeq.sorted
+    def matchesOracle(v: Int): Unit = {
+      val got = Snapshots.read(spark, dir, v)
+      val cols = got.columns.toSeq.map(c => col(s"`$c`"))
+      assert(got.collect().map(_.toString).sorted.toSeq ==
+        EvolvedUnionOracle.read(spark, dir, v).select(cols: _*).collect()
+          .map(_.toString).sorted.toSeq, s"v$v differs from the oracle")
+    }
+    // tombstone the canonical `key` 2 (v1's old `k` = 2) and 9
+    val (_, nv, nd) =
+      Snapshots.purge(spark, dir, Seq(2L, 9L).toDF("key"), Seq("key"))
+    assert(nv == 3 && nd == 2L, s"versions=$nv rows=$nd")
+    assert(keys(3, "key") == Seq(1L, 3L, 4L, 5L, 6L, 7L, 8L, 10L, 11L))
+    // the re-used `k` keeps its rows: only v3's files hold it
+    assert(Snapshots.read(spark, dir, 3).filter(col("k").isNotNull)
+      .select("key").collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(10L, 11L))
+    // time travel still reads each vintage's own schema
+    assert(Snapshots.read(spark, dir, 1).columns.toSeq == Seq("k", "p"))
+    assert(keys(1, "k") == Seq(1L, 3L, 4L, 5L, 6L))
+    assert(Snapshots.read(spark, dir, 2).columns.toSeq == Seq("key", "p"))
+    (1 to 3).foreach(matchesOracle)
+    // tombstoning the NEW `k` = 3 deletes v3's row only: v1's old k = 3
+    // (canonical key 3) is a different column
+    val (_, _, nd2) =
+      Snapshots.purge(spark, dir, Seq(3L).toDF("k"), Seq("k"))
+    assert(nd2 == 1L, s"rows=$nd2")
+    assert(keys(3, "key") == Seq(1L, 3L, 4L, 5L, 6L, 7L, 8L, 10L))
+    assert(keys(1, "k") == Seq(1L, 3L, 4L, 5L, 6L))
+    (1 to 3).foreach(matchesOracle)
+  }
+
   test("purge leaves tombstone-free files byte-identical") {
     val dir = tmpDir("snappurge2")
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -995,6 +1043,23 @@ class SnapshotsSpec extends SparkSpec {
     // the public metadata count agrees with the scan at both versions
     assert(Snapshots.metadataRowCount(spark, dir, 1) == 10L)
     assert(Snapshots.metadataRowCount(spark, dir, 2) == 12L)
+    // vacuum sweeps the orphan once it is older than the stage-orphan
+    // horizon; every vector a live manifest names stays
+    Snapshots.deleteWhere(spark, dir, col("id") === 5L) // v3
+    val fsys = orphan.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = Snapshots.entries(spark, dir, 3).flatMap(_.dv)
+      .map(new org.apache.hadoop.fs.Path(dir, _))
+    assert(live.nonEmpty && live.forall(fsys.exists))
+    // a fresh orphan stays under the default (24 h) horizon
+    Snapshots.vacuum(spark, dir, keep = 10)
+    assert(fsys.exists(orphan), "a fresh orphan must outlive the horizon")
+    Thread.sleep(1100) // local-FS mtime granularity can be one second
+    val (deleted, dropped) =
+      Snapshots.vacuum(spark, dir, keep = 10, stageOrphanMs = 1000L)
+    assert(!fsys.exists(orphan), "the orphan vector must be swept")
+    assert(deleted == 1 && dropped == 0, s"deleted=$deleted dropped=$dropped")
+    assert(live.forall(fsys.exists), "a live vector was swept")
+    assert(idsOf(dir, 3) == (1L to 12L).filterNot(_ == 5L))
   }
 
   test("views and timestamp time travel follow main, never a branch head") {
@@ -1919,7 +1984,8 @@ class SnapshotsSpec extends SparkSpec {
     assert(f.exists(P(s"v$k.ckpt")) && f.exists(P("v200.ckpt")))
     // checkpoint-resolved stats match the brute-force side-file union:
     // every one of the 200 files carries exactly its id bounds
-    val viaCkpt = Snapshots.statsUpTo(spark, dir, 200)
+    val viaCkpt = Snapshots.statsUpTo(spark, dir,
+      Snapshots.state(spark, dir, 200))
     assert(viaCkpt.size == 200, s"stats entries: ${viaCkpt.size}")
     assert(viaCkpt.values.forall(cols =>
       cols.exists { case (c, tn, mn, mx) =>
@@ -1928,7 +1994,7 @@ class SnapshotsSpec extends SparkSpec {
     // resolves 200 versions of metadata in a bounded number of opens —
     // epoch probe + checkpoint + manifest + a short suffix, NOT 200
     // per-version side-files
-    Snapshots.forgetMemos(dir)
+    Snapshots.forgetStates(dir)
     val before = Snapshots.sideFileOpens.get()
     val (df, (kept, total)) =
       Snapshots.readPruned(spark, dir, 200, "id", 5L, 5L)
@@ -1937,28 +2003,29 @@ class SnapshotsSpec extends SparkSpec {
     assert(kept == 1 && total == 200, s"pruned $kept/$total")
     assert(opens <= k.toLong,
       s"cold pruned read opened $opens side-files (budget $k)")
-    // WARM read: the additive memo serves history; only per-read
-    // metadata (epoch + manifest + purged-overlay probe) is opened
+    // WARM read: the cached state serves history; only per-read
+    // metadata (the manifest and the epoch) is opened
     val before2 = Snapshots.sideFileOpens.get()
     val (_, (kept2, _)) = Snapshots.readPruned(spark, dir, 200, "id", 7L, 7L)
     assert(kept2 == 1)
-    assert(Snapshots.sideFileOpens.get() - before2 <= 5L)
+    val warmOpens = Snapshots.sideFileOpens.get() - before2
+    assert(warmOpens <= 2L, s"warm pruned read opened $warmOpens side-files")
     // the rename declared at v100 resolves through the checkpoint after
-    // a memo wipe: the evolved read exposes `note`, not `payload`
-    Snapshots.forgetMemos(dir)
+    // a state wipe: the evolved read exposes `note`, not `payload`
+    Snapshots.forgetStates(dir)
     val evolved = Snapshots.read(spark, dir, 200)
     assert(evolved.columns.contains("note") &&
       !evolved.columns.contains("payload"))
     assert(evolved.filter(col("id") === 42L).select("note")
       .head().getString(0) == "row42")
     // time travel BELOW the newest checkpoint stays correct
-    Snapshots.forgetMemos(dir)
+    Snapshots.forgetStates(dir)
     val (df50, (kept50, total50)) =
       Snapshots.readPruned(spark, dir, 50, "id", 5L, 5L)
     assert(kept50 == 1 && total50 == 50)
     assert(df50.select("id").collect().map(_.getLong(0)).toSeq == Seq(5L))
     // a selective DELETE on the deep table stays metadata-bounded too
-    Snapshots.forgetMemos(dir)
+    Snapshots.forgetStates(dir)
     val b3 = Snapshots.sideFileOpens.get()
     val (_, n) = Snapshots.deleteWhere(spark, dir, col("id") === 3L)
     assert(n == 1L)
@@ -1971,7 +2038,7 @@ class SnapshotsSpec extends SparkSpec {
     // from vN.ckpt M records + a short suffix — O(CheckpointEvery)
     // opens, not one vN.meta per version
     val head = Snapshots.latestVersion(spark, dir) // 201 after the DELETE
-    Snapshots.forgetMemos(dir)
+    Snapshots.forgetStates(dir)
     val b4 = Snapshots.sideFileOpens.get()
     val vAt = Snapshots.versionAsOf(spark, dir,
       System.currentTimeMillis() + 60000L)
@@ -1980,7 +2047,7 @@ class SnapshotsSpec extends SparkSpec {
     assert(asOfOpens <= k.toLong + 5,
       s"cold versionAsOf opened $asOfOpens side-files (budget ${k + 5})")
     // stream RESTART: the line-ancestry walk a fresh source pays
-    Snapshots.forgetMemos(dir)
+    Snapshots.forgetStates(dir)
     val b5 = Snapshots.sideFileOpens.get()
     val anc = new LineAncestry(spark, dir).upTo(f, head)
     assert(anc.size == head && anc.head == 1)
@@ -2109,7 +2176,7 @@ class SnapshotsSpec extends SparkSpec {
         append = true, statsCols = Seq("id"))
     }
     Snapshots.vacuum(spark, dir, keep = 5) // drops v1..25's manifests+metas
-    Snapshots.forgetMemos(dir) // fresh-driver simulation
+    Snapshots.forgetStates(dir) // fresh-driver simulation
     // the checkpoint (written at v20, pre-vacuum) plus the live suffix
     // still serve the graph: parents walk, head time travel resolves
     assert(Snapshots.parentsOf(spark, dir, 27) == Seq(26))
@@ -2130,7 +2197,7 @@ class SnapshotsSpec extends SparkSpec {
       append = true)                                             // v32
     val merged = Snapshots.mergeBranch(spark, dir, "gb",
       keyCols = Seq("id"))                                       // v33
-    Snapshots.forgetMemos(dir)
+    Snapshots.forgetStates(dir)
     assert(Snapshots.parentsOf(spark, dir, merged) == Seq(32, 31),
       s"merge parents: ${Snapshots.parentsOf(spark, dir, merged)}")
   }
@@ -2152,11 +2219,11 @@ class SnapshotsSpec extends SparkSpec {
     // simulate checkpoint loss (failed best-effort write / legacy
     // import): the verb re-folds at the newest reachable multiple
     f.delete(P(s"v${2 * k}.ckpt"), false)
-    Snapshots.forgetMemos(dir)
+    Snapshots.forgetStates(dir)
     assert(Snapshots.checkpointNow(spark, dir) == 2 * k)
     assert(f.exists(P(s"v${2 * k}.ckpt")), "checkpointNow must re-fold")
     // …and it actually serves: cold pruned read stays bounded
-    Snapshots.forgetMemos(dir)
+    Snapshots.forgetStates(dir)
     val before = Snapshots.sideFileOpens.get()
     val (df, (kept, total)) =
       Snapshots.readPruned(spark, dir, 45, "id", 7L, 7L)
@@ -2172,7 +2239,7 @@ class SnapshotsSpec extends SparkSpec {
       "vacuum must GC the older dropped-range checkpoint")
     assert(f.exists(P(s"v${2 * k}.ckpt")),
       "the newest dropped-range checkpoint is the live base — keep it")
-    Snapshots.forgetMemos(dir)
+    Snapshots.forgetStates(dir)
     val head = Snapshots.latestVersion(spark, dir)
     assert(Snapshots.read(spark, dir, head).count() == 45L,
       "vacuum keeps the head's full content")
@@ -2197,7 +2264,7 @@ class SnapshotsSpec extends SparkSpec {
       Seq((3000L, "m")).toDF("id", "payload").coalesce(1),
       append = true)                                        // v109 (main)
     val k = Snapshots.CheckpointEvery
-    Snapshots.forgetMemos(dir)
+    Snapshots.forgetStates(dir)
     val before = Snapshots.sideFileOpens.get()
     val merged = Snapshots.mergeBranch(spark, dir, "exp",
       keyCols = Seq("id"))
