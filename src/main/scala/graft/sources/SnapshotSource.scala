@@ -543,7 +543,8 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
   private val midVersion =
     maxFilesPerTrigger.isDefined || maxBytesPerTrigger.isDefined
 
-  // the files version `cv` ADDED over its parent, in manifest order
+  // the files version `cv` ADDED over its parent (read from state `g`,
+  // resolved once per trigger at or above `cv`), in manifest order
   // (stable — what mid-version offsets index into), with their sizes
   // when byte-capped admission needs them (one driver metadata call per
   // file, once). Memoized: manifests are immutable while a stream runs
@@ -553,14 +554,14 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
   private val addedCache =
     scala.collection.mutable.Map.empty[Int, Seq[(String, Long)]]
   private def addedOf(f: org.apache.hadoop.fs.FileSystem,
-      cv: Int): Seq[(String, Long)] = {
+      g: Snapshots.TableState, cv: Int): Seq[(String, Long)] = {
     // evict BEFORE the lookup: clearing inside getOrElseUpdate's default
     // would mutate the map mid-update (works on current 2.13 only by
     // implementation accident) and wipe hot entries mid-catch-up
     if (!addedCache.contains(cv) && addedCache.size > 1024)
       addedCache.clear()
     addedCache.getOrElseUpdate(cv, {
-      val parent = Snapshots.state(f, dir, cv).parent(cv)
+      val parent = g.parent(cv)
       val parentSet =
         if (parent >= 1) Snapshots.files(spark, dir, parent).toSet
         else Set.empty[String]
@@ -585,7 +586,9 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
     val maxF = maxFilesPerTrigger.getOrElse(Int.MaxValue)
     val maxV = maxVersionsPerTrigger.getOrElse(Int.MaxValue)
     val maxB = maxBytesPerTrigger.getOrElse(Long.MaxValue)
-    def count(x: Int) = if (x < 1) 0 else addedOf(f, x).size
+    // one state answers every version the trigger walks
+    val g = Snapshots.state(f, dir, head)
+    def count(x: Int) = if (x < 1) 0 else addedOf(f, g, x).size
     var v = math.max(from.v, startingVersion - 1)
     var i = math.min(if (from.i < 0) Int.MaxValue else from.i, count(v))
     var files = 0
@@ -597,7 +600,7 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
       }
     if (v >= 1 && i < count(v)) { // finish the current version first
       versions += 1
-      take(addedOf(f, v))
+      take(addedOf(f, g, v))
     }
     // walk the LINE's versions, not raw numbers: an interleaved
     // other-line commit consumed here would emit its rows into this
@@ -608,7 +611,7 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
       v = next.next()
       versions += 1
       i = 0
-      val fs = addedOf(f, v)
+      val fs = addedOf(f, g, v)
       take(fs)
       if (i < fs.size) return FilePos(v, i) // stopped mid-version
     }
@@ -729,7 +732,7 @@ private[graft] class SnapshotStreamSource(spark: SparkSession,
         // per-version ADDED slices — the remainder of the partially-
         // consumed start version, whole intermediates, a prefix of the
         // end version
-        def paths(cv: Int): Seq[String] = addedOf(f, cv).map(_._1)
+        def paths(cv: Int): Seq[String] = addedOf(f, st, cv).map(_._1)
         def resolve(p: FilePos): Int =
           if (p.i < 0) paths(p.v).size else p.i
         val vs = scala.collection.mutable.ArrayBuffer.empty[Int]

@@ -729,7 +729,8 @@ object Snapshots {
       parts: Parts, append: Boolean, renames: Map[String, String],
       statsCols: Seq[String], v: Int, prev: Int,
       streamTxn: Option[(String, Long)] = None,
-      statsExprs: Seq[(String, String, String)] = Seq.empty): Int = {
+      statsExprs: Seq[(String, String, String)] = Seq.empty,
+      op: Option[(String, Seq[String])] = None): Int = {
     val (moved, statLines) = parts match {
       case FrameParts(df) =>
         stageAndMove(s, f, dir, df, statsCols, v, statsExprs)
@@ -743,6 +744,7 @@ object Snapshots {
     // holds and a stream batch id stamped in meta is crash-consistent
     // with the publish — the exactly-once anchor of the streaming write
     writeCommitMeta(f, dir, v, if (prev > 0) prev else 0, streamTxn)
+    op.foreach { case (verb, keys) => writeCommitOp(f, dir, v, verb, keys) }
     if (renames.nonEmpty) {
       val body = renames.toSeq.sorted
         .map { case (o, n) => o + SepCh + n }.mkString("\n")
@@ -912,23 +914,26 @@ object Snapshots {
   // "All metadata up to v" — every file's stat lines (S records), every
   // commit's rename declarations (R), and the commit graph: parents,
   // instants and stream-txn stamps (M) and operation verbs (O) — is ONE
-  // immutable value per (table, version), a [[TableState]]. [[state]]
-  // folds it from the nearest cached state or the newest `vN.ckpt`
-  // checkpoint at or below v, plus the side-files of the versions after
-  // that base, and keeps it in one bounded cache keyed by (dir, epoch,
-  // v), so a pruned read, DML matched-scan, MERGE, CDF read or purge of a
-  // deep table (a streaming-fed table at 10 s triggers accumulates ~260k
-  // versions in a month) costs O(CheckpointEvery) metadata opens cold
-  // and one epoch read warm, not O(history) driver RPCs. Every
-  // CheckpointEvery-th published version writes its state as `vN.ckpt`.
-  // A checkpoint is REDUNDANT state: absent (old tables, a crashed
-  // write), the fold starts lower; a failed checkpoint write never fails
-  // its commit. The EPOCH (v1's commit instant) keys the cache because a
-  // table dropped and recreated at the same path restarts version
-  // numbering. A reader resolves the state once and passes it down;
-  // because states are immutable, concurrent readers and committers never
-  // see a half-extended one. The shape is Delta Lake's Snapshot (Armbrust
-  // et al., VLDB 2020): a checkpoint plus a log suffix, cached per version.
+  // immutable value, a [[TableState]]. [[state]] folds it from the
+  // table's cached state or the newest `vN.ckpt` checkpoint at or below
+  // v, plus the side-files of the versions after that base, and keeps
+  // one state per table: the newest built, which answers every version
+  // at or below its own (its records are keyed by version or by
+  // uuid-named file). So a pruned read, DML matched-scan, MERGE, CDF
+  // read or purge of a deep table (a streaming-fed table at 10 s
+  // triggers accumulates ~260k versions in a month) costs
+  // O(CheckpointEvery) metadata opens cold and one epoch read warm, not
+  // O(history) driver RPCs, and a new head folds only its own
+  // side-files onto the last. Every CheckpointEvery-th published version
+  // writes its state as `vN.ckpt`. A checkpoint is REDUNDANT state:
+  // absent (old tables, a crashed write), the fold starts lower; a
+  // failed checkpoint write never fails its commit. The EPOCH (v1's
+  // commit instant) guards the cache because a table dropped and
+  // recreated at the same path restarts version numbering. A reader
+  // resolves the state once and passes it down; because states are
+  // immutable and replaced whole, concurrent readers and committers
+  // never see a half-extended one. The shape is Delta Lake's Snapshot
+  // (Armbrust et al., VLDB 2020): a checkpoint plus a log suffix.
 
   private val SepCh = 1.toChar // the side-file field separator
 
@@ -1188,21 +1193,38 @@ object Snapshots {
   /** One recorded stat line: (manifest path, (column, type, min, max)). */
   private[sources] type StatLine = (String, (String, String, String, String))
 
-  /** The table's metadata as of version `v`: the stat lines of every file
-    * commits 1..v wrote, the rename chain of commits 1..v, and the COMMIT
-    * GRAPH of versions 1..v (parent pointers, commit instants, stream-txn
-    * stamps, operation verbs). Immutable: [[state]] builds it once per
-    * (table, epoch, version) and every reader of that version shares it;
-    * a `vN.ckpt` checkpoint is this value rendered ([[renderCkpt]]).
-    * Every deep-history walk (branch merge, time travel,
-    * `system.history`, the streaming source's line ancestry, the
-    * streaming write's replay cursor) resolves one state at its head and
-    * then walks in memory, so a 260k-version streaming table costs
-    * O(CheckpointEvery) metadata opens per walk, not O(versions). The
-    * graph answers for versions 1..v only; asking it about a later
-    * version is a caller bug and throws. */
+  /** Recorded stats by manifest path: each file's (column, type, min,
+    * max) lines. Files without stats are absent. */
+  private[sources] type FileStats =
+    Map[String, Seq[(String, String, String, String)]]
+
+  /** `lines` added to `m` — a path's lines concatenate, so the result
+    * shares every untouched entry with `m`. */
+  private def withLines(m: FileStats, lines: Seq[StatLine]): FileStats =
+    lines.groupBy(_._1).foldLeft(m) { case (acc, (p, xs)) =>
+      acc.updated(p, acc.getOrElse(p, Seq.empty) ++ xs.map(_._2)) }
+
+  /** The table's metadata up to version `v`: the stats of every file
+    * commits 1..v wrote (by path), the rename chain of commits 1..v, and
+    * the COMMIT GRAPH of versions 1..v (parent pointers, commit
+    * instants, stream-txn stamps, operation verbs). Immutable: [[state]]
+    * keeps one per table, the newest it has built, and serves every
+    * version at or below `v` from it. That is sound because every field
+    * is keyed by version (renames, metas, ops) or by a uuid-named file
+    * path that only its writing commit records (stats): a question about
+    * version u <= v names u — `localName`'s and [[StatsPruning.keep]]'s
+    * canonical version, the manifest's paths, a graph walk from u — and
+    * never reaches a later record. A `vN.ckpt` checkpoint is the state
+    * of exactly N rendered ([[renderCkpt]]). Every deep-history walk
+    * (branch merge, time travel, `system.history`, the streaming
+    * source's line ancestry and admission, the streaming write's replay
+    * cursor) resolves one state at its head and then walks in memory, so
+    * a 260k-version streaming table costs O(CheckpointEvery) metadata
+    * opens per walk, not O(versions). The graph answers for versions
+    * 1..v only; asking it about a later version is a caller bug and
+    * throws. */
   private[sources] final case class TableState(v: Int,
-      stats: Vector[StatLine],
+      stats: FileStats,
       renames: Map[Int, Seq[(String, String)]],
       metas: Map[Int, MetaRec],
       ops: Map[Int, (String, Seq[String])]) {
@@ -1211,11 +1233,6 @@ object Snapshots {
       * to empty). */
     lazy val chain: Map[Int, Seq[(String, String)]] =
       renames.withDefaultValue(Seq.empty)
-
-    /** The recorded stats by manifest path (files without stats are
-      * absent). */
-    lazy val statsByFile: Map[String, Seq[(String, String, String, String)]] =
-      stats.groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2) }
 
     private def meta(c: Int): MetaRec = metas.getOrElse(c,
       throw new IllegalArgumentException(
@@ -1247,21 +1264,14 @@ object Snapshots {
   }
 
   private val NoState =
-    TableState(0, Vector.empty, Map.empty, Map.empty, Map.empty)
+    TableState(0, Map.empty, Map.empty, Map.empty, Map.empty)
 
-  /** How many table states [[state]] keeps (least recently used go
-    * first). */
-  private val StatesKept = 64
-
-  /** The one cache of table states, by (dir, epoch, version). Entries
-    * never go stale (a published version's metadata never changes), so
-    * eviction is only for space. */
-  private val states = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, Long, Int), TableState](
-        16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[
-          (String, Long, Int), TableState]): Boolean = size > StatesKept
-    })
+  /** The one cache of table states: per table dir, its epoch and the
+    * newest state built. A published version's metadata never changes,
+    * so a state never goes stale; a newer one replaces it atomically,
+    * and a recreated table (new epoch) replaces its predecessor's. */
+  private val states =
+    scala.collection.concurrent.TrieMap.empty[String, (Long, TableState)]
 
   /** The table's identity fingerprint: v1's commit instant (0 when that
     * meta is absent - legacy or vacuumed roots). A table dropped and
@@ -1271,16 +1281,18 @@ object Snapshots {
     try readMeta(f, dir, 1).flatMap(_.head.toLongOption).getOrElse(0L)
     catch { case scala.util.control.NonFatal(_) => 0L }
 
-  /** Version `v`'s [[TableState]] — the one resolver of snapshot
-    * metadata. It reads the table's epoch once (one `v1.meta` open) and
-    * returns the cached state, or builds it by folding the side-files of
-    * the versions after the newest base at or below `v`: the nearest
-    * cached state of the same epoch or the newest checkpoint, whichever
-    * is newer, else nothing. `v` must be published: side-files precede
-    * the manifest (and a claimant reusing an aborted version number
-    * clears the orphans first), so a published version's metadata is
-    * complete and never changes. A reader resolves the state once and
-    * passes it down. */
+  /** A [[TableState]] that answers for version `v` — the one resolver of
+    * snapshot metadata. It reads the table's epoch once (one `v1.meta`
+    * open) and returns the table's cached state when that reaches `v`;
+    * else it folds the side-files of the versions after the newer of
+    * the cached state and the newest checkpoint at or below `v` (else
+    * from nothing) and offers the result to the cache. The returned
+    * state's `v` may exceed the one asked for: callers name the version
+    * they ask about. `v` must be published: side-files precede the
+    * manifest (and a claimant reusing an aborted version number clears
+    * the orphans first), so a published version's metadata is complete
+    * and never changes. A reader resolves the state once and passes it
+    * down. */
   private[sources] def state(s: SparkSession, dir: String, v: Int)
       : TableState = state(fs(s, dir), dir, v)
 
@@ -1288,22 +1300,28 @@ object Snapshots {
       : TableState =
     if (v < 1) NoState
     else {
-      val key = (dir, tableEpoch(f, dir), v)
-      Option(states.get(key)).getOrElse {
-        import scala.jdk.CollectionConverters._
-        val near = states.synchronized {
-          states.asScala.collect {
-            case ((d, e, c), st) if d == dir && e == key._2 && c < v => st
-          }.maxByOption(_.v)
+      val e = tableEpoch(f, dir)
+      val cached = states.get(dir).collect { case (`e`, st) => st }
+      cached.filter(_.v >= v).getOrElse {
+        val st = foldTo(f, dir, cached, v)
+        states.updateWith(dir) {
+          case Some(cur @ (`e`, c)) if c.v >= v => Some(cur)
+          case _ => Some((e, st))
         }
-        val ckpt = ((v / CheckpointEvery) * CheckpointEvery to
-            near.fold(0)(_.v) + 1 by -CheckpointEvery).iterator
-          .flatMap(readCheckpoint(f, dir, _)).nextOption()
-        val st = fold(f, dir, ckpt.orElse(near).getOrElse(NoState), v)
-        states.put(key, st)
         st
       }
     }
+
+  /** The state of exactly version `v`, folded from `below` (a state
+    * under `v`, if any) or the newest checkpoint above it, whichever is
+    * newer. */
+  private def foldTo(f: FileSystem, dir: String, below: Option[TableState],
+      v: Int): TableState = {
+    val ckpt = ((v / CheckpointEvery) * CheckpointEvery to
+        below.fold(0)(_.v) + 1 by -CheckpointEvery).iterator
+      .flatMap(readCheckpoint(f, dir, _)).nextOption()
+    fold(f, dir, ckpt.orElse(below).getOrElse(NoState), v)
+  }
 
   /** `base` extended by the side-files of versions (base.v, v]. A
     * pre-graph checkpoint (no M/O records) folds the graph from 1; the
@@ -1313,7 +1331,7 @@ object Snapshots {
     val from = base.v
     val gFrom = if (base.metas.isEmpty) 0 else from
     TableState(v,
-      base.stats ++ (from + 1 to v).flatMap(statLinesOf(f, dir, _)),
+      withLines(base.stats, (from + 1 to v).flatMap(statLinesOf(f, dir, _))),
       base.renames ++ (from + 1 to v).map(c => c -> renamesOf(f, dir, c))
         .filter(_._2.nonEmpty),
       base.metas ++ (gFrom + 1 to v).map(c => c -> metaRecOf(f, dir, c)),
@@ -1321,11 +1339,12 @@ object Snapshots {
         (gFrom + 1 to v).flatMap(c => commitOpF(f, dir, c).map(c -> _)))
   }
 
-  /** Spec support: drop every cached state of `dir` — a fresh driver
+  /** Spec support: drop the cached state of `dir` — a fresh driver
     * reading an existing table, so specs can pin the COLD read cost of
     * the checkpoint path itself. */
-  private[sources] def forgetStates(dir: String): Unit =
-    states.synchronized { states.keySet.removeIf(_._1 == dir); () }
+  private[sources] def forgetStates(dir: String): Unit = {
+    states.remove(dir); ()
+  }
 
   private def parseStatLines(txt: String): Vector[StatLine] =
     txt.split('\n').toVector.filter(_.contains(SepCh)).map { l =>
@@ -1343,8 +1362,10 @@ object Snapshots {
     val sep = SepCh.toString
     val b = new StringBuilder
     b.append(Seq("C", "1", st.v.toString).mkString(sep)).append('\n')
-    st.stats.foreach { case (p, (c, tn, mn, mx)) =>
-      b.append(Seq("S", p, c, tn, mn, mx).mkString(sep)).append('\n') }
+    st.stats.foreach { case (p, cols) =>
+      cols.foreach { case (c, tn, mn, mx) =>
+        b.append(Seq("S", p, c, tn, mn, mx).mkString(sep)).append('\n') }
+    }
     st.renames.toSeq.sortBy(_._1).foreach { case (c, rs) =>
       rs.foreach { case (o, n) =>
         b.append(Seq("R", c.toString, o, n).mkString(sep)).append('\n') }
@@ -1388,7 +1409,7 @@ object Snapshots {
         case _ => // C marker / future record types: ignore
       }
     }
-    TableState(v, stats.result(),
+    TableState(v, withLines(Map.empty, stats.result()),
       ren.iterator.map { case (k, vs) => k -> (vs: Seq[(String, String)]) }
         .toMap,
       metas.result(), ops.result())
@@ -1436,9 +1457,13 @@ object Snapshots {
     * failure — [[maybeCheckpoint]] downgrades that to best-effort,
     * [[checkpointNow]] surfaces it. */
   private def writeCheckpoint(f: FileSystem, dir: String, v: Int): Unit = {
+    // the cached state may already reach past v; a checkpoint holds v's
+    // records alone
+    val st = Some(state(f, dir, v)).filter(_.v == v).getOrElse(
+      foldTo(f, dir, None, v))
     val tmp = new Path(dir, s"_v$v.ckpt.tmp")
     val o = f.create(tmp, true)
-    try o.write(renderCkpt(state(f, dir, v)).getBytes("UTF-8"))
+    try o.write(renderCkpt(st).getBytes("UTF-8"))
     finally o.close()
     f.rename(tmp, ckptPath(dir, v))
     ()
@@ -1477,18 +1502,17 @@ object Snapshots {
     ()
   }
 
-  /** Per-file (col, typeName, min, max) stats of state `st`, keyed by
-    * manifest-relative path. Files without stats are simply absent
-    * (conservative: never pruned). The purge-maintained `purged.stats`
-    * overlay (see purge step 2b) is MUTABLE and therefore read fresh
-    * each call. */
+  /** Per-file (col, typeName, min, max) stats of the files state `st`
+    * records, keyed by manifest-relative path. Files without stats are
+    * simply absent (conservative: never pruned). The purge-maintained
+    * `purged.stats` overlay (see purge step 2b) is MUTABLE and therefore
+    * read fresh each call. */
   private[sources] def statsUpTo(s: SparkSession, dir: String,
-      st: TableState): Map[String, Seq[(String, String, String, String)]] = {
+      st: TableState): FileStats = {
     val f = fs(s, dir)
     val pp = new Path(dir, "purged.stats")
-    if (!f.exists(pp)) st.statsByFile
-    else (st.stats ++ parseStatLines(readSmall(f, pp)))
-      .groupBy(_._1).map { case (pth, xs) => pth -> xs.map(_._2) }
+    if (!f.exists(pp)) st.stats
+    else withLines(st.stats, parseStatLines(readSmall(f, pp)))
   }
 
   /** Above this many live files, [[fileInventory]] reads lengths and
@@ -1576,7 +1600,7 @@ object Snapshots {
     val key = AttributeReference(keyCol, Literal(lo).dataType)()
     val keep = StatsPruning.keep(s, dir, st, fset, StatsPruning.groupsOf(s,
       dir, And(GreaterThanOrEqual(key, Literal(lo)),
-        LessThanOrEqual(key, Literal(hi))))).toSet
+        LessThanOrEqual(key, Literal(hi)))), v).toSet
     val df = s.baseRelationToDataFrame(SnapshotSource.relationFor(s, dir,
       st, es.filter(e => keep(e.path)), v,
       evolvedSchema(s, dir, st, v, fset)))
@@ -1786,16 +1810,17 @@ object Snapshots {
     SnapshotFileIndex.lastPruneCounts
 
   /** The positional scan behind DML and the MERGE family: the live rows
-    * of the entries `es` of state `st`'s version (or of the `subset` of
+    * of the entries `es` of version `v` (or of the `subset` of
     * its files), deletion vectors applied in the reader, under the
     * version's canonical schema, so renamed and widened vintages read
     * like a SELECT, plus `_fp`/`_ri` positions. A filter over it prunes
     * files like a read. */
   private def positionsScan(s: SparkSession, dir: String, st: TableState,
-      es: Seq[Entry], subset: Option[Set[String]] = None): DataFrame =
+      v: Int, es: Seq[Entry], subset: Option[Set[String]] = None)
+      : DataFrame =
     withMeta(s.baseRelationToDataFrame(SnapshotSource.relationFor(s, dir,
-      st, subset.fold(es)(k => es.filter(e => k(e.path))), st.v,
-      evolvedSchema(s, dir, st, st.v, es.map(_.path)))))
+      st, subset.fold(es)(k => es.filter(e => k(e.path))), v,
+      evolvedSchema(s, dir, st, v, es.map(_.path)))))
 
   /** MERGE-ON-READ delete: the row indexes of rows matching `cond` in
     * the latest version join the deletion vectors of the files holding
@@ -1841,7 +1866,7 @@ object Snapshots {
     // between the read and the claim (the lost-update window)
     claimed(s, f, dir, branch, "delete") { (v, latest) =>
       val prev = entries(s, dir, latest)
-      val scan = positionsScan(s, dir, state(f, dir, latest), prev)
+      val scan = positionsScan(s, dir, state(f, dir, latest), latest, prev)
       val (next, n) = DeletionVectors.extend(s, dir, v, prev,
         scan.filter(condOf(scan))
           .select(col("_fp").as("file_path"), col("_ri").as("row_index")))
@@ -1873,7 +1898,7 @@ object Snapshots {
     // claim FIRST, then compute against v-1 (the deleteWhere rationale)
     claimed(s, f, dir, branch, "replace") { (v, latest) =>
       val prev = entries(s, dir, latest)
-      val scan = positionsScan(s, dir, state(f, dir, latest), prev)
+      val scan = positionsScan(s, dir, state(f, dir, latest), latest, prev)
       val (next, n) = DeletionVectors.extend(s, dir, v, prev,
         scan.filter(cond)
           .select(col("_fp").as("file_path"), col("_ri").as("row_index")))
@@ -1928,7 +1953,7 @@ object Snapshots {
     // lost-update reasoning as deleteWhere/upsert)
     claimed(s, f, dir, branch, "update") { (v, latest) =>
       val prev = entries(s, dir, latest)
-      val live = positionsScan(s, dir, state(f, dir, latest), prev)
+      val live = positionsScan(s, dir, state(f, dir, latest), latest, prev)
       // `matched` feeds TWO consumers — the vector writer (which also
       // counts it) and the updated rows staged as fresh files — so it is
       // persisted once: the whole update costs ONE scan of the table
@@ -1998,7 +2023,7 @@ object Snapshots {
     *         enough, the aggregation row: nkAll, per-key mn/mx pairs,
     *         then `extraAggs` in order) */
   private def matchableFiles(s: SparkSession, dir: String, st: TableState,
-      fset: Seq[String], keyCols: Seq[String], keys: DataFrame,
+      v: Int, fset: Seq[String], keyCols: Seq[String], keys: DataFrame,
       extraAggs: Seq[org.apache.spark.sql.Column] = Seq.empty)
       : (Seq[String], Option[DataFrame], org.apache.spark.sql.Row) = {
     import org.apache.spark.sql.functions.{col, count_distinct, max, min,
@@ -2028,7 +2053,7 @@ object Snapshots {
         case _ => Seq.empty
       })
     }
-    val kept = StatsPruning.keep(s, dir, st, fset, groups)
+    val kept = StatsPruning.keep(s, dir, st, fset, groups, v)
     lastMergePruneCounts = (kept.size, fset.size)
     val exactFrame = exactRows.map(rows =>
       s.createDataFrame(s.sparkContext.parallelize(rows, 1),
@@ -2062,7 +2087,8 @@ object Snapshots {
       v: Int, keyCols: Seq[String], keys: DataFrame): (Seq[String], Int) = {
     val fset = files(s, dir, v)
     val (kept, _, _) =
-      matchableFiles(s, dir, state(s, dir, v), fset, keyCols, keys)
+      matchableFiles(s, dir, state(s, dir, v), v, fset, keyCols,
+        keys)
     lastMergeJoinPruneCounts = (kept.size, fset.size)
     (kept, fset.size)
   }
@@ -2159,7 +2185,7 @@ object Snapshots {
       // pruning, the distinct-key count, AND the row count — the
       // uniqueness check rides along instead of costing two more jobs
       val (matchFiles, exactKeys, aggRow) = matchableFiles(s, dir,
-        st, fset, keyCols, srcKeys,
+        st, latest, fset, keyCols, srcKeys,
         extraAggs = Seq(count(lit(1)).as("_n")))
       require(aggRow.getLong(0) ==
           aggRow.getLong(1 + 2 * keyCols.size),
@@ -2168,7 +2194,7 @@ object Snapshots {
         if (matchFiles.isEmpty) (prev, 0L)
         else {
           // only LIVE rows can match: the scan applies the vectors
-          val live = positionsScan(s, dir, st, prev,
+          val live = positionsScan(s, dir, st, latest, prev,
             Some(matchFiles.toSet))
           // a collected exact-key set re-enters as a broadcast local
           // relation: no source recomputation, no shuffle on the scan
@@ -2233,7 +2259,7 @@ object Snapshots {
       val upsDistinct = count_distinct(when(col(mk) === 0,
         struct(keyCols.map(col): _*))).as("_nk_ups")
       val (matchFiles, exactKeys, aggRow) = matchableFiles(s, dir,
-        st, fset, keyCols, allKeys,
+        st, latest, fset, keyCols, allKeys,
         extraAggs = Seq(upsCount, upsDistinct))
       require(aggRow.getLong(1 + 2 * keyCols.size) ==
           aggRow.getLong(2 + 2 * keyCols.size),
@@ -2244,7 +2270,7 @@ object Snapshots {
       val (next, nGone) =
         if (matchFiles.isEmpty) (prev, 0L)
         else {
-          val live = positionsScan(s, dir, st, prev,
+          val live = positionsScan(s, dir, st, latest, prev,
             Some(matchFiles.toSet))
           val keyFrame = exactKeys.map(broadcast).getOrElse(
             allKeys.select(keyCols.map(col): _*).distinct())
@@ -3138,7 +3164,8 @@ object Snapshots {
     // — composite keys included), so a small deletion request against a
     // 100 TB table opens only the files that can contain it
     val mayContain = StatsPruning.keep(s, dir, st, allFiles,
-      StatsPruning.keyRows(s, keyCols, tombKeys.schema, tombRows.toSeq))
+      StatsPruning.keyRows(s, keyCols, tombKeys.schema, tombRows.toSeq),
+      latest)
     // spec observability: (files the stats let through, files total)
     lastPurgePruneCounts = (mayContain.size, allFiles.size)
     // 1. candidate detection: key columns only, per writing commit
@@ -3309,16 +3336,13 @@ object Snapshots {
         .repartitionByRange(numFiles, col("_z"))
         .sortWithinPartitions(col("_z"))
         .drop("_z")
+      // the op records the rewrite as CONTENT-PRESERVING:
+      // [[mergeBranch]] may reconcile a branch across it by re-locating
+      // deletions by key, where an arbitrary rewrite (INSERT OVERWRITE)
+      // stays refused
       commitClaimed(s, f, dir, FrameParts(clustered), append = false,
-        renames = Map.empty, statsCols = zorderCols, v = v, prev = base)
-      // record the rewrite as CONTENT-PRESERVING: [[mergeBranch]] may
-      // reconcile a branch across it by re-locating deletions by key,
-      // where an arbitrary rewrite (INSERT OVERWRITE) stays refused.
-      // Written after the publish — a crash in between leaves a
-      // published version without the op, which only DEGRADES (the
-      // merge refuses, the change feed types generically), never lies.
-      writeCommitOp(f, dir, v, "optimize", Seq.empty)
-      v
+        renames = Map.empty, statsCols = zorderCols, v = v, prev = base,
+        op = Some(("optimize", Seq.empty)))
     }
   }
 
@@ -3394,14 +3418,10 @@ object Snapshots {
         (b.render, s"pmod(hash(`${b.col}`), ${b.n})", "integer") }
       val (moved, statLines) = stageAndMove(s, f, dir, packed,
         statCols, v, virt)
-      f.delete(new Path(dir, s"v$v.op"), false)
       writeCommitMeta(f, dir, v, base)
+      writeCommitOp(f, dir, v, "compact", Seq.empty)
       writeStatLines(f, dir, v, statLines)
       writeManifest(f, dir, v, keep ++ moved.map(Entry(_)))
-      // after the publish, like optimize: a crash in between leaves a
-      // version that merges refuse and the change feed types
-      // generically — degraded, never wrong
-      writeCommitOp(f, dir, v, "compact", Seq.empty)
       maybeCheckpoint(f, dir, v)
       advanceMain(s, f, dir, v)
       v
@@ -3458,15 +3478,11 @@ object Snapshots {
           "(branch content reaches main via fast_forward/merge_branch)")
       // the target's lines, deletion vectors included, republished
       val restored = entries(s, dir, toVersion)
-      // stale-op guard: an aborted commit may have left vN.op behind
-      f.delete(new Path(dir, s"v$v.op"), false)
-      // meta precedes the manifest (crash-consistency direction shared
-      // with every commit path: no manifest, never visible)
+      // meta and op precede the manifest (crash-consistency direction
+      // shared with every commit path: no manifest, never visible)
       writeCommitMeta(f, dir, v, head)
-      writeManifest(f, dir, v, restored)
-      // recorded AFTER publish like optimize's op — a crash in between
-      // leaves a version that types generically, never one that lies
       writeCommitOp(f, dir, v, "restore", Seq(toVersion.toString))
+      writeManifest(f, dir, v, restored)
       maybeCheckpoint(f, dir, v)
       advanceMain(s, f, dir, v)
       v

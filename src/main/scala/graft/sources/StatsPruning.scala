@@ -252,21 +252,20 @@ private[sources] object StatsPruning {
   /** The subset of `fset` whose recorded stats admit `groups` — the
     * keep-loop every caller shares. Stats and renames come from state
     * `st`, whose version covers every file of `fset` and `canonV`; atom
-    * columns are canonical at `canonV` (default: the state's version)
-    * and each file's lookup goes through [[Snapshots.localName]] to the
-    * name its writing vintage recorded. */
+    * columns are canonical at `canonV` and each file's lookup goes
+    * through [[Snapshots.localName]] to the name its writing vintage
+    * recorded. */
   def keep(s: SparkSession, dir: String, st: Snapshots.TableState,
-      fset: Seq[String], groups: Groups, canonV: Int = -1): Seq[String] =
+      fset: Seq[String], groups: Groups, canonV: Int): Seq[String] =
     if (groups.isEmpty) fset
     else {
-      val cv = if (canonV < 0) st.v else canonV
       val stats = Snapshots.statsUpTo(s, dir, st)
-      val local = Snapshots.localName(st.chain, cv) _
+      val local = Snapshots.localName(st.chain, canonV) _
       fset.filter { rel =>
         stats.get(rel).forall { cols =>
           val c = rel match {
             case Snapshots.FileCommit(n) => n.toInt
-            case _ => cv
+            case _ => canonV
           }
           def admits(a: Atom): Boolean = {
             val name = local(c, a.col)

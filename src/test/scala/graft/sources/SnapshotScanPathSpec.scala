@@ -45,7 +45,7 @@ class SnapshotScanPathSpec extends AnyFunSuite {
         "SnapshotSource.relationFor")
   }
 
-  test("one table state per version: one fold, one cache, one epoch read") {
+  test("one table state per table: one fold, one cache, one epoch read") {
     val gone = Seq("cumStatsMemo", "cumRenMemo", "cumGraphMemo",
       "coverMemo", "ckptMemo", "statLinesUpTo", "newestCkptAt")
     val back = sources("src/main").flatMap { p =>

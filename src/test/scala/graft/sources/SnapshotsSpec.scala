@@ -2057,6 +2057,60 @@ class SnapshotsSpec extends SparkSpec {
         s"(budget ${k + 5})")
   }
 
+  test("an optimize at a checkpoint version records its op in the " +
+      "checkpoint") {
+    import spark.implicits._
+    val dir = tmpDir("opckpt")
+    val k = Snapshots.CheckpointEvery
+    (1 until k).foreach { i =>
+      Snapshots.commit(spark, dir,
+        Seq((i.toLong, s"r$i")).toDF("id", "payload").coalesce(1),
+        append = i > 1)
+    }
+    // the op precedes the manifest, so the checkpoint written right
+    // after the publish (and the state it renders) carries it
+    assert(Snapshots.optimize(spark, dir, Seq("id"), numFiles = 1) == k)
+    assert(Snapshots.state(spark, dir, k).op(k).map(_._1) ==
+      Some("optimize"))
+    Snapshots.forgetStates(dir)
+    assert(Snapshots.state(spark, dir, k).op(k).map(_._1) ==
+      Some("optimize"))
+  }
+
+  test("stream catch-up resolves one table state per trigger, not one " +
+      "per version") {
+    import spark.implicits._
+    val dir = tmpDir("catchup")
+    val n = 30 // past one checkpoint
+    (1 to n).foreach { i =>
+      Snapshots.commit(spark, dir,
+        Seq((i.toLong, s"r$i")).toDF("id", "payload").coalesce(1),
+        append = i > 1)
+    }
+    def catchUp(cold: Boolean): Long = {
+      // one file-capped trigger admits all n versions: per version the
+      // added-file diff reads its manifest and its parent's
+      val src = new SnapshotStreamSource(spark, dir,
+        SnapshotSource.schemaAt(spark, dir, n), ignoreChanges = false,
+        maxFilesPerTrigger = Some(n))
+      if (cold) Snapshots.forgetStates(dir)
+      val before = Snapshots.sideFileOpens.get()
+      val off = src.getOffset
+      val opens = Snapshots.sideFileOpens.get() - before
+      assert(off.contains(GraftFileOffset(n, 1)), s"offered $off")
+      opens
+    }
+    // a running driver: the state is warm, and the trigger adds one
+    // epoch read to the 2n manifest reads
+    val warm = catchUp(cold = false)
+    assert(warm <= 2L * n + 3,
+      s"warm catch-up of $n versions opened $warm side-files")
+    // a fresh driver also folds the checkpoint and its suffix, once
+    val cold = catchUp(cold = true)
+    assert(cold <= 2L * n + Snapshots.CheckpointEvery,
+      s"cold catch-up of $n versions opened $cold side-files")
+  }
+
   test("NOT-comparisons and null-safe equality extract prune bounds") {
     import spark.implicits._
     val dir = tmpDir("notprune")

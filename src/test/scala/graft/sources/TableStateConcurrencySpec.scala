@@ -4,9 +4,10 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-/** Table states are immutable per (table, version), so readers that
-  * resolve a version while other threads commit to the same table can
-  * never see a half-extended state. Four writers append (with stats, one
+/** Table states are immutable and replaced whole by newer ones, so
+  * readers that resolve a version while other threads commit to the same
+  * table can never see a half-extended state, and a reader of an older
+  * version served from a newer state reads that version alone. Four writers append (with stats, one
   * rename, across a checkpoint boundary) while four readers each resolve
   * the head, read it through [[Snapshots.read]] and
   * [[Snapshots.readPruned]], and half the time drop the table's cached
